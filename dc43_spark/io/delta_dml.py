@@ -69,6 +69,7 @@ on the driver.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -81,6 +82,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from dc43_spark.localdf import local_df
+from dc43_spark.io.tablecore import (
+    LinkCommitClaimer,
+    file_may_match,
+    stage_concurrently,
+)
 from dc43_spark.io.delta_log import (
     _WRITER_VERSION_FEATURES,
     DeltaLogTable,
@@ -158,14 +164,8 @@ def _merge_candidate_files(
         conds.append((k, "<=", row[f"_hi_{i}"]))
     if not conds:
         return list(snap.files)
-    from dc43_spark.io.snaplog import FileEntry, _file_may_match
-
     groups = [conds]  # one AND-group
-    return [
-        f
-        for f in snap.files
-        if _file_may_match(FileEntry(f.path, 0, f.size, f.stats, {}), groups)
-    ]
+    return [f for f in snap.files if file_may_match(f, groups)]
 
 
 def _rt_mat_cols_checked(meta: dict) -> tuple:
@@ -491,8 +491,6 @@ def _commit_dml(
     writer requirement, same shape as delta_write). Race safety is
     inherited from the pin: ANY head movement raises ``_DmlConflict``
     and the caller reallocates under the new mark."""
-    from dc43_spark.io.snaplog import LinkCommitClaimer
-
     dest = t.path
     part_cols = list(snap.partition_columns)
     if snap.column_mapping and part_cols:
@@ -525,132 +523,117 @@ def _commit_dml(
         # files read the appended columns as NULL
         actions.append({"metaData": new_meta})
 
-    dv_written = False
-    # r15 (guide §2.6, overlap independent jobs): a DML commit's staged
-    # writes — deletion vectors OR rewritten survivors, inserted rows,
-    # and CDF change files — are independent Spark jobs over the same
-    # pinned lineage scan and persisted inputs; they ran back-to-back
-    # only because the driver called them sequentially. Submit every
-    # staging first, then drain the futures in the ORIGINAL action
-    # order (the commit payload is byte-identical in structure). On a
-    # failure the pool still waits for the stragglers; staged files
-    # orphan and are swept by delta_vacuum, as before.
-    from concurrent.futures import ThreadPoolExecutor
-
-    dv_fut = kept_fut = new_fut = cdf_fut = None
+    # the staged writes — deletion vectors OR rewritten survivors,
+    # inserted rows, and CDF change files — are independent Spark jobs
+    # over the same pinned lineage scan and persisted inputs, so they
+    # stage concurrently; their results are assembled below in the
+    # ORIGINAL action order. On a failure the staged files orphan and
+    # are swept by delta_vacuum.
+    dv_job = kept_job = new_job = cdf_job = None
     touched: list = []
-    pool = ThreadPoolExecutor(max_workers=3)
-    try:
-        if del_rows is not None:
-            if use_dvs:
-                old_dvs = {f.path: f.dv for f in snap.files if f.dv}
-                dv_fut = pool.submit(_stage_dv_files, t, del_rows, old_dvs)
-            else:
-                # copy-on-write: rewrite ONLY the touched files without
-                # their deleted rows; untouched files carry over untouched
-                touched = [
-                    r[0] for r in del_rows.select(_REL).distinct().collect()
-                ]
-                if touched:
-                    # broadcast semi-join, not an isin literal: a wide
-                    # table's touched-file list would otherwise bloat the
-                    # plan string
-                    touch_df = F.broadcast(
-                        local_df(
-                            t.spark,
-                            [(p,) for p in sorted(touched)],
-                            "_touch_rel string",
-                            coalesce=1,
-                        )
+    if del_rows is not None:
+        if use_dvs:
+            old_dvs = {f.path: f.dv for f in snap.files if f.dv}
+            dv_job = functools.partial(_stage_dv_files, t, del_rows, old_dvs)
+        else:
+            # copy-on-write: rewrite ONLY the touched files without
+            # their deleted rows; untouched files carry over untouched
+            touched = [
+                r[0] for r in del_rows.select(_REL).distinct().collect()
+            ]
+            if touched:
+                # broadcast semi-join, not an isin literal: a wide
+                # table's touched-file list would otherwise bloat the
+                # plan string
+                touch_df = F.broadcast(
+                    local_df(
+                        t.spark,
+                        [(p,) for p in sorted(touched)],
+                        "_touch_rel string",
+                        coalesce=1,
                     )
-                    kept = lineage.join(
-                        touch_df, F.col(_REL) == F.col("_touch_rel"), "left_semi"
-                    ).join(
-                        del_rows.select(
-                            F.col(_REL).alias("_del_rel"),
-                            F.col(_POS).alias("_del_pos"),
-                        ),
-                        (F.col(_REL) == F.col("_del_rel"))
-                        & (F.col(_POS) == F.col("_del_pos")),
-                        "left_anti",
-                    ).drop(_REL, _POS)
-                    if _RTID in kept.columns:
-                        # row tracking: surviving rows move files, so their
-                        # ids AND last-modified versions materialize into
-                        # the physical columns (fresh-id fallback would hand
-                        # them this commit's identity — wrong on both axes)
-                        mat_id, mat_ver = _rt_mat_cols_checked(
-                            new_meta if new_meta is not None else meta
-                        )
-                        kept = kept.withColumnRenamed(_RTID, mat_id)
-                        kept = kept.withColumnRenamed(_RTVER, mat_ver)
-                    kept_fut = pool.submit(
-                        _stage_data_files,
-                        _to_physical(kept, snap), dest, part_cols, ts_ms,
-                    )
-        if new_rows is not None:
-            new_fut = pool.submit(
-                _stage_data_files,
-                _to_physical(new_rows, snap), dest, part_cols, ts_ms,
-            )
-        if cdf_rows is not None and _cdf_enabled(meta):
-            cdf_fut = pool.submit(
-                _stage_data_files,
-                _to_physical(cdf_rows, snap), dest, part_cols, ts_ms,
-                subdir="_change_data",
-            )
-
-        if dv_fut is not None:
-            descs = dv_fut.result()
-            dv_written = bool(descs)
-            for rel in sorted(descs):
-                raw = raw_adds[rel]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": raw["path"],
-                            "dataChange": True,
-                            "deletionTimestamp": ts_ms,
-                        }
-                    }
                 )
+                kept = lineage.join(
+                    touch_df, F.col(_REL) == F.col("_touch_rel"), "left_semi"
+                ).join(
+                    del_rows.select(
+                        F.col(_REL).alias("_del_rel"),
+                        F.col(_POS).alias("_del_pos"),
+                    ),
+                    (F.col(_REL) == F.col("_del_rel"))
+                    & (F.col(_POS) == F.col("_del_pos")),
+                    "left_anti",
+                ).drop(_REL, _POS)
+                if _RTID in kept.columns:
+                    # row tracking: surviving rows move files, so their
+                    # ids AND last-modified versions materialize into
+                    # the physical columns (fresh-id fallback would hand
+                    # them this commit's identity — wrong on both axes)
+                    mat_id, mat_ver = _rt_mat_cols_checked(
+                        new_meta if new_meta is not None else meta
+                    )
+                    kept = kept.withColumnRenamed(_RTID, mat_id)
+                    kept = kept.withColumnRenamed(_RTVER, mat_ver)
+                kept_job = functools.partial(
+                    _stage_data_files,
+                    _to_physical(kept, snap), dest, part_cols, ts_ms,
+                )
+    if new_rows is not None:
+        new_job = functools.partial(
+            _stage_data_files,
+            _to_physical(new_rows, snap), dest, part_cols, ts_ms,
+        )
+    if cdf_rows is not None and _cdf_enabled(meta):
+        cdf_job = functools.partial(
+            _stage_data_files,
+            _to_physical(cdf_rows, snap), dest, part_cols, ts_ms,
+            subdir="_change_data",
+        )
+    descs, kept_adds, new_adds, cdf_adds = stage_concurrently(
+        [dv_job, kept_job, new_job, cdf_job]
+    )
+
+    dv_written = bool(descs)
+    for rel in sorted(descs or ()):
+        raw = raw_adds[rel]
+        actions.append(
+            {
+                "remove": {
+                    "path": raw["path"],
+                    "dataChange": True,
+                    "deletionTimestamp": ts_ms,
+                }
+            }
+        )
+        num = None
+        if raw.get("stats"):
+            try:
+                st = raw["stats"]
+                num = (json.loads(st) if isinstance(st, str) else st).get(
+                    "numRecords"
+                )
+            except ValueError:
                 num = None
-                if raw.get("stats"):
-                    try:
-                        st = raw["stats"]
-                        num = (json.loads(st) if isinstance(st, str) else st).get(
-                            "numRecords"
-                        )
-                    except ValueError:
-                        num = None
-                if num is not None and descs[rel]["cardinality"] >= num:
-                    continue  # every physical row dead: plain remove
-                new_add = dict(raw)
-                new_add["deletionVector"] = descs[rel]
-                new_add["dataChange"] = True
-                actions.append({"add": new_add})
-        if kept_fut is not None:
-            for e in kept_fut.result():
-                actions.append({"add": e})
-        if touched:
-            for rel in sorted(touched):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": raw_adds[rel]["path"],
-                            "dataChange": True,
-                            "deletionTimestamp": ts_ms,
-                        }
-                    }
-                )
-
-        new_adds: list = []
-        if new_fut is not None:
-            for e in new_fut.result():
-                actions.append({"add": e})
-                new_adds.append(e)
-    finally:
-        pool.shutdown(wait=True)
+        if num is not None and descs[rel]["cardinality"] >= num:
+            continue  # every physical row dead: plain remove
+        new_add = dict(raw)
+        new_add["deletionVector"] = descs[rel]
+        new_add["dataChange"] = True
+        actions.append({"add": new_add})
+    for e in kept_adds or ():
+        actions.append({"add": e})
+    for rel in sorted(touched):
+        actions.append(
+            {
+                "remove": {
+                    "path": raw_adds[rel]["path"],
+                    "dataChange": True,
+                    "deletionTimestamp": ts_ms,
+                }
+            }
+        )
+    for e in new_adds or ():
+        actions.append({"add": e})
 
     if ident_alloc and new_adds:
         phys = {
@@ -698,18 +681,17 @@ def _commit_dml(
             else:
                 actions.insert(1, {"metaData": patched})
 
-    if cdf_fut is not None:
-        for e in cdf_fut.result():
-            actions.append(
-                {
-                    "cdc": {
-                        "path": e["path"],
-                        "partitionValues": e["partitionValues"],
-                        "size": e["size"],
-                        "dataChange": False,
-                    }
+    for e in cdf_adds or ():
+        actions.append(
+            {
+                "cdc": {
+                    "path": e["path"],
+                    "partitionValues": e["partitionValues"],
+                    "size": e["size"],
+                    "dataChange": False,
                 }
-            )
+            }
+        )
 
     if dv_written:
         upgrade = _dv_protocol_upgrade(protocol)

@@ -78,11 +78,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dc43_spark.io.snaplog import (
-    FileEntry,
-    _file_may_match,
-    _filters_to_column,
-    _normalize_filters,
+from dc43_spark.io.tablecore import (
+    LinkCommitClaimer,
+    file_may_match,
+    filters_to_column,
+    footer_stats_safe,
+    normalize_filters,
+    stage_parquet,
 )
 from dc43_spark.localdf import local_df
 
@@ -160,6 +162,17 @@ def _decode_path(p: str) -> str:
     return urllib.parse.unquote(p)
 
 
+def _uri_suffix(rel: str) -> str:
+    """``/rel`` as it ends ``_metadata.file_path``, a ``java.net.URI``:
+    ASCII outside RFC 2396's path set is percent-encoded (space, ``%``
+    — so a hive-escaped ``%2F`` dir reads ``%252F`` — ``#``, ...), while
+    its punctuation (``=``, ``+``, ...) and non-ASCII stay raw."""
+    return "/" + "".join(
+        c if ord(c) > 127 else urllib.parse.quote(c, safe="/=,;:$&+@!'()*")
+        for c in rel.lstrip("/")
+    )
+
+
 def _canon_add(add: dict) -> dict:
     """Canonical JSON-shaped form of an add action regardless of where it
     was materialized from. Parquet checkpoints hand back MAP columns as
@@ -233,7 +246,7 @@ def _file_identity_df(
     spark: SparkSession, snap, files, *, row_tracking: bool = False
 ) -> DataFrame:
     """One broadcast-sized row per add action: file-identity columns
-    (basename plus raw/URL-quoted relative-path suffixes —
+    (basename plus raw/URI-encoded relative-path suffixes —
     ``_metadata.file_path`` is a URI) and the action's TYPED partition
     values, parsed driver-side from the protocol's canonical strings.
     Joining a scan's ``_metadata`` columns against this frame tags every
@@ -268,7 +281,7 @@ def _file_identity_df(
             os.path.basename(f.path),
             f.path,
             "/" + f.path.lstrip("/"),
-            "/" + urllib.parse.quote(f.path.lstrip("/")),
+            _uri_suffix(f.path),
             *(
                 (f.base_row_id, f.default_row_commit)
                 if row_tracking
@@ -813,7 +826,7 @@ class DeltaLogTable:
         ceiling / OOM the driver).
         The join hashes on ``_metadata.file_name`` equality but ALSO
         requires ``_metadata.file_path`` to end with the add's full
-        relative path (raw or URL-quoted — file_path is a URI): two live
+        relative path (raw or URI-encoded — file_path is a URI): two live
         files sharing a basename in different partition directories are
         legal in Delta, and a basename-only key would cross-apply one
         file's mask to the other. Files without DVs pay nothing beyond
@@ -846,7 +859,7 @@ class DeltaLogTable:
             (
                 os.path.basename(f.path),
                 "/" + f.path.lstrip("/"),
-                "/" + urllib.parse.quote(f.path.lstrip("/")),
+                _uri_suffix(f.path),
                 f.dv["storageType"],
                 f.dv["pathOrInlineDv"],
                 int(f.dv["offset"] or 0),
@@ -923,15 +936,9 @@ class DeltaLogTable:
         files = list(snap.files)
         pred = None
         if filters is not None:
-            groups = _normalize_filters(filters)
-            files = [
-                f
-                for f in files
-                if _file_may_match(
-                    FileEntry(f.path, 0, f.size, f.stats, {}), groups
-                )
-            ]
-            pred = _filters_to_column(groups)
+            groups = normalize_filters(filters)
+            files = [f for f in files if file_may_match(f, groups)]
+            pred = filters_to_column(groups)
 
         data_fields = [
             f for f in snap.schema.fields if f.name not in snap.partition_columns
@@ -2004,14 +2011,6 @@ def _enforce_delta_rules(df: DataFrame, rules: dict) -> None:
         )
 
 
-def _footer_stats_safe(spark: SparkSession, abs_path: str):
-    """``_footer_stats``, tolerant of footers this pyarrow can't parse
-    (VARIANT logical type) — shared with snaplog's staging walk."""
-    from dc43_spark.io.snaplog import _footer_stats_safe as _impl
-
-    return _impl(spark, abs_path)
-
-
 def _stage_data_files(
     df: DataFrame,
     dest: str,
@@ -2021,69 +2020,15 @@ def _stage_data_files(
     subdir: str = "",
 ) -> list:
     """Stage ``df`` as parquet under ``dest`` (or ``dest/subdir`` — e.g.
-    ``_change_data`` for CDF files) through an invisible staging dir,
-    returning protocol ``add``-shaped dicts: URL-encoded relative path,
-    hive-parsed partitionValues, footer-derived stats. Files get per-file
-    UUID names (Spark reuses one job UUID across a dynamic-partition
-    write, so two partition dirs can get the SAME basename — unique names
-    keep basename-keyed consumers collision-free). Shared by
-    ``delta_write`` and the DML kernel (io/delta_dml.py)."""
-    import shutil
-    import uuid as _uuid
-
-    staging = os.path.join(dest, f"_staging_{_uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-    adds: list = []
-    prefix = subdir.rstrip("/") + "/" if subdir else ""
-    try:
-        for root, _dirs, names in os.walk(staging):
-            rel_dir = os.path.relpath(root, staging)
-            if part_cols and rel_dir == ".":
-                continue
-            pvals: dict = {}
-            if part_cols and rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    c, _, raw = seg.partition("=")
-                    pvals[c] = (
-                        None
-                        if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else urllib.parse.unquote(raw)
-                    )
-            for src_name in sorted(names):
-                if not src_name.endswith(".parquet") or src_name.startswith((".", "_")):
-                    continue
-                name = f"part-{_uuid.uuid4().hex}.parquet"
-                sub = prefix if rel_dir == "." else prefix + rel_dir + "/"
-                os.makedirs(os.path.join(dest, sub) if sub else dest,
-                            exist_ok=True)
-                final = os.path.join(dest, sub + name)
-                os.rename(os.path.join(root, src_name), final)
-                rows, size, stats = _footer_stats_safe(
-                    df.sparkSession, final
-                )
-                if rows == 0:
-                    os.unlink(final)
-                    continue
-                st = {"numRecords": rows, "minValues": {}, "maxValues": {},
-                      "nullCount": {}}
-                for c, s in stats.items():
-                    st["minValues"][c] = s.get("min")
-                    st["maxValues"][c] = s.get("max")
-                    st["nullCount"][c] = s.get("nulls", 0)
-                adds.append({
-                    "path": urllib.parse.quote(sub + name),
-                    "partitionValues": pvals,
-                    "size": size,
-                    "modificationTime": ts_ms,
-                    "dataChange": True,
-                    "stats": json.dumps(st),
-                })
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    ``_change_data`` for CDF files) through the shared staging kernel
+    (``tablecore.stage_parquet``), returning protocol ``add`` actions
+    (the same entry -> add mapping the snaplog export uses). Shared by
+    ``delta_write``, ``delta_optimize`` and the DML kernel
+    (io/delta_dml.py)."""
+    return [
+        _export_add_action(e, e.path, ts_ms, part_cols, None)
+        for e in stage_parquet(df, dest, subdir, part_cols)
+    ]
 
 
 def delta_write(
@@ -2125,11 +2070,8 @@ def delta_write(
     reader.
 
     Returns the committed Delta version (None = idempotent skip)."""
-    import shutil
     import time as _time
     import uuid as _uuid
-
-    from dc43_spark.io.snaplog import LinkCommitClaimer
 
     if mode not in ("append", "overwrite"):
         raise ValueError(f"delta_write supports append|overwrite, not {mode!r}")
@@ -2926,9 +2868,6 @@ def delta_optimize(
 
     Returns the committed version, or None when nothing needed packing."""
     import time as _time
-    import uuid as _uuid
-
-    from dc43_spark.io.snaplog import LinkCommitClaimer
 
     dest = os.path.abspath(path.rstrip("/"))
     t = DeltaLogTable(spark, dest)
@@ -3105,42 +3044,10 @@ def delta_optimize(
                     if mc and mc in df.columns
                 ],
             )
-        staging = os.path.join(dest, f"_staging_{_uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        import shutil
-
-        try:
-            parts = []
-            for n in sorted(
-                n for n in os.listdir(staging)
-                if n.endswith(".parquet") and not n.startswith((".", "_"))
-            ):
-                # per-file UUID names (see delta_write's staging walk)
-                unique = f"part-{_uuid.uuid4().hex}.parquet"
-                os.rename(os.path.join(staging, n), os.path.join(dest, unique))
-                parts.append(unique)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        for n in parts:
-            final = os.path.join(dest, n)
-            rows, size, stats = _footer_stats_safe(spark, final)
-            if rows == 0:
-                os.unlink(final)
-                continue
-            st = {"numRecords": rows, "minValues": {}, "maxValues": {},
-                  "nullCount": {}}
-            for c, s in stats.items():
-                st["minValues"][c] = s.get("min")
-                st["maxValues"][c] = s.get("max")
-                st["nullCount"][c] = s.get("nulls", 0)
-            adds.append({
-                "path": urllib.parse.quote(n),
-                "partitionValues": {l2p.get(c, c): v for c, v in key},
-                "size": size,
-                "modificationTime": ts_ms,
-                "dataChange": False,
-                "stats": json.dumps(st),
-            })
+        for add in _stage_data_files(df, dest, (), ts_ms):
+            add["partitionValues"] = {l2p.get(c, c): v for c, v in key}
+            add["dataChange"] = False
+            adds.append(add)
         removes += [m.path for m in members]
 
     claimer = LinkCommitClaimer()
@@ -3286,8 +3193,6 @@ def delta_restore(
     import time as _time
 
     from dc43_spark.io.dv import dv_absolute_path
-    from dc43_spark.io.snaplog import LinkCommitClaimer
-
     dest = os.path.abspath(path.rstrip("/"))
     t = DeltaLogTable(spark, dest)
     target_snap = t.snapshot(version, timestamp=timestamp)
@@ -3590,8 +3495,6 @@ def _metadata_commit(spark: SparkSession, path: str, op: str, params: dict,
     upgrades are O(1) commits — no data moves (the protocol's whole point
     for these operations)."""
     import time as _time
-
-    from dc43_spark.io.snaplog import LinkCommitClaimer
 
     t = DeltaLogTable(spark, path)
     claimer = LinkCommitClaimer()
@@ -4149,8 +4052,6 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
     import time as _time
     import uuid as _uuid
 
-    from dc43_spark.io.snaplog import LinkCommitClaimer
-
     t = DeltaLogTable(spark, path)
     claimer = LinkCommitClaimer()
     for _ in range(20):
@@ -4213,7 +4114,7 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
                 # dataSkippingNumIndexedCols=0): the id RANGE must still
                 # cover every physical row, so read the footer count —
                 # guessing would silently hand two rows the same id
-                n_rows, _size, _stats = _footer_stats_safe(
+                n_rows, _size, _stats = footer_stats_safe(
                     spark, os.path.join(t.path, rel)
                 )
                 a["stats"] = json.dumps({
@@ -4343,14 +4244,14 @@ def _delta_table_changes(
     file_schema = t._physical_schema(end_snap, data_fields)
 
     def _ident_keys(rel: str) -> tuple:
-        """(basename, raw suffix, URL-quoted suffix) — the same
+        """(basename, raw suffix, URI-encoded suffix) — the same
         full-relative-path keying ``_dv_filter`` uses: basename equality
         drives the hash join, the suffix residual disambiguates two live
         files sharing a basename in different partition directories."""
         return (
             os.path.basename(rel),
             "/" + rel.lstrip("/"),
-            "/" + urllib.parse.quote(rel.lstrip("/")),
+            _uri_suffix(rel),
         )
 
     def _rows_batch(specs, mode: str) -> DataFrame:

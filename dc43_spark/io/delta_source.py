@@ -98,7 +98,7 @@ from dc43_spark.io.delta_log import (
     _decode_path,
     _parse_partition_value,
 )
-from dc43_spark.io.snaplog import _file_may_match, _normalize_filters, FileEntry
+from dc43_spark.io.tablecore import file_may_match, normalize_filters
 from dc43_spark.io.snaplog_source import (
     _FilePartition,
     _arrow_batches,
@@ -229,12 +229,8 @@ class DeltaLogPlainBatchReader(DataSourceReader):
         types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
         files = list(snap.files)
         if self._pushed:
-            groups = _normalize_filters(self._pushed[0])
-            files = [
-                f for f in files
-                if _file_may_match(FileEntry(f.path, 0, f.size, f.stats, {}),
-                                   groups)
-            ]
+            groups = normalize_filters(self._pushed[0])
+            files = [f for f in files if file_may_match(f, groups)]
         return [_file_partition(self._table, snap, f, types) for f in files]
 
     def read(self, partition: _FilePartition) -> Iterator:

@@ -103,7 +103,7 @@ import tempfile
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Optional, Protocol, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,6 +111,20 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from . import bloom as _bloom
+from dc43_spark.io.tablecore import (  # noqa: F401 (HttpCommitClaimer: re-export)
+    CommitClaimer,
+    FileEntry,
+    HttpCommitClaimer,
+    LinkCommitClaimer,
+    cond_may_match,
+    file_may_match,
+    filters_to_column,
+    json_safe,
+    normalize_filters,
+    stage_concurrently,
+    stage_parquet,
+    vectorized_cond,
+)
 from dc43_spark.localdf import local_df
 
 LOG_DIR = "_snaplog"
@@ -120,13 +134,6 @@ DV_DIR = "_deletes"
 BLOOM_DIR = "_index/bloom"
 CHANGE_TYPE_COL = "_change_type"
 _VERSION_WIDTH = 20
-_STATS_MAX_COLUMNS = 32  # delta-style cap: stats for the first N columns
-# Parquet writers may TRUNCATE long binary min/max statistics (parquet-mr
-# truncates at 64 bytes; the footer carries no exactness flag pyarrow
-# exposes). A truncated max understates the real max and would make
-# pruning WRONG, not just loose — so string stats at or beyond this
-# length are discarded at commit time and those files are never pruned.
-_STATS_MAX_STRING = 64
 
 
 class SnapshotConflictError(RuntimeError):
@@ -149,119 +156,6 @@ class ConstraintViolationError(ValueError):
     def __init__(self, message: str, counts: dict):
         super().__init__(message)
         self.counts = dict(counts)
-
-
-class CommitClaimer(Protocol):
-    """Atomic put-if-absent of a commit manifest — the ONLY primitive the
-    log needs from storage. ``claim`` writes ``payload`` to ``dest_name``
-    iff no file exists there, returning False (and writing nothing) when
-    a rival already claimed it. Implementations: ``LinkCommitClaimer``
-    (POSIX/HDFS hard link, the default); an object-store claimer maps to
-    the store's conditional put (S3 ``If-None-Match: *``, GCS
-    ``ifGenerationMatch=0``, ADLS ``If-None-Match: *``)."""
-
-    def claim(self, log_dir: str, dest_name: str, payload: str) -> bool: ...
-
-
-class LinkCommitClaimer:
-    """Default claimer: write a temp file, ``os.link`` it to the commit
-    name. ``link`` is atomic and fails with ``FileExistsError`` when the
-    version is taken, so two concurrent committers can never both win."""
-
-    def claim(self, log_dir: str, dest_name: str, payload: str) -> bool:
-        os.makedirs(log_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=log_dir, suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as fh:
-                fh.write(payload)
-            try:
-                os.link(tmp, os.path.join(log_dir, dest_name))
-            except FileExistsError:
-                return False
-            return True
-        finally:
-            os.unlink(tmp)
-
-
-class HttpCommitClaimer:
-    """Object-store claimer: mutual exclusion via HTTP conditional put
-    (``PUT If-None-Match: *`` — the S3/GCS/ADLS create-if-absent
-    primitive; 412 = a rival already holds the version). After winning,
-    the manifest is PUBLISHED to the local log dir so readers see it; in
-    a real object store the accepted PUT is itself the publish, so the
-    split only exists where (as here) a filesystem mirrors the store.
-
-    Crash recovery: losing a claim whose winner died between the
-    store-accept and the publish would strand readers — so on 412 the
-    claimer GETs the winning payload and completes the publish
-    idempotently (every later writer heals the gap; same trick as
-    S3-committer "complete the other guy's commit")."""
-
-    def __init__(self, base_url: str, *, timeout: float = 10.0):
-        self.base_url = base_url.rstrip("/")
-        self.timeout = timeout
-
-    def _url(self, dest_name: str) -> str:
-        from urllib.parse import quote
-
-        return f"{self.base_url}/{quote(dest_name)}"
-
-    def claim(self, log_dir: str, dest_name: str, payload: str) -> bool:
-        import urllib.error
-        import urllib.request
-
-        req = urllib.request.Request(
-            self._url(dest_name),
-            data=payload.encode(),
-            method="PUT",
-            headers={"If-None-Match": "*", "Content-Type": "application/json"},
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                if resp.status not in (200, 201):
-                    raise OSError(
-                        f"conditional put of {dest_name} returned {resp.status}"
-                    )
-        except urllib.error.HTTPError as exc:
-            if exc.code != 412:
-                raise
-            self._heal(log_dir, dest_name)
-            return False
-        self._publish(log_dir, dest_name, payload)
-        return True
-
-    def _publish(self, log_dir: str, dest_name: str, payload: str) -> None:
-        os.makedirs(log_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=log_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
-        os.replace(tmp, os.path.join(log_dir, dest_name))
-
-    def _heal(self, log_dir: str, dest_name: str) -> None:
-        """The version is claimed in the store but may not be published
-        locally (winner crashed mid-commit): fetch and publish it."""
-        import urllib.request
-
-        if os.path.exists(os.path.join(log_dir, dest_name)):
-            return
-        with urllib.request.urlopen(self._url(dest_name), timeout=self.timeout) as r:
-            self._publish(log_dir, dest_name, r.read().decode())
-
-
-@dataclass(frozen=True)
-class FileEntry:
-    """One immutable data file as recorded in the log."""
-
-    path: str  # relative to the table root, e.g. "data/part-...parquet"
-    rows: int
-    bytes: int
-    stats: dict  # {col: {"min": v, "max": v, "nulls": n}} (prunable cols only)
-    # hive-style partition values for this file ({col: value}, JSON
-    # scalars, None = NULL partition); empty for unpartitioned tables.
-    # Partition values are ALSO folded into ``stats`` as exact
-    # min==max envelopes, so every pruning path (read filters, merge
-    # key ranges, pushed filters) short-circuits on them for free.
-    partition: dict = field(default_factory=dict)
 
 
 class _FileBlock:
@@ -357,7 +251,7 @@ class _FileBlock:
                 tri = self.stat(col)
                 if tri is None or tri[0][i] is None:
                     continue  # no stats -> cannot exclude on this condition
-                if not _cond_may_match({"min": tri[0][i], "max": tri[1][i]}, op, val):
+                if not cond_may_match({"min": tri[0][i], "max": tri[1][i]}, op, val):
                     ok = False
                     break
             if ok:
@@ -407,7 +301,7 @@ class _FileBlock:
                     arrs = self._stat_arrow(col)
                     if arrs is None:
                         continue  # column can't exclude anything
-                    c = _vectorized_cond(arrs, op, val)
+                    c = vectorized_cond(arrs, op, val)
                     if c is None:
                         continue
                     # null stats cell = unknown = cannot exclude
@@ -612,7 +506,7 @@ class Snapshot:
             if self.base
             else []
         )
-        out.extend(e for e in self.added if _file_may_match(e, groups))
+        out.extend(e for e in self.added if file_may_match(e, groups))
         out.sort(key=lambda f: f.path)
         return out
 
@@ -659,152 +553,13 @@ class MergeStats:
     strategy: str = "copy-on-write"
 
 
-def _json_safe(value):
-    """Footer stat -> JSON scalar; None when the type can't round-trip."""
-    import datetime
-    import decimal
-
-    if isinstance(value, bool) or value is None:
-        return value
-    if isinstance(value, (int, float, str)):
-        return value
-    if isinstance(value, (datetime.date, datetime.datetime)):
-        return value.isoformat()
-    if isinstance(value, decimal.Decimal):
-        return str(value)
-    return None
-
-
-def _footer_stats_safe(
-    spark: SparkSession, abs_path: str
-) -> tuple[int, int, dict]:
-    """``_footer_stats``, tolerant of footers this pyarrow can't parse:
-    Spark writes logical types (VARIANT) newer than the installed
-    pyarrow's Thrift schema. Falls back to a Spark footer-only row count
-    (count pushdown reads no data pages) plus one stats aggregate over
-    the prunable primitive columns — variant columns never carry stats
-    either way."""
-    try:
-        return _footer_stats(abs_path)
-    except OSError:
-        df_f = spark.read.parquet(abs_path)
-        simple = {
-            "byte", "short", "integer", "long", "float", "double",
-            "decimal", "string", "boolean", "date", "timestamp",
-            "timestamp_ntz",
-        }
-        prunable = [
-            f.name for f in df_f.schema.fields
-            if f.dataType.typeName() in simple
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in prunable:
-            aggs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"__nul_{c}"),
-            ]
-        row = df_f.agg(*aggs).collect()[0].asDict()
-        stats = {
-            c: {
-                "min": _json_safe(row[f"__min_{c}"]),
-                "max": _json_safe(row[f"__max_{c}"]),
-                "nulls": int(row[f"__nul_{c}"] or 0),
-            }
-            for c in prunable
-            if row[f"__min_{c}"] is not None
-        }
-        return int(row["__rows"]), os.path.getsize(abs_path), stats
-
-
-def _footer_stats(abs_path: str) -> tuple[int, int, dict]:
-    """(rows, bytes, per-column min/max/nulls) from the parquet footer —
-    no data pages are read; the stats were computed by the writer."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(abs_path).metadata
-    rows = md.num_rows
-    size = os.path.getsize(abs_path)
-    acc: dict[str, Optional[dict]] = {}  # name -> {"min","max","nulls"} | None
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(min(g.num_columns, _STATS_MAX_COLUMNS)):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested leaf — not prunable at top level
-                continue
-            if name in acc and acc[name] is None:
-                continue  # already disqualified (missing/unsafe stats)
-            try:
-                st = col.statistics
-                lo = _json_safe(st.min) if st is not None and st.has_min_max else None
-                hi = _json_safe(st.max) if st is not None and st.has_min_max else None
-            except Exception:  # pyarrow can't decode stats for some
-                # physical types (e.g. decimals on this version) — the
-                # column simply doesn't prune; correctness is unaffected
-                acc[name] = None
-                continue
-            if lo is None or hi is None:
-                acc[name] = None
-                continue
-            if isinstance(lo, str) and (
-                len(lo) >= _STATS_MAX_STRING or len(hi) >= _STATS_MAX_STRING
-            ):
-                acc[name] = None  # possibly writer-truncated -> unsafe to prune on
-                continue
-            n_null = int(st.null_count or 0)
-            prev = acc.get(name)
-            if prev is None and name not in acc:
-                acc[name] = {"min": lo, "max": hi, "nulls": n_null}
-            else:
-                try:
-                    prev["min"] = min(prev["min"], lo)
-                    prev["max"] = max(prev["max"], hi)
-                    prev["nulls"] += n_null
-                except TypeError:  # incomparable across groups -> disqualify
-                    acc[name] = None
-    return rows, size, {k: v for k, v in acc.items() if v is not None}
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _parse_partition_dirs(rel_dir: str, partition_by: Sequence[str], schema) -> dict:
-    """``region=us/n=10`` (as written by Spark's partitionBy) -> typed
-    {col: value}. Values are URL-decoded; ``__HIVE_DEFAULT_PARTITION__``
-    is NULL; types come from the table schema (a failed conversion keeps
-    the raw string — reads stay exact via Spark's own path parsing, the
-    file just loses exact-stats pruning on that column)."""
-    from urllib.parse import unquote
-
-    out: dict = {}
-    parts = [p for p in rel_dir.split(os.sep) if p]
-    if len(parts) != len(partition_by):
-        raise ValueError(
-            f"staged file dir {rel_dir!r} does not match partition spec "
-            f"{list(partition_by)}"
-        )
-    types = {f.name: f.dataType for f in schema.fields}
-    for col, seg in zip(partition_by, parts):
-        name, _, raw = seg.partition("=")
-        if name != col:
-            raise ValueError(
-                f"staged dir segment {seg!r} does not match partition column {col!r}"
-            )
-        raw = unquote(raw)
-        if raw == _HIVE_NULL:
-            out[col] = None
-            continue
-        out[col] = _typed_partition_value(raw, types.get(col))
-    return out
-
-
-def _typed_partition_value(raw: str, dtype):
+def _typed_partition_value(raw: Optional[str], dtype):
     """Directory-name string -> python value of the column's Spark type
-    (the same JSON-scalar family _json_safe produces for footer stats)."""
+    (the same JSON-scalar family json_safe produces for footer stats);
+    None (the NULL partition) stays None."""
     import datetime
 
-    if dtype is None:
+    if raw is None or dtype is None:
         return raw
     s = dtype.simpleString()
     try:
@@ -1075,121 +830,7 @@ def _checkpoint_name(version: int, fmt: str = "json") -> str:
     return f"{version:0{_VERSION_WIDTH}d}.checkpoint.{fmt}"
 
 
-# ---------------- predicate file skipping (pyarrow-DNF-style filters)
-
-_FILTER_OPS = ("=", "==", "!=", "<", "<=", ">", ">=", "in", "not in")
-
-
-def _normalize_filters(filters) -> list[list[tuple]]:
-    """Accept pyarrow's two spellings — a flat list of ``(col, op, val)``
-    tuples (implicit AND) or a list of such lists (OR of ANDs) — and
-    return the canonical OR-of-ANDs form, validated."""
-    if not filters:
-        raise ValueError("filters must be a non-empty list")
-    flat = not isinstance(filters[0], list)
-    groups = [list(filters)] if flat else [list(g) for g in filters]
-    for g in groups:
-        if not g:
-            raise ValueError("empty AND-group in filters")
-        for cond in g:
-            if not (isinstance(cond, tuple) and len(cond) == 3):
-                raise ValueError(f"filter condition must be (col, op, value): {cond!r}")
-            col, op, _ = cond
-            if not isinstance(col, str):
-                raise ValueError(f"filter column must be a string: {col!r}")
-            if op not in _FILTER_OPS:
-                raise ValueError(f"unsupported filter op {op!r} (have {_FILTER_OPS})")
-    return groups
-
-
-def _cond_may_match(stats: Optional[dict], op: str, val) -> bool:
-    """Can ANY row of a file with footer ``stats`` satisfy ``col op val``?
-    Conservative: missing stats, NULL literals, or incomparable types
-    answer True (keep the file). SQL three-valued semantics: a NULL cell
-    never satisfies any of these ops, so null counts are irrelevant —
-    only the non-null [min, max] envelope decides."""
-    if stats is None:
-        return True
-    lo, hi = stats["min"], stats["max"]
-    vals = list(val) if op in ("in", "not in") else [val]
-    if any(v is None for v in vals):
-        return True  # NULL literal: Spark yields no rows, but don't reason here
-    if lo is None and hi is None:
-        # an EXACT envelope (a partition value: min==max by construction)
-        # that is NULL means the column is NULL on every row — NULL
-        # satisfies none of these comparisons, so the file prunes; a
-        # footer-stats null min/max just means omitted/truncated stats
-        # (long strings) and stays conservative
-        return not stats.get("exact", False)
-    try:
-        if op in ("=", "=="):
-            return lo <= val <= hi
-        if op == "!=":
-            return not (lo == hi == val)
-        if op == "<":
-            return lo < val
-        if op == "<=":
-            return lo <= val
-        if op == ">":
-            return hi > val
-        if op == ">=":
-            return hi >= val
-        if op == "in":
-            return any(lo <= v <= hi for v in vals)
-        if op == "not in":
-            return not (lo == hi and lo in vals)
-    except TypeError:
-        return True  # stats/literal types don't compare -> can't prune
-    return True
-
-
-def _file_may_match(f: FileEntry, groups: list[list[tuple]]) -> bool:
-    """DNF evaluation over one file: keep if ANY or-group survives, a
-    group survives if EVERY condition may match."""
-    return any(
-        all(_cond_may_match(f.stats.get(col), op, val) for col, op, val in g)
-        for g in groups
-    )
-
-
-def _vectorized_cond(arrs, op: str, val):
-    """The arrow-compute twin of ``_cond_may_match``: a boolean array
-    over ALL files (True / null = may match) for one condition. Returns
-    None when the condition can't exclude anything (NULL literal);
-    raises Arrow errors on type mismatch (caller falls back)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    mins, maxs, _nulls = arrs
-    if op in ("in", "not in"):
-        vals = list(val)
-        if any(v is None for v in vals):
-            return None
-        if op == "in":
-            m = None
-            for v in vals:
-                c = pc.and_(pc.less_equal(mins, v), pc.greater_equal(maxs, v))
-                m = c if m is None else pc.or_(m, c)
-            return m
-        return pc.invert(
-            pc.and_(pc.equal(mins, maxs), pc.is_in(mins, value_set=pa.array(vals)))
-        )
-    if val is None:
-        return None
-    if op in ("=", "=="):
-        return pc.and_(pc.less_equal(mins, val), pc.greater_equal(maxs, val))
-    if op == "!=":
-        return pc.invert(pc.and_(pc.equal(mins, val), pc.equal(maxs, val)))
-    if op == "<":
-        return pc.less(mins, val)
-    if op == "<=":
-        return pc.less_equal(mins, val)
-    if op == ">":
-        return pc.greater(maxs, val)
-    if op == ">=":
-        return pc.greater_equal(maxs, val)
-    return None
-
+# ---------------- merge key-range file pruning
 
 def _prune_entries_by_stats(
     files: Sequence[FileEntry], keys: Sequence[str], key_ranges: dict
@@ -1221,36 +862,6 @@ def _prune_entries_by_stats(
         if keep:
             out.append(f)
     return out
-
-
-def _filters_to_column(groups: list[list[tuple]]):
-    """The SAME predicate as a Spark Column — applied residually after
-    file pruning so results are row-exact regardless of pruning power."""
-    import functools
-    import operator
-
-    def cond(col, op, val):
-        c = F.col(col)
-        if op in ("=", "=="):
-            return c == F.lit(val)
-        if op == "!=":
-            return c != F.lit(val)
-        if op == "<":
-            return c < F.lit(val)
-        if op == "<=":
-            return c <= F.lit(val)
-        if op == ">":
-            return c > F.lit(val)
-        if op == ">=":
-            return c >= F.lit(val)
-        if op == "in":
-            return c.isin(list(val))
-        return ~c.isin(list(val))  # not in
-
-    ands = [
-        functools.reduce(operator.and_, [cond(*t) for t in g]) for g in groups
-    ]
-    return functools.reduce(operator.or_, ands)
 
 
 @dataclass
@@ -2170,7 +1781,7 @@ class SnaplogTable:
         snap = self.snapshot(version_as_of, timestamp=timestamp_as_of)
         pred = None
         if filters is not None:
-            groups = _normalize_filters(filters)
+            groups = normalize_filters(filters)
             # stats and blooms are keyed by PHYSICAL names; the residual
             # predicate runs after the scan aliases back to logical
             pgroups = self._phys_groups(groups, snap)
@@ -2185,7 +1796,7 @@ class SnaplogTable:
             # columns drop the stats survivors whose blooms prove the
             # key absent (no-op unless the table has bloom_columns)
             files = self._bloom_prune(files, pgroups, snap)
-            pred = _filters_to_column(groups)
+            pred = filters_to_column(groups)
         else:
             files = list(snap.files)
         df = self._scan(files, snap)
@@ -2318,8 +1929,6 @@ class SnaplogTable:
         N files PER partition value, the classic small-file generator on
         high-frequency partitioned ingest."""
         dest_root = dest_dir or self.data_dir
-        rel_root = os.path.relpath(dest_root, self.path)
-        staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         part_names: Sequence[str] = ()
         if partition_by:
             fields = parse_partition_spec(partition_by)
@@ -2341,67 +1950,20 @@ class SnaplogTable:
             part_names = [f.name for f in fields]
             if align_partitions:
                 df = df.repartition(*[F.col(n) for n in part_names])
-        writer = df.write.mode("overwrite")
-        if part_names:
-            writer = writer.partitionBy(*part_names)
-        writer.parquet(staging)
         os.makedirs(dest_root, exist_ok=True)
+        staged = stage_parquet(
+            df, self.path, os.path.relpath(dest_root, self.path), part_names
+        )
+        types = {f.name: f.dataType for f in df.schema.fields}
         entries = []
-        try:
-            for root, _dirs, names in os.walk(staging):
-                rel_dir = os.path.relpath(root, staging)
-                partition = (
-                    _parse_partition_dirs(rel_dir, part_names, df.schema)
-                    if part_names and rel_dir != "."
-                    else {}
-                )
-                if partition_by and rel_dir == "." :
-                    continue  # only _SUCCESS/marker files live at the root
-                for src_name in sorted(names):
-                    if not src_name.endswith(".parquet") or src_name.startswith((".", "_")):
-                        continue
-                    # Rename to a per-file UUID: Spark part names reuse one
-                    # job UUID across a dynamic-partition write, so the SAME
-                    # basename can land in two partition dirs — and DV state
-                    # is keyed by basename (the scan joins on
-                    # _metadata.file_name), so colliding names would
-                    # cross-apply one file's deletes to the other
-                    name = f"part-{uuid.uuid4().hex}.parquet"
-                    sub = "" if rel_dir == "." else rel_dir + "/"
-                    os.makedirs(os.path.join(dest_root, rel_dir), exist_ok=True)
-                    dest = os.path.join(dest_root, sub, name)
-                    os.rename(os.path.join(root, src_name), dest)
-                    rows, size, stats = _footer_stats_safe(self.spark, dest)
-                    if rows == 0:
-                        # schema travels in the commit's schema_json; a 0-row
-                        # part (empty overwrite, whole-file delete) adds noise
-                        os.unlink(dest)
-                        continue
-                    stats.update(_partition_stats(partition, rows))
-                    entries.append(
-                        FileEntry(f"{rel_root}/{sub}{name}", rows, size, stats, partition)
-                    )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        for e in staged:
+            partition = {
+                c: _typed_partition_value(v, types.get(c))
+                for c, v in e.partition.items()
+            }
+            stats = {**e.stats, **_partition_stats(partition, e.rows)}
+            entries.append(FileEntry(e.path, e.rows, e.bytes, stats, partition))
         return entries
-
-    def _stage_files_pair(self, first: dict, second: dict) -> tuple:
-        """Run two independent ``_stage_files`` jobs CONCURRENTLY and
-        return their entry lists in call order. A DML op's CDC staging
-        and its rewrite/DV staging read the same pinned inputs (the
-        persisted merge source, the touched-file scan) but are otherwise
-        independent Spark actions — they ran back-to-back only because
-        the driver called them sequentially (guide §2.6: overlap
-        independent jobs so the second job's tasks back-fill the first's
-        tail). Each call's staging dir is its own UUID path, so the two
-        writes never collide; on failure the pool waits for both before
-        raising, and each call cleans its own staging dir."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(self._stage_files, **first)
-            fb = pool.submit(self._stage_files, **second)
-            return fa.result(), fb.result()
 
     def _try_commit(self, version: int, record: dict) -> bool:
         """Atomically claim ``_snaplog/<version>.json``; False if taken."""
@@ -2999,7 +2561,7 @@ class SnaplogTable:
                 keys, ranges = info.key_ranges
                 hits = _prune_entries_by_stats(entries, keys, ranges)
             elif info.groups is not None:
-                hits = [f for f in entries if _file_may_match(f, info.groups)]
+                hits = [f for f in entries if file_may_match(f, info.groups)]
             else:
                 hits = entries  # whole-table read: every add overlaps
             if hits:
@@ -3604,8 +3166,8 @@ class SnaplogTable:
             # column was renamed)
             key_ranges = {
                 snap.physical(k): (
-                    _json_safe(ranges_row[f"_lo_{i}"]),
-                    _json_safe(ranges_row[f"_hi_{i}"]),
+                    json_safe(ranges_row[f"_lo_{i}"]),
+                    json_safe(ranges_row[f"_hi_{i}"]),
                     bool(ranges_row[f"_null_{i}"]),
                 )
                 for i, k in enumerate(keys)
@@ -3732,7 +3294,7 @@ class SnaplogTable:
             # this merge writes; carried-over files already hold (invariant)
             self._enforce_constraints(merged, snap.constraints, "merge")
 
-            cdc = None
+            cdc_job = None
             if self.change_feed:
                 cdc_df = self._to_physical_df(
                     self._merge_changes(
@@ -3750,20 +3312,18 @@ class SnaplogTable:
                     ),
                     snap,
                 )
-                cdc, added = self._stage_files_pair(
-                    dict(df=cdc_df, dest_dir=self.cdc_dir),
-                    dict(
-                        df=self._to_physical_df(merged, snap),
-                        partition_by=snap.partition_by,
-                        align_partitions=self.optimize_write,
-                    ),
+                cdc_job = functools.partial(
+                    self._stage_files, cdc_df, dest_dir=self.cdc_dir
                 )
-            else:
-                added = self._stage_files(
+            cdc, added = stage_concurrently([
+                cdc_job,
+                functools.partial(
+                    self._stage_files,
                     self._to_physical_df(merged, snap),
                     partition_by=snap.partition_by,
                     align_partitions=self.optimize_write,
-                )
+                ),
+            ])
             self._commit(
                 "merge",
                 add=added,
@@ -4261,26 +3821,24 @@ class SnaplogTable:
             n_del = hit.count()
             if n_del == 0:
                 return RewriteStats(snap.num_files, len(candidates), 0, 0, 0, 0)
-            cdc = None
+            cdc_job = None
             dv_df = hit.select(
                 F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
             )
             if self.change_feed:
                 data_cols = [c for c in hit.columns if c not in ("_dv_file", "_dv_pos")]
-                cdc, dv_added = self._stage_files_pair(
-                    dict(
-                        df=self._to_physical_df(
-                            hit.select(
-                                *data_cols, F.lit("delete").alias(CHANGE_TYPE_COL)
-                            ),
-                            snap,
-                        ),
-                        dest_dir=self.cdc_dir,
+                cdc_job = functools.partial(
+                    self._stage_files,
+                    self._to_physical_df(
+                        hit.select(*data_cols, F.lit("delete").alias(CHANGE_TYPE_COL)),
+                        snap,
                     ),
-                    dict(df=dv_df, dest_dir=self.dv_dir),
+                    dest_dir=self.cdc_dir,
                 )
-            else:
-                dv_added = self._stage_files(dv_df, dest_dir=self.dv_dir)
+            cdc, dv_added = stage_concurrently([
+                cdc_job,
+                functools.partial(self._stage_files, dv_df, dest_dir=self.dv_dir),
+            ])
             self._commit(
                 "delete",
                 schema_json=snap.schema_json,
@@ -4372,10 +3930,10 @@ class SnaplogTable:
                 f"{op}() needs filters= (pyarrow DNF) and/or where= "
                 "(SQL predicate)"
             )
-        groups = _normalize_filters(filters) if filters is not None else []
+        groups = normalize_filters(filters) if filters is not None else []
         parts = []
         if groups:
-            parts.append(_filters_to_column(groups))
+            parts.append(filters_to_column(groups))
         if where is not None:
             parts.append(F.expr(where))
         pred = parts[0]
@@ -4457,27 +4015,24 @@ class SnaplogTable:
         rows_before = sum(f.rows for f in touched)
         df = self._scan(touched, snap)
         keep = df.filter(~pred | pred.isNull())  # NULL predicate rows are KEPT
-        cdc = None
+        cdc_job = None
         if self.change_feed:
-            cdc, added = self._stage_files_pair(
-                dict(
-                    df=self._to_physical_df(
-                        df.filter(pred).select(
-                            "*", F.lit("delete").alias(CHANGE_TYPE_COL)
-                        ),
-                        snap,
-                    ),
-                    dest_dir=self.cdc_dir,
+            cdc_job = functools.partial(
+                self._stage_files,
+                self._to_physical_df(
+                    df.filter(pred).select("*", F.lit("delete").alias(CHANGE_TYPE_COL)),
+                    snap,
                 ),
-                dict(
-                    df=self._to_physical_df(keep, snap),
-                    partition_by=snap.partition_by,
-                ),
+                dest_dir=self.cdc_dir,
             )
-        else:
-            added = self._stage_files(
-                self._to_physical_df(keep, snap), partition_by=snap.partition_by
-            )
+        cdc, added = stage_concurrently([
+            cdc_job,
+            functools.partial(
+                self._stage_files,
+                self._to_physical_df(keep, snap),
+                partition_by=snap.partition_by,
+            ),
+        ])
         self._commit(
             "delete",
             add=added,
@@ -4567,7 +4122,7 @@ class SnaplogTable:
                     g, F.expr(e).cast(df.schema[g].dataType)
                 )
         self._enforce_constraints(rewritten, snap.constraints, "update")
-        cdc = None
+        cdc_job = None
         if self.change_feed:
             matched = df.filter(pred)
             pre = matched.select(
@@ -4587,21 +4142,19 @@ class SnaplogTable:
             post = post.select(
                 "*", F.lit("update_postimage").alias(CHANGE_TYPE_COL)
             )
-            cdc, added = self._stage_files_pair(
-                dict(
-                    df=self._to_physical_df(pre.unionByName(post), snap),
-                    dest_dir=self.cdc_dir,
-                ),
-                dict(
-                    df=self._to_physical_df(rewritten, snap),
-                    partition_by=snap.partition_by,
-                ),
+            cdc_job = functools.partial(
+                self._stage_files,
+                self._to_physical_df(pre.unionByName(post), snap),
+                dest_dir=self.cdc_dir,
             )
-        else:
-            added = self._stage_files(
+        cdc, added = stage_concurrently([
+            cdc_job,
+            functools.partial(
+                self._stage_files,
                 self._to_physical_df(rewritten, snap),
                 partition_by=snap.partition_by,
-            )
+            ),
+        ])
         self._commit(
             "update",
             add=added,
@@ -5012,7 +4565,7 @@ class SnaplogTable:
         scope = snap.files
         if where is not None:
             pgroups = augment_groups_for_partitions(
-                self._phys_groups(_normalize_filters(where), snap),
+                self._phys_groups(normalize_filters(where), snap),
                 snap.partition_by,
             )
             scope = snap.prune(pgroups)

@@ -12,8 +12,8 @@ with the idiomatic reader surfaces::
 
 Batch reads integrate with Catalyst FILTER PUSHDOWN: ``pushFilters``
 receives the query's conjunctive predicates, maps the supported
-comparisons onto snaplog's footer-stats file pruning (io/snaplog.py
-``_file_may_match``), and plans one input partition per SURVIVING file
+comparisons onto the footer-stats file pruning (io/tablecore.py
+``file_may_match``), and plans one input partition per SURVIVING file
 — a selective query against a clustered table never opens the pruned
 files. Every filter is also handed back to Spark for row-level
 re-application, so pruning is a pure optimization: stats can only skip
@@ -65,12 +65,10 @@ from pyspark.sql.datasource import (
 
 from dc43_spark.io.snaplog import (
     CHANGE_TYPE_COL,
-    FileEntry,
     SnaplogTable,
-    _file_may_match,
-    _normalize_filters,
     augment_groups_for_partitions,
 )
+from dc43_spark.io.tablecore import normalize_filters
 
 _CDC_FIELDS = [
     T.StructField(CHANGE_TYPE_COL, T.StringType()),
@@ -331,7 +329,7 @@ class SnaplogPushdownBatchReader(SnaplogBatchReader):
     def pushFilters(self, filters):
         tuples = _filters_to_tuples(filters)
         if tuples:
-            self._filter_groups = _normalize_filters(tuples)
+            self._filter_groups = normalize_filters(tuples)
         # stats pruning is file-granular, never row-exact: hand EVERY
         # filter back so Spark re-applies them to the surviving rows
         return filters

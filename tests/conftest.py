@@ -100,19 +100,33 @@ def pytest_addoption(parser):
     )
 
 
+@pytest.hookimpl(tryfirst=True)  # mark before `-m` / `-k` deselect
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get("DC43_RUN_SLOW"):
-        return
+    def rel(nodeid: str) -> str:
+        return nodeid[len("tests/"):] if nodeid.startswith("tests/") else nodeid
+
+    collected = {rel(item.nodeid) for item in items}
+    # a file named with a ``::`` selector on the command line (or
+    # narrowed by --lf) is only partly collected, so its other entries
+    # are legitimately absent
+    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    files = {n.split("::")[0] for n in collected} - partial
+    stale = [] if config.getoption("lf", False) else sorted(
+        n for n in _SLOW_TESTS if n.split("::")[0] in files and n not in collected
+    )
+    if stale:
+        raise pytest.UsageError(
+            "_SLOW_TESTS names tests that were not collected: " + ", ".join(stale)
+        )
+    run_slow = config.getoption("--runslow") or os.environ.get("DC43_RUN_SLOW")
     skip = pytest.mark.skip(
         reason="slow round-trip test (run with --runslow or DC43_RUN_SLOW=1)"
     )
     for item in items:
-        nodeid = item.nodeid
-        if nodeid.startswith("tests/"):
-            nodeid = nodeid[len("tests/"):]
-        if nodeid in _SLOW_TESTS:
+        if rel(item.nodeid) in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
-            item.add_marker(skip)
+            if not run_slow:
+                item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

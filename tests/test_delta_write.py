@@ -1075,3 +1075,58 @@ def test_column_mapping_on_partitioned_table_roundtrip(spark, tmp_path):
     from dc43_spark.io.delta_conformance import validate_log_dir
 
     assert validate_log_dir(t)["commits"] >= 7
+
+
+def _data_files(root):
+    """Relative paths of every data parquet file under ``root`` (log,
+    staging and other ``_``-prefixed dirs excluded)."""
+    out = set()
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not n.startswith("_")]
+        out |= {os.path.relpath(os.path.join(d, n), root)
+                for n in names if n.endswith(".parquet")}
+    return out
+
+
+@pytest.mark.parametrize("case", ["layout", "empty_frame", "failing_job"])
+def test_staging_kernel_partitioned_cases(spark, tmp_path, case):
+    """The staging kernel (io/tablecore.py::stage_parquet) under the
+    Delta writer; test_snaplog_partitions.py runs the same case under
+    snaplog."""
+    t = str(tmp_path / "t")
+    rows = [(i, [None, "a/b c", "us"][i % 3], f"v{i}") for i in range(12)]
+    schema = "k long, region string, v string"
+    # round-robin: every task writes into every partition dir, so Spark
+    # hands the same part basename to several dirs
+    delta_write(spark, spark.createDataFrame(rows, schema).repartition(3), t,
+                partition_by=["region"])
+    d = DeltaLogTable(spark, t)
+    v, on_disk = d.version(), _data_files(t)
+    files = d.snapshot().files
+    if case == "layout":
+        assert {f.partition_values["region"] for f in files} == {
+            None, "a/b c", "us"}
+        paths = {f.path for f in files}  # decoded relative paths
+        assert len({os.path.dirname(p) for p in paths}) == 3
+        assert paths == on_disk
+        names = [os.path.basename(p) for p in paths]
+        assert len(names) > 3 and len(set(names)) == len(names)
+        got = sorted((r.k, r.region) for r in d.read().collect())
+        assert got == sorted((k, p) for k, p, _ in rows)
+        assert [r.k for r in d.read(filters=[("region", "=", "a/b c")])
+                .orderBy("k").collect()] == [1, 4, 7, 10]
+    elif case == "empty_frame":
+        delta_write(spark, spark.createDataFrame([], schema), t,
+                    partition_by=["region"])
+        assert _data_files(t) == on_disk
+        assert d.read().count() == len(rows)
+    else:
+        boom = spark.createDataFrame(rows, schema).withColumn(
+            "v", F.when(F.col("k") == 5, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("v"))
+        )
+        with pytest.raises(Exception, match="boom"):
+            delta_write(spark, boom, t, partition_by=["region"])
+        assert not [n for n in os.listdir(t) if n.startswith("_staging_")]
+        assert d.version() == v
+        assert _data_files(t) == on_disk

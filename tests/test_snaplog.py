@@ -1314,7 +1314,7 @@ def test_widening_composes_with_time_travel_and_stats_pruning(spark, tmp_path):
 
 def test_variant_column_roundtrip(spark, tmp_path):
     """r11: a VARIANT column writes and reads through snaplog — staging
-    survives pyarrow's pre-VARIANT footer parser (_footer_stats_safe
+    survives pyarrow's pre-VARIANT footer parser (tablecore.footer_stats_safe
     falls back to a Spark footer count + stats aggregate), non-variant
     columns keep pruning stats, and MOR deletes work unchanged."""
     from dc43_spark.io.snaplog import SnaplogTable

@@ -278,3 +278,80 @@ def test_deep_append_range_batches_insert_frames(spark, tmp_path):
     plan2 = (allch._jdf.queryExecution().executedPlan().toString()
              .split("== Initial Plan ==")[0])
     assert plan2.count("Scan parquet") <= 2, plan2[:2000]
+
+
+def _fenced_op_jobs(spark, op):
+    """Run ``op`` under its own job group, between two marker jobs in
+    fence groups. Returns (the op group's job ids, every job id launched
+    between the fences, ungrouped job ids that appeared meanwhile)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex
+
+    def run_in(group, fn):
+        sc.setJobGroup(f"{group}-{tag}", group)
+        fn()
+
+    def ids(group):
+        # job starts reach the tracker through the async listener bus
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(f"{group}-{tag}") and time.time() < deadline:
+            time.sleep(0.05)
+        return set(tracker.getJobIdsForGroup(f"{group}-{tag}"))
+
+    try:
+        run_in("fence-pre", lambda: spark.range(1).count())
+        pre = ids("fence-pre")
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        run_in("op", op)
+        run_in("fence-post", lambda: spark.range(1).count())
+        post = ids("fence-post")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return (
+        ids("op"),
+        set(range(max(pre) + 1, min(post))),
+        set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    )
+
+
+def test_concurrent_staging_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """A change-feed op stages its CDC files and its data files
+    concurrently (tablecore.stage_concurrently). The pool threads must
+    inherit the caller's job group, so every job the op launches is
+    attributed to it and none runs ungrouped."""
+    import os
+
+    from dc43_spark.io.delta_dml import delta_delete
+    from dc43_spark.io.delta_log import DeltaLogTable, delta_write
+
+    t = SnaplogTable(spark, str(tmp_path / "t"), change_feed=True)
+    t.write(_df(spark, [(i, f"v{i}") for i in range(8)]), mode="overwrite")
+    delta_path = str(tmp_path / "d")
+    delta_write(
+        spark, _df(spark, [(i, f"v{i}") for i in range(8)]).coalesce(1),
+        delta_path, checkpoint_interval=None,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    ops = {
+        "snaplog merge": lambda: t.merge(
+            _df(spark, [(1, "u"), (20, "n")]), ["k"]
+        ),
+        "delta COW delete": lambda: delta_delete(
+            spark, delta_path, "k IN (2, 5)"
+        ),
+    }
+    for name, op in ops.items():
+        grouped, launched, ungrouped = _fenced_op_jobs(spark, op)
+        assert grouped, name
+        assert ungrouped == set(), name
+        assert grouped == launched, name
+    # both ops took the two-job path: change files beside the rewrite
+    assert os.listdir(t.cdc_dir)
+    assert os.listdir(os.path.join(delta_path, "_change_data"))
+    assert not any(f.dv for f in DeltaLogTable(spark, delta_path).snapshot().files)

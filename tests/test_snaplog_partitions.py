@@ -280,3 +280,52 @@ def test_cluster_compaction_within_partitions(spark, tmp_path):
         for (al, ah), (bl, bh) in zip(spans, spans[1:]):
             assert ah <= bl
     assert t.read().count() == 2000
+
+
+def _data_files(root):
+    """Relative paths of every data parquet file under ``root`` (log,
+    staging and other ``_``-prefixed dirs excluded)."""
+    out = set()
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if not n.startswith("_")]
+        out |= {os.path.relpath(os.path.join(d, n), root)
+                for n in names if n.endswith(".parquet")}
+    return out
+
+
+@pytest.mark.parametrize("case", ["layout", "empty_frame", "failing_job"])
+def test_staging_kernel_partitioned_cases(spark, tmp_path, case):
+    """The staging kernel (io/tablecore.py::stage_parquet) under snaplog;
+    test_delta_write.py runs the same case under the Delta writer."""
+    t = SnaplogTable(spark, str(tmp_path / "t"))
+    rows = [(i, [None, "a/b c", "us"][i % 3], f"v{i}") for i in range(12)]
+    # round-robin: every task writes into every partition dir, so Spark
+    # hands the same part basename to several dirs
+    t.write(_df(spark, rows).repartition(3), mode="overwrite",
+            partition_by=["region"])
+    v, on_disk = t.version(), _data_files(t.path)
+    files = t.snapshot().files
+    if case == "layout":
+        assert {f.partition["region"] for f in files} == {None, "a/b c", "us"}
+        assert len({os.path.dirname(f.path) for f in files}) == 3
+        assert {f.path for f in files} == on_disk
+        names = [os.path.basename(f.path) for f in files]
+        assert len(names) > 3 and len(set(names)) == len(names)
+        got = sorted((r.k, r.region) for r in t.read().collect())
+        assert got == sorted((k, p) for k, p, _ in rows)
+        assert [r.k for r in t.read(filters=[("region", "=", "a/b c")])
+                .orderBy("k").collect()] == [1, 4, 7, 10]
+    elif case == "empty_frame":
+        t.write(_df(spark, []), mode="append")
+        assert _data_files(t.path) == on_disk
+        assert t.read().count() == len(rows)
+    else:
+        boom = _df(spark, rows).withColumn(
+            "v", F.when(F.col("k") == 5, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("v"))
+        )
+        with pytest.raises(Exception, match="boom"):
+            t.write(boom, mode="append")
+        assert not [n for n in os.listdir(t.path) if n.startswith("_staging_")]
+        assert t.version() == v
+        assert _data_files(t.path) == on_disk

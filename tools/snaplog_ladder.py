@@ -78,7 +78,8 @@ def metadata_ladder(entry_counts, reps: int) -> None:
     (arrow columns converted per-need) instead of just re-encoded."""
     import random
 
-    from dc43_spark.io.snaplog import FileEntry, SnaplogTable
+    from dc43_spark.io.snaplog import SnaplogTable
+    from dc43_spark.io.tablecore import FileEntry
 
     rng = random.Random(7)
     results = []
