@@ -1861,44 +1861,17 @@ class SnaplogTable:
         whether or not a mapping is active."""
         paths = [os.path.join(self.path, f.path) for f in files]
         schema = self._logical_schema(snap)
-        phys = self._physical_schema(snap)
         if not paths:
             if schema is not None:
                 return local_df(self.spark, [], schema)
             raise ValueError(f"empty snaplog snapshot v{snap.version} has no schema")
-        reader = self.spark.read.format("parquet")
-        if phys is not None:
-            reader = reader.schema(phys)
-        if snap.partition_by:
-            # hive-layout files: Spark reconstructs the partition columns
-            # from the col=val directories under data/ (typed by the
-            # explicit snapshot schema); it APPENDS them after the file
-            # columns, so re-project to the recorded column order
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.load(paths)
-        if snap.partition_by and phys is not None:
-            df = df.select(*[f.name for f in phys.fields])
+        df = self._raw_scan(paths, snap)
         if snap.dvs:
-            cols = df.columns
-            dv = self.spark.read.parquet(
-                *[os.path.join(self.path, f.path) for f in snap.dvs]
-            )
-            keyed = df.select(
-                "*",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-                    "_dv_file"
-                ),
-                F.col("_metadata.row_index").alias("_dv_pos"),
-            )
-            df = keyed.join(
-                F.broadcast(dv),
-                (keyed["_dv_file"] == dv["file"]) & (keyed["_dv_pos"] == dv["pos"]),
-                "left_anti",
-            ).select(*cols)
+            df = self._subtract_dvs(df, self._read_dvs(snap.dvs))
         if snap.column_mapping and schema is not None:
             sel = [
                 F.col(p.name).alias(l.name)
-                for p, l in zip(phys.fields, schema.fields)
+                for p, l in zip(self._physical_schema(snap).fields, schema.fields)
             ]
             if keep_meta:
                 sel.append(F.col("_metadata"))
@@ -3555,23 +3528,10 @@ class SnaplogTable:
                 # CDC consumer (e.g. an IVM view) double-subtract them
                 pre_dvs = pre.dvs if pre else ()
                 if pre_dvs:
-                    dv_paths = [os.path.join(self.path, f.path) for f in pre_dvs]
-                    self._require_files(dv_paths, v)
-                    dv = self.spark.read.parquet(*dv_paths)
-                    cols = dele.columns
-                    keyed = dele.select(
-                        "*",
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("_dv_file"),
-                        F.col("_metadata.row_index").alias("_dv_pos"),
+                    self._require_files(
+                        [os.path.join(self.path, f.path) for f in pre_dvs], v
                     )
-                    dele = keyed.join(
-                        F.broadcast(dv),
-                        (keyed["_dv_file"] == dv["file"])
-                        & (keyed["_dv_pos"] == dv["pos"]),
-                        "left_anti",
-                    ).select(*cols)
+                    dele = self._subtract_dvs(dele, self._read_dvs(pre_dvs))
                 frames.append(
                     self._logical_alias(dele, end_snap).select(
                         "*", F.lit("delete").alias(CHANGE_TYPE_COL), *stamp
@@ -3713,17 +3673,21 @@ class SnaplogTable:
     def _raw_scan(self, paths: Sequence[str], snap: Optional[Snapshot]) -> DataFrame:
         """Plain multi-path read of table data files under a snapshot's
         PHYSICAL schema/partition layout (no DV subtraction, no logical
-        aliasing) — the change feed's building block for
-        add/remove-derived events; the caller aliases to logical names."""
+        aliasing) — the reader setup every scan shares; callers alias to
+        logical names."""
         reader = self.spark.read.format("parquet")
         phys = self._physical_schema(snap) if snap is not None else None
         if phys is not None:
             reader = reader.schema(phys)
         if snap is not None and snap.partition_by:
+            # hive-layout files: Spark reconstructs the partition columns
+            # from the col=val directories under data/ (typed by the
+            # explicit snapshot schema); it APPENDS them after the file
+            # columns, so re-project to the recorded column order (which
+            # also drops appended hidden-transform partition columns)
             reader = reader.option("basePath", self.data_dir)
         df = reader.load(list(paths))
         if phys is not None and snap.partition_by:
-            # drop appended hidden-transform partition columns
             df = df.select(*[f.name for f in phys.fields])
         return df
 
@@ -3762,33 +3726,49 @@ class SnaplogTable:
         """Raw (DV-unapplied) scan of ``files`` with the per-row identity
         (file basename, row_index) projected as _dv_file/_dv_pos.
         Columns come back under LOGICAL names (mapping-aware)."""
-        paths = [os.path.join(self.path, f.path) for f in files]
+        df = self._raw_scan([os.path.join(self.path, f.path) for f in files], snap)
         schema = self._logical_schema(snap)
-        phys = self._physical_schema(snap)
-        reader = self.spark.read.format("parquet")
-        if phys is not None:
-            reader = reader.schema(phys)
-        if snap.partition_by:
-            reader = reader.option("basePath", self.data_dir)
-        df = reader.load(paths)
         if snap.column_mapping and schema is not None:
             cols = [
                 F.col(p.name).alias(l.name)
-                for p, l in zip(phys.fields, schema.fields)
+                for p, l in zip(self._physical_schema(snap).fields, schema.fields)
             ]
-        elif phys is not None:
-            # exact projection (drops e.g. appended hidden-transform
-            # partition columns, which are directory metadata, not data)
-            cols = [F.col(f.name) for f in phys.fields]
         else:
             cols = [F.col("*")]
-        return df.select(
-            *cols,
+        return df.select(*cols, *self._row_identity())
+
+    @staticmethod
+    def _row_identity() -> list:
+        """The hidden per-row identity deletion vectors address: file
+        basename and row index, as ``_dv_file`` / ``_dv_pos``."""
+        return [
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
                 "_dv_file"
             ),
             F.col("_metadata.row_index").alias("_dv_pos"),
+        ]
+
+    def _read_dvs(self, dvs: Sequence[FileEntry]) -> DataFrame:
+        """The ``(file, pos)`` rows of deletion-vector files ``dvs``."""
+        return self.spark.read.parquet(
+            *[os.path.join(self.path, f.path) for f in dvs]
         )
+
+    @classmethod
+    def _subtract_dvs(cls, df: DataFrame, dv: DataFrame) -> DataFrame:
+        """``df`` minus the rows the deletion-vector rows ``dv`` mark:
+        one broadcast left-anti join on the ``(file basename,
+        row_index)`` identity. A ``df`` without ``_dv_file``/``_dv_pos``
+        gains them for the join and loses them again."""
+        keyed = df
+        if "_dv_file" not in df.columns:
+            keyed = df.select("*", *cls._row_identity())
+        out = keyed.join(
+            F.broadcast(dv),
+            (keyed["_dv_file"] == dv["file"]) & (keyed["_dv_pos"] == dv["pos"]),
+            "left_anti",
+        )
+        return out if keyed is df else out.select(*df.columns)
 
     def _delete_merge_on_read(
         self,
@@ -3802,14 +3782,7 @@ class SnaplogTable:
             return RewriteStats(snap.num_files, 0, 0, 0, 0, 0)
         keyed = self._keyed_scan(candidates, snap)
         if snap.dvs:  # already-deleted rows are not deleted "again"
-            dv = self.spark.read.parquet(
-                *[os.path.join(self.path, f.path) for f in snap.dvs]
-            )
-            keyed = keyed.join(
-                F.broadcast(dv),
-                (keyed["_dv_file"] == dv["file"]) & (keyed["_dv_pos"] == dv["pos"]),
-                "left_anti",
-            )
+            keyed = self._subtract_dvs(keyed, self._read_dvs(snap.dvs))
         # persist, not localCheckpoint: spillable/evictable storage whose
         # lost blocks recompute from the pinned candidate scan — a
         # wide-predicate delete never hard-materializes every hit row
@@ -3869,17 +3842,12 @@ class SnaplogTable:
         snap = self.snapshot(current)
         if not snap.dvs:
             return 0
-        dv = self.spark.read.parquet(
-            *[os.path.join(self.path, f.path) for f in snap.dvs]
-        )
+        dv = self._read_dvs(snap.dvs)
         names = {r["file"] for r in dv.select("file").distinct().collect()}
         touched = [f for f in snap.files if os.path.basename(f.path) in names]
-        keyed = self._keyed_scan(touched, snap)
-        kept = keyed.join(
-            F.broadcast(dv),
-            (keyed["_dv_file"] == dv["file"]) & (keyed["_dv_pos"] == dv["pos"]),
-            "left_anti",
-        ).drop("_dv_file", "_dv_pos")
+        kept = self._subtract_dvs(self._keyed_scan(touched, snap), dv).drop(
+            "_dv_file", "_dv_pos"
+        )
         added = self._stage_files(
             self._to_physical_df(kept, snap), partition_by=snap.partition_by
         )

@@ -473,7 +473,6 @@ def test_streaming_high_cardinality_dv_stays_off_driver(
         assert parts, "planner produced no partitions"
         for p in parts:
             assert p.deleted_positions is None
-            assert p.kept_positions is None
             assert p.dv_descriptor is not None
             root, desc = p.dv_descriptor
             assert desc["cardinality"] == len(positions)

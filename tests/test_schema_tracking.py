@@ -154,12 +154,13 @@ def test_tracking_refusals_and_idempotence(registered, spark, tmp_path):
             .load(t).count()
 
     # a tracking directory belongs to ONE table
-    from dc43_spark.io.delta_source import _schema_tracking
+    from dc43_spark.io.delta_source import DeltaLogStreamReader
 
     loc = str(tmp_path / "log2")
-    _schema_tracking({"schematrackinglocation": loc}, DeltaLogTable(None, t))
+    track = DeltaLogStreamReader.schema_tracking
+    track({"schematrackinglocation": loc}, DeltaLogTable(None, t))
     with pytest.raises(SchemaTrackingError, match="use a fresh location"):
-        _schema_tracking(
+        track(
             {"schematrackinglocation": loc}, DeltaLogTable(None, other)
         )
 

@@ -12,8 +12,8 @@ from dc43_spark.io.snaplog import SnaplogTable
 from dc43_spark.io.snaplog_source import (
     SnaplogDataSource,
     SnaplogPushdownBatchReader,
-    _filters_to_tuples,
 )
+from dc43_spark.io.sourcecore import arrow_batches, filters_to_tuples
 
 
 @pytest.fixture()
@@ -72,7 +72,7 @@ def test_pushdown_prunes_reader_partitions(registered, tmp_path):
     assert list(kept) != []  # every filter returned for re-application
     assert len(r.partitions()) < total
     # filter translation covers the comparison vocabulary
-    tuples = _filters_to_tuples(
+    tuples = filters_to_tuples(
         [EqualTo(("k",), 5), In(("k",), (1, 2)), GreaterThanOrEqual(("x", "y"), 0)]
     )
     assert tuples == [("k", "=", 5), ("k", "in", [1, 2])]  # nested attr skipped
@@ -391,7 +391,7 @@ def test_high_cardinality_dvs_decode_executor_side(
     # the mask must decode from the DV parquet with the pushed filter
     kernel_rows = set()
     for p in parts:
-        for batch in ss._arrow_batches(p, r._schema):
+        for batch in arrow_batches(p, r._schema):
             kernel_rows |= {x["k"] for x in batch.to_pylist()}
     assert kernel_rows == expect
 
@@ -634,3 +634,34 @@ def test_cdc_stream_budget_charges_removed_bytes(registered, tmp_path):
     assert nb_p == add_bytes  # plain stream: adds only
     assert nf_c == nf_p + len(rec["remove"])
     assert nb_c == add_bytes + removed_bytes  # ADVICE fix: removes charge
+
+
+def test_stream_planning_replays_the_log_once(spark, tmp_path, monkeypatch):
+    """Planning a stream batch resolves the head's column mapping ONCE:
+    ``snapshot()`` lists the log and replays checkpoint plus tail, so a
+    per-file (or per-commit) lookup scales the driver cost with the
+    batch size. 4 append commits x 5 files plan 20 partitions with one
+    ``snapshot()`` call on the plain and on the change-feed stream."""
+    from dc43_spark.io.snaplog_source import SnaplogStreamReader
+
+    path = str(tmp_path / "t")
+    t = SnaplogTable(spark, path)
+    for i in range(4):
+        t.write(spark.range(10 * i, 10 * i + 10, numPartitions=5)
+                .selectExpr("id AS k"))
+    calls = []
+    real = SnaplogTable.snapshot
+
+    def counted(self, *a, **kw):
+        calls.append(a)
+        return real(self, *a, **kw)
+
+    for options in ({}, {"readchangefeed": "true"}):
+        r = SnaplogStreamReader(path, None, options)
+        start = r.initialOffset()
+        end = r.latestOffset()
+        monkeypatch.setattr(SnaplogTable, "snapshot", counted)
+        calls.clear()
+        assert len(r.partitions(start, end)) == 20
+        assert len(calls) == 1, options
+        monkeypatch.setattr(SnaplogTable, "snapshot", real)
