@@ -23,18 +23,11 @@ Two physical strategies, matching delta-spark's own split:
   Delta reader can keep reading them): touched files are rewritten
   without their deleted rows; untouched files carry over by reference.
 
-Row semantics are standard SQL MERGE plus delta-spark's conditional
-clauses (same matrix as io/merge.py's ``_outer_join_merge``, which
-remains the oracle in tests): matched + ``delete_predicate`` -> dropped
-(delete wins, checked first); matched + ``when_matched`` ("update",
-a ``{col: expr}`` SET map, gated by ``matched_predicate``) -> updated;
-unmatched source + ``when_not_matched`` ("insert" or a VALUES map,
-gated by ``insert_predicate``) -> inserted; target rows with NO source
-match + ``when_not_matched_by_source`` ("delete" or a SET map, gated by
-``not_matched_by_source_predicate``) -> deleted/updated — this clause
-disables source-key file pruning (any file can hold such rows).
-Everything else untouched. The source must be key-unique (SQL MERGE
-refuses multiple matches).
+MERGE row semantics, the fate joins and the change rows come from
+io/mergecore.py (``outer_join_merge`` remains the oracle in tests); a
+by-source clause disables source-key file pruning (any file can hold
+such rows). The source must be key-unique (SQL MERGE refuses multiple
+matches).
 
 Change data feed: when ``delta.enableChangeDataFeed=true``, every DML
 commit stages ``_change_data`` parquet files (insert / delete /
@@ -82,6 +75,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from dc43_spark.localdf import local_df
+from dc43_spark.io.mergecore import (
+    FateFrames,
+    MergePlan,
+    change_rows,
+    fate_frames,
+    fate_rows,
+    materialized_source,
+    require_unique_merge_keys,
+    source_key_stats,
+)
 from dc43_spark.io.tablecore import (
     LinkCommitClaimer,
     file_may_match,
@@ -152,9 +155,7 @@ def _merge_candidate_files(
     conditions (NULL joins NULL under eqNullSafe and stats can't bound
     it) — conservative, never wrong. ``check_unique`` fuses the
     duplicate-source-key probe into this same pass (one source scan
-    instead of two — merge.source_key_stats)."""
-    from dc43_spark.io.merge import source_key_stats
-
+    instead of two — mergecore.source_key_stats)."""
     row = source_key_stats(src, list(keys), check_unique=check_unique)
     conds = []
     for i, k in enumerate(keys):
@@ -912,20 +913,11 @@ def delta_merge(
     path: str,
     keys: Sequence[str],
     *,
-    when_matched="update",
-    when_not_matched="insert",
-    delete_predicate: Optional[str] = None,
-    insert_predicate: Optional[str] = None,
-    matched_predicate: Optional[str] = None,
-    when_not_matched_by_source="ignore",
-    not_matched_by_source_predicate: Optional[str] = None,
-    matched_clauses: Optional[list] = None,
-    not_matched_clauses: Optional[list] = None,
-    not_matched_by_source_clauses: Optional[list] = None,
     use_dvs: Optional[bool] = None,
     check_source_keys: bool = True,
     merge_schema: bool = False,
     max_retries: int = 20,
+    **clauses,
 ) -> Optional[int]:
     """MERGE INTO a real ``_delta_log`` table without the jar — the
     reference's primary write surface (ref spark/io/merge.py:43-127
@@ -933,72 +925,24 @@ def delta_merge(
     users exercise as exactly these clauses) re-expressed over protocol
     deletion vectors / copy-on-write.
 
-    Clause surface (delta-spark's conditional merge):
-
-    - ``when_matched``: ``"update"`` (updateAll), ``"ignore"``, or a
-      ``{col: SQL expr}`` SET map over ``t.<col>``/``s.<col>`` — unset
-      columns keep the target's value (``UPDATE SET c = expr``).
-    - ``matched_predicate``: SQL over ``t.``/``s.`` gating the update
-      clause (``WHEN MATCHED AND pred THEN UPDATE``); failing matched
-      rows stay unchanged. ``delete_predicate`` wins over update and is
-      checked first.
-    - ``when_not_matched``: ``"insert"`` (insertAll), ``"ignore"``, or a
-      ``{col: SQL expr}`` VALUES map over ``s.<col>`` — unlisted columns
-      insert NULL (``INSERT (cols) VALUES (exprs)``);
-      ``insert_predicate`` gates which unmatched source rows insert.
-    - ``when_not_matched_by_source``: ``"ignore"`` (default),
-      ``"delete"``, or a ``{col: SQL expr}`` SET map over ``t.<col>`` —
-      delta-spark's ``WHEN NOT MATCHED BY SOURCE`` clauses;
-      ``not_matched_by_source_predicate`` (SQL over ``t.``) gates the
-      action. A by-source clause scans EVERY candidate file (source-key
-      pruning is unsound for rows defined by having no source match).
-
-    The *All string forms require the source to carry the table's
-    columns (generated columns may be omitted — they recompute); the
-    map forms only need the key columns plus whatever their expressions
-    reference, and never evolve the schema.
-
-    ``matched_clauses`` / ``not_matched_clauses`` /
-    ``not_matched_by_source_clauses``: the ORDERED multi-clause surface
-    (first-match-wins per kind — delta-spark's chained builder, see
-    merge.normalize_merge_clauses); per kind pass the list OR the legacy
-    kwargs, not both. Returns the committed version, or None when the
-    merge changed nothing."""
-    from dc43_spark.io.merge import (
-        any_clause_ok,
-        clause_value,
-        first_fate,
-        normalize_merge_clauses,
-        require_unique_merge_keys,
-    )
-
-    m_cls, nm_cls, bs_cls = normalize_merge_clauses(
-        when_matched=when_matched,
-        when_not_matched=when_not_matched,
-        delete_predicate=delete_predicate,
-        insert_predicate=insert_predicate,
-        matched_predicate=matched_predicate,
-        when_not_matched_by_source=when_not_matched_by_source,
-        not_matched_by_source_predicate=not_matched_by_source_predicate,
-        matched_clauses=matched_clauses,
-        not_matched_clauses=not_matched_clauses,
-        not_matched_by_source_clauses=not_matched_by_source_clauses,
-    )
+    ``clauses`` are the ``mergecore.normalize_merge_clauses`` kwargs
+    (delta-spark's conditional and ordered multi-clause merge). A
+    by-source clause scans EVERY candidate file (source-key pruning is
+    unsound for rows defined by having no source match). The *All forms
+    require the source to carry the table's columns (generated columns
+    may be omitted — they recompute); the map forms only need the key
+    columns plus whatever their expressions reference, and never evolve
+    the schema. Returns the committed version, or None when the merge
+    changed nothing."""
+    plan = MergePlan.of(**clauses)
     keys = list(keys)
     # the duplicate-source-key check fuses into _merge_candidate_files'
     # single source pass (first attempt only; retries reuse the
     # verdict). A by-source clause skips file pruning, so there is no
     # envelope probe — the check rides the fate-count action instead
     # (one extra union leg over the materialized source, not a scan).
-    check_dups_in_probe = check_source_keys and not bs_cls
-    check_dups_in_count = check_source_keys and bool(bs_cls)
-    dict_clauses = any(
-        cl.assignments is not None for cl in (*m_cls, *nm_cls, *bs_cls)
-    )
-    all_update = any(
-        cl.action == "update" and cl.assignments is None for cl in m_cls
-    )
-    all_insert = any(cl.assignments is None for cl in nm_cls)
+    check_dups_in_probe = check_source_keys and not plan.by_source
+    check_dups_in_count = check_source_keys and bool(plan.by_source)
 
     for _ in range(max_retries):
         t, snap, protocol, meta = _pin_snapshot(spark, path, "merge")
@@ -1015,13 +959,13 @@ def delta_merge(
             # same commit (r12 — VERDICT r11 #3), exactly like delta_write:
             # start + k*step past the mark, mark advanced from the staged
             # footer stats, races aborted by the snapshot pin.
-            if all_update:
+            if plan.all_update:
                 raise DeltaWriteError(
                     "updateAll on an identity-column table would overwrite "
                     f"identity column(s) {sorted(ident)}; use a SET map "
                     "that leaves them untouched"
                 )
-            for clause in (*m_cls, *bs_cls):
+            for clause in (*plan.matched, *plan.by_source):
                 if clause.assignments is not None:
                     bad = sorted(set(clause.assignments) & set(ident))
                     if bad:
@@ -1033,7 +977,7 @@ def delta_merge(
                 # a clause writes n EXPLICITLY iff its VALUES map lists it
                 # or it is insertAll over a source that carries it
                 explicit = [
-                    cl for cl in nm_cls
+                    cl for cl in plan.not_matched
                     if (n in cl.assignments if cl.assignments is not None
                         else n in source_df.columns)
                 ]
@@ -1044,45 +988,37 @@ def delta_merge(
                         "insert clauses — values are allocated by the "
                         "writer"
                     )
-                if explicit and len(explicit) != len(nm_cls):
+                if explicit and len(explicit) != len(plan.not_matched):
                     raise DeltaWriteError(
                         f"identity column {n!r} is written explicitly by "
                         "some insert clauses but not others; mixing "
                         "explicit values with writer allocation in one "
                         "MERGE is ambiguous"
                     )
-                if nm_cls and not explicit:
+                if plan.not_matched and not explicit:
                     ident_alloc[n] = sp
                 # explicit inserts (allow=true) pass through unchanged;
                 # the HWM does not chase explicit values (delta-spark's
                 # rule; ALTER ... SYNC IDENTITY is the catch-up)
+        plan.refuse_generated(gen, error=DeltaWriteError)
         for clause, kind in (
-            *[(cl, "when_matched SET") for cl in m_cls],
-            *[(cl, "when_not_matched VALUES") for cl in nm_cls],
-            *[(cl, "when_not_matched_by_source SET") for cl in bs_cls],
+            *[(cl, "when_matched SET") for cl in plan.matched],
+            *[(cl, "when_not_matched VALUES") for cl in plan.not_matched],
+            *[(cl, "when_not_matched_by_source SET") for cl in plan.by_source],
         ):
-            if clause.assignments is not None:
-                bad = sorted(set(clause.assignments) & set(gen))
-                if bad:
-                    raise DeltaWriteError(
-                        f"column(s) {bad} in {kind} are GENERATED ALWAYS "
-                        "AS; their values recompute from the expression"
-                    )
-                unknown = sorted(
-                    c for c in clause.assignments if c not in table_cols
-                )
-                if unknown:
-                    raise DeltaWriteError(
-                        f"{kind} columns not in schema: {unknown}"
-                    )
+            unknown = sorted(
+                c for c in (clause.assignments or ()) if c not in table_cols
+            )
+            if unknown:
+                raise DeltaWriteError(f"{kind} columns not in schema: {unknown}")
         src = source_df
         gen_rules: dict = {}
-        if gen and (all_update or all_insert):
+        if gen and plan.all_forms:
             src, gen_rules = _apply_generated_columns(src, gen)
         missing = sorted(
             c for c in data_cols
             if c not in src.columns and c not in ident_alloc
-        ) if (all_update or all_insert) else []
+        ) if plan.all_forms else []
         if missing and not merge_schema:
             raise DeltaWriteError(
                 f"merge source lacks table column(s) {missing}; align the "
@@ -1092,16 +1028,14 @@ def delta_merge(
                 "SET/VALUES maps"
             )
         extra = [c for c in src.columns if c not in data_cols]
-        if extra and not merge_schema and (all_update or all_insert):
+        if extra and not merge_schema and plan.all_forms:
             raise DeltaWriteError(
                 f"merge source has column(s) {sorted(extra)} not in the "
                 "table; drop them, pass merge_schema=True for additive "
                 "evolution (Delta's autoMerge), or reference them from "
                 "column-level SET/VALUES maps"
             )
-        if extra and merge_schema and dict_clauses and (
-            all_update or all_insert
-        ):
+        if extra and merge_schema and plan.dict_clauses and plan.all_forms:
             # the *All alignment below would silently DROP the extra
             # source columns while the caller asked for evolution —
             # refuse instead of half-applying merge_schema
@@ -1112,7 +1046,7 @@ def delta_merge(
                 "or use *All clauses only"
             )
         new_meta = None
-        if extra and merge_schema and not dict_clauses:
+        if extra and merge_schema and not plan.dict_clauses:
             if snap.mapping_mode == "id":
                 raise DeltaWriteError(
                     "additive evolution on an id-mode mapped table is not "
@@ -1162,13 +1096,7 @@ def delta_merge(
                 new_meta["schemaString"] = evolved.json()
             data_cols = data_cols + extra
             types = {f.name: f.dataType for f in evolved.fields}
-        if (
-            any(cl.assignments is not None for cl in bs_cls) and new_meta
-        ):  # pragma: no cover - unreachable (dict_clauses blocks evolution)
-            raise DeltaWriteError(
-                "by-source SET with schema evolution is not supported"
-            )
-        if all_update or all_insert:
+        if plan.all_forms:
             # align source types to the table's (delta-spark's implicit
             # up-casts on updateAll/insertAll); evolved/missing columns
             # take the source's type / NULL
@@ -1205,170 +1133,49 @@ def delta_merge(
         if bad_keys:
             raise DeltaWriteError(f"merge keys not in schema: {bad_keys}")
 
-        # ONE spillable materialization serves every remaining source
-        # pass — the pruning-envelope probe, the three fate joins, and
-        # the change-feed frame re-scan the source 3-5x otherwise, and a
-        # NON-DETERMINISTIC source (rand(), a re-shuffling view) could
-        # yield different rows per pass. delta-spark materializes merge
-        # sources for both reasons; MEMORY_AND_DISK keeps lineage so
-        # blocks lost to executor churn recompute.
-        # spark.dc43.delta.mergeMaterializeSource=none opts out for
-        # deterministic full-table-sized sources where recompute beats
-        # spilling a copy (delta-spark's merge.materializeSource).
-        _src_cached = (
-            spark.conf.get(
-                "spark.dc43.delta.mergeMaterializeSource", "auto"
-            ).lower() != "none"
-        )
-        if _src_cached:
-            src = src.persist(StorageLevel.MEMORY_AND_DISK)
-        frames: list = []
-        try:
-            # merge file pruning (delta-spark's shape): only files whose
-            # stats envelope intersects the source's key ranges can match —
-            # pruned files carry over untouched, and the insert anti-join
-            # over the pruned lineage stays exact (see helper docstring).
-            # A by-source clause disables pruning: its rows are target rows
-            # WITHOUT a source match, which any file can hold.
-            if not bs_cls:
-                candidates = _merge_candidate_files(
-                    src, snap, keys, check_unique=check_dups_in_probe
+        with materialized_source(src) as src:
+            frames: list = []
+            try:
+                # merge file pruning (delta-spark's shape): only files whose
+                # stats envelope intersects the source's key ranges can
+                # match — pruned files carry over untouched, and the insert
+                # anti-join over the pruned lineage stays exact (see helper
+                # docstring). A by-source clause disables pruning: its rows
+                # are target rows WITHOUT a source match, which any file
+                # can hold.
+                if not plan.by_source:
+                    candidates = _merge_candidate_files(
+                        src, snap, keys, check_unique=check_dups_in_probe
+                    )
+                    check_dups_in_probe = False
+                else:
+                    candidates = list(snap.files)
+                rt_mat = _row_tracking_present(protocol) and _row_tracking_enabled(meta)
+                mat_id, _mat_ver = (
+                    _rt_mat_cols_checked(meta) if rt_mat else (None, None)
                 )
-                check_dups_in_probe = False
-            else:
-                candidates = list(snap.files)
-            rt_mat = _row_tracking_present(protocol) and _row_tracking_enabled(meta)
-            mat_id, _mat_ver = (
-                _rt_mat_cols_checked(meta) if rt_mat else (None, None)
-            )
-            lineage = _live_lineage(t, snap, files=candidates, row_ids=rt_mat)
-            tl = lineage.alias("t")
-            sl = src.alias("s")
-            cond = [
-                F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`")) for k in keys
-            ]
-            cdf_on = _cdf_enabled(meta)
-            keep_t = set(missing) if merge_schema else set()
-            upd_form = any(cl.action == "update" for cl in m_cls)
-
-            matched = tl.join(sl, cond, "inner")
-            # the row's fate is its FIRST passing clause's action (user
-            # order) — rows matching no clause stay untouched
-            matched = (
-                matched.withColumn("_dc43_del", first_fate(m_cls, "delete"))
-                .withColumn("_dc43_upd", first_fate(m_cls, "update"))
-                .filter(F.col("_dc43_del") | F.col("_dc43_upd"))
-            )
-
-            def _t_side(c):
-                # evolved columns don't exist on the target side yet
-                if c in table_cols:
-                    return F.col(f"t.`{c}`").alias(f"_t_{c}")
-                return F.lit(None).cast(types[c]).alias(f"_t_{c}")
-
-            def _n_side(c):
-                # the updated row's value for column c (post-image): the
-                # first-matching update clause's value, chained in clause
-                # order; evolved columns fall back to NULL (no target side)
-                fb = (
-                    F.col(f"t.`{c}`")
-                    if c in table_cols
-                    else F.lit(None).cast(types[c])
+                lineage = _live_lineage(t, snap, files=candidates, row_ids=rt_mat)
+                cdf_on = _cdf_enabled(meta)
+                fates = fate_frames(
+                    lineage, src, keys, plan,
+                    cols=data_cols,
+                    types=types,
+                    # a row's file and position; an updated row keeps its
+                    # stable identity through the materialized column
+                    carry=[_REL, _POS, *([_RTID] if mat_id else [])],
+                    # width discipline: pre-images ride only when CDF
+                    # needs them
+                    pre_images=cdf_on,
+                    keep_target_cols=missing if merge_schema else (),
+                    target_cols=table_cols,
                 )
-                base = clause_value(
-                    m_cls, "matched", c, types, keep_t=keep_t, otherwise=fb
-                )
-                return base.alias(f"_n_{c}")
-
-            touch_cols = [
-                F.col(f"t.`{_REL}`").alias(_REL),
-                F.col(f"t.`{_POS}`").alias(_POS),
-                F.col("_dc43_del"),
-                F.col("_dc43_upd"),
-            ]
-            if mat_id and upd_form:
-                # the updated row's stable identity, preserved through the
-                # rewrite via the materialized column
-                touch_cols.append(F.col(f"t.`{_RTID}`").alias(_RTID))
-            if cdf_on:
-                touch_cols += [_t_side(c) for c in data_cols]
-            if upd_form:
-                touch_cols += [_n_side(c) for c in data_cols]
-            # persist, not localCheckpoint: spillable/evictable executor
-            # storage (MEMORY_AND_DISK) with lineage kept — blocks lost to
-            # executor churn recompute from the PINNED snapshot scan, and a
-            # full-table merge never hard-materializes 2x-width rows the way
-            # an eager localCheckpoint did (VERDICT r10 #4; _t_ pre-images
-            # ride only when CDF needs them)
-            touch = matched.select(*touch_cols).persist(StorageLevel.MEMORY_AND_DISK)
-
-            bs = None
-            bs_upd_form = any(cl.action == "update" for cl in bs_cls)
-            if bs_cls:
-                bs = tl.join(
-                    sl.select(*[F.col(k) for k in keys]), cond, "left_anti"
-                ).alias("t")
-                # a row is touched iff ANY clause fires; its fate (delete vs
-                # update) is the FIRST passing clause's action
-                bs = (
-                    bs.filter(any_clause_ok(bs_cls))
-                    .withColumn("_dc43_bsdel", first_fate(bs_cls, "delete"))
-                    .withColumn("_dc43_bsupd", first_fate(bs_cls, "update"))
-                )
-                # width discipline (same as delete's): a by-source DELETE
-                # without CDF needs only the (rel, pos) coordinates — don't
-                # re-materialize the full table width in executor storage.
-                # Evolved (merge_schema) columns don't exist on the lineage
-                # side yet: typed NULLs, same as the matched path's _t_side.
-                bs_sel = [F.col(_REL), F.col(_POS),
-                          F.col("_dc43_bsdel"), F.col("_dc43_bsupd")]
-                if mat_id and bs_upd_form:
-                    bs_sel.append(F.col(_RTID))
-                if cdf_on or bs_upd_form:
-                    bs_sel += [
-                        (
-                            F.col(f"`{c}`")
-                            if c in table_cols
-                            else F.lit(None).cast(types[c])
-                        ).alias(c)
-                        for c in data_cols
-                    ]
-                if bs_upd_form:
-                    # by-source post-image values chain in clause order over
-                    # t.<col>; computed HERE (the narrow select drops the t
-                    # alias) — delete-fate rows' values are unused
-                    bs_sel += [
-                        clause_value(
-                            bs_cls, "not_matched_by_source", c, types,
-                            otherwise=(
-                                F.col(f"t.`{c}`")
-                                if c in table_cols
-                                else F.lit(None).cast(types[c])
-                            ),
-                        ).alias(f"_bsn_{c}")
-                        for c in data_cols
-                    ]
-                bs = bs.select(*bs_sel).persist(StorageLevel.MEMORY_AND_DISK)
-
-            inserts = None
-            if nm_cls:
-                anti = sl.join(tl.select(*keys).alias("t"), cond, "left_anti")
-                anti = anti.alias("s").filter(any_clause_ok(nm_cls))
-                inserts = anti.select(
-                    *[
-                        clause_value(
-                            nm_cls, "not_matched", c, types,
-                            otherwise=F.lit(None).cast(types[c]),
-                        ).alias(c)
-                        for c in data_cols
-                    ]
-                )
+                inserts = fates.inserts
                 for n, sp in sorted(ident_alloc.items()):
                     # start + k*step strictly beyond the pinned high water
                     # mark (monotonically_increasing_id keeps allocation
                     # distributed; gaps are protocol-legal). A concurrent
-                    # commit raises _DmlConflict at claim time and the retry
-                    # reallocates under the new mark.
+                    # commit raises _DmlConflict at claim time and the
+                    # retry reallocates under the new mark.
                     base = (
                         sp["hwm"] + sp["step"]
                         if sp["hwm"] is not None
@@ -1381,208 +1188,145 @@ def delta_merge(
                             + F.lit(sp["step"]) * F.monotonically_increasing_id()
                         ).cast(types[n]),
                     )
-                inserts = inserts.persist(StorageLevel.MEMORY_AND_DISK)
-
-            frames = [f for f in (touch, bs, inserts) if f is not None]
-
-            # ONE counting job for all three persisted frames (a tagged
-            # union-count): each leg's scan materializes its cache, so
-            # this replaces three separate count() jobs — at local scale
-            # that is 3x job overhead, at cluster scale 3 job launches
-            # over the same cached bytes (guide §2.4: fewer actions)
-            legs = [touch.select(F.lit(0).alias("_dc43_leg"))]
-            if bs is not None:
-                legs.append(bs.select(F.lit(1).alias("_dc43_leg")))
-            if inserts is not None:
-                legs.append(inserts.select(F.lit(2).alias("_dc43_leg")))
-            if check_dups_in_count:
-                # by-source merges have no pruning-envelope probe to fuse
-                # the duplicate-source-key check into: ride this same
-                # counting job as one extra leg over the materialized
-                # source — one row per duplicated key group
-                legs.append(
-                    src.groupBy(*[F.col(k) for k in keys])
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .select(F.lit(3).alias("_dc43_leg"))
+                # persist, not localCheckpoint: spillable/evictable executor
+                # storage (MEMORY_AND_DISK) with lineage kept — blocks lost
+                # to executor churn recompute from the PINNED snapshot scan,
+                # and a full-table merge never hard-materializes 2x-width
+                # rows the way an eager localCheckpoint did (VERDICT r10 #4)
+                touch, bs, inserts = (
+                    f.persist(StorageLevel.MEMORY_AND_DISK) if f is not None
+                    else None
+                    for f in (fates.matched, fates.by_source, inserts)
                 )
-            union = legs[0]
-            for leg in legs[1:]:
-                union = union.unionAll(leg)
-            leg_counts = {
-                r["_dc43_leg"]: r["count"]
-                for r in union.groupBy("_dc43_leg").count().collect()
-            }
-            if leg_counts.get(3, 0):
-                # re-probe the (cached) source only on the failure path,
-                # to name an offending key in the error
-                require_unique_merge_keys(src, keys)
-                raise ValueError(  # pragma: no cover - probe raises first
-                    "merge source has duplicate keys; SQL MERGE is "
-                    "ambiguous under multiple source matches"
-                )
-            check_dups_in_count = False  # retries reuse the verdict
-            n_touch = leg_counts.get(0, 0)
-            n_bs = leg_counts.get(1, 0)
-            n_ins = leg_counts.get(2, 0)
-            if n_touch == 0 and n_bs == 0 and n_ins == 0:
-                return None
+                frames = [f for f in (touch, bs, inserts) if f is not None]
+                if not frames:  # every clause kind is empty
+                    return None
 
-            def _regen(frame: DataFrame) -> DataFrame:
-                # map-form rows mix target/source values: recompute generated
-                # columns from the final row (delta-spark's rule); *All forms
-                # already carry source-side computed values. Extra
-                # (materialized row-id) columns ride through untouched.
-                if gen and dict_clauses:
+                # ONE counting job for all persisted frames (a tagged
+                # union-count): each leg's scan materializes its cache, so
+                # this replaces separate count() jobs — at local scale that
+                # is 3x job overhead, at cluster scale 3 job launches over
+                # the same cached bytes (guide §2.4: fewer actions)
+                legs = [
+                    f.select(F.lit(i).alias("_dc43_leg"))
+                    for i, f in enumerate((touch, bs, inserts))
+                    if f is not None
+                ]
+                if check_dups_in_count:
+                    # by-source merges have no pruning-envelope probe to
+                    # fuse the duplicate-source-key check into: ride this
+                    # same counting job as one extra leg over the
+                    # materialized source — one row per duplicated key group
+                    legs.append(
+                        src.groupBy(*[F.col(k) for k in keys])
+                        .count()
+                        .filter(F.col("count") > 1)
+                        .select(F.lit(3).alias("_dc43_leg"))
+                    )
+                leg_counts = {
+                    r["_dc43_leg"]: r["count"]
+                    for r in functools.reduce(DataFrame.unionAll, legs)
+                    .groupBy("_dc43_leg").count().collect()
+                }
+                if leg_counts.get(3, 0):
+                    # re-probe the (cached) source only on the failure
+                    # path, to name an offending key in the error
+                    require_unique_merge_keys(src, keys)
+                    raise ValueError(  # pragma: no cover - probe raises first
+                        "merge source has duplicate keys; SQL MERGE is "
+                        "ambiguous under multiple source matches"
+                    )
+                check_dups_in_count = False  # retries reuse the verdict
+                n_touch, n_bs, n_ins = (leg_counts.get(i, 0) for i in range(3))
+                if n_touch == 0 and n_bs == 0 and n_ins == 0:
+                    return None
+
+                def _regen(frame: DataFrame) -> DataFrame:
+                    # map-form rows mix target/source values: recompute
+                    # generated columns from the final row (delta-spark's
+                    # rule); *All forms already carry source-side computed
+                    # values. Extra (materialized row-id) columns ride
+                    # through untouched.
                     extras = [
                         c for c in frame.columns
                         if c not in data_cols and c not in gen
                     ]
                     out, _ = _apply_generated_columns(frame.drop(*gen), gen)
                     return out.select(*data_cols, *extras)
-                return frame
 
-            updates = None
-            if upd_form and n_touch:
-                updates = _regen(
-                    touch.filter(F.col("_dc43_upd")).select(
-                        *[F.col(f"_n_{c}").alias(c) for c in data_cols],
-                        *([F.col(_RTID).alias(mat_id)] if mat_id else []),
+                regen = _regen if gen and plan.dict_clauses else None
+                new_parts = []
+                for frame, updates in (
+                    (touch, plan.upd_form and n_touch),
+                    (bs, plan.bs_upd_form and n_bs),
+                ):
+                    if updates:
+                        post = fate_rows(
+                            frame, "update", "_n_", data_cols,
+                            *([f"`{_RTID}` AS `{mat_id}`"] if mat_id else []),
+                        )
+                        new_parts.append(regen(post) if regen else post)
+                if inserts is not None:
+                    new_parts.append(
+                        regen(inserts) if regen and plan.insert_maps else inserts
                     )
-                )
-            bs_updates = None
-            if bs_upd_form and n_bs:
-                bs_updates = _regen(
-                    bs.filter(F.col("_dc43_bsupd")).select(
-                        *[F.col(f"_bsn_{c}").alias(c) for c in data_cols],
-                        *([F.col(_RTID).alias(mat_id)] if mat_id else []),
-                    )
-                )
-            if inserts is not None and gen and any(
-                cl.assignments is not None for cl in nm_cls
-            ):
-                inserts = _regen(inserts)
-
-            new_parts = [
-                p for p in (updates, bs_updates, inserts) if p is not None
-            ]
-            new_rows = None
-            if new_parts:
-                new_rows = new_parts[0]
-                for p in new_parts[1:]:
+                new_rows = None
+                if new_parts:
                     # inserts carry no materialized row id (NULL -> the
                     # new file's fresh baseRowId + index)
-                    new_rows = new_rows.unionByName(
-                        p, allowMissingColumns=True
+                    new_rows = functools.reduce(
+                        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                        new_parts,
                     )
-                _enforce_delta_rules(
-                    new_rows, {**_delta_row_rules(meta, snap.schema), **gen_rules}
+                    _enforce_delta_rules(
+                        new_rows, {**_delta_row_rules(meta, snap.schema), **gen_rules}
+                    )
+                # every fired matched or by-source row removes its old
+                # version (update-fate rows re-land via new_rows)
+                del_parts = [
+                    f.select(_REL, _POS) for f, n in ((touch, n_touch), (bs, n_bs)) if n
+                ]
+                del_rows = (
+                    functools.reduce(DataFrame.unionByName, del_parts)
+                    if del_parts else None
                 )
+                cdf = None
+                if cdf_on:
+                    cdf = change_rows(
+                        FateFrames(touch, bs, inserts), plan, data_cols, regen
+                    )
 
-            del_parts = []
-            if n_touch:
-                del_parts.append(touch.select(_REL, _POS))
-            if bs is not None and n_bs:
-                # every fired by-source row removes its old version
-                # (delete-fate rows stay gone; update-fate rows re-land
-                # as fresh rows via bs_updates)
-                del_parts.append(bs.select(_REL, _POS))
-            del_rows = None
-            if del_parts:
-                del_rows = del_parts[0]
-                for p in del_parts[1:]:
-                    del_rows = del_rows.unionByName(p)
-
-            cdf = None
-            if cdf_on:
-                cframes = []
-                deletes = touch.filter("_dc43_del").select(
-                    *[F.col(f"_t_{c}").alias(c) for c in data_cols],
-                    F.lit("delete").alias("_change_type"),
+                matched_params = []
+                for cl in plan.matched:
+                    entry = {"actionType": cl.action}
+                    if cl.condition:
+                        entry["predicate"] = cl.condition
+                    matched_params.append(entry)
+                return _commit_dml(
+                    t, snap, protocol, meta,
+                    op="MERGE",
+                    params={
+                        "predicate": " AND ".join(f"t.{k} <=> s.{k}" for k in keys),
+                        "matchedPredicates": json.dumps(matched_params),
+                    },
+                    del_rows=del_rows,
+                    lineage=lineage,
+                    new_rows=new_rows,
+                    cdf_rows=cdf,
+                    use_dvs=use_dvs,
+                    new_meta=new_meta,
+                    ident_alloc=ident_alloc or None,
                 )
-                cframes.append(deletes)
-                if upd_form:
-                    pre = touch.filter(F.col("_dc43_upd")).select(
-                        *[F.col(f"_t_{c}").alias(c) for c in data_cols],
-                        F.lit("update_preimage").alias("_change_type"),
-                    )
-                    post = touch.filter(F.col("_dc43_upd")).select(
-                        *[F.col(f"_n_{c}").alias(c) for c in data_cols],
-                        F.lit("update_postimage").alias("_change_type"),
-                    )
-                    if gen and dict_clauses:
-                        post = _regen(
-                            touch.filter(F.col("_dc43_upd")).select(
-                                *[F.col(f"_n_{c}").alias(c) for c in data_cols]
-                            )
-                        ).select(
-                            *data_cols,
-                            F.lit("update_postimage").alias("_change_type"),
-                        )
-                    cframes += [pre, post]
-                if bs is not None and n_bs:
-                    if any(cl.action == "delete" for cl in bs_cls):
-                        cframes.append(
-                            bs.filter(F.col("_dc43_bsdel")).select(
-                                *data_cols,
-                                F.lit("delete").alias("_change_type"),
-                            )
-                        )
-                    if bs_upd_form:
-                        cframes.append(
-                            bs.filter(F.col("_dc43_bsupd")).select(
-                                *data_cols,
-                                F.lit("update_preimage").alias("_change_type"),
-                            )
-                        )
-                        cframes.append(
-                            bs_updates.select(
-                                *data_cols,
-                                F.lit("update_postimage").alias("_change_type"),
-                            )
-                        )
-                if inserts is not None:
-                    cframes.append(
-                        inserts.select(
-                            *data_cols, F.lit("insert").alias("_change_type")
-                        )
-                    )
-                cdf = cframes[0]
-                for fr in cframes[1:]:
-                    cdf = cdf.unionByName(fr)
-
-            matched_params = []
-            for cl in m_cls:
-                entry = {"actionType": cl.action}
-                if cl.condition:
-                    entry["predicate"] = cl.condition
-                matched_params.append(entry)
-            return _commit_dml(
-                t, snap, protocol, meta,
-                op="MERGE",
-                params={
-                    "predicate": " AND ".join(f"t.{k} <=> s.{k}" for k in keys),
-                    "matchedPredicates": json.dumps(matched_params),
-                },
-                del_rows=del_rows,
-                lineage=lineage,
-                new_rows=new_rows,
-                cdf_rows=cdf,
-                use_dvs=use_dvs,
-                new_meta=new_meta,
-                ident_alloc=ident_alloc or None,
-            )
-        except _DmlConflict:
-            continue
-        finally:
-            # release on EVERY exit — success, conflict retry, or a
-            # non-conflict failure (constraint violation, protocol
-            # error): persisted touch sets and the materialized source
-            # must never outlive the op (or the retry iteration)
-            if _src_cached:
-                src.unpersist()
-            for f in frames:
-                f.unpersist()
+            except _DmlConflict:
+                continue
+            finally:
+                # release on EVERY exit — success, conflict retry, or a
+                # non-conflict failure (constraint violation, protocol
+                # error): persisted fate frames must never outlive the op
+                # (or the retry iteration); the source's context manager
+                # releases it
+                for f in frames:
+                    f.unpersist()
     raise DeltaProtocolError(
         f"MERGE on {path} kept conflicting after {max_retries} attempts"
     )

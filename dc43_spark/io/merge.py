@@ -24,8 +24,10 @@ Three physical strategies:
   swap. Cost shape: one shuffle join + full rewrite of the target;
   correct, but at scale prefer a transactional format above.
 
-The join itself is declarative (equality keys -> Catalyst sort-merge or
-broadcast if the source is small), so AQE/skew handling apply.
+The clause vocabulary, the fate joins, the change rows, the outer-join
+rewrite and the missing-target initial write live in io/mergecore.py,
+shared by every engine but delta-spark's; its public names are
+re-exported here.
 """
 
 from __future__ import annotations
@@ -37,10 +39,24 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dc43_spark.contracts.model import Contract
 from dc43_spark.engine.results import ValidationResult
+from dc43_spark.io.mergecore import (  # noqa: F401 (public names re-exported)
+    MergeClause,
+    MergePlan,
+    any_clause_ok,
+    clause_gate,
+    clause_value,
+    first_fate,
+    initial_write,
+    insert_only_frame,
+    normalize_merge_clauses,
+    outer_join_merge,
+    require_unique_merge_keys,
+    source_key_stats,
+    validate_merge_clauses,
+)
 from dc43_spark.io.read import ValidationBlockedError
 from dc43_spark.io.write import write_with_contract
 
@@ -57,526 +73,11 @@ def delta_available() -> bool:
 @dataclass
 class MergeResult:
     validation: ValidationResult
-    strategy: str  # "delta" | "outer-join-rewrite" | "initial-write"
+    # "delta" | "delta-log-dml" | "snaplog-<MergeStats.strategy>" |
+    # "outer-join-rewrite" | "initial-write" | "no-op"
+    strategy: str
     target_path: Optional[str] = None
     target_table: Optional[str] = None
-
-
-def source_key_stats(source: DataFrame, keys: list[str], *, check_unique: bool = True):
-    """ONE pass over the merge source computing the per-key pruning
-    envelope (fields ``_lo_{i}`` / ``_hi_{i}`` / ``_null_{i}`` by key
-    position) and, when ``check_unique``, the duplicate-key probe fused
-    into the same job: the grouped per-key counts feed a second
-    aggregate instead of a separate scan+shuffle. At 100 TB the source
-    SCAN is the cost — the merge previously paid it twice (once for
-    ``require_unique_merge_keys``, once for the min/max envelope); this
-    keeps the probe exact while reading the source once. min/max are
-    duplicate-insensitive, so aggregating them over the grouped keys
-    equals aggregating over the raw source; a NULL key survives as a
-    NULL group, so the ``_null_{i}`` flags are exact too. On a
-    duplicate hit the standalone probe re-runs ONLY to name an example
-    key for the error (failure path, cost irrelevant)."""
-    aggs = (
-        [F.min(F.col(k)).alias(f"_lo_{i}") for i, k in enumerate(keys)]
-        + [F.max(F.col(k)).alias(f"_hi_{i}") for i, k in enumerate(keys)]
-        + [
-            F.max(F.col(k).isNull()).alias(f"_null_{i}")
-            for i, k in enumerate(keys)
-        ]
-    )
-    if not check_unique:
-        return source.select(*aggs).first()
-    grouped = source.groupBy(*[F.col(k) for k in keys]).agg(
-        F.count(F.lit(1)).alias("_dc43_cnt")
-    )
-    row = grouped.select(
-        F.max("_dc43_cnt").alias("_dc43_maxcnt"), *aggs
-    ).first()
-    if row["_dc43_maxcnt"] is not None and row["_dc43_maxcnt"] > 1:
-        require_unique_merge_keys(source, keys)
-    return row
-
-
-def require_unique_merge_keys(source: DataFrame, keys: list[str]) -> None:
-    """SQL MERGE rejects a source with duplicate keys: one target row
-    matching several source rows is ambiguous (Delta raises
-    MULTIPLE_SOURCE_ROWS_MATCHED at runtime; the outer-join rewrite would
-    silently DUPLICATE the target row instead — caught by the snaplog
-    model-based property test). One cheap key-grouped probe, negligible
-    next to the merge itself; dedupe upstream (e.g. last-wins by a
-    change timestamp) before merging."""
-    dup = (
-        source.groupBy(*[F.col(k) for k in keys])
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        key_vals = {k: dup[0][k] for k in keys}
-        raise ValueError(
-            f"merge source has duplicate keys (e.g. {key_vals}); SQL MERGE "
-            "is ambiguous under multiple source matches — deduplicate the "
-            "source first"
-        )
-
-
-@dataclass(frozen=True)
-class MergeClause:
-    """One ordered MERGE clause — delta-spark's builder surface, where
-    ``whenMatched*``/``whenNotMatched*``/``whenNotMatchedBySource*`` may
-    each be chained MULTIPLE times and the clauses of a kind evaluate
-    first-match-wins in user order (ref spark/io/merge.py:43-127 forwards
-    the builder freely; VERDICT r11 #2).
-
-    ``action``: ``update`` | ``delete`` (matched / by-source kinds) or
-    ``insert`` (not-matched kind). ``condition``: SQL gate (NULL verdict =
-    fail); None = unconditional. ``assignments``: the SET / VALUES map;
-    None means updateAll / insertAll (never valid for delete, and a
-    by-source update always needs a map — there is no source row)."""
-
-    action: str
-    condition: Optional[str] = None
-    assignments: Optional[dict] = None
-
-
-_CLAUSE_ACTIONS = {
-    "matched": ("update", "delete"),
-    "not_matched": ("insert",),
-    "not_matched_by_source": ("update", "delete"),
-}
-
-
-def _coerce_clause(c, kind: str) -> MergeClause:
-    """A MergeClause or a ``{"action": ..., "condition": ...,
-    "set"/"values": {...}}`` dict -> a validated MergeClause for
-    ``kind``."""
-    if isinstance(c, MergeClause):
-        cl = c
-    elif isinstance(c, dict):
-        extra = set(c) - {"action", "condition", "set", "values"}
-        if extra:
-            raise ValueError(
-                f"unknown {kind} clause key(s) {sorted(extra)}; use "
-                "action/condition/set/values"
-            )
-        if "set" in c and "values" in c:
-            raise ValueError(f"{kind} clause has both 'set' and 'values'")
-        cl = MergeClause(
-            action=c.get("action", "insert" if kind == "not_matched" else "update"),
-            condition=c.get("condition"),
-            assignments=c.get("set", c.get("values")),
-        )
-    else:
-        raise ValueError(
-            f"{kind} clause must be a MergeClause or dict, got {c!r}"
-        )
-    if cl.action not in _CLAUSE_ACTIONS[kind]:
-        raise ValueError(
-            f"{kind} clause action must be one of "
-            f"{_CLAUSE_ACTIONS[kind]}, got {cl.action!r}"
-        )
-    if cl.action == "delete" and cl.assignments is not None:
-        raise ValueError(f"{kind} DELETE clause takes no SET map")
-    if cl.assignments is not None and not cl.assignments:
-        raise ValueError(f"{kind} clause SET/VALUES map must be non-empty")
-    if (
-        kind == "not_matched_by_source"
-        and cl.action == "update"
-        and cl.assignments is None
-    ):
-        raise ValueError(
-            "a by-source UPDATE needs a SET map (there is no source row "
-            "for UPDATE SET *)"
-        )
-    return cl
-
-
-def normalize_merge_clauses(
-    *,
-    when_matched="update",
-    when_not_matched="insert",
-    delete_predicate: Optional[str] = None,
-    insert_predicate: Optional[str] = None,
-    matched_predicate: Optional[str] = None,
-    when_not_matched_by_source="ignore",
-    not_matched_by_source_predicate: Optional[str] = None,
-    matched_clauses: Optional[list] = None,
-    not_matched_clauses: Optional[list] = None,
-    not_matched_by_source_clauses: Optional[list] = None,
-) -> tuple:
-    """The single clause vocabulary all four merge engines share:
-    ``(matched, not_matched, by_source)`` ordered MergeClause lists with
-    first-match-wins semantics.
-
-    Two input surfaces, per kind mutually exclusive: the legacy
-    fixed-priority kwargs (matched delete first, then the update clause
-    — exactly the order the kwargs historically applied), or an explicit
-    ordered ``*_clauses`` list (delta-spark's multi-clause builder).
-    Per delta-spark's rule, only the LAST clause of a kind may omit its
-    condition — an unconditional earlier clause makes the rest dead."""
-    if matched_clauses is not None:
-        if (
-            when_matched != "update"
-            or delete_predicate is not None
-            or matched_predicate is not None
-        ):
-            raise ValueError(
-                "pass matched_clauses OR the legacy when_matched/"
-                "delete_predicate/matched_predicate kwargs, not both"
-            )
-        matched = [_coerce_clause(c, "matched") for c in matched_clauses]
-    else:
-        validate_merge_clauses(when_matched, "insert", "ignore")
-        matched = []
-        if delete_predicate:
-            matched.append(MergeClause("delete", delete_predicate))
-        if when_matched != "ignore":
-            matched.append(MergeClause(
-                "update", matched_predicate,
-                when_matched if isinstance(when_matched, dict) else None,
-            ))
-    if not_matched_clauses is not None:
-        if when_not_matched != "insert" or insert_predicate is not None:
-            raise ValueError(
-                "pass not_matched_clauses OR the legacy when_not_matched/"
-                "insert_predicate kwargs, not both"
-            )
-        not_matched = [
-            _coerce_clause(c, "not_matched") for c in not_matched_clauses
-        ]
-    else:
-        validate_merge_clauses("update", when_not_matched, "ignore")
-        not_matched = []
-        if when_not_matched != "ignore":
-            not_matched.append(MergeClause(
-                "insert", insert_predicate,
-                when_not_matched if isinstance(when_not_matched, dict) else None,
-            ))
-    if not_matched_by_source_clauses is not None:
-        if (
-            when_not_matched_by_source != "ignore"
-            or not_matched_by_source_predicate is not None
-        ):
-            raise ValueError(
-                "pass not_matched_by_source_clauses OR the legacy "
-                "when_not_matched_by_source/"
-                "not_matched_by_source_predicate kwargs, not both"
-            )
-        by_source = [
-            _coerce_clause(c, "not_matched_by_source")
-            for c in not_matched_by_source_clauses
-        ]
-    else:
-        validate_merge_clauses("update", "insert", when_not_matched_by_source)
-        by_source = []
-        if when_not_matched_by_source == "delete":
-            by_source.append(
-                MergeClause("delete", not_matched_by_source_predicate)
-            )
-        elif isinstance(when_not_matched_by_source, dict):
-            by_source.append(MergeClause(
-                "update", not_matched_by_source_predicate,
-                when_not_matched_by_source,
-            ))
-    for kind, lst in (
-        ("matched", matched),
-        ("not matched", not_matched),
-        ("not matched by source", by_source),
-    ):
-        for cl in lst[:-1]:
-            if cl.condition is None:
-                raise ValueError(
-                    f"only the LAST 'when {kind}' clause may omit its "
-                    "condition — an unconditional earlier clause makes "
-                    "every later one dead (delta-spark's rule)"
-                )
-    return matched, not_matched, by_source
-
-
-def clause_gate(cl: MergeClause):
-    """The clause's condition as a Column gate: NULL verdict = fail,
-    missing condition = always-on."""
-    if cl.condition is None:
-        return F.lit(True)
-    return F.coalesce(F.expr(cl.condition), F.lit(False))
-
-
-def any_clause_ok(clauses: list):
-    """OR of the clauses' gates (does ANY clause fire for this row)."""
-    out = F.lit(False)
-    for cl in clauses:
-        out = out | clause_gate(cl)
-    return out
-
-
-def first_fate(clauses: list, action: str, guard=None):
-    """True iff the FIRST clause (user order) whose condition passes has
-    ``action`` — the row's fate under first-match-wins. ``guard``
-    (optional Column) pre-conditions every branch (e.g. presence flags in
-    an outer join)."""
-    chain = None
-    for cl in clauses:
-        cond = clause_gate(cl)
-        if guard is not None:
-            cond = guard & cond
-        hit = F.lit(cl.action == action)
-        chain = F.when(cond, hit) if chain is None else chain.when(cond, hit)
-    if chain is None:
-        return F.lit(False)
-    return F.coalesce(chain, F.lit(False))
-
-
-def clause_value(
-    clauses: list, kind: str, c: str, types: dict,
-    keep_t=(), guard=None, otherwise=None,
-):
-    """Column ``c``'s output value under first-match-wins: the first
-    passing clause's SET/VALUES/*All value (delete clauses contribute the
-    fallback value — their rows are dropped by the caller's keep logic,
-    but the branch must still SHADOW later clauses). Falls back to
-    ``otherwise`` (default ``t.c``) when no clause fires."""
-    fallback = otherwise if otherwise is not None else F.col(f"t.`{c}`")
-    chain = None
-    for cl in clauses:
-        cond = clause_gate(cl)
-        if guard is not None:
-            cond = guard & cond
-        if cl.action == "delete":
-            val = fallback
-        elif kind == "matched":
-            val = _matched_value(
-                c,
-                cl.assignments if cl.assignments is not None else "update",
-                set(keep_t), types.get(c),
-            )
-        elif kind == "not_matched_by_source":
-            val = _by_source_value(c, cl.assignments, types.get(c))
-        else:  # insert
-            val = _insert_value(
-                c,
-                cl.assignments if cl.assignments is not None else "insert",
-                types.get(c),
-            )
-        chain = F.when(cond, val) if chain is None else chain.when(cond, val)
-    if chain is None:
-        return fallback
-    return chain.otherwise(fallback)
-
-
-def insert_only_frame(source: DataFrame, not_matched: list, cols=None, types=None):
-    """The rows a MERGE inserts when NOTHING can match (absent/empty
-    target, or no candidate file held a key): first-match-wins across the
-    not-matched clauses. ``cols``/``types`` (the table shape) are
-    required when any clause carries a VALUES map — unlisted columns
-    insert NULL at the TABLE's types."""
-    s = source.alias("s").filter(any_clause_ok(not_matched))
-    if all(cl.assignments is None for cl in not_matched):
-        return s
-    if cols is None:
-        raise ValueError(
-            "column-level INSERT VALUES needs an existing table (its "
-            "schema defines the unlisted-NULL columns); create the table "
-            "first"
-        )
-    return s.select(*[
-        clause_value(
-            not_matched, "not_matched", c, types or {},
-            otherwise=F.lit(None).cast(types.get(c)) if types else F.lit(None),
-        ).alias(c)
-        for c in cols
-    ])
-
-
-def validate_merge_clauses(
-    when_matched,
-    when_not_matched,
-    when_not_matched_by_source="ignore",
-) -> None:
-    """Shared argument gate for the three merge engines (outer-join
-    rewrite, snaplog COW, jar-less Delta DML). The dict forms are
-    delta-spark's column-level clauses: ``whenMatchedUpdate(set=...)``,
-    ``whenNotMatchedInsert(values=...)``,
-    ``whenNotMatchedBySourceUpdate(set=...)``."""
-    if not (when_matched in ("update", "ignore")
-            or (isinstance(when_matched, dict) and when_matched)):
-        raise ValueError(
-            f"when_matched must be update|ignore or a NON-EMPTY "
-            f"{{col: expr}} SET map, got {when_matched!r}"
-        )
-    if not (when_not_matched in ("insert", "ignore")
-            or (isinstance(when_not_matched, dict) and when_not_matched)):
-        raise ValueError(
-            f"when_not_matched must be insert|ignore or a NON-EMPTY "
-            f"{{col: expr}} VALUES map, got {when_not_matched!r}"
-        )
-    if not (when_not_matched_by_source in ("ignore", "delete")
-            or (isinstance(when_not_matched_by_source, dict)
-                and when_not_matched_by_source)):
-        raise ValueError(
-            f"when_not_matched_by_source must be ignore|delete or a "
-            f"NON-EMPTY {{col: expr}} SET map, got "
-            f"{when_not_matched_by_source!r}"
-        )
-
-
-def _matched_value(c, when_matched, keep_t: set, tgt_type=None):
-    """New value of column ``c`` for a matched-and-updated row:
-    updateAll takes the source side (target side for evolution-missing
-    columns); a SET map takes its expression (over ``t.``/``s.``
-    references) and leaves unset columns at the target's value —
-    delta-spark's ``UPDATE SET`` rule."""
-    if isinstance(when_matched, dict):
-        if c in when_matched:
-            e = F.expr(when_matched[c])
-            return e.cast(tgt_type) if tgt_type is not None else e
-        return F.col(f"t.`{c}`")
-    if c in keep_t:
-        return F.col(f"t.`{c}`")
-    return F.col(f"s.`{c}`")
-
-
-def _insert_value(c, when_not_matched, tgt_type=None):
-    """Value of column ``c`` for an inserted row: insertAll takes the
-    source column; a VALUES map takes its expression (over ``s.``) and
-    leaves unlisted columns NULL — delta-spark's ``INSERT (cols)
-    VALUES (exprs)`` rule."""
-    if isinstance(when_not_matched, dict):
-        if c in when_not_matched:
-            e = F.expr(when_not_matched[c])
-            return e.cast(tgt_type) if tgt_type is not None else e
-        return (F.lit(None).cast(tgt_type)
-                if tgt_type is not None else F.lit(None))
-    return F.col(f"s.`{c}`")
-
-
-def _by_source_value(c, clause, tgt_type=None):
-    """Value of column ``c`` for a NOT-MATCHED-BY-SOURCE updated row: the
-    SET map's expression (over ``t.`` — there is no source side), unset
-    columns keep the target's value."""
-    if isinstance(clause, dict) and c in clause:
-        e = F.expr(clause[c])
-        return e.cast(tgt_type) if tgt_type is not None else e
-    return F.col(f"t.`{c}`")
-
-
-def _outer_join_merge(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    *,
-    when_matched="update",
-    when_not_matched="insert",
-    delete_predicate: Optional[str] = None,
-    insert_predicate: Optional[str] = None,
-    matched_predicate: Optional[str] = None,
-    when_not_matched_by_source="ignore",
-    not_matched_by_source_predicate: Optional[str] = None,
-    matched_clauses: Optional[list] = None,
-    not_matched_clauses: Optional[list] = None,
-    not_matched_by_source_clauses: Optional[list] = None,
-    keep_target_cols: tuple = (),
-) -> DataFrame:
-    """MERGE semantics as one full-outer join. Callers must validate
-    source-key uniqueness (``require_unique_merge_keys``) first.
-
-    Clause surface = ``normalize_merge_clauses``: either the legacy
-    fixed-priority kwargs or ordered multi-clause lists (delta-spark's
-    chained builder, ref spark/io/merge.py:43-127), evaluated
-    FIRST-MATCH-WINS per kind:
-    - key in both: the first matched clause whose condition passes
-      decides (delete -> dropped; update -> SET map over ``t.``/``s.``
-      with unset columns keeping the target value, or updateAll taking
-      the source row); no clause fires -> target row unchanged.
-    - key only in target: the first by-source clause decides (delete /
-      SET map over ``t.``); none -> kept.
-    - key only in source: the first insert clause whose condition passes
-      inserts (insertAll = source row; a VALUES map leaves unlisted
-      columns NULL); none -> dropped. NULL conditions never fire.
-
-    ``keep_target_cols``: columns the SOURCE genuinely lacks (schema
-    evolution null-filled them) — updates retain the target's value
-    there, Delta's updateAll-under-evolution rule, while inserts still
-    take the source-side NULL.
-    """
-    m_cls, nm_cls, bs_cls = normalize_merge_clauses(
-        when_matched=when_matched,
-        when_not_matched=when_not_matched,
-        delete_predicate=delete_predicate,
-        insert_predicate=insert_predicate,
-        matched_predicate=matched_predicate,
-        when_not_matched_by_source=when_not_matched_by_source,
-        not_matched_by_source_predicate=not_matched_by_source_predicate,
-        matched_clauses=matched_clauses,
-        not_matched_clauses=not_matched_clauses,
-        not_matched_by_source_clauses=not_matched_by_source_clauses,
-    )
-    cols = target.columns
-    types = {f.name: f.dataType for f in target.schema.fields}
-    # Explicit presence flags, NOT key-isNotNull probes: the join matches
-    # with eqNullSafe, so a NULL key is a legitimate value — a target row
-    # with key NULL must read as "present" or merges silently drop it
-    # (caught by the IVM recompute oracle on a NULL group key).
-    t = target.withColumn("_t_present", F.lit(True)).alias("t")
-    s = source.withColumn("_s_present", F.lit(True)).alias("s")
-    joined = t.join(s, on=[F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys], how="full_outer")
-    has_t = F.coalesce(F.col("t._t_present"), F.lit(False))
-    has_s = F.coalesce(F.col("s._s_present"), F.lit(False))
-
-    m_guard = has_t & has_s
-    bs_guard = has_t & ~has_s
-    ins_guard = ~has_t & has_s
-    m_del = m_guard & first_fate(m_cls, "delete")
-    bs_del = bs_guard & first_fate(bs_cls, "delete")
-    ins_act = ins_guard & any_clause_ok(nm_cls) if nm_cls else F.lit(False)
-    keep_row = (m_guard & ~m_del) | (bs_guard & ~bs_del) | ins_act
-    keep_t = set(keep_target_cols)
-
-    def _out(c):
-        # one when-chain in clause order per kind (guarded by the join
-        # side), so the FIRST passing clause's value wins — delete
-        # branches contribute t.c purely to shadow later clauses (their
-        # rows are dropped by keep_row). Expressions build ONLY for
-        # clauses that exist: a dead branch's value expression (e.g.
-        # s.`v` for an absent insert clause) would still need to
-        # RESOLVE, crashing map-form merges whose source legitimately
-        # lacks target columns.
-        branches = []
-        for cl in m_cls:
-            val = (
-                F.col(f"t.`{c}`")
-                if cl.action == "delete"
-                else _matched_value(
-                    c,
-                    cl.assignments if cl.assignments is not None else "update",
-                    keep_t, types.get(c),
-                )
-            )
-            branches.append((m_guard & clause_gate(cl), val))
-        for cl in bs_cls:
-            val = (
-                F.col(f"t.`{c}`")
-                if cl.action == "delete"
-                else _by_source_value(c, cl.assignments, types.get(c))
-            )
-            branches.append((bs_guard & clause_gate(cl), val))
-        for cl in nm_cls:
-            branches.append((
-                ins_guard & clause_gate(cl),
-                _insert_value(
-                    c,
-                    cl.assignments if cl.assignments is not None else "insert",
-                    types.get(c),
-                ),
-            ))
-        if not branches:
-            return F.col(f"t.`{c}`").alias(c)
-        col = F.when(*branches[0])
-        for cond, val in branches[1:]:
-            col = col.when(cond, val)
-        return col.otherwise(F.col(f"t.`{c}`")).alias(c)
-
-    return joined.filter(keep_row).select(*[_out(c) for c in cols])
 
 
 def merge_with_contract(
@@ -588,35 +89,25 @@ def merge_with_contract(
     path: Optional[str] = None,
     table: Optional[str] = None,
     format: Optional[str] = None,
-    when_matched="update",
-    when_not_matched="insert",
-    delete_predicate: Optional[str] = None,
-    insert_predicate: Optional[str] = None,
-    matched_predicate: Optional[str] = None,
-    when_not_matched_by_source="ignore",
-    not_matched_by_source_predicate: Optional[str] = None,
-    matched_clauses: Optional[list] = None,
-    not_matched_clauses: Optional[list] = None,
-    not_matched_by_source_clauses: Optional[list] = None,
     enforce: bool = True,
     auto_cast: bool = True,
     interceptors: Optional[list] = None,
+    **clauses,
 ) -> MergeResult:
     """Validate ``source_df`` against ``contract`` then upsert into target.
 
-    ``when_matched`` / ``when_not_matched`` / ``when_not_matched_by_source``
-    take the full conditional clause surface (strings or ``{col: expr}``
-    maps — see ``_outer_join_merge``), with ``matched_predicate`` /
-    ``insert_predicate`` / ``not_matched_by_source_predicate`` gating each
-    clause: the reference's arbitrary-condition merge builder
-    (merge.py:43-127) expressed as explicit kwargs, forwarded to whichever
-    engine serves the target (delta-spark builder, jar-less Delta DML,
-    snaplog COW, outer-join rewrite). ``matched_clauses`` /
-    ``not_matched_clauses`` / ``not_matched_by_source_clauses`` are the
-    ORDERED multi-clause surface instead (lists of MergeClause or
-    ``{"action", "condition", "set"/"values"}`` dicts, first-match-wins
-    per kind — delta-spark's chained builder); per kind, pass the list OR
-    the legacy kwargs, not both.
+    ``clauses`` are the ``mergecore.normalize_merge_clauses`` kwargs: the
+    legacy ``when_matched`` / ``when_not_matched`` /
+    ``when_not_matched_by_source`` strings or ``{col: expr}`` maps gated
+    by ``matched_predicate`` / ``delete_predicate`` / ``insert_predicate``
+    / ``not_matched_by_source_predicate``, or the ORDERED
+    ``matched_clauses`` / ``not_matched_clauses`` /
+    ``not_matched_by_source_clauses`` lists (first-match-wins per kind —
+    delta-spark's chained builder, ref merge.py:43-127). They are
+    normalized once and forwarded to whichever engine serves the target
+    (delta-spark builder, jar-less Delta DML, snaplog COW, outer-join
+    rewrite). A missing target takes the initial write
+    (``mergecore.initial_write``).
 
     Interceptors run around the merge like any governed write (explicit
     list, else conf/env discovery — io/status.py): ``pre_write`` may
@@ -638,25 +129,7 @@ def merge_with_contract(
             replacement = hook.pre_write(io_ctx, source_df)
             if replacement is not None:
                 source_df = replacement
-    m_cls, nm_cls, bs_cls = normalize_merge_clauses(
-        when_matched=when_matched,
-        when_not_matched=when_not_matched,
-        delete_predicate=delete_predicate,
-        insert_predicate=insert_predicate,
-        matched_predicate=matched_predicate,
-        when_not_matched_by_source=when_not_matched_by_source,
-        not_matched_by_source_predicate=not_matched_by_source_predicate,
-        matched_clauses=matched_clauses,
-        not_matched_clauses=not_matched_clauses,
-        not_matched_by_source_clauses=not_matched_by_source_clauses,
-    )
-    # engines consume the normalized ordered lists; their legacy kwargs
-    # stay at defaults (normalize_merge_clauses' per-kind exclusivity)
-    clause_kwargs = dict(
-        matched_clauses=[*m_cls],
-        not_matched_clauses=[*nm_cls],
-        not_matched_by_source_clauses=[*bs_cls],
-    )
+    plan = MergePlan.of(**clauses)
     if path is None and table is None:
         raise ValueError("merge target missing: need path or table")
     fmt = format or ("parquet" if path else None)
@@ -685,11 +158,21 @@ def merge_with_contract(
     # wrapper probing first would scan the source one extra time per
     # merge. Backends without a fused check probe explicitly below.
 
-    def _done(result: MergeResult) -> MergeResult:
+    def _done(strategy: str) -> MergeResult:
+        result = MergeResult(validation, strategy, path, table)
         if interceptors:
             for hook in interceptors:
                 hook.post_write(io_ctx, result.validation)
         return result
+
+    def _initial(write_format: str, target_table: Optional[str]) -> MergeResult:
+        return _done(initial_write(
+            aligned, keys, plan,
+            lambda df: write_with_contract(
+                df, contract, path=path, table=target_table,
+                format=write_format, mode="overwrite", enforce=False,
+            ),
+        ))
 
     from dc43_spark.io.snaplog import SnaplogTable
 
@@ -700,14 +183,10 @@ def merge_with_contract(
             raise ValueError(
                 "snaplog targets are path-based: merge needs path=, not table="
             )
-        t = SnaplogTable(spark, path)
-        stats = t.merge(
-            aligned, keys,
-            **clause_kwargs,
-            # check_source_keys stays True: the engine fuses the probe
-            # into its envelope pass (source_key_stats) — zero extra scans
-        )
-        return _done(MergeResult(validation, f"snaplog-{stats.strategy}", path, table))
+        # check_source_keys stays True: the engine fuses the probe into
+        # its envelope pass (source_key_stats) — zero extra scans
+        stats = SnaplogTable(spark, path).merge(aligned, keys, **plan.clauses)
+        return _done(f"snaplog-{stats.strategy}")
 
     if fmt == "delta" and delta_available():  # pragma: no cover - env-gated
         from delta.tables import DeltaTable
@@ -724,7 +203,7 @@ def merge_with_contract(
         # chain each normalized clause IN ORDER — delta-spark applies
         # chained same-kind clauses first-match-wins in builder order,
         # exactly the normalize_merge_clauses semantics
-        for cl in m_cls:
+        for cl in plan.matched:
             if cl.action == "delete":
                 builder = builder.whenMatchedDelete(condition=cl.condition)
             elif cl.assignments is not None:
@@ -733,7 +212,7 @@ def merge_with_contract(
                 )
             else:
                 builder = builder.whenMatchedUpdateAll(condition=cl.condition)
-        for cl in nm_cls:
+        for cl in plan.not_matched:
             if cl.assignments is not None:
                 builder = builder.whenNotMatchedInsert(
                     condition=cl.condition, values=cl.assignments
@@ -742,7 +221,7 @@ def merge_with_contract(
                 builder = builder.whenNotMatchedInsertAll(
                     condition=cl.condition
                 )
-        for cl in bs_cls:
+        for cl in plan.by_source:
             if cl.action == "delete":
                 builder = builder.whenNotMatchedBySourceDelete(
                     condition=cl.condition
@@ -752,7 +231,7 @@ def merge_with_contract(
                     condition=cl.condition, set=cl.assignments
                 )
         builder.execute()
-        return _done(MergeResult(validation, "delta", path, table))
+        return _done("delta")
 
     if fmt == "delta" and path:
         # jar-less protocol MERGE (r10): deletion-vector or copy-on-write
@@ -761,57 +240,32 @@ def merge_with_contract(
         from dc43_spark.io.delta_log import DeltaLogTable
         from dc43_spark.io.delta_dml import delta_merge
 
-        t = DeltaLogTable(spark, path)
-        if not t.exists():
-            # the engine never runs on this path, so its fused check
-            # can't fire — keep the initial write's up-front rejection
-            require_unique_merge_keys(aligned, keys)
-            # initial write serves only the rows the insert clauses would
-            # have inserted (insertAll forms; VALUES maps need an existing
-            # table's schema for the unlisted-NULL columns -> no-op)
-            if not nm_cls or any(cl.assignments is not None for cl in nm_cls):
-                return _done(MergeResult(validation, "initial-write", path, table))
-            write_with_contract(
-                insert_only_frame(aligned, nm_cls), contract,
-                path=path, table=None, format="delta",
-                mode="overwrite", enforce=False,
-            )
-            return _done(MergeResult(validation, "initial-write", path, table))
-        delta_merge(
-            spark, aligned, path, keys,
-            **clause_kwargs,
-            # check_source_keys stays True: the engine fuses the probe
-            # into the envelope pass (or the fate-count for by-source)
-        )
-        return _done(MergeResult(validation, "delta-log-dml", path, table))
+        if not DeltaLogTable(spark, path).exists():
+            return _initial("delta", None)
+        # check_source_keys stays True: the engine fuses the probe into
+        # the envelope pass (or the fate-count for by-source)
+        delta_merge(spark, aligned, path, keys, **plan.clauses)
+        return _done("delta-log-dml")
 
     # -------- parquet fallback: outer-join rewrite + atomic dir swap
-    # the rewrite would silently DUPLICATE a target row under duplicate
-    # source keys (no engine-fused check here) — probe up front
-    require_unique_merge_keys(aligned, keys)
     target_exists = (path is not None and os.path.exists(path)) or (
         table is not None and spark.catalog.tableExists(table)
     )
     if not target_exists:
-        if not nm_cls or any(cl.assignments is not None for cl in nm_cls):
-            return _done(MergeResult(validation, "initial-write", path, table))
-        write_with_contract(
-            insert_only_frame(aligned, nm_cls), contract,
-            path=path, table=table, format=fmt,
-            mode="overwrite", enforce=False,
-        )
-        return _done(MergeResult(validation, "initial-write", path, table))
-
+        return _initial(fmt, table)
+    # the rewrite would silently DUPLICATE a target row under duplicate
+    # source keys (no engine-fused check here) — probe up front
+    require_unique_merge_keys(aligned, keys)
     target = (
         spark.read.table(table) if table else spark.read.format(fmt or "parquet").load(path)
     )
-    merged = _outer_join_merge(target, aligned, keys, **clause_kwargs)
+    merged = outer_join_merge(target, aligned, keys, **plan.clauses)
     if table:
         # shuffle result to a temp view then overwrite (Spark can't overwrite
         # a table it is reading from without a barrier)
         tmp = merged.localCheckpoint(eager=True)
         tmp.write.mode("overwrite").saveAsTable(table)
-        return _done(MergeResult(validation, "outer-join-rewrite", path, table))
+        return _done("outer-join-rewrite")
 
     tmp_dir = tempfile.mkdtemp(prefix="dc43_merge_", dir=os.path.dirname(path.rstrip("/")) or ".")
     try:
@@ -823,4 +277,4 @@ def merge_with_contract(
     except BaseException:
         shutil.rmtree(tmp_dir, ignore_errors=True)
         raise
-    return _done(MergeResult(validation, "outer-join-rewrite", path, table))
+    return _done("outer-join-rewrite")

@@ -111,6 +111,18 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from . import bloom as _bloom
+from dc43_spark.io.mergecore import (
+    FateFrames,
+    MergePlan,
+    any_clause_ok,
+    change_rows,
+    fate_frames,
+    initial_write,
+    insert_only_frame,
+    materialized_source,
+    outer_join_merge,
+    source_key_stats,
+)
 from dc43_spark.io.tablecore import (  # noqa: F401 (HttpCommitClaimer: re-export)
     CommitClaimer,
     FileEntry,
@@ -2897,37 +2909,32 @@ class SnaplogTable:
         source: DataFrame,
         keys: Sequence[str],
         *,
-        when_matched="update",
-        when_not_matched="insert",
-        delete_predicate: Optional[str] = None,
-        insert_predicate: Optional[str] = None,
-        matched_predicate: Optional[str] = None,
-        when_not_matched_by_source="ignore",
-        not_matched_by_source_predicate: Optional[str] = None,
-        matched_clauses: Optional[list] = None,
-        not_matched_clauses: Optional[list] = None,
-        not_matched_by_source_clauses: Optional[list] = None,
         txn: Optional[dict] = None,
         check_source_keys: bool = True,
         merge_schema: bool = False,
         isolation: str = "write_serializable",
+        **clauses,
     ) -> MergeStats:
         """File-granular copy-on-write MERGE (ref spark/io/merge.py:43-127
         semantics, Delta's physical strategy): prune to the files that
         contain matched keys, rewrite only those merged with the source,
-        carry every other file over by reference. ``txn``
+        carry every other file over by reference. ``clauses`` are the
+        ``mergecore.normalize_merge_clauses`` kwargs (row fates: see
+        ``mergecore.outer_join_merge``); a by-source clause disables
+        source-key file pruning (any file can hold such rows) and instead
+        probes every file for rows the clause would touch. ``txn``
         ({'app_id', 'version'}) rides in the manifest so a consumer's
         progress marker commits atomically WITH the merge (the IVM
         refresh loop in io/ivm.py leans on this). ``check_source_keys=
         False`` skips the duplicate-source-key probe for callers that
-        already ran it (merge_with_contract); since r14 the default
-        probe FUSES into the pruning-envelope source pass (one scan,
-        not two — merge.source_key_stats). ``merge_schema=True`` is
-        Delta's automatic evolution: source-only columns join the table
-        schema (existing rows read them as NULL) and source rows missing
-        table columns insert NULLs; without the flag both shapes raise
-        (silently dropping a source column is how data quietly
-        disappears). Type changes on a shared column always raise.
+        already ran it; by default the probe FUSES into the
+        pruning-envelope source pass (``mergecore.source_key_stats``).
+        ``merge_schema=True`` is Delta's automatic evolution: source-only
+        columns join the table schema (existing rows read them as NULL)
+        and source rows missing table columns insert NULLs; without the
+        flag both shapes raise (silently dropping a source column is how
+        data quietly disappears). Type changes on a shared column always
+        raise; map forms never evolve the schema.
 
         ``isolation``: conflict level for commits that land between this
         merge's snapshot read and its commit (see ``ReadInfo``). Under
@@ -2936,95 +2943,38 @@ class SnaplogTable:
         Delta's documented relaxation); ``serializable`` aborts on
         overlapping-range appends too. Concurrent merges/updates/deletes
         conflict only when file sets or key-range envelopes overlap, so
-        partition-disjoint writers all land.
-
-        ``insert_predicate`` (Delta's conditional whenNotMatchedInsert):
-        SQL over the source alias ``s`` gating WHICH unmatched source
-        rows insert — the missing half of CDC apply, where a feed's
-        delete markers must neither insert ("s.op = 'D'" rows with no
-        target match) nor be dropped silently (matched ones delete via
-        ``delete_predicate``).
-
-        Conditional clauses (delta-spark's full merge surface, shared
-        with io/delta_dml.py — see ``_outer_join_merge`` for the exact
-        row fates): ``when_matched``/``when_not_matched`` also accept
-        ``{col: SQL expr}`` SET/VALUES maps; ``matched_predicate`` gates
-        the update clause (``WHEN MATCHED AND pred THEN UPDATE``);
-        ``when_not_matched_by_source`` ("ignore" | "delete" | SET map,
-        gated by ``not_matched_by_source_predicate``) acts on target
-        rows with NO source match — which disables source-key file
-        pruning (any file can hold such rows) and instead probes every
-        file for rows the clause would touch. Map forms never evolve
-        the schema.
-
-        ``matched_clauses`` / ``not_matched_clauses`` /
-        ``not_matched_by_source_clauses``: the ORDERED multi-clause
-        surface (first-match-wins per kind, delta-spark's chained
-        builder — see merge.normalize_merge_clauses); per kind pass the
-        list OR the legacy kwargs, not both."""
-        from dc43_spark.io.merge import (
-            _outer_join_merge,
-            any_clause_ok,
-            insert_only_frame,
-            normalize_merge_clauses,
-            require_unique_merge_keys,
-            source_key_stats,
-        )
-
+        partition-disjoint writers all land."""
         _check_isolation(isolation)
-        m_cls, nm_cls, bs_cls = normalize_merge_clauses(
-            when_matched=when_matched,
-            when_not_matched=when_not_matched,
-            delete_predicate=delete_predicate,
-            insert_predicate=insert_predicate,
-            matched_predicate=matched_predicate,
-            when_not_matched_by_source=when_not_matched_by_source,
-            not_matched_by_source_predicate=not_matched_by_source_predicate,
-            matched_clauses=matched_clauses,
-            not_matched_clauses=not_matched_clauses,
-            not_matched_by_source_clauses=not_matched_by_source_clauses,
-        )
-        dict_clauses = any(
-            cl.assignments is not None for cl in (*m_cls, *nm_cls, *bs_cls)
-        )
-        all_forms = any(
-            cl.action == "update" and cl.assignments is None for cl in m_cls
-        ) or any(cl.assignments is None for cl in nm_cls)
+        plan = MergePlan.of(**clauses)
+        keys = list(keys)
         current = self.version()
         if current is None:
-            if check_source_keys:
-                require_unique_merge_keys(source, keys)
-            if any(cl.assignments is not None for cl in nm_cls):
-                raise ValueError(
-                    "column-level INSERT VALUES needs an existing table "
-                    "(its schema defines the unlisted-NULL columns); "
-                    "create the table first"
-                )
-            if nm_cls:
-                self.write(insert_only_frame(source, nm_cls), mode="overwrite")
-                return MergeStats(0, 0, 0, 0, strategy="initial-write")
-            return MergeStats(0, 0, 0, 0, strategy="no-op")
+            strategy = initial_write(
+                source, keys, plan,
+                lambda df: self.write(df, mode="overwrite"),
+                check_source_keys=check_source_keys,
+            )
+            return MergeStats(0, 0, 0, 0, strategy=strategy)
         snap = self.snapshot(current)
         self._require_no_dvs(snap, "merge")
-        for clause, kind in (
-            *[(cl, "when_matched SET") for cl in m_cls],
-            *[(cl, "when_not_matched VALUES") for cl in nm_cls],
-            *[(cl, "when_not_matched_by_source SET") for cl in bs_cls],
-        ):
-            if clause.assignments is not None:
-                bad = sorted(set(clause.assignments) & set(snap.generated or {}))
-                if bad:
-                    raise ValueError(
-                        f"column(s) {bad} in {kind} are generated; their "
-                        "values recompute from the expression"
-                    )
-        if snap.generated and all_forms:
+        gen = snap.generated or {}
+        plan.refuse_generated(gen)
+        if gen and plan.all_forms:
             # inserts must carry computed values; provided ones validate
-            source = self._apply_generated(source, snap.generated, "merge")
+            source = self._apply_generated(source, gen, "merge")
+        regen = None
+        if gen and plan.dict_clauses:
+            # map-form rows mix target/source values: recompute generated
+            # columns from the final row
+            def regen(df: DataFrame) -> DataFrame:
+                return self._apply_generated(
+                    df.drop(*gen), gen, "merge"
+                ).select(*df.columns)
+
         evolved_json = snap.schema_json
         keep_target_cols: tuple = ()
         tgt_casts: dict = {}
-        if snap.schema_json and not all_forms:
+        if snap.schema_json and not plan.all_forms:
             # map forms keep the source's own columns (their expressions
             # may reference any of them) and never evolve the schema;
             # only the join keys align to the table's types
@@ -3104,28 +3054,7 @@ class SnaplogTable:
                     if etypes[n] != f.dataType
                 }
 
-        # ONE materialization serves every remaining pass (the fused
-        # envelope probe, the exact file probe, the rewrite, and the
-        # change-feed frame): without it the merge scans the source
-        # 3-4 times, and a NON-DETERMINISTIC source (rand(), a
-        # re-shuffling view, a now()-filtered feed) could yield
-        # different rows per pass - probed files vs rewritten rows vs
-        # change rows silently disagreeing. delta-spark materializes
-        # merge sources for both reasons; MEMORY_AND_DISK is
-        # spillable and keeps lineage (executor churn recomputes),
-        # the same level io/delta_dml.py uses for its touch set (r14).
-        # spark.dc43.snaplog.mergeMaterializeSource=none opts out
-        # (delta-spark's merge.materializeSource escape hatch) for
-        # DETERMINISTIC full-table-sized sources where recompute beats
-        # spilling a copy to executor disks.
-        _materialize = (
-            self.spark.conf.get(
-                "spark.dc43.snaplog.mergeMaterializeSource", "auto"
-            ).lower() != "none"
-        )
-        if _materialize:
-            source = source.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        with materialized_source(source) as source:
             # level 1: driver-side min/max intersection (footer stats, no IO);
             # also probe whether the source carries a NULL key — those match
             # target NULLs outside any envelope. The duplicate-source-key
@@ -3133,7 +3062,7 @@ class SnaplogTable:
             # one scan, not two (source_key_stats docstring; the check runs
             # on the key-CAST source, which is the join's actual key domain)
             ranges_row = source_key_stats(
-                source, list(keys), check_unique=check_source_keys
+                source, keys, check_unique=check_source_keys
             )
             # stats envelopes are keyed by PHYSICAL names (identity unless a
             # column was renamed)
@@ -3158,8 +3087,7 @@ class SnaplogTable:
                         key_ranges[pf.name] = (tlo, thi, False)
                         phys_keys.append(pf.name)
             candidates = snap.prune_ranges(phys_keys, key_ranges)
-            bs_active = bool(bs_cls)
-            if bs_active:
+            if plan.by_source:
                 # by-source rows are defined by having NO source match — any
                 # file can hold them, so source-key pruning is unsound; the
                 # exact probe below still keeps the rewrite set minimal
@@ -3176,7 +3104,7 @@ class SnaplogTable:
                 # build-side duplicates cannot change either probe's answer
                 # — deduping first was a whole extra source shuffle (r14)
                 src_keys = source.select(*keys)
-                if m_cls or nm_cls:
+                if plan.matched or plan.not_matched:
                     # files holding matched keys rewrite: matched clauses
                     # change their rows, and insert clauses need their rows
                     # present in the outer join (dropping them would
@@ -3195,7 +3123,7 @@ class SnaplogTable:
                         .collect()  # bounded by file count — driver metadata
                     )
                     touched_names = {os.path.basename(r["_fp"]) for r in matched}
-                if bs_active:
+                if plan.by_source:
                     full = scan.select(
                         "*", F.col("_metadata.file_path").alias("_fp")
                     )
@@ -3207,7 +3135,7 @@ class SnaplogTable:
                     # a file rewrites iff ANY by-source clause fires on one of
                     # its unmatched rows (first-match-wins only picks WHICH
                     # clause; any hit means the row changes or deletes)
-                    bs_probe = bs_probe.filter(any_clause_ok(bs_cls))
+                    bs_probe = bs_probe.filter(any_clause_ok(plan.by_source))
                     touched_names |= {
                         os.path.basename(r["_fp"])
                         for r in bs_probe.select("_fp").distinct().collect()
@@ -3219,7 +3147,7 @@ class SnaplogTable:
                 tgt_rows = self._scan(touched, snap)
                 for c, dtype in tgt_casts.items():
                     tgt_rows = tgt_rows.withColumn(c, F.col(c).cast(dtype))
-                if all_forms:
+                if plan.all_forms:
                     # evolved source-only columns: existing rows carry NULL.
                     # *All forms only — map forms never evolve, and null-
                     # filling here would stage data files with columns the
@@ -3229,39 +3157,23 @@ class SnaplogTable:
                         tgt_rows = tgt_rows.withColumn(
                             c, F.lit(None).cast(source.schema[c].dataType)
                         )
-                merged = _outer_join_merge(
-                    tgt_rows,
-                    source,
-                    list(keys),
-                    matched_clauses=list(m_cls),
-                    not_matched_clauses=list(nm_cls),
-                    not_matched_by_source_clauses=list(bs_cls),
-                    keep_target_cols=keep_target_cols,
+                merged = outer_join_merge(
+                    tgt_rows, source, keys,
+                    keep_target_cols=keep_target_cols, **plan.clauses,
                 )
-                if snap.generated and dict_clauses:
-                    # map-form rows mix target/source values: recompute
-                    # generated columns from the final row
-                    out_cols = merged.columns
-                    merged = self._apply_generated(
-                        merged.drop(*snap.generated), snap.generated, "merge"
-                    ).select(*out_cols)
-            elif nm_cls:
+            elif plan.not_matched:
                 # nothing matched anywhere: pure insert (first-match-wins
                 # across the insert clauses)
                 tbl_schema = T.StructType.fromJson(json.loads(snap.schema_json))
                 merged = insert_only_frame(
-                    source, nm_cls,
+                    source, plan.not_matched,
                     cols=[f.name for f in tbl_schema.fields],
                     types={f.name: f.dataType for f in tbl_schema.fields},
                 )
-                if snap.generated and any(
-                    cl.assignments is not None for cl in nm_cls
-                ):
-                    merged = self._apply_generated(
-                        merged.drop(*snap.generated), snap.generated, "merge"
-                    ).select(*[f.name for f in tbl_schema.fields])
             else:
                 return MergeStats(snap.num_files, len(candidates), 0, 0)
+            if regen is not None:
+                merged = regen(merged)
 
             # CHECK constraints: the rewritten content is exactly the rows
             # this merge writes; carried-over files already hold (invariant)
@@ -3269,24 +3181,25 @@ class SnaplogTable:
 
             cdc_job = None
             if self.change_feed:
-                cdc_df = self._to_physical_df(
-                    self._merge_changes(
-                        tgt_rows, source, list(keys),
-                        matched=m_cls,
-                        not_matched=nm_cls,
-                        by_source=bs_cls,
+                # change rows join only the TOUCHED files' rows against
+                # the source — bounded by the rewrite set, never the table
+                if tgt_rows is not None:
+                    frames = fate_frames(
+                        tgt_rows, source, keys, plan,
+                        cols=tgt_rows.columns,
+                        types={f.name: f.dataType for f in tgt_rows.schema.fields},
+                        pre_images=True,
                         keep_target_cols=keep_target_cols,
-                        generated=snap.generated or {},
-                        table_schema=(
-                            T.StructType.fromJson(json.loads(snap.schema_json))
-                            if snap.schema_json
-                            else None
-                        ),
-                    ),
-                    snap,
-                )
+                    )
+                    changes = change_rows(frames, plan, tgt_rows.columns, regen)
+                else:
+                    changes = change_rows(
+                        FateFrames(None, None, merged), plan, merged.columns
+                    )
                 cdc_job = functools.partial(
-                    self._stage_files, cdc_df, dest_dir=self.cdc_dir
+                    self._stage_files,
+                    self._to_physical_df(changes, snap),
+                    dest_dir=self.cdc_dir,
                 )
             cdc, added = stage_concurrently([
                 cdc_job,
@@ -3318,138 +3231,6 @@ class SnaplogTable:
                 files_rewritten=len(touched),
                 files_added=len(added),
             )
-        finally:
-            if _materialize:
-                source.unpersist()
-
-
-    def _merge_changes(
-        self,
-        tgt_rows: Optional[DataFrame],
-        source: DataFrame,
-        keys: list[str],
-        *,
-        matched: list,
-        not_matched: list,
-        by_source: list,
-        keep_target_cols: tuple = (),
-        generated: Optional[dict] = None,
-        table_schema=None,
-    ) -> DataFrame:
-        """Row-level change rows for one MERGE, tagged with Delta CDF's
-        vocabulary (insert / update_preimage / update_postimage / delete).
-        One inner join of the TOUCHED files' rows against the source —
-        bounded by the rewrite set, never the table. Mirrors the same
-        normalized ordered clause lists ``_outer_join_merge`` executes
-        (first-match-wins per kind: a row's fate is its first passing
-        clause's action, its post-image that clause's values); map-form
-        post-images recompute generated columns from the final row.
-        ``table_schema`` (StructType) is authoritative for the change
-        rows' columns when no touched file provided them (tgt_rows None)
-        — a map-form pure insert must stage TABLE-shaped change rows,
-        not source-shaped ones."""
-        from dc43_spark.io.merge import (
-            any_clause_ok,
-            clause_value,
-            first_fate,
-            insert_only_frame,
-        )
-
-        generated = generated or {}
-        nm_maps = any(cl.assignments is not None for cl in not_matched)
-        if tgt_rows is not None:
-            cols = tgt_rows.columns
-            types = {f.name: f.dataType for f in tgt_rows.schema.fields}
-        elif nm_maps and table_schema is not None:
-            # map-form pure insert: change rows are TABLE-shaped (the
-            # VALUES map defines every column; source-shaped rows would
-            # stage change files whose schema doesn't match the table)
-            cols = [f.name for f in table_schema.fields]
-            types = {f.name: f.dataType for f in table_schema.fields}
-        else:
-            # insertAll pure insert: the (aligned, possibly evolved)
-            # source IS the table shape
-            cols = source.columns
-            types = {f.name: f.dataType for f in source.schema.fields}
-        tag = lambda df, t: df.select(
-            *[F.col(c) for c in cols], F.lit(t).alias(CHANGE_TYPE_COL)
-        )
-
-        def _regen(df: DataFrame, maps: bool) -> DataFrame:
-            if generated and maps:
-                return self._apply_generated(
-                    df.drop(*generated), generated, "merge"
-                ).select(*cols)
-            return df
-
-        if tgt_rows is None:  # nothing matched anywhere: pure insert
-            ins = insert_only_frame(source, not_matched, cols=cols, types=types)
-            return tag(_regen(ins, nm_maps), "insert")
-        t, s = tgt_rows.alias("t"), source.alias("s")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-        inner = t.join(s, cond, "inner")
-        keep_t = set(keep_target_cols)
-        m_maps = any(cl.assignments is not None for cl in matched)
-        bs_maps = any(cl.assignments is not None for cl in by_source)
-        parts = []
-        if any(cl.action == "update" for cl in matched):
-            upd = inner.filter(first_fate(matched, "update"))
-            parts.append(tag(upd.select("t.*"), "update_preimage"))
-            post = upd.select(
-                *[
-                    clause_value(matched, "matched", c, types, keep_t=keep_t)
-                    .alias(c)
-                    for c in cols
-                ]
-            )
-            parts.append(tag(_regen(post, m_maps), "update_postimage"))
-        if any(cl.action == "delete" for cl in matched):
-            parts.append(
-                tag(inner.filter(first_fate(matched, "delete")).select("t.*"),
-                    "delete")
-            )
-        if by_source:
-            bs = t.join(s.select(*keys), cond, "left_anti").alias("t")
-            if any(cl.action == "delete" for cl in by_source):
-                parts.append(
-                    tag(bs.filter(first_fate(by_source, "delete")), "delete")
-                )
-            if any(cl.action == "update" for cl in by_source):
-                bs_upd = bs.filter(first_fate(by_source, "update"))
-                parts.append(tag(bs_upd, "update_preimage"))
-                bs_post = bs_upd.select(
-                    *[
-                        clause_value(
-                            by_source, "not_matched_by_source", c, types
-                        ).alias(c)
-                        for c in cols
-                    ]
-                )
-                parts.append(tag(_regen(bs_post, bs_maps), "update_postimage"))
-        if not_matched:
-            ins = s.join(t.select(*keys), cond, "left_anti").alias("s")
-            ins = ins.filter(any_clause_ok(not_matched))
-            if nm_maps:
-                vals = ins.select(
-                    *[
-                        clause_value(
-                            not_matched, "not_matched", c, types,
-                            otherwise=F.lit(None).cast(types.get(c)),
-                        ).alias(c)
-                        for c in cols
-                    ]
-                )
-                parts.append(tag(_regen(vals, nm_maps), "insert"))
-            else:
-                parts.append(
-                    tag(ins.select(*[F.col(f"s.{c}") for c in cols]), "insert")
-                )
-        if not parts:  # every clause 'ignore': a zero-change merge
-            return tag(tgt_rows.limit(0), "insert")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     # ---------------- change data feed
 

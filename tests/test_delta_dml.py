@@ -188,8 +188,8 @@ def test_update_enforces_constraints_on_new_rows(spark, tmp_path):
 
 def test_merge_update_insert_delete_matches_oracle(spark, tmp_path):
     """The DV merge's row fates match the outer-join MERGE oracle
-    (io/merge.py _outer_join_merge) on the same inputs."""
-    from dc43_spark.io.merge import _outer_join_merge
+    (io/mergecore.py outer_join_merge) on the same inputs."""
+    from dc43_spark.io.mergecore import outer_join_merge
 
     t = _mk(spark, str(tmp_path / "t"))
     target0 = t.read().select("k", "v", "amt")
@@ -200,7 +200,7 @@ def test_merge_update_insert_delete_matches_oracle(spark, tmp_path):
         (101, "neg", -7),    # unmatched -> insert (delete pred ignores)
     ])
     expected = {
-        tuple(r) for r in _outer_join_merge(
+        tuple(r) for r in outer_join_merge(
             target0, source, ["k"],
             when_matched="update", when_not_matched="insert",
             delete_predicate="s.amt < 0",

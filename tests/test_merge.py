@@ -198,23 +198,58 @@ def test_merge_with_contract_conditional_clauses_all_strategies(spark, tmp_path)
     assert rows(DeltaLogTable(spark, dp).read()) == expect
 
 
-def test_merge_materialize_source_opt_out(spark, tmp_path):
-    """spark.dc43.snaplog.mergeMaterializeSource=none (r14 — the
-    delta-spark merge.materializeSource escape hatch): a deterministic
-    full-table-sized source can skip the spillable persist and
-    recompute per pass; results are identical either way."""
+@pytest.mark.parametrize("fmt", ["snaplog", "deltalog"])
+def test_merge_materialize_source_opt_out(spark, tmp_path, fmt):
+    """spark.dc43.delta.mergeMaterializeSource=none (r14 — the
+    delta-spark merge.materializeSource escape hatch), the one knob both
+    table formats read: a deterministic full-table-sized source can skip
+    the spillable persist and recompute per pass; results are identical
+    either way."""
+    from dc43_spark.io.delta_dml import delta_merge
+    from dc43_spark.io.delta_log import DeltaLogTable, delta_write
     from dc43_spark.io.snaplog import SnaplogTable
 
-    t = SnaplogTable(spark, str(tmp_path / "t"))
-    t.write(spark.range(200).selectExpr("id AS k", "id AS v"),
-            mode="overwrite")
-    spark.conf.set("spark.dc43.snaplog.mergeMaterializeSource", "none")
+    path = str(tmp_path / "t")
+    base = spark.range(200).selectExpr("id AS k", "id AS v")
+    src = spark.range(100).selectExpr("id AS k", "id * 5 AS v")
+    if fmt == "snaplog":
+        t = SnaplogTable(spark, path)
+        t.write(base, mode="overwrite")
+    else:
+        delta_write(spark, base, path, checkpoint_interval=None)
+        t = DeltaLogTable(spark, path)
+    spark.conf.set("spark.dc43.delta.mergeMaterializeSource", "none")
     try:
-        st = t.merge(
-            spark.range(100).selectExpr("id AS k", "id * 5 AS v"), ["k"]
-        )
+        if fmt == "snaplog":
+            assert t.merge(src, ["k"]).files_rewritten >= 1
+        else:
+            assert delta_merge(spark, src, path, ["k"]) == 1
     finally:
-        spark.conf.unset("spark.dc43.snaplog.mergeMaterializeSource")
-    assert st.files_rewritten >= 1
+        spark.conf.unset("spark.dc43.delta.mergeMaterializeSource")
     got = {r.k: r.v for r in t.read().collect()}
     assert got[50] == 250 and got[150] == 150
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "delta", "snaplog"])
+def test_merge_into_missing_target_refuses_values_map_and_reports_no_op(
+    spark, tmp_path, fmt
+):
+    """A missing target takes the one initial-write path on every
+    format: an insert VALUES map refuses (the unlisted-NULL columns need
+    the table's schema) instead of reporting an initial write that wrote
+    nothing, and a merge without an insert clause reports a no-op."""
+    import os
+
+    path = str(tmp_path / "t")
+    src = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA)
+    with pytest.raises(ValueError, match="INSERT VALUES needs an existing table"):
+        merge_with_contract(
+            spark, src, contract(), keys=["k"], path=path, format=fmt,
+            when_not_matched={"k": "s.k", "v": "s.v"},
+        )
+    res = merge_with_contract(
+        spark, src, contract(), keys=["k"], path=path, format=fmt,
+        when_not_matched="ignore",
+    )
+    assert res.strategy.endswith("no-op")
+    assert not os.path.exists(path)

@@ -15,7 +15,7 @@ import itertools
 
 import pytest
 
-from dc43_spark.io.merge import _outer_join_merge
+from dc43_spark.io.mergecore import outer_join_merge
 
 TGT = [(k, k * 10) for k in range(10)]          # k 0..9
 SRC = [(k, k * 100) for k in range(5, 15)]      # k 5..14
@@ -95,6 +95,37 @@ def py_merge(wm, mp, dp, wn, ip, bs, bp):
     return out
 
 
+def py_changes(wm, mp, dp, wn, ip, bs, bp):
+    """The merge's change-feed rows ``(change_type, k, v)`` under the
+    same clause semantics as ``py_merge``: deletes carry the old row,
+    updates a pre- and a post-image, inserts the new row."""
+    src_by_k = {r[0]: r for r in SRC}
+    out = set()
+    for t in TGT:
+        s = src_by_k.get(t[0])
+        if s is not None:
+            if DP_OPTS[dp] is not None and DP_OPTS[dp](t, s):
+                out.add(("delete", *t))
+            elif WM_PY[wm] is not None and (
+                MP_OPTS[mp] is None or MP_OPTS[mp](t, s)
+            ):
+                out.add(("update_preimage", *t))
+                out.add(("update_postimage", *WM_PY[wm](t, s)))
+        elif BS_PY[bs] is not None and (BP_OPTS[bp] is None or BP_OPTS[bp](t)):
+            if BS_PY[bs] == "delete":
+                out.add(("delete", *t))
+            else:
+                out.add(("update_preimage", *t))
+                out.add(("update_postimage", *BS_PY[bs](t)))
+    tgt_keys = {r[0] for r in TGT}
+    for s in SRC:
+        if s[0] not in tgt_keys and WN_PY[wn] is not None and (
+            IP_OPTS[ip] is None or IP_OPTS[ip](s)
+        ):
+            out.add(("insert", *WN_PY[wn](s)))
+    return out
+
+
 MATRIX = list(itertools.product(
     WM_OPTS, MP_OPTS, DP_OPTS, WN_OPTS, IP_OPTS, BS_OPTS, BP_OPTS,
 ))  # 3*2*2*3*2*3*2 = 432 combinations
@@ -117,7 +148,7 @@ def test_kernel_matches_python_model_across_the_full_matrix(spark):
     tagged = []
     expected = {}
     for i, (wm, mp, dp, wn, ip, bs, bp) in enumerate(MATRIX):
-        out = _outer_join_merge(
+        out = outer_join_merge(
             tgt, src, ["k"],
             when_matched=WM_OPTS[wm],
             matched_predicate=mp,
@@ -142,13 +173,16 @@ def test_kernel_matches_python_model_across_the_full_matrix(spark):
 @pytest.mark.parametrize("combo_idx", [7, 85, 160, 233, 311, 431])
 def test_engines_match_python_model_on_sampled_combos(spark, tmp_path, combo_idx):
     """A deterministic sample of the matrix through the snaplog COW
-    engine and the jar-less Delta DML engine (DV strategy)."""
+    engine and the jar-less Delta DML engine (DV strategy), with the
+    change feed on: both the new head and the merge's change rows match
+    the python model."""
     from dc43_spark.io.delta_dml import delta_merge
     from dc43_spark.io.delta_log import DeltaLogTable, delta_write
     from dc43_spark.io.snaplog import SnaplogTable
 
     wm, mp, dp, wn, ip, bs, bp = MATRIX[combo_idx]
     expect = py_merge(wm, mp, dp, wn, ip, bs, bp)
+    expect_changes = py_changes(wm, mp, dp, wn, ip, bs, bp)
     kw = dict(
         when_matched=WM_OPTS[wm],
         matched_predicate=mp,
@@ -160,20 +194,30 @@ def test_engines_match_python_model_on_sampled_combos(spark, tmp_path, combo_idx
     )
     tgt, src = _frames(spark)
 
-    t = SnaplogTable(spark, str(tmp_path / "s"))
+    def changes(table):
+        return {
+            (r._change_type, r.k, r.v)
+            for r in table.table_changes(1, 1).collect()
+        }
+
+    t = SnaplogTable(spark, str(tmp_path / "s"), change_feed=True)
     t.write(tgt, mode="overwrite")
     t.merge(src, ["k"], **kw)
     assert {(r.k, r.v) for r in t.read().collect()} == expect
+    assert changes(t) == expect_changes, "snaplog CDF"
 
     dp_path = str(tmp_path / "d")
     delta_write(
         spark, tgt, dp_path, checkpoint_interval=None,
-        configuration={"delta.enableDeletionVectors": "true"},
+        configuration={
+            "delta.enableChangeDataFeed": "true",
+            "delta.enableDeletionVectors": "true",
+        },
     )
     delta_merge(spark, src, dp_path, ["k"], **kw)
-    assert {
-        (r.k, r.v) for r in DeltaLogTable(spark, dp_path).read().collect()
-    } == expect
+    dt = DeltaLogTable(spark, dp_path)
+    assert {(r.k, r.v) for r in dt.read().collect()} == expect
+    assert changes(dt) == expect_changes, "delta CDF"
 
 
 # ---------------- r12: ordered MULTI-clause merges (VERDICT r11 #2) ----------
@@ -306,7 +350,7 @@ def test_multi_clause_orderings_match_python_model(spark, tmp_path, name):
     model — first-match-wins in user order is the spec."""
     from dc43_spark.io.delta_dml import delta_merge
     from dc43_spark.io.delta_log import DeltaLogTable, delta_write
-    from dc43_spark.io.merge import _outer_join_merge
+    from dc43_spark.io.mergecore import outer_join_merge
     from dc43_spark.io.snaplog import SnaplogTable
 
     m, nm, bs = MULTI_SCENARIOS[name]
@@ -320,7 +364,7 @@ def test_multi_clause_orderings_match_python_model(spark, tmp_path, name):
     )
     tgt, src = _frames(spark)
 
-    out = _outer_join_merge(tgt, src, ["k"], **kw)
+    out = outer_join_merge(tgt, src, ["k"], **kw)
     assert {(r.k, r.v) for r in out.collect()} == expect, "kernel"
 
     t = SnaplogTable(spark, str(tmp_path / "s"))
@@ -342,7 +386,7 @@ def test_multi_clause_orderings_match_python_model(spark, tmp_path, name):
 def test_multi_clause_validation_rules(spark):
     """Unconditional non-last clauses refuse; list+legacy kwargs for the
     same kind refuse; bad actions refuse."""
-    from dc43_spark.io.merge import normalize_merge_clauses
+    from dc43_spark.io.mergecore import normalize_merge_clauses
 
     with pytest.raises(ValueError, match="LAST 'when matched'"):
         normalize_merge_clauses(matched_clauses=[
@@ -375,8 +419,8 @@ def test_multi_clause_cdf_change_rows(spark, tmp_path):
     """CDF emission under MULTI-clause merges: change rows split by each
     row's first-matching clause — update pre/post images for update-fate
     rows, deletes for delete-fate rows, first-match VALUES for inserts —
-    in BOTH change-feed engines (snaplog _merge_changes, delta_dml cdc
-    staging)."""
+    in BOTH change-feed engines (snaplog and delta_dml, both through
+    mergecore.change_rows)."""
     from dc43_spark.io.delta_dml import delta_merge
     from dc43_spark.io.delta_log import DeltaLogTable, delta_write
     from dc43_spark.io.snaplog import SnaplogTable
@@ -554,7 +598,7 @@ def test_random_multi_clause_sweep_matches_python_model(spark):
     tagged, expected = [], {}
     for i in range(30):
         m, nm, bs = _random_clause_lists(rng)
-        out = _outer_join_merge(
+        out = outer_join_merge(
             tgt, src, ["k"],
             matched_clauses=[d for d, _ in m],
             not_matched_clauses=[d for d, _ in nm],

@@ -319,11 +319,11 @@ def test_map_form_source_missing_target_column_all_engines(spark, tmp_path):
     """Review r11 fix: inactive clauses must not BUILD value expressions —
     a map-form merge whose source lacks a target column crashed the
     snaplog/outer-join engines on the dead insert branch's s.`col`."""
-    from dc43_spark.io.merge import _outer_join_merge
+    from dc43_spark.io.mergecore import outer_join_merge
 
     tgt = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     src = spark.createDataFrame([(2, 7)], "k long, delta long")
-    out = _outer_join_merge(
+    out = outer_join_merge(
         tgt, src, ["k"],
         when_matched={"v": "CAST(s.delta AS STRING)"},
         when_not_matched="ignore",
@@ -378,7 +378,7 @@ def test_snaplog_pure_insert_map_form_cdf_is_table_shaped(spark, tmp_path):
 
 
 def test_empty_set_map_refused(spark, tmp_path):
-    from dc43_spark.io.merge import validate_merge_clauses
+    from dc43_spark.io.mergecore import validate_merge_clauses
 
     with pytest.raises(ValueError, match="NON-EMPTY"):
         validate_merge_clauses({}, "ignore")
