@@ -87,6 +87,7 @@ from dc43_spark.io.mergecore import (
 )
 from dc43_spark.io.tablecore import (
     LinkCommitClaimer,
+    dv_join_side,
     file_may_match,
     stage_concurrently,
 )
@@ -99,7 +100,6 @@ from dc43_spark.io.delta_log import (
     _check_append_only,
     _check_writer_protocol,
     _delta_row_rules,
-    _dv_join_side,
     _dv_total_cardinality,
     _enforce_delta_rules,
     _generated_columns,
@@ -336,9 +336,9 @@ def _live_lineage(
         deleted = desc.mapInPandas(_expand, "rel string, pos long")
         # broadcast only while sum(cardinality) fits the gate — a foreign
         # MOR table can carry billions of deleted positions (see
-        # delta_log._dv_join_side)
+        # tablecore.dv_join_side)
         tagged = tagged.join(
-            _dv_join_side(spark, deleted, _dv_total_cardinality(dv_files)),
+            dv_join_side(spark, deleted, _dv_total_cardinality(dv_files)),
             (tagged[_REL] == deleted["rel"]) & (tagged[_POS] == deleted["pos"]),
             "left_anti",
         )

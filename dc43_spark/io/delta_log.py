@@ -80,12 +80,15 @@ from pyspark.sql.types import (
 
 from dc43_spark.io.tablecore import (
     LinkCommitClaimer,
+    dv_join_side,
     file_may_match,
     filters_to_column,
     footer_stats_safe,
     normalize_filters,
     stage_parquet,
+    uri_suffix,
 )
+from dc43_spark.io.sourcecore import change_bounds, changes_frame
 from dc43_spark.localdf import local_df
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -160,17 +163,6 @@ class DeltaSnapshot:
 def _decode_path(p: str) -> str:
     # add/remove paths are URL-encoded relative paths (PROTOCOL.md)
     return urllib.parse.unquote(p)
-
-
-def _uri_suffix(rel: str) -> str:
-    """``/rel`` as it ends ``_metadata.file_path``, a ``java.net.URI``:
-    ASCII outside RFC 2396's path set is percent-encoded (space, ``%``
-    — so a hive-escaped ``%2F`` dir reads ``%252F`` — ``#``, ...), while
-    its punctuation (``=``, ``+``, ...) and non-ASCII stay raw."""
-    return "/" + "".join(
-        c if ord(c) > 127 else urllib.parse.quote(c, safe="/=,;:$&+@!'()*")
-        for c in rel.lstrip("/")
-    )
 
 
 def _canon_add(add: dict) -> dict:
@@ -281,7 +273,7 @@ def _file_identity_df(
             os.path.basename(f.path),
             f.path,
             "/" + f.path.lstrip("/"),
-            _uri_suffix(f.path),
+            uri_suffix(f.path),
             *(
                 (f.base_row_id, f.default_row_commit)
                 if row_tracking
@@ -297,15 +289,6 @@ def _file_identity_df(
     return local_df(spark, rows, schema, coalesce=1)
 
 
-#: Broadcast ceiling for expanded deletion-vector positions (one row per
-#: deleted position). Spark's broadcast relation caps at 8 GB and builds
-#: ON THE DRIVER; ~10M (rel, pos) rows is comfortably inside that while a
-#: MOR-heavy 100 TB table written by another engine can carry billions —
-#: those must shuffle. Overridable per session via
-#: ``spark.dc43.delta.dvBroadcastMaxPositions``.
-_DV_BROADCAST_MAX_POSITIONS = 10_000_000
-
-
 def _dv_total_cardinality(dv_files) -> int:
     """Summed deleted-position count across the descriptors, or -1 when
     any descriptor omits ``cardinality`` (unbounded -> treat as large)."""
@@ -316,23 +299,6 @@ def _dv_total_cardinality(dv_files) -> int:
             return -1
         total += int(card)
     return total
-
-
-def _dv_join_side(spark: SparkSession, deleted: DataFrame, total_card: int) -> DataFrame:
-    """The anti-join's build side for expanded DV positions: broadcast
-    only while the descriptors' summed cardinality fits the gate; above
-    it (or when cardinality is unknown) hint a sort-merge join so the
-    positions shuffle instead of materializing one row per deleted
-    position in an 8 GB-capped driver-built broadcast relation."""
-    limit = int(
-        spark.conf.get(
-            "spark.dc43.delta.dvBroadcastMaxPositions",
-            str(_DV_BROADCAST_MAX_POSITIONS),
-        )
-    )
-    if 0 <= total_card <= limit:
-        return F.broadcast(deleted)
-    return deleted.hint("merge")
 
 
 class DeltaLogTable:
@@ -820,7 +786,7 @@ class DeltaLogTable:
         an executor into ``(file, rel, pos)`` rows (io/dv.py), which
         anti-join against the scan's hidden lineage columns — broadcast
         while the descriptors' summed cardinality fits the gate, plain
-        shuffle above it (``_dv_join_side``: a MOR-heavy table written by
+        shuffle above it (``dv_join_side``: a MOR-heavy table written by
         someone else's engine can carry billions of deleted positions;
         broadcasting one row per position would blow the 8 GB broadcast
         ceiling / OOM the driver).
@@ -859,7 +825,7 @@ class DeltaLogTable:
             (
                 os.path.basename(f.path),
                 "/" + f.path.lstrip("/"),
-                _uri_suffix(f.path),
+                uri_suffix(f.path),
                 f.dv["storageType"],
                 f.dv["pathOrInlineDv"],
                 int(f.dv["offset"] or 0),
@@ -904,7 +870,7 @@ class DeltaLogTable:
         # equality on (basename, pos) drives the hash/merge join; the
         # suffix check rides as a residual condition on matched pairs
         return df.join(
-            _dv_join_side(self.spark, deleted, _dv_total_cardinality(dv_files)),
+            dv_join_side(self.spark, deleted, _dv_total_cardinality(dv_files)),
             (df[base_col] == deleted["file"])
             & (df[pos_col] == deleted["pos"])
             & (
@@ -1067,48 +1033,11 @@ def delta_read_fallback(
     t = DeltaLogTable(spark, path)
     if str(options.get("readChangeFeed", "")).lower() == "true":
         # batch CDF, Delta's option spellings: startingVersion/endingVersion
-        # or startingTimestamp/endingTimestamp (resolved against commit
-        # timestamps — start = first commit AT/AFTER, end = last AT/BEFORE)
-        def _ts(key):
-            raw = options.get(key)
-            if raw is None:
-                return None
-            try:
-                return float(raw)
-            except (TypeError, ValueError):
-                return _iso_ts(raw)
-
-        start = options.get("startingVersion")
-        end = options.get("endingVersion")
-        st, et = _ts("startingTimestamp"), _ts("endingTimestamp")
-        if st is not None:
-            if start is not None:
-                raise ValueError(
-                    "pass startingVersion OR startingTimestamp, not both"
-                )
-            versions = t._versions()
-            after = [v for v in versions if t._commit_timestamp(v) >= st]
-            if not after:
-                raise ValueError(
-                    f"no Delta commit at or after startingTimestamp {st}"
-                )
-            start = after[0]
-        if et is not None:
-            if end is not None:
-                raise ValueError(
-                    "pass endingVersion OR endingTimestamp, not both"
-                )
-            versions = t._versions()
-            before = [v for v in versions if t._commit_timestamp(v) <= et]
-            if not before:
-                raise ValueError(
-                    f"no Delta commit at or before endingTimestamp {et}"
-                )
-            end = before[-1]
-        return t.table_changes(
-            int(start) if start is not None else 0,
-            int(end) if end is not None else None,
+        # or startingTimestamp/endingTimestamp (the data source's resolver)
+        start, end = change_bounds(
+            t, {k.lower(): v for k, v in options.items()}, t._commit_timestamp
         )
+        return t.table_changes(start, end)
     version = options.get("versionAsOf")
     ts = options.get("timestampAsOf")
     if ts is not None:
@@ -4149,541 +4078,26 @@ def _delta_table_changes(
     real Delta log — Delta's ``table_changes`` without the jar. Each row
     carries ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``.
 
-    Sources per commit, following the protocol's CDF rules:
-    - ``cdc`` actions present -> AUTHORITATIVE: read the ``_change_data``
-      parquet files (they carry ``_change_type`` incl. update pre/post
-      images); the commit's add/remove actions are storage bookkeeping.
-    - else NEW-path adds derive inserts (under the add's own DV); a
-      re-add of an existing path whose deletion vector CHANGED derives
-      deletes for the newly-deleted positions AND inserts for positions
-      the new vector no longer covers (rows a RESTORE resurrected);
-      full-file removes derive deletes by reading the removed file under
-      its PRIOR vector (raises if vacuum already swept it).
-    - a path-set rewrite (remove+add of different paths) without cdc
-      files refuses — row-level truth is not reconstructible there.
+    The protocol's per-commit CDF rules are ``delta_source.
+    change_partitions`` (shared with the batch ``readChangeFeed`` reader
+    and the change-feed stream); ``sourcecore.changes_frame`` compiles
+    its partitions into JVM parquet scans: literal-stamped scans on a
+    small range, one scan per mask kind with a broadcast identity join
+    on a deep one, deletion vectors decoded on executors."""
+    from dc43_spark.io.delta_source import change_partitions
 
-    Driver cost: one state reconstruction at ``starting_version - 1``
-    plus an O(actions) replay across the range. Deletion vectors never
-    touch the driver: the plan ships only O(1) descriptors; an executor
-    task decodes the bitmap(s) — and, for DV supersession, diffs the
-    two — into ``(file, pos)`` rows (``mapInPandas``), which
-    (semi/anti-)join the scan on ``_metadata``, broadcast below the
-    ``dvBroadcastMaxPositions`` gate and sort-merge above it
-    (``_dv_join_side``). A commit's derived DV-bearing files batch into
-    ONE multi-file scan + ONE positions join per (change-type,
-    join-mode) group — at most four plans per commit (a 10k-file
-    DV-growth commit is one scan, not 10k unioned joins) — and no-DV
-    adds/removes batch across the ENTIRE range into one plan per change
-    type with commit stamps riding the identity join, so an append-only
-    history of N commits contributes ONE plan, not N union branches.
-    Plan size therefore grows with DV-change commits only."""
     head = t.version()
     if head is None:
         raise FileNotFoundError(f"no Delta log at {t.log_dir}")
     end = head if ending_version is None else ending_version
     if starting_version > end:
         raise ValueError(f"starting_version {starting_version} > end {end}")
-
-    spark = t.spark
-    # file-count ceiling for the literal-stamped small-range fast path
-    # in _rows_range_plain (r14); above it the batched identity join
-    # keeps driver plan size flat over deep ranges
-    _small_range_max_files = int(
-        spark.conf.get("spark.dc43.delta.cdfSmallRangeMaxFiles", "32")
-    )
-    end_snap = t.snapshot(end)
-    snap_schema = end_snap.schema
-    part_cols = list(end_snap.partition_columns)
-    types = {f.name: f.dataType.typeName() for f in snap_schema.fields}
-    data_cols = [f.name for f in snap_schema.fields]
-    data_fields = [f for f in snap_schema.fields if f.name not in part_cols]
-    # raw actions key partitionValues by PHYSICAL names on mapped tables
-    # (the snapshot normalizes its copy, but this replay reads actions
-    # directly) — map back to logical before any lookup
-    p2l: dict = {}
-    if end_snap.column_mapping:
-        p2l = {
-            (f.metadata or {}).get("delta.columnMapping.physicalName", f.name):
-                f.name
-            for f in snap_schema.fields
-        }
-    # running raw-add state, advanced commit by commit (O(range), not
-    # O(range x history))
-    state = t._collect_state(starting_version - 1)[0] if starting_version > 0 else {}
-    out_parts: list = []
-
-    def _tagged(df: DataFrame, change: Optional[str], v: int, ts: float) -> DataFrame:
-        if change is not None:
-            df = df.withColumn("_change_type", F.lit(change))
-        return df.select(
-            *data_cols, "_change_type",
-            F.lit(v).cast("long").alias("_commit_version"),
-            F.lit(ts).cast("double").alias("_commit_timestamp"),
-        )
-
-    def _dv_desc(add: Optional[dict]) -> Optional[tuple]:
-        """The add/remove's DV as an O(1) descriptor tuple (None when
-        absent) — the only DV representation the driver ever holds."""
-        dv = (add or {}).get("deletionVector")
-        if not dv or dv.get("pathOrInlineDv") is None:
-            return None
-        return (
-            dv.get("storageType", "u"),
-            dv["pathOrInlineDv"],
-            int(dv.get("offset") or 0),
-            -1 if dv.get("sizeInBytes") is None else int(dv["sizeInBytes"]),
-            -1 if dv.get("cardinality") is None else int(dv["cardinality"]),
-        )
-
-    table_path = t.path
-
-    # files store the data columns only (physical names when mapped);
-    # partition values attach from the add actions via the broadcast
-    # identity join in _rows_batch — without this the derived paths
-    # crash on partitioned/mapped tables
-    file_schema = t._physical_schema(end_snap, data_fields)
-
-    def _ident_keys(rel: str) -> tuple:
-        """(basename, raw suffix, URI-encoded suffix) — the same
-        full-relative-path keying ``_dv_filter`` uses: basename equality
-        drives the hash join, the suffix residual disambiguates two live
-        files sharing a basename in different partition directories."""
-        return (
-            os.path.basename(rel),
-            "/" + rel.lstrip("/"),
-            _uri_suffix(rel),
-        )
-
-    def _rows_batch(specs, mode: str) -> DataFrame:
-        """Rows KEPT at (``mode='keep'``, semi) / DROPPED from
-        (``'drop'``, anti) the DV-denoted positions of EVERY spec in one
-        plan: one multi-file scan, one descriptor ``mapInPandas``
-        expansion (executor-side decode + setdiff for diff pairs), one
-        join keyed on (basename, row_index) with the path-suffix
-        residual. ``specs`` is ``[(rel_path, minuend|None,
-        subtrahend|None, partitionValues), ...]``; a drop-mode spec with
-        no DV contributes no build rows and survives the anti-join
-        whole. Partition values attach via a broadcast identity join
-        (the ``_file_identity_df`` pattern) — except when every spec
-        shares ONE partition tuple (the common single-small-commit
-        read), where typed literals replace the join outright (r14).
-        Duplicate specs for one path (two adds of the same path in a
-        commit are legal under last-wins reconciliation) dedupe
-        last-wins here — scanning the file twice AND matching the
-        join per spec row would double the output."""
-        dedup: dict = {}
-        for spec in specs:
-            dedup[spec[0]] = spec
-        specs = list(dedup.values())
-        df = (
-            spark.read.format("parquet")
-            .schema(file_schema)
-            .load([os.path.join(t.path, rel) for rel, *_ in specs])
-            .select(
-                "*",
-                F.col("_metadata.file_name").alias("_tc_fb"),
-                F.col("_metadata.file_path").alias("_tc_path"),
-                F.col("_metadata.row_index").alias("_tc_pos"),
-            )
-        )
-        dv_specs = [(rel, m, s) for rel, m, s, _pv in specs if m is not None]
-        if dv_specs:
-            rows = [
-                _ident_keys(rel) + m + (s or (None, None, None, None, None))
-                for rel, m, s in dv_specs
-            ]
-            desc = local_df(
-                spark,
-                rows,
-                "fb string, sfx string, sfxq string, "
-                "storage string, spec string, off long, size long, "
-                "card long, b_storage string, b_spec string, b_off long, "
-                "b_size long, b_card long",
-            )
-
-            def _expand(batches):
-                import numpy as np
-                import pandas as pd
-
-                from dc43_spark.io.dv import decode_dv_descriptor
-
-                for pdf in batches:
-                    for r in pdf.itertuples(index=False):
-                        pos = decode_dv_descriptor(table_path, {
-                            "storageType": r.storage,
-                            "pathOrInlineDv": r.spec,
-                            "offset": r.off,
-                            "sizeInBytes": None if r.size < 0 else r.size,
-                            "cardinality": None if r.card < 0 else r.card,
-                        })
-                        if r.b_spec is not None:
-                            other = decode_dv_descriptor(table_path, {
-                                "storageType": r.b_storage,
-                                "pathOrInlineDv": r.b_spec,
-                                "offset": r.b_off,
-                                "sizeInBytes":
-                                    None if r.b_size < 0 else r.b_size,
-                                "cardinality":
-                                    None if r.b_card < 0 else r.b_card,
-                            })
-                            pos = np.setdiff1d(
-                                pos, other, assume_unique=True
-                            )
-                        yield pd.DataFrame({
-                            "fb": r.fb, "sfx": r.sfx, "sfxq": r.sfxq,
-                            "_pos": pos.astype("int64"),
-                        })
-
-            pos_df = desc.mapInPandas(
-                _expand, "fb string, sfx string, sfxq string, _pos long"
-            )
-            card = (
-                -1
-                if any(m[4] < 0 for _rel, m, _s in dv_specs)
-                else sum(m[4] for _rel, m, _s in dv_specs)
-            )
-            df = df.join(
-                _dv_join_side(spark, pos_df, card),
-                (df["_tc_fb"] == pos_df["fb"])
-                & (df["_tc_pos"] == pos_df["_pos"])
-                & (
-                    df["_tc_path"].endswith(pos_df["sfx"])
-                    | df["_tc_path"].endswith(pos_df["sfxq"])
-                ),
-                "left_semi" if mode == "keep" else "left_anti",
-            )
-        elif mode == "keep":
-            return df.limit(0)
-        if end_snap.column_mapping:
-            df = df.select(
-                *[
-                    F.col(f"`{p.name}`").alias(l.name)
-                    for p, l in zip(file_schema.fields, data_fields)
-                ],
-                "_tc_fb", "_tc_path",
-            )
-        if part_cols:
-            pv_tuples = {_typed_pvals(pvals) for _rel, _m, _s, pvals in specs}
-            if len(pv_tuples) == 1:
-                # single-partition group (or one-file commit): typed
-                # literals beat a broadcast identity join — no
-                # createDataFrame, no broadcast, no join (r14 fast path)
-                for c, val in zip(part_cols, next(iter(pv_tuples))):
-                    df = df.withColumn(
-                        c, F.lit(val).cast(snap_schema[c].dataType)
-                    )
-            else:
-                df = _ident_join(
-                    df,
-                    [(rel, pvals) for rel, _m, _s, pvals in specs],
-                    [],
-                )
-        return df
-
-    def _typed_pvals(pvals) -> tuple:
-        pv = {p2l.get(k, k): val for k, val in _as_map(pvals).items()}
-        return tuple(
-            _parse_partition_value(types[c], pv.get(c)) for c in part_cols
-        )
-
-    def _ident_join(df: DataFrame, keyed_rows, extra_fields) -> DataFrame:
-        """Broadcast identity join (the ``_file_identity_df`` pattern):
-        ``keyed_rows`` is ``[(rel, pvals, *extras), ...]``; each row
-        contributes the file keys, TYPED partition values, and any
-        ``extra_fields`` (name, StructField) columns. An inner join on
-        (basename, path-suffix) tags every scanned row — and MULTIPLIES
-        rows when the same file appears under several key rows (a path
-        re-added in two commits of a range emits both versions' rows,
-        exactly the change feed's semantics)."""
-        ident_schema = StructType(
-            [
-                StructField("_id_fb", StringType()),
-                StructField("_id_sfx", StringType()),
-                StructField("_id_sfxq", StringType()),
-            ]
-            + [StructField(c, snap_schema[c].dataType) for c in part_cols]
-            + [f for _n, f in extra_fields]
-        )
-        ident_rows = [
-            _ident_keys(row[0]) + _typed_pvals(row[1]) + tuple(row[2:])
-            for row in keyed_rows
-        ]
-        ident = F.broadcast(local_df(spark, ident_rows, ident_schema, coalesce=1))
-        return df.join(
-            ident,
-            (df["_tc_fb"] == ident["_id_fb"])
-            & (
-                df["_tc_path"].endswith(ident["_id_sfx"])
-                | df["_tc_path"].endswith(ident["_id_sfxq"])
-            ),
-            "inner",
-        )
-
-    def _rows_range_plain(specs, change: str) -> DataFrame:
-        """Whole-file rows (no DV filter) for specs accumulated across
-        the ENTIRE range, in ONE scan + ONE identity join that carries
-        each spec's commit stamp — so an append-only (or plain-remove)
-        history of N commits contributes ONE plan, not N union branches
-        (driver plan build measured superlinear past ~64 branches).
-        ``specs`` is ``[(rel, pvals, version, ts), ...]``; duplicate
-        paths (re-adds after removes) scan once and fan out through the
-        join, one output row set per claiming commit.
-
-        Small-range fast path (r14): when the specs collapse to a
-        handful of (commit, partition-tuple) groups — the typical
-        ``table_changes(v, v)`` incremental read of one append commit —
-        each group scans with LITERAL stamps and partition values
-        instead of the identity join: no createDataFrame, no broadcast,
-        no join, no ``_metadata`` columns. The group-count guard keeps
-        deep ranges on the batched join (per-commit literal branches
-        are exactly the superlinear plan growth the join removed)."""
-        uniq = sorted({rel for rel, *_ in specs})
-        by_group: dict = {}
-        for rel, pvals, v, ts in specs:
-            by_group.setdefault(
-                (int(v), float(ts), _typed_pvals(pvals)), []
-            ).append(rel)
-        if len(by_group) <= 4 and len(uniq) <= _small_range_max_files:
-            parts = []
-            for (v, ts, pv), rels in sorted(
-                by_group.items(), key=lambda kv: (kv[0][0], str(kv[0][2]))
-            ):
-                df = (
-                    spark.read.format("parquet")
-                    .schema(file_schema)
-                    .load(sorted(
-                        os.path.join(t.path, r) for r in set(rels)
-                    ))
-                )
-                if end_snap.column_mapping:
-                    df = df.select(*[
-                        F.col(f"`{p.name}`").alias(l.name)
-                        for p, l in zip(file_schema.fields, data_fields)
-                    ])
-                for c, val in zip(part_cols, pv):
-                    df = df.withColumn(
-                        c, F.lit(val).cast(snap_schema[c].dataType)
-                    )
-                parts.append(df.select(
-                    *data_cols,
-                    F.lit(change).alias("_change_type"),
-                    F.lit(v).cast("long").alias("_commit_version"),
-                    F.lit(ts).cast("double").alias("_commit_timestamp"),
-                ))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-        df = (
-            spark.read.format("parquet")
-            .schema(file_schema)
-            .load([os.path.join(t.path, rel) for rel in uniq])
-            .select(
-                "*",
-                F.col("_metadata.file_name").alias("_tc_fb"),
-                F.col("_metadata.file_path").alias("_tc_path"),
-            )
-        )
-        if end_snap.column_mapping:
-            df = df.select(
-                *[
-                    F.col(f"`{p.name}`").alias(l.name)
-                    for p, l in zip(file_schema.fields, data_fields)
-                ],
-                "_tc_fb", "_tc_path",
-            )
-        df = _ident_join(
-            df,
-            [(rel, pvals, int(v), float(ts))
-             for rel, pvals, v, ts in specs],
-            [("_id_v", StructField("_id_v", LongType())),
-             ("_id_ts", StructField("_id_ts", DoubleType()))],
-        )
-        return df.select(
-            *data_cols,
-            F.lit(change).alias("_change_type"),
-            F.col("_id_v").alias("_commit_version"),
-            F.col("_id_ts").alias("_commit_timestamp"),
-        )
-
-    # no-DV specs accumulate ACROSS commits into one plan per change
-    # type (append-only histories are the common deep range; per-commit
-    # plans there would union superlinearly in the driver)
-    range_plain: dict = {"insert": [], "delete": []}
-
-    for v in range(max(starting_version, 0), end + 1):
-        ts = t._commit_timestamp(v)
-        cdc_entries, adds, removes, ordered = [], [], [], []
-        for action in t._commit_lines(v):
-            if "cdc" in action:
-                cdc_entries.append(
-                    (
-                        _decode_path(action["cdc"]["path"]),
-                        _as_map(action["cdc"].get("partitionValues")),
-                    )
-                )
-            elif "add" in action:
-                adds.append(action["add"])
-                ordered.append(("add", action["add"]))
-            elif "remove" in action:
-                removes.append(action["remove"])
-                ordered.append(("remove", action["remove"]))
-        # two adds of one path in a commit are legal (last-wins action
-        # reconciliation) — keep only the final add per path, or the
-        # derived paths would scan the file twice and double its rows
-        data_adds = list({
-            _decode_path(a["path"]): a
-            for a in adds if a.get("dataChange", True)
-        }.values())
-        data_removes = [r for r in removes if r.get("dataChange", True)]
-        if cdc_entries:
-            if part_cols:
-                # partitioned tables store change data like data files:
-                # partition values in the action, NOT in the file — read
-                # each partition group with the explicit change schema
-                # (PHYSICAL data names on mapped tables, aliased back)
-                # and attach typed literals (delta-spark's layout)
-                cdc_schema = StructType(
-                    list(file_schema.fields)
-                    + [StructField("_change_type", StringType())]
-                )
-                by_vals: dict = {}
-                for p, pv in cdc_entries:
-                    pv = {p2l.get(k, k): val for k, val in pv.items()}
-                    key = tuple(pv.get(c) for c in part_cols)
-                    by_vals.setdefault(key, []).append(p)
-                for key, paths in sorted(
-                    by_vals.items(), key=lambda kv: str(kv[0])
-                ):
-                    df = (
-                        spark.read.format("parquet")
-                        .schema(cdc_schema)
-                        .load([os.path.join(t.path, p) for p in paths])
-                    )
-                    if end_snap.column_mapping:
-                        df = df.select(
-                            *[
-                                F.col(f"`{p.name}`").alias(l.name)
-                                for p, l in zip(file_schema.fields, data_fields)
-                            ],
-                            "_change_type",
-                        )
-                    for c, raw in zip(part_cols, key):
-                        val = _parse_partition_value(types[c], raw)
-                        df = df.withColumn(
-                            c, F.lit(val).cast(snap_schema[c].dataType)
-                        )
-                    out_parts.append(_tagged(df, None, v, ts))
-            elif end_snap.column_mapping:
-                # mapped tables: change files hold PHYSICAL names
-                phys = t._physical_schema(end_snap)
-                cdc_schema = StructType(
-                    list(phys.fields)
-                    + [StructField("_change_type", StringType())]
-                )
-                df = (
-                    spark.read.format("parquet")
-                    .schema(cdc_schema)
-                    .load([os.path.join(t.path, p) for p, _pv in cdc_entries])
-                    .select(
-                        *[
-                            F.col(f"`{p.name}`").alias(l.name)
-                            for p, l in zip(phys.fields, snap_schema.fields)
-                        ],
-                        "_change_type",
-                    )
-                )
-                out_parts.append(_tagged(df, None, v, ts))
-            else:
-                df = spark.read.parquet(
-                    *[os.path.join(t.path, p) for p, _pv in cdc_entries]
-                )
-                out_parts.append(_tagged(df, None, v, ts))
-        else:
-            removed_paths = {_decode_path(r["path"]) for r in data_removes}
-            # accumulate (rel, minuend, subtrahend, pvals) specs per
-            # (change-type, join-mode) group; each non-empty group
-            # becomes ONE batched plan below
-            groups: dict = {
-                ("insert", "drop"): [],  # new-path adds under own DV
-                ("delete", "keep"): [],  # DV growth: new−old positions
-                ("insert", "keep"): [],  # RESTORE re-inserts: old−new
-                ("delete", "drop"): [],  # full removes under prior DV
-            }
-            for a in data_adds:
-                p = _decode_path(a["path"])
-                prior = state.get(p)
-                new_d = _dv_desc(a)
-                if prior is None:
-                    if new_d is None:
-                        range_plain["insert"].append(
-                            (p, a.get("partitionValues"), v, ts)
-                        )
-                    else:
-                        groups[("insert", "drop")].append(
-                            (p, new_d, None, a.get("partitionValues"))
-                        )
-                    continue
-                # DV supersession: both diffs computed EXECUTOR-side
-                # from the two O(1) descriptors (an equal-set rewrite
-                # under different descriptors yields empty-diff
-                # zero-row batches, harmless)
-                old_d = _dv_desc(prior)
-                if new_d is not None and new_d != old_d:
-                    groups[("delete", "keep")].append(
-                        (p, new_d, old_d, a.get("partitionValues"))
-                    )
-                if old_d is not None and old_d != new_d:
-                    groups[("insert", "keep")].append(
-                        (p, old_d, new_d, a.get("partitionValues"))
-                    )
-                removed_paths.discard(p)
-            for p in sorted(removed_paths):
-                prior = state.get(p)
-                if prior is None:
-                    continue  # tombstone for an already-absent path
-                prior_d = _dv_desc(prior)
-                if prior_d is None:
-                    range_plain["delete"].append(
-                        (p, prior.get("partitionValues"), v, ts)
-                    )
-                else:
-                    groups[("delete", "drop")].append(
-                        (p, prior_d, None, prior.get("partitionValues"))
-                    )
-            for (change, mode), specs in groups.items():
-                if specs:
-                    out_parts.append(
-                        _tagged(_rows_batch(specs, mode), change, v, ts)
-                    )
-        # advance the running state past this commit IN ACTION ORDER —
-        # a remove+add of the SAME path (DV supersession) must leave the
-        # add standing; applying all adds then all removes would drop it
-        # and misread the path as brand-new at the next commit
-        for kind, act in ordered:
-            if kind == "add":
-                state[_decode_path(act["path"])] = act
-            else:
-                state.pop(_decode_path(act["path"]), None)
-
-    for change, specs in range_plain.items():
-        if specs:
-            out_parts.append(_rows_range_plain(specs, change))
-
-    if not out_parts:
-        empty = StructType(
-            list(snap_schema.fields)
-            + [
-                StructField("_change_type", StringType()),
-                StructField("_commit_version", LongType()),
-                StructField("_commit_timestamp", DoubleType()),
-            ]
-        )
-        return local_df(spark, [], empty)
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    snap = t.snapshot(end)
+    # id mode resolves file columns by field id (logical names carrying
+    # parquet.field.id), every other table by its physical names
+    schema = t._physical_schema(snap) if snap.mapping_mode == "id" else snap.schema
+    parts = change_partitions(t, max(starting_version, 0), end, snap=snap)
+    return changes_frame(t.spark, parts, schema)
 
 
 DeltaLogTable.table_changes = _delta_table_changes

@@ -104,10 +104,10 @@ from dc43_spark.io.sourcecore import (
     CommitStreamReader,
     FilePartition,
     arrow_batches,
+    change_bounds,
     filters_to_tuples,
     normalized_schema_json,
     option_flag,
-    parse_start_ts,
     pushdown_enabled,
     refuse_batch_schema_tracking,
     starting_version,
@@ -180,6 +180,125 @@ def _file_partition(table: DeltaLogTable, snap, f, types: dict) -> FilePartition
         dv_descriptor=_dv_field(table, f.dv),
         mapping=_physical_mapping(snap),
     )
+
+
+def change_partitions(
+    table: DeltaLogTable, first: int, last: int, *, snap=None,
+    commit_actions=None,
+) -> list:
+    """The change feed of commits ``first..last`` as executor partitions:
+    the ONE encoding of the protocol's per-commit CDF rules, which
+    ``table_changes`` (compiled by ``sourcecore.changes_frame``), the
+    batch ``readChangeFeed`` reader and the change-feed stream share.
+
+    - ``cdc`` actions are AUTHORITATIVE: their files carry
+      ``_change_type`` (incl. update pre/post images); the commit's
+      add/remove actions are storage bookkeeping.
+    - Otherwise an add of a NEW path derives inserts under its own DV; a
+      re-add whose DV changed derives deletes for the newly-deleted
+      positions (new−old) and inserts for the positions a RESTORE
+      uncovered (old−new), both ``kept_dv_diff`` masks decoded on the
+      executor; a full-file remove derives deletes of the file's rows
+      under its PRIOR DV. Two adds of one path in a commit (legal under
+      last-wins reconciliation) count once, the last.
+
+    Constants are typed under ``snap`` (default: the snapshot at
+    ``last``); raw actions key partition values by PHYSICAL names on
+    mapped tables, so they map back to logical names first.
+    ``commit_actions(v)`` reads a commit (the stream hooks its
+    schema-change check in). Driver cost: one state reconstruction at
+    ``first - 1`` plus an O(actions) replay of the range."""
+    if last < first:
+        return []
+    snap = table.snapshot(last) if snap is None else snap
+    commit_actions = commit_actions or table._commit_lines
+    types = _column_types(snap)
+    mapping = _physical_mapping(snap)
+    logical = {p: c for c, p in (mapping or {}).items()}
+
+    def _part(rel: str, raw_pv, stamp: dict, change=None, **mask):
+        pv = {logical.get(k, k): x for k, x in _as_map(raw_pv).items()}
+        extra = {
+            **_typed_partition_values(
+                {c: pv.get(c) for c in snap.partition_columns}, types
+            ),
+            **stamp,
+        }
+        if change is not None:
+            extra["_change_type"] = change
+        return FilePartition(
+            os.path.join(table.path, rel), extra, mapping=mapping, **mask
+        )
+
+    # running raw-add state, advanced commit by commit
+    state = table._collect_state(first - 1)[0] if first > 0 else {}
+    parts: list = []
+    for v in range(first, last + 1):
+        stamp = {
+            "_commit_version": v,
+            "_commit_timestamp": table._commit_timestamp(v),
+        }
+        cdc_entries, ordered = [], []
+        for action in commit_actions(v):
+            if "cdc" in action:
+                cdc_entries.append(action["cdc"])
+            elif "add" in action or "remove" in action:
+                kind = "add" if "add" in action else "remove"
+                act = action[kind]
+                ordered.append((kind, _decode_path(act["path"]), act))
+        if cdc_entries:
+            for e in cdc_entries:
+                parts.append(_part(
+                    _decode_path(e["path"]), e.get("partitionValues"), stamp
+                ))
+        else:
+            changed = [
+                (kind, p, act) for kind, p, act in ordered
+                if act.get("dataChange", True)
+            ]
+            data_adds = {p: a for kind, p, a in changed if kind == "add"}
+            removed = {p for kind, p, _r in changed if kind == "remove"}
+            for p, a in data_adds.items():
+                prior = state.get(p)
+                if prior is None:
+                    parts.append(_part(
+                        p, a.get("partitionValues"), stamp, "insert",
+                        dv_descriptor=_dv_field(table, a.get("deletionVector")),
+                    ))
+                    continue
+                # DV supersession: the driver compares only the O(1)
+                # descriptors; both diffs decode on the executor
+                new_d = _norm_dv(a.get("deletionVector"))
+                old_d = _norm_dv(prior.get("deletionVector"))
+                if new_d is not None and new_d != old_d:
+                    parts.append(_part(
+                        p, prior.get("partitionValues"), stamp, "delete",
+                        kept_dv_diff=(table.path, new_d, old_d),
+                    ))
+                if old_d is not None and old_d != new_d:
+                    # a RESTORE may have uncovered previously-deleted
+                    # rows (an empty diff reads zero rows, harmless)
+                    parts.append(_part(
+                        p, a.get("partitionValues"), stamp, "insert",
+                        kept_dv_diff=(table.path, old_d, new_d),
+                    ))
+                removed.discard(p)
+            for p in sorted(removed):
+                prior = state.get(p)
+                if prior is None:
+                    continue  # tombstone for an already-absent path
+                parts.append(_part(
+                    p, prior.get("partitionValues"), stamp, "delete",
+                    dv_descriptor=_dv_field(table, prior.get("deletionVector")),
+                ))
+        # advance IN ACTION ORDER: remove+add of the same path (DV
+        # supersession) must leave the add standing
+        for kind, p, act in ordered:
+            if kind == "add":
+                state[p] = act
+            else:
+                state.pop(p, None)
+    return parts
 
 
 def _starting_position(table: DeltaLogTable, options: dict) -> tuple:
@@ -511,15 +630,10 @@ class DeltaLogCDFStreamReader(_DeltaStreamReader):
     ``readChangeFeed`` stream) — row-level changes instead of raw rows,
     with ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``.
 
-    Per-commit rules mirror the batch ``table_changes`` kernel: ``cdc``
-    actions are AUTHORITATIVE (their files carry ``_change_type``,
-    incl. update pre/post images); otherwise NEW adds derive inserts
-    (under the add's own DV), deletion-vector growth derives deletes for
-    exactly the newly-deleted positions (``kept_dv_diff`` — the rows
-    AT those indexes are the pre-images), full-file removes derive
-    deletes of the file's prior live rows, and any other rewrite refuses
-    loudly. Without ``startingVersion`` the first batch is the current
-    snapshot's live rows as inserts (delta-spark's CDF stream start).
+    Commits plan through ``change_partitions``, the per-commit rules
+    ``table_changes`` and the batch reader share. Without
+    ``startingVersion`` the first batch is the current snapshot's live
+    rows as inserts (delta-spark's CDF stream start).
 
     ``maxFilesPerTrigger`` / ``maxBytesPerTrigger`` rate-limit the feed
     exactly like the plain stream (delta-spark applies its rate limits
@@ -567,184 +681,45 @@ class DeltaLogCDFStreamReader(_DeltaStreamReader):
         if end["version"] < 0:
             return []
         snap = t.snapshot(end["version"])
-        types = _column_types(snap)
-        mapping = _physical_mapping(snap)
-
-        def _pvals(raw) -> dict:
-            pv = _as_map(raw)  # checkpoint adds carry MAPs as tuple lists
-            return _typed_partition_values(
-                {c: pv.get(c) for c in snap.partition_columns}, types
-            )
-
         parts: list = []
-        first_needed = start["version"] + 1
         if start.get("snapshot") and start["version"] >= 0:
+            # owed initial batch: the snapshot's live rows as inserts
             snap0, files0 = self._snapshot_chunk(start, end)
             types0 = _column_types(snap0)
             for f in files0:
-                parts.append(FilePartition(
-                    os.path.join(t.path, f.path),
-                    {
-                        **_typed_partition_values(
-                            {c: f.partition_values.get(c)
-                             for c in snap0.partition_columns}, types0
-                        ),
-                        "_change_type": "insert",
-                        "_commit_version": start["version"],
-                        "_commit_timestamp": snap0.timestamp,
-                    },
-                    dv_descriptor=_dv_field(t, f.dv),
-                    mapping=mapping,
-                ))
+                part = _file_partition(t, snap0, f, types0)
+                part.extra = {
+                    **(part.extra or {}),
+                    "_change_type": "insert",
+                    "_commit_version": start["version"],
+                    "_commit_timestamp": snap0.timestamp,
+                }
+                parts.append(part)
         self._base = dict(end)
         if end.get("snapshot"):
             return parts  # snapshot chunk only; commits come later
-        self._require_retained(first_needed, end["version"])
-        state = (
-            t._collect_state(start["version"])[0]
-            if first_needed > 0 and first_needed <= end["version"]
-            else {}
+        self._require_retained(start["version"] + 1, end["version"])
+        return parts + change_partitions(
+            t, start["version"] + 1, end["version"], snap=snap,
+            commit_actions=self._commit_actions,
         )
-        for v in range(first_needed, end["version"] + 1):
-            ts = t._commit_timestamp(v)
-            stamp = {"_commit_version": v, "_commit_timestamp": ts}
-            cdc_entries, adds, removes, ordered = [], [], [], []
-            for action in self._commit_actions(v):
-                if "cdc" in action:
-                    cdc_entries.append(action["cdc"])
-                elif "add" in action:
-                    adds.append(action["add"])
-                    ordered.append(("add", action["add"]))
-                elif "remove" in action:
-                    removes.append(action["remove"])
-                    ordered.append(("remove", action["remove"]))
-            data_adds = [a for a in adds if a.get("dataChange", True)]
-            data_removes = [r for r in removes if r.get("dataChange", True)]
-            if cdc_entries:
-                for e in cdc_entries:
-                    parts.append(FilePartition(
-                        os.path.join(t.path, _decode_path(e["path"])),
-                        {**_pvals(e.get("partitionValues")), **stamp},
-                        mapping=mapping,
-                    ))
-            else:
-                removed_paths = {_decode_path(r["path"]) for r in data_removes}
-                for a in data_adds:
-                    p = _decode_path(a["path"])
-                    prior = state.get(p)
-                    if prior is None:
-                        parts.append(FilePartition(
-                            os.path.join(t.path, p),
-                            {**_pvals(a.get("partitionValues")),
-                             "_change_type": "insert", **stamp},
-                            dv_descriptor=_dv_field(t, a.get("deletionVector")),
-                            mapping=mapping,
-                        ))
-                        continue
-                    # DV supersession: deletes are new−old positions,
-                    # RESTORE re-inserts are old−new — both diffs are
-                    # computed EXECUTOR-side from the two descriptors
-                    # (kept_dv_diff); the driver only compares the O(1)
-                    # descriptors for identity
-                    new_d = _norm_dv(a.get("deletionVector"))
-                    old_d = _norm_dv(prior.get("deletionVector"))
-                    if new_d is not None and new_d != old_d:
-                        parts.append(FilePartition(
-                            os.path.join(t.path, p),
-                            {**_pvals(prior.get("partitionValues")),
-                             "_change_type": "delete", **stamp},
-                            kept_dv_diff=(t.path, new_d, old_d),
-                            mapping=mapping,
-                        ))
-                    if old_d is not None and old_d != new_d:
-                        # a RESTORE may have uncovered previously-deleted
-                        # rows (empty diff -> zero-row batch, harmless)
-                        parts.append(FilePartition(
-                            os.path.join(t.path, p),
-                            {**_pvals(a.get("partitionValues")),
-                             "_change_type": "insert", **stamp},
-                            kept_dv_diff=(t.path, old_d, new_d),
-                            mapping=mapping,
-                        ))
-                    removed_paths.discard(p)
-                    continue
-                for p in sorted(removed_paths):
-                    prior = state.get(p)
-                    if prior is None:
-                        continue  # tombstone for an already-absent path
-                    parts.append(FilePartition(
-                        os.path.join(t.path, p),
-                        {**_pvals(prior.get("partitionValues")),
-                         "_change_type": "delete", **stamp},
-                        dv_descriptor=_dv_field(t, prior.get("deletionVector")),
-                        mapping=mapping,
-                    ))
-            # advance IN ACTION ORDER: remove+add of the same path (DV
-            # supersession) must leave the add standing
-            for kind, act in ordered:
-                if kind == "add":
-                    state[_decode_path(act["path"])] = act
-                else:
-                    state.pop(_decode_path(act["path"]), None)
-        return parts
 
 
 class DeltaLogCdfBatchReader(DataSourceReader):
     """Batch CHANGE DATA FEED (delta-spark's
     ``read.option("readChangeFeed", "true")`` with ``startingVersion`` /
-    ``endingVersion``): every change row in the version range, planned
-    by the SAME per-commit kernel the CDF stream uses (cdc actions
-    authoritative, derived adds/DV-growth/removes otherwise). Previously
-    this option silently fell through to the snapshot reader and failed
-    with a bare schema-mismatch error."""
+    ``endingVersion`` or ``startingTimestamp`` / ``endingTimestamp``):
+    every change row in the range, planned by ``change_partitions``."""
 
     def __init__(self, path: str, schema: T.StructType, options: dict):
         self._table = DeltaLogTable(None, path)
-        versions = self._table._versions()
-        head = self._table.version()
-        if head is None:
-            raise FileNotFoundError(f"no Delta log at {path}")
-        sv = options.get("startingversion")
-        ev = options.get("endingversion")
-        sts = options.get("startingtimestamp")
-        ets = options.get("endingtimestamp")
-        if (sv is not None and sts is not None) or (
-            ev is not None and ets is not None
-        ):
-            raise ValueError(
-                "pass version OR timestamp bounds for the change feed, "
-                "not both"
-            )
-        if sts is not None:
-            ts = parse_start_ts(sts)
-            sv = next(
-                (v for v in versions if self._table._commit_timestamp(v) >= ts),
-                head + 1,
-            )
-        if ets is not None:
-            ts = parse_start_ts(ets)
-            before = [
-                v for v in versions if self._table._commit_timestamp(v) <= ts
-            ]
-            ev = before[-1] if before else -1
-        self._start = int(sv) if sv is not None else (
-            versions[0] if versions else 0
+        self._start, self._end = change_bounds(
+            self._table, options, self._table._commit_timestamp
         )
-        self._end = int(ev) if ev is not None else head
-        if self._start < 0 or self._end > head or self._start > self._end:
-            raise ValueError(
-                f"change range [{self._start}, {self._end}] outside table "
-                f"versions [0, {head}]"
-            )
         self._schema = schema
-        self._inner = DeltaLogCDFStreamReader(
-            path, schema, {"startingversion": str(self._start)}
-        )
 
     def partitions(self):
-        return self._inner.partitions(
-            {"version": self._start - 1}, {"version": self._end}
-        )
+        return change_partitions(self._table, self._start, self._end)
 
     def read(self, partition: FilePartition) -> Iterator:
         yield from arrow_batches(partition, self._schema)

@@ -123,6 +123,7 @@ from dc43_spark.io.mergecore import (
     outer_join_merge,
     source_key_stats,
 )
+from dc43_spark.io.sourcecore import changes_frame
 from dc43_spark.io.tablecore import (  # noqa: F401 (HttpCommitClaimer: re-export)
     CommitClaimer,
     FileEntry,
@@ -3245,15 +3246,23 @@ class SnaplogTable:
         update_preimage / update_postimage / delete), ``_commit_version``
         and ``_commit_timestamp`` (unix seconds).
 
-        Sources per commit: appends/overwrites derive changes from their
+        The per-commit rules are ``snaplog_source.change_partitions``
+        (shared with the batch ``readChangeFeed`` reader and the
+        change-feed stream): appends/overwrites derive changes from their
         add/remove file actions (added rows are inserts, removed files'
         rows are deletes — no extra storage); merge/delete/update read
         the ``_change_data`` files written when the table's
         ``change_feed`` flag was on, and raise if the commit predates the
         flag (the rewritten files can't distinguish carried rows from
         changed ones). Compaction commits (``data_change=false``) are
-        layout-only and contribute nothing. Changes to a schema that
-        evolved mid-range are aligned by name with missing columns NULL."""
+        layout-only and contribute nothing. ``sourcecore.changes_frame``
+        compiles the partitions into JVM parquet scans under the
+        ``ending_version`` schema: a column added mid-range reads NULL
+        for earlier commits, and renamed columns carry their
+        ``ending_version`` names (physical names are frozen, so one
+        mapping serves the whole range)."""
+        from dc43_spark.io.snaplog_source import change_partitions
+
         versions = self._versions()
         if not versions:
             raise FileNotFoundError(f"no snaplog table at {self.path}")
@@ -3263,93 +3272,13 @@ class SnaplogTable:
                 f"change range [{starting_version}, {end}] outside table "
                 f"versions [{versions[0]}, {versions[-1]}]"
             )
-        frames = []
-        end_snap = self.snapshot(end)  # ONE mapping for every frame:
-        # physical names are frozen, so the end-version logical names
-        # apply uniformly across the whole range
-        # append-derived inserts batch ACROSS commits, grouped by the
-        # writing version's physical schema (one scan + one stamp join
-        # per schema generation): a deep append-only range otherwise
-        # unions O(commits) branches, superlinear in driver plan build
-        plain_adds: dict = {}
-        for v in range(starting_version, end + 1):
-            rec = self._read_commit(v)
-            if rec.get("data_change") is False:
-                continue
-            stamp = [
-                F.lit(v).alias("_commit_version"),
-                F.lit(rec["timestamp"]).alias("_commit_timestamp"),
-            ]
-            if "cdc" in rec:
-                paths = [os.path.join(self.path, e["path"]) for e in rec["cdc"]]
-                self._require_files(paths, v)
-                if paths:
-                    frames.append(
-                        self._logical_alias(
-                            self.spark.read.format("parquet").load(paths), end_snap
-                        ).select("*", *stamp)
-                    )
-                continue
-            op = rec.get("operation")
-            if op in ("merge", "delete", "update"):
-                raise ValueError(
-                    f"commit v{v} ({op}) wrote no change data — the table's "
-                    "change_feed flag was off; enable "
-                    "SnaplogTable(..., change_feed=True) on the writer"
-                )
-            removed = [os.path.join(self.path, p) for p in rec.get("remove", [])]
-            addedp = [os.path.join(self.path, e["path"]) for e in rec.get("add", [])]
-            self._require_files(removed + addedp, v)
-            pre = self.snapshot(v - 1) if removed and v > versions[0] else None
-            if removed:
-                dele = self._raw_scan(removed, pre)
-                # rows already deleted by an ACTIVE deletion vector at the
-                # pre-commit snapshot were emitted as deletes by the MOR
-                # delete's own CDC — re-emitting them here would make a
-                # CDC consumer (e.g. an IVM view) double-subtract them
-                pre_dvs = pre.dvs if pre else ()
-                if pre_dvs:
-                    self._require_files(
-                        [os.path.join(self.path, f.path) for f in pre_dvs], v
-                    )
-                    dele = self._subtract_dvs(dele, self._read_dvs(pre_dvs))
-                frames.append(
-                    self._logical_alias(dele, end_snap).select(
-                        "*", F.lit("delete").alias(CHANGE_TYPE_COL), *stamp
-                    )
-                )
-            if addedp:
-                snap_v = self.snapshot(v)
-                group = plain_adds.setdefault(
-                    snap_v.schema_json, (snap_v, [])
-                )
-                group[1].extend(
-                    (p, v, rec["timestamp"]) for p in addedp
-                )
-        for snap_v, items in plain_adds.values():
-            frames.append(
-                self._batched_insert_changes(snap_v, end_snap, items)
-            )
-        if not frames:
-            snap = self.snapshot(end)
-            fields = (
-                T.StructType.fromJson(json.loads(snap.schema_json)).fields
-                if snap.schema_json
-                else []
-            )
-            schema = T.StructType(
-                [
-                    *fields,
-                    T.StructField(CHANGE_TYPE_COL, T.StringType()),
-                    T.StructField("_commit_version", T.LongType()),
-                    T.StructField("_commit_timestamp", T.DoubleType()),
-                ]
-            )
-            return local_df(self.spark, [], schema)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        end_snap = self.snapshot(end)
+        parts = change_partitions(
+            self, starting_version, end,
+            mapping=end_snap.column_mapping or None,
+        )
+        schema = self._logical_schema(end_snap) or T.StructType()
+        return changes_frame(self.spark, parts, schema)
 
     def changes_since(self, version: Optional[int]) -> tuple[DataFrame, int]:
         """Incremental-consumer helper: ``(changes, head)`` for commits
@@ -3364,92 +3293,6 @@ class SnaplogTable:
         start = versions[0] if version is None else version + 1
         # start == head+1 (caller is current) yields the typed empty frame
         return self.table_changes(start, head), head
-
-    def _batched_insert_changes(
-        self, snap_v: "Snapshot", end_snap: "Snapshot", items
-    ) -> DataFrame:
-        """One change-feed insert frame for EVERY append of a schema
-        generation: a single ``_raw_scan`` over all the files plus a
-        broadcast stamp join on ``_metadata.file_path`` (basename
-        equality + raw/URL-quoted suffix residual, the ``_dv_filter``
-        keying) attaching each file's ``_commit_version`` /
-        ``_commit_timestamp`` — plan size stays O(schema generations)
-        over a deep append-only range instead of O(commits). When every
-        item carries ONE (version, timestamp) — the typical
-        ``table_changes(v, v)`` incremental read — literal stamps
-        replace the join outright (r14)."""
-        import urllib.parse as _up
-
-        stamps_set = {(int(v), float(ts)) for _p, v, ts in items}
-        if len(stamps_set) == 1:
-            v, ts = next(iter(stamps_set))
-            df = self._raw_scan(
-                sorted({p for p, _v, _ts in items}), snap_v
-            )
-            return self._logical_alias_changes(
-                df.select(
-                    "*",
-                    F.lit("insert").alias(CHANGE_TYPE_COL),
-                    F.lit(v).cast("long").alias("_commit_version"),
-                    F.lit(ts).cast("double").alias("_commit_timestamp"),
-                ),
-                end_snap,
-            )
-        df = self._raw_scan([p for p, _v, _ts in items], snap_v)
-        cols = df.columns
-        rows = []
-        for p, v, ts in items:
-            rel = os.path.relpath(p, self.path)
-            rows.append((
-                os.path.basename(rel),
-                "/" + rel.lstrip("/"),
-                "/" + _up.quote(rel.lstrip("/")),
-                int(v),
-                float(ts),
-            ))
-        stamps = F.broadcast(local_df(
-            self.spark,
-            rows,
-            "_cf_fb string, _cf_sfx string, _cf_sfxq string, "
-            "_cf_v long, _cf_ts double",
-        ))
-        keyed = df.select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("_cf_file"),
-            F.col("_metadata.file_path").alias("_cf_path"),
-        )
-        joined = keyed.join(
-            stamps,
-            (keyed["_cf_file"] == stamps["_cf_fb"])
-            & (
-                keyed["_cf_path"].endswith(stamps["_cf_sfx"])
-                | keyed["_cf_path"].endswith(stamps["_cf_sfxq"])
-            ),
-            "inner",
-        ).select(
-            *cols,
-            F.lit("insert").alias(CHANGE_TYPE_COL),
-            F.col("_cf_v").alias("_commit_version"),
-            F.col("_cf_ts").alias("_commit_timestamp"),
-        )
-        return self._logical_alias_changes(joined, end_snap)
-
-    @staticmethod
-    def _logical_alias_changes(df: DataFrame, snap: "Snapshot") -> DataFrame:
-        """``_logical_alias`` for frames that already carry the change
-        columns (which must not be remapped)."""
-        if not snap.column_mapping:
-            return df
-        rev = {p: l for l, p in snap.column_mapping.items()}
-        keep = {CHANGE_TYPE_COL, "_commit_version", "_commit_timestamp"}
-        return df.select(
-            *[
-                F.col(c) if c in keep else F.col(c).alias(rev.get(c, c))
-                for c in df.columns
-            ]
-        )
 
     def _raw_scan(self, paths: Sequence[str], snap: Optional[Snapshot]) -> DataFrame:
         """Plain multi-path read of table data files under a snapshot's
@@ -3471,27 +3314,6 @@ class SnaplogTable:
         if phys is not None and snap.partition_by:
             df = df.select(*[f.name for f in phys.fields])
         return df
-
-    @staticmethod
-    def _logical_alias(df: DataFrame, snap: Snapshot) -> DataFrame:
-        """Rename physical -> logical columns (pass-through names stay).
-        Used by the change feed, which reads raw physical files: all
-        frames of a range alias under ONE (end-version) mapping, which
-        is sound because physical names are frozen for the table's
-        lifetime."""
-        if not snap.column_mapping:
-            return df
-        rev = {p: l for l, p in snap.column_mapping.items()}
-        return df.select(*[F.col(c).alias(rev.get(c, c)) for c in df.columns])
-
-    def _require_files(self, paths: Sequence[str], version: int) -> None:
-        missing = [p for p in paths if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                f"change data for commit v{version} of {self.path} was "
-                f"vacuumed ({len(missing)} file(s) gone, e.g. {missing[0]}); "
-                "read changes before vacuuming past them"
-            )
 
     # ---------------- merge-on-read deletes (deletion vectors)
 

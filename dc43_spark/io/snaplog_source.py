@@ -45,7 +45,6 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Sequence
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader
@@ -207,73 +206,89 @@ def _head_mapping(table: SnaplogTable) -> dict | None:
     return table.snapshot().column_mapping or None
 
 
-def _cdc_commit_partitions(
-    table: SnaplogTable, v: int, rec: dict, mapping: dict | None
+def change_partitions(
+    table: SnaplogTable, first: int, last: int, *, mapping: dict | None,
+    read_commit=None,
 ) -> list:
-    """Change-feed partitions for ONE commit — table_changes' rules:
-    cdc files as written; appends/overwrites derive insert (added files)
-    and delete (removed files) rows; merge/delete/update without cdc
-    raise (the rewritten files can't distinguish carried rows). Rows a
-    merge-on-read delete already DV'd out before this commit were
-    emitted as deletes by that delete's own CDC, so remove-derived
-    delete partitions mask them via ``deleted_positions`` — without the
-    mask a CDC consumer would double-subtract them."""
-    stamp = {"_commit_version": v, "_commit_timestamp": rec["timestamp"]}
+    """The change feed of commits ``first..last`` as executor partitions:
+    the ONE encoding of snaplog's per-commit CDF rules, which
+    ``SnaplogTable.table_changes`` (compiled by
+    ``sourcecore.changes_frame``), the batch ``readChangeFeed`` reader
+    and the change-feed stream share.
+
+    - Layout-only commits (``data_change=false``) contribute nothing.
+    - ``cdc`` files (merge/delete/update with the feed on) are
+      authoritative.
+    - Appends/overwrites derive inserts (added files) and deletes
+      (removed files). A removed file reads under the deletion vectors
+      active before the commit: rows a merge-on-read delete already
+      removed were emitted by that delete's own change data, and
+      re-emitting them would make a consumer subtract them twice.
+    - merge/delete/update without change data refuse: their rewritten
+      files cannot tell carried rows from changed ones.
+
+    Every file a commit's rows come from must still exist.
+    ``mapping`` is the logical -> physical names the rows are served
+    under; ``read_commit(v)`` reads a commit (the stream hooks its
+    schema-change check in)."""
+    read_commit = read_commit or table._read_commit
     parts: list[FilePartition] = []
-    if "cdc" in rec:
-        for e in rec["cdc"]:
-            parts.append(
+    for v in range(first, last + 1):
+        rec = read_commit(v)
+        if rec.get("data_change") is False:
+            continue
+        stamp = {"_commit_version": v, "_commit_timestamp": rec["timestamp"]}
+        dvs: tuple = ()
+        if "cdc" in rec:
+            commit = [
                 FilePartition(
-                    os.path.join(table.path, e["path"]), dict(stamp), mapping=mapping
-                )
-            )
-        return parts
-    if rec.get("operation") in ("merge", "delete", "update"):
-        raise ValueError(
-            f"commit v{v} ({rec.get('operation')}) wrote no change data — "
-            "the table's change feed was off when it committed; enable "
-            "SnaplogTable(..., change_feed=True) on the writer"
-        )
-    dv_pos: dict = {}
-    dv_paths = None
-    pre_partition: dict = {}
-    if rec.get("remove"):
-        pre = table.snapshot(v - 1) if v > 0 else None
-        dv_pos, dv_paths = _dv_decode_plan(
-            table.path, pre.dvs if pre else ()
-        )
-        if pre is not None:
-            pre_partition = {f.path: f.partition for f in pre.files}
-    for p in rec.get("remove", []):
-        parts.append(
-            _attach_dv(
-                FilePartition(
-                    os.path.join(table.path, p),
-                    {**stamp, CHANGE_TYPE_COL: "delete",
-                     **pre_partition.get(p, {})},
+                    os.path.join(table.path, e["path"]), dict(stamp),
                     mapping=mapping,
-                ),
-                dv_pos, dv_paths, os.path.basename(p),
+                )
+                for e in rec["cdc"]
+            ]
+        elif rec.get("operation") in ("merge", "delete", "update"):
+            raise ValueError(
+                f"commit v{v} ({rec.get('operation')}) wrote no change data "
+                "— the table's change feed was off when it committed; "
+                "enable SnaplogTable(..., change_feed=True) on the writer"
             )
-        )
-    for e in rec.get("add", []):
-        parts.append(
-            FilePartition(
-                os.path.join(table.path, e["path"]),
-                {**stamp, CHANGE_TYPE_COL: "insert", **e.get("partition", {})},
-                mapping=mapping,
+        else:
+            commit = []
+            pre_partition: dict = {}
+            if rec.get("remove") and v > 0:
+                pre = table.snapshot(v - 1)
+                dvs = tuple(os.path.join(table.path, f.path) for f in pre.dvs)
+                pre_partition = {f.path: f.partition for f in pre.files}
+            for p in rec.get("remove", []):
+                part = FilePartition(
+                    os.path.join(table.path, p),
+                    {**pre_partition.get(p, {}), **stamp,
+                     CHANGE_TYPE_COL: "delete"},
+                    mapping=mapping,
+                )
+                if dvs:
+                    part.dv_parquet = (dvs, os.path.basename(p))
+                commit.append(part)
+            for e in rec.get("add", []):
+                commit.append(FilePartition(
+                    os.path.join(table.path, e["path"]),
+                    {**e.get("partition", {}), **stamp,
+                     CHANGE_TYPE_COL: "insert"},
+                    mapping=mapping,
+                ))
+        missing = [
+            p for p in [*(c.path for c in commit), *dvs]
+            if not os.path.exists(p)
+        ]
+        if missing:
+            raise FileNotFoundError(
+                f"change data for commit v{v} of {table.path} was vacuumed "
+                f"({len(missing)} file(s) gone, e.g. {missing[0]}); read "
+                "changes before vacuuming past them"
             )
-        )
+        parts.extend(commit)
     return parts
-
-
-def _require_files(parts: Sequence[FilePartition], v: int) -> None:
-    missing = [p.path for p in parts if not os.path.exists(p.path)]
-    if missing:
-        raise FileNotFoundError(
-            f"change data for commit v{v} was vacuumed "
-            f"({len(missing)} file(s) gone, e.g. {missing[0]})"
-        )
 
 
 class SnaplogCdcBatchReader(DataSourceReader):
@@ -299,16 +314,10 @@ class SnaplogCdcBatchReader(DataSourceReader):
             )
 
     def partitions(self):
-        mapping = _head_mapping(self._table)
-        parts: list[FilePartition] = []
-        for v in range(self._start, self._end + 1):
-            rec = self._table._read_commit(v)
-            if rec.get("data_change") is False:
-                continue
-            commit_parts = _cdc_commit_partitions(self._table, v, rec, mapping)
-            _require_files(commit_parts, v)
-            parts.extend(commit_parts)
-        return parts
+        return change_partitions(
+            self._table, self._start, self._end,
+            mapping=_head_mapping(self._table),
+        )
 
     def read(self, partition: FilePartition):
         yield from arrow_batches(partition, self._schema)
@@ -388,24 +397,30 @@ class SnaplogStreamReader(CommitStreamReader):
                 pass
         return len(adds) + len(removes), nbytes
 
+    def _read_commit(self, v: int) -> dict:
+        """Commit ``v``, after the schema-change check on its schema."""
+        rec = self._table._read_commit(v)
+        if rec.get("schema_json"):
+            self._check_schema(
+                v, (normalized_schema_json(rec["schema_json"]), None)
+            )
+        return rec
+
     def partitions(self, start: dict, end: dict):
         mapping = _head_mapping(self._table)
+        first, last = start["version"] + 1, end["version"]
+        if self._cdc:
+            parts = change_partitions(
+                self._table, first, last, mapping=mapping,
+                read_commit=self._read_commit,
+            )
+            self._base = dict(end)
+            return parts
         parts: list[FilePartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            rec = self._table._read_commit(v)
-            if rec.get("schema_json"):
-                self._check_schema(
-                    v, (normalized_schema_json(rec["schema_json"]), None)
-                )
+        for v in range(first, last + 1):
+            rec = self._read_commit(v)
             if rec.get("data_change") is False:
                 continue  # compaction: layout-only, invisible to streams
-            if self._cdc:
-                commit_parts = _cdc_commit_partitions(
-                    self._table, v, rec, mapping
-                )
-                _require_files(commit_parts, v)
-                parts.extend(commit_parts)
-                continue
             if self._skip_change_commits and (
                 rec.get("remove") or rec.get("dv_add")
             ):

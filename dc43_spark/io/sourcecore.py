@@ -13,16 +13,26 @@
   ``schemaTrackingLocation`` bootstrap. A format supplies its
   ``initialOffset``, ``partitions``, per-commit budget charge and schema
   fingerprint.
-- **DataSource glue.** :func:`pushdown_enabled`, :func:`with_cdc_fields`
-  and :func:`refuse_batch_schema_tracking`.
+- **Change-feed compiler.** :func:`changes_frame` turns a format
+  planner's change-feed partitions (``snaplog_source.change_partitions``,
+  ``delta_source.change_partitions``) into one JVM DataFrame — each
+  format's ``table_changes``. The batch ``readChangeFeed`` readers and
+  the change-feed streams serve the same partitions through
+  :func:`arrow_batches`, so the per-commit rules live once per format.
+- **Option glue.** :func:`starting_version` (stream start) and
+  :func:`change_bounds` (batch change range), :func:`pushdown_enabled`,
+  :func:`with_cdc_fields` and :func:`refuse_batch_schema_tracking`.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from typing import Callable, Iterator, Optional, Sequence
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSourceStreamReader,
@@ -38,6 +48,8 @@ from pyspark.sql.datasource import (
 )
 
 from dc43_spark.io.schema_track import SchemaTrackingLog
+from dc43_spark.io.tablecore import dv_join_side, uri_suffix
+from dc43_spark.localdf import local_df
 
 #: the change-feed columns a ``readChangeFeed`` source appends to the
 #: table schema
@@ -179,23 +191,25 @@ def arrow_batches(partition: FilePartition, schema: T.StructType):
         arrays = []
         for f in schema.fields:
             if f.name in extra:
-                arrays.append(const_array(extra[f.name], full.field(f.name).type, n))
+                arrays.append(
+                    typed_array([extra[f.name]] * n, full.field(f.name).type)
+                )
             else:
                 arrays.append(tbl.column(f.name).combine_chunks())
         tbl = pa.Table.from_arrays(arrays, schema=full)
     yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
-def const_array(value, typ, n: int):
-    """n copies of a constant as an Arrow array of ``typ``. Manifest
-    partition values are JSON scalars (dates ride as ISO strings), so
-    fall back to an untyped build + cast when the direct build refuses."""
+def typed_array(values: list, typ):
+    """``values`` as an Arrow array of ``typ``. Manifest partition values
+    are JSON scalars (dates ride as ISO strings), so fall back to an
+    untyped build + cast when the direct build refuses."""
     import pyarrow as pa
 
     try:
-        return pa.array([value] * n, type=typ)
+        return pa.array(values, type=typ)
     except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError, TypeError):
-        return pa.array([value] * n).cast(typ)
+        return pa.array(values).cast(typ)
 
 
 def filters_to_tuples(filters: Sequence[Filter]) -> list[tuple]:
@@ -225,21 +239,26 @@ def filters_to_tuples(filters: Sequence[Filter]) -> list[tuple]:
 
 
 def parse_start_ts(raw: str) -> float:
-    """``startingTimestamp`` value -> unix seconds: numeric, or an ISO
-    8601 / ``YYYY-MM-DD`` string (delta-spark accepts both)."""
+    """``startingTimestamp`` / ``endingTimestamp`` value -> unix seconds:
+    numeric, or an ISO 8601 / ``YYYY-MM-DD`` string (delta-spark accepts
+    both). A naive ISO stamp is UTC, the repo's time-travel convention
+    (a local-time reading would pick a different commit per host)."""
     try:
         return float(raw)
     except ValueError:
         pass
-    from datetime import datetime
+    from datetime import datetime, timezone
 
     try:
-        return datetime.fromisoformat(str(raw)).timestamp()
+        dt = datetime.fromisoformat(str(raw))
     except ValueError:
         raise ValueError(
-            f"unparseable startingTimestamp {raw!r}; pass unix seconds "
-            "or an ISO 8601 timestamp"
+            f"unparseable startingTimestamp/endingTimestamp {raw!r}; pass "
+            "unix seconds or an ISO 8601 timestamp"
         ) from None
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return dt.timestamp()
 
 
 def starting_version(
@@ -267,6 +286,51 @@ def starting_version(
         return int(sv)
     head = table.version()
     return 0 if head is None else head + 1
+
+
+def change_bounds(
+    table, options: dict, commit_timestamp: Callable[[int], float]
+) -> tuple:
+    """A batch change-feed read's inclusive ``(start, end)`` commit range
+    from ``startingVersion`` / ``startingTimestamp`` and
+    ``endingVersion`` / ``endingTimestamp`` (version OR timestamp per
+    side; keys lower-cased). A start timestamp resolves to the first
+    retained commit at or after it, an end timestamp to the last at or
+    before it; the defaults are the first retained commit and the
+    head."""
+    versions = table._versions()
+    if not versions:
+        raise FileNotFoundError(f"no table log at {table.path}")
+    bounds = {}
+    for side, default in (("starting", versions[0]), ("ending", versions[-1])):
+        version = options.get(f"{side}version")
+        raw_ts = options.get(f"{side}timestamp")
+        if raw_ts is None:
+            bounds[side] = default if version is None else int(version)
+            continue
+        if version is not None:
+            raise ValueError(
+                f"pass {side}Version OR {side}Timestamp, not both"
+            )
+        ts = parse_start_ts(raw_ts)
+        if side == "starting":
+            hits = [v for v in versions if commit_timestamp(v) >= ts][:1]
+        else:
+            hits = [v for v in versions if commit_timestamp(v) <= ts][-1:]
+        if not hits:
+            where = "after" if side == "starting" else "before"
+            raise ValueError(
+                f"no commit of {table.path} at or {where} {side}Timestamp "
+                f"{raw_ts}"
+            )
+        bounds[side] = hits[0]
+    start, end = bounds["starting"], bounds["ending"]
+    if start < versions[0] or end > versions[-1] or start > end:
+        raise ValueError(
+            f"change range [{start}, {end}] outside table versions "
+            f"[{versions[0]}, {versions[-1]}]"
+        )
+    return start, end
 
 
 # ---------------------------------------------------------------- DataSource glue
@@ -304,6 +368,233 @@ def refuse_batch_schema_tracking(options: dict) -> None:
             "(spark.readStream); batch reads always resolve the "
             "snapshot's own schema"
         )
+
+
+# ---------------------------------------------------------------- change-feed compiler
+
+#: a change range whose partitions collapse to at most this many constant
+#: groups (commit stamp, change type, partition values) over at most
+#: ``SMALL_RANGE_MAX_FILES`` files plans one literal-stamped scan per
+#: group — no broadcast, no join; beyond either ceiling ONE broadcast
+#: identity join carries the constants, so a deep range plans one scan
+#: instead of per-commit union branches (whose driver plan build grows
+#: superlinearly)
+SMALL_RANGE_MAX_GROUPS = 4
+SMALL_RANGE_MAX_FILES = 32
+
+
+def changes_frame(
+    spark, parts: Sequence[FilePartition], table_schema: T.StructType
+) -> DataFrame:
+    """The change feed a planner's partitions denote, as ONE JVM
+    DataFrame: ``table_schema`` plus :data:`CDC_FIELDS`.
+
+    Partitions group by mask kind and constant-column shape (a ``cdc``
+    file carries ``_change_type`` in-file, a derived one as a constant);
+    each group is one parquet scan under the PHYSICAL names of
+    ``mapping``, aliased back to logical ones. Constants ride as typed
+    literals on small ranges (see ``SMALL_RANGE_MAX_GROUPS``), otherwise
+    through one broadcast identity join keyed on the scan's
+    ``_metadata`` (basename equality, ``uri_suffix`` residual); a file
+    claimed by several partitions is scanned once and fans out through
+    the join. Deletion masks never decode on the driver:
+
+    - ``dv_descriptor`` / ``kept_dv_diff`` (Delta): the O(1)
+      descriptors decode on executors (``mapInPandas``) into
+      ``(partition, position)`` rows that anti-/semi-join the scan
+      (``dv_join_side`` picks broadcast or shuffle);
+    - ``dv_parquet`` (snaplog): the deletion-vector files' ``(file,
+      pos)`` rows anti-join the scan on ``(basename, row_index)``."""
+    schema = T.StructType([*table_schema.fields, *CDC_FIELDS])
+    groups: dict = {}
+    for p in parts:
+        extra = p.extra or {}
+        key = (
+            _mask_kind(p),
+            tuple(f.name for f in schema.fields if f.name in extra),
+            p.dv_parquet[0] if p.dv_parquet is not None else None,
+            tuple(sorted((p.mapping or {}).items())),
+        )
+        groups.setdefault(key, []).append(p)
+    frames = [
+        _group_frame(spark, schema, key, members)
+        for key, members in groups.items()
+    ]
+    if not frames:
+        return local_df(spark, [], schema)
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def _mask_kind(p: FilePartition) -> Optional[str]:
+    if p.dv_descriptor is not None:
+        return "drop"
+    if p.kept_dv_diff is not None:
+        return "keep"
+    if p.dv_parquet is not None:
+        return "rows"
+    return None
+
+
+def _group_frame(spark, schema: T.StructType, key: tuple, members: list):
+    kind, const_names, dv_paths, mapping = key
+    const_fields = [schema[c] for c in const_names]
+    file_fields = [f for f in schema.fields if f.name not in const_names]
+    consts = _const_rows(members, const_fields)
+    if kind is None or kind == "rows":
+        by_consts: dict = {}
+        for p, c in zip(members, consts):
+            by_consts.setdefault(c, []).append(p.path)
+        if (
+            len(by_consts) <= SMALL_RANGE_MAX_GROUPS
+            and len({p.path for p in members}) <= SMALL_RANGE_MAX_FILES
+        ):
+            frames = []
+            for c, paths in by_consts.items():
+                df = _scan(spark, paths, file_fields, dict(mapping), kind)
+                if kind == "rows":
+                    df = _subtract_dv_rows(spark, df, dv_paths)
+                lits = {
+                    f.name: F.lit(v).cast(f.dataType).alias(f.name)
+                    for v, f in zip(c, const_fields)
+                }
+                frames.append(df.select(*[
+                    lits.get(n, F.col(f"`{n}`")) for n in schema.names
+                ]))
+            return functools.reduce(DataFrame.unionByName, frames)
+    df = _scan(
+        spark, [p.path for p in members], file_fields, dict(mapping), kind,
+        identity=True,
+    )
+    ident = local_df(
+        spark,
+        [
+            (os.path.basename(p.path), uri_suffix(p.path), i, *c)
+            for i, (p, c) in enumerate(zip(members, consts))
+        ],
+        T.StructType([
+            T.StructField("_cf_id_fb", T.StringType()),
+            T.StructField("_cf_id_sfx", T.StringType()),
+            T.StructField("_cf_pid", T.LongType()),
+            *[T.StructField(f.name, f.dataType) for f in const_fields],
+        ]),
+        coalesce=1,
+    )
+    df = df.join(
+        F.broadcast(ident),
+        (df["_cf_fb"] == ident["_cf_id_fb"])
+        & df["_cf_path"].endswith(ident["_cf_id_sfx"]),
+    )
+    if kind == "rows":
+        df = _subtract_dv_rows(spark, df, dv_paths)
+    elif kind is not None:
+        df = _join_dv_positions(spark, df, members, kind)
+    return df.select(*[F.col(f"`{n}`") for n in schema.names])
+
+
+def _const_rows(members: list, const_fields: list) -> list:
+    """Each partition's constants as a tuple of Python values of the
+    columns' types (typed once per column through Arrow)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = [
+        typed_array(
+            [p.extra.get(f.name) for p in members], to_arrow_type(f.dataType)
+        ).to_pylist()
+        for f in const_fields
+    ]
+    return list(zip(*cols)) if cols else [()] * len(members)
+
+
+def _scan(spark, paths, file_fields, mapping: dict, kind, identity=False):
+    """One parquet scan of ``paths`` (each file once) under the physical
+    names, aliased to the logical ``file_fields``, plus the ``_metadata``
+    columns the identity join and the deletion masks key on. A
+    ``parquet.field.id`` in a field's metadata rides into the read
+    schema, so field-id mapped files resolve by id."""
+    read = T.StructType([
+        T.StructField(
+            mapping.get(f.name, f.name), f.dataType, True,
+            {k: v for k, v in (f.metadata or {}).items()
+             if k == "parquet.field.id"},
+        )
+        for f in file_fields
+    ])
+    cols = [
+        F.col(f"`{r.name}`").alias(f.name)
+        for r, f in zip(read.fields, file_fields)
+    ]
+    if identity or kind == "rows":
+        cols.append(F.col("_metadata.file_name").alias("_cf_fb"))
+    if identity:
+        cols.append(F.col("_metadata.file_path").alias("_cf_path"))
+    if kind is not None:
+        cols.append(F.col("_metadata.row_index").alias("_cf_pos"))
+    df = spark.read.format("parquet").schema(read).load(sorted(set(paths)))
+    return df.select(*cols)
+
+
+def _subtract_dv_rows(spark, df: DataFrame, dv_paths) -> DataFrame:
+    """``df`` minus the rows the snaplog deletion-vector files' ``(file,
+    pos)`` rows mark, one broadcast anti-join on ``(basename,
+    row_index)``."""
+    dv = spark.read.parquet(*dv_paths)
+    return df.join(
+        F.broadcast(dv),
+        (df["_cf_fb"] == dv["file"]) & (df["_cf_pos"] == dv["pos"]),
+        "left_anti",
+    )
+
+
+def _join_dv_positions(spark, df: DataFrame, members: list, kind: str):
+    """Keep (``keep``: semi) or drop (``drop``: anti) the positions each
+    partition's Delta descriptors denote, keyed by the identity join's
+    partition id: a file claimed by two partitions (DV growth in two
+    commits of the range) keeps each claim's own positions."""
+    rows, card = [], 0
+    for i, p in enumerate(members):
+        if kind == "drop":
+            root, a = p.dv_descriptor
+            b = None
+        else:
+            root, a, b = p.kept_dv_diff
+        rows.append((i, root, json.dumps(a), None if b is None else json.dumps(b)))
+        n = (a or {}).get("cardinality")
+        card = -1 if card < 0 or n is None or int(n) < 0 else card + int(n)
+    positions = local_df(
+        spark, rows, "pid long, root string, a string, b string"
+    ).mapInPandas(_expand_dvs, "_dv_pid long, _dv_pos long")
+    return df.join(
+        dv_join_side(spark, positions, card),
+        (df["_cf_pid"] == positions["_dv_pid"])
+        & (df["_cf_pos"] == positions["_dv_pos"]),
+        "left_anti" if kind == "drop" else "left_semi",
+    )
+
+
+def _expand_dvs(batches):
+    """Executor side of :func:`_join_dv_positions`: each descriptor row
+    -> its ``decode(a) - decode(b)`` positions."""
+    import numpy as np
+    import pandas as pd
+
+    from dc43_spark.io.dv import decode_dv_descriptor
+
+    def _decode(root, desc):
+        if desc is None:
+            return np.empty(0, dtype=np.int64)
+        return np.asarray(
+            decode_dv_descriptor(root, json.loads(desc)), dtype=np.int64
+        )
+
+    for pdf in batches:
+        for r in pdf.itertuples(index=False):
+            pos = np.setdiff1d(
+                _decode(r.root, r.a), _decode(r.root, r.b), assume_unique=True
+            )
+            yield pd.DataFrame({
+                "_dv_pid": np.full(len(pos), r.pid, dtype=np.int64),
+                "_dv_pos": pos,
+            })
 
 
 # ---------------------------------------------------------------- stream contract

@@ -16,6 +16,9 @@ its commits are laid out. The mechanisms below are decided once:
   per-file ``{"min", "max", "nulls"}`` envelopes, row-at-a-time and as
   arrow-compute masks, plus the same predicate as a residual Spark
   ``Column``.
+- **Scan keying**: ``uri_suffix`` (a relative path as it ends a scan's
+  ``_metadata.file_path``) and ``dv_join_side`` (the broadcast-or-shuffle
+  choice for a join against expanded deletion-vector positions).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable, Optional, Protocol, Sequence
-from urllib.parse import unquote
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -371,6 +374,46 @@ def stage_concurrently(jobs: Sequence[Optional[Callable[[], object]]]) -> list:
         for i, fut in futures.items():
             out[i] = fut.result()
     return out
+
+
+# ---------------- scan keying
+
+
+def uri_suffix(rel: str) -> str:
+    """``/rel`` as it ends ``_metadata.file_path``, a ``java.net.URI``:
+    ASCII outside RFC 2396's path set is percent-encoded (space, ``%``
+    — so a hive-escaped ``%2F`` dir reads ``%252F`` — ``#``, ...), while
+    its punctuation (``=``, ``+``, ...) and non-ASCII stay raw."""
+    return "/" + "".join(
+        c if ord(c) > 127 else quote(c, safe="/=,;:$&+@!'()*")
+        for c in rel.lstrip("/")
+    )
+
+
+#: Broadcast ceiling for expanded deletion-vector positions (one row per
+#: deleted position). Spark's broadcast relation caps at 8 GB and builds
+#: ON THE DRIVER; ~10M (rel, pos) rows is comfortably inside that while a
+#: MOR-heavy 100 TB table written by another engine can carry billions —
+#: those must shuffle. Overridable per session via
+#: ``spark.dc43.delta.dvBroadcastMaxPositions``.
+DV_BROADCAST_MAX_POSITIONS = 10_000_000
+
+
+def dv_join_side(spark: SparkSession, deleted: DataFrame, total_card: int) -> DataFrame:
+    """The join's build side for expanded DV positions: broadcast
+    only while the descriptors' summed cardinality fits the gate; above
+    it (or when cardinality is unknown) hint a sort-merge join so the
+    positions shuffle instead of materializing one row per deleted
+    position in an 8 GB-capped driver-built broadcast relation."""
+    limit = int(
+        spark.conf.get(
+            "spark.dc43.delta.dvBroadcastMaxPositions",
+            str(DV_BROADCAST_MAX_POSITIONS),
+        )
+    )
+    if 0 <= total_card <= limit:
+        return F.broadcast(deleted)
+    return deleted.hint("merge")
 
 
 # ---------------- stats-envelope pruning (pyarrow-DNF-style filters)

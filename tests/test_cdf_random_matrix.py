@@ -10,7 +10,9 @@ PURE-PYTHON model of the protocol's CDF rules; every
 ``(k, _change_type, _commit_version)`` multiset must match exactly, over
 the full range and over random sub-ranges (sub-ranges start from a
 reconstructed state, exercising ``_collect_state``'s interplay with the
-batching)."""
+batching). Every range is read twice: through ``table_changes`` and
+through the batch ``readChangeFeed`` source, the two readers of one
+planner (``delta_source.change_partitions``)."""
 
 from __future__ import annotations
 
@@ -27,6 +29,7 @@ import pytest
 
 from dc43_spark.io import dv as dvmod
 from dc43_spark.io.delta_log import DeltaLogTable
+from dc43_spark.io.delta_source import DeltaLogDataSource
 
 
 def _commit(table, version, actions):
@@ -200,21 +203,34 @@ def test_random_history_matches_python_model(spark, tmp_path, seed):
     n_commits = 12
     expected = _build_random_history(t, seed, n_commits)
     d = DeltaLogTable(spark, t)
+    spark.dataSource.register(DeltaLogDataSource)
 
-    # full range
-    got: dict[int, Counter] = {v: Counter() for v in range(n_commits)}
-    for r in d.table_changes(0, n_commits - 1).collect():
-        got[r._commit_version][(r.k, r._change_type)] += 1
-    for v in range(n_commits):
-        assert got[v] == expected[v], f"seed={seed} v={v}"
+    def source_changes(lo, hi):
+        return (
+            spark.read.format("deltalog").option("readChangeFeed", "true")
+            .option("startingVersion", lo).option("endingVersion", hi)
+            .load(t)
+        )
 
-    # random sub-ranges exercise state reconstruction + range batching
-    rng = random.Random(seed + 1)
-    for _ in range(3):
-        lo = rng.randint(1, n_commits - 1)
-        hi = rng.randint(lo, n_commits - 1)
-        sub: dict[int, Counter] = {v: Counter() for v in range(lo, hi + 1)}
-        for r in d.table_changes(lo, hi).collect():
-            sub[r._commit_version][(r.k, r._change_type)] += 1
-        for v in range(lo, hi + 1):
-            assert sub[v] == expected[v], f"seed={seed} range={lo}-{hi} v={v}"
+    # both readers of the planner: table_changes (compiled JVM scans)
+    # and the batch readChangeFeed source (Arrow partitions)
+    for read in (d.table_changes, source_changes):
+        # full range
+        got: dict[int, Counter] = {v: Counter() for v in range(n_commits)}
+        for r in read(0, n_commits - 1).collect():
+            got[r._commit_version][(r.k, r._change_type)] += 1
+        for v in range(n_commits):
+            assert got[v] == expected[v], f"seed={seed} v={v}"
+
+        # random sub-ranges exercise state reconstruction + range batching
+        rng = random.Random(seed + 1)
+        for _ in range(3):
+            lo = rng.randint(1, n_commits - 1)
+            hi = rng.randint(lo, n_commits - 1)
+            sub: dict[int, Counter] = {v: Counter() for v in range(lo, hi + 1)}
+            for r in read(lo, hi).collect():
+                sub[r._commit_version][(r.k, r._change_type)] += 1
+            for v in range(lo, hi + 1):
+                assert sub[v] == expected[v], (
+                    f"seed={seed} range={lo}-{hi} v={v}"
+                )

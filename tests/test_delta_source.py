@@ -1248,3 +1248,37 @@ def test_with_event_time_order_engine_roundtrip(registered, spark, tmp_path):
     assert stats["rows"] == 20  # the two remaining files
     ks = sorted(r.k for r in spark.read.parquet(out).collect())
     assert ks == sorted([*range(0, 10), *range(100, 110), *range(200, 210)])
+
+
+def test_batch_cdf_counts_a_duplicate_add_once(registered, spark, tmp_path):
+    """Two ``add`` actions of one path in a commit are legal under
+    last-wins reconciliation: the change feed emits the file's rows
+    once, from the batch source as from ``table_changes``."""
+    import json as _json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "t")
+    delta_write(spark, _df(spark, 0, 2), t, checkpoint_interval=None)  # v0
+    pq.write_table(
+        pa.table({"k": pa.array([10, 11], pa.int64()),
+                  "v": pa.array(["y", "y"])}),
+        os.path.join(t, "dup.parquet"),
+    )
+    add = {"path": "dup.parquet", "partitionValues": {},
+           "size": os.path.getsize(os.path.join(t, "dup.parquet")),
+           "modificationTime": 0, "dataChange": True}
+    with open(os.path.join(t, "_delta_log", f"{1:020d}.json"), "w") as fh:
+        fh.write(_json.dumps({"commitInfo": {"operation": "WRITE"}}) + "\n")
+        fh.write(_json.dumps({"add": add}) + "\n")
+        fh.write(_json.dumps({"add": {**add, "modificationTime": 1}}) + "\n")
+
+    want = [(10, "insert", 1), (11, "insert", 1)]
+    feed = spark.read.format("deltalog").option("readChangeFeed", "true") \
+        .option("startingVersion", 1).load(t)
+    assert sorted((r.k, r._change_type, r._commit_version)
+                  for r in feed.collect()) == want
+    assert sorted((r.k, r._change_type, r._commit_version)
+                  for r in DeltaLogTable(spark, t).table_changes(1, 1)
+                  .collect()) == want

@@ -141,15 +141,10 @@ _SHIPPED_SCHEMAS = [
     ("reason string, n_docs long", ("kept", 3)),
     ("key string, n long, total long", ("k", 1, 2)),
     ("centroid_id long, centroid array<double>", (0, [0.1, 0.2])),
-    ("_cf_fb string, _cf_sfx string, _cf_sfxq string, _cf_v long, "
-     "_cf_ts double", ("f", "s", "q", 1, 1.5)),
+    ("pid long, root string, a string, b string", (0, "/t", "{}", None)),
     ("file string, rel string, relq string, storage string, spec string, "
      "off long, size long, card long",
      ("f", "r", "q", "s", "p", 0, 10, 1)),
-    ("fb string, sfx string, sfxq string, storage string, spec string, "
-     "off long, size long, card long, b_storage string, b_spec string, "
-     "b_off long, b_size long, b_card long",
-     ("f", "s", "q", "st", "sp", 0, 1, 2, None, None, None, None, None)),
     ("_touch_rel string", ("data/x.parquet",)),
     ("table string, files long, dry_run boolean", ("t", 1, False)),
     ("table string, version long", ("t", 0)),

@@ -1,18 +1,19 @@
-"""The stream contract both table formats' sources share
-(io/sourcecore.py), driven reader-level on snaplog and on the jar-less
-Delta log: ``initialOffset`` / ``latestOffset`` / ``partitions`` /
-``commit`` called directly, so no streaming query runs."""
+"""What both table formats' sources share (io/sourcecore.py), on
+snaplog and on the jar-less Delta log: the stream contract, driven
+reader-level (``initialOffset`` / ``latestOffset`` / ``partitions`` /
+``commit`` called directly, so no streaming query runs), and the
+change-feed compiler behind ``table_changes``."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from dc43_spark.io.delta_log import delta_write
-from dc43_spark.io.delta_source import DeltaLogStreamReader
+from dc43_spark.io.delta_log import DeltaLogTable, delta_write
+from dc43_spark.io.delta_source import DeltaLogDataSource, DeltaLogStreamReader
 from dc43_spark.io.schema_track import SchemaTrackingLog
 from dc43_spark.io.snaplog import SnaplogTable
-from dc43_spark.io.snaplog_source import SnaplogStreamReader
+from dc43_spark.io.snaplog_source import SnaplogDataSource, SnaplogStreamReader
 
 #: data files each commit adds
 FILES = [1, 2, 1, 3]
@@ -141,3 +142,74 @@ def test_stream_reader_contract(spark, tmp_path, fmt):
         {"schematrackinglocation": loc}, restarted._table
     ).fieldNames()
     assert len(restarted.partitions({"version": 3}, {"version": 4})) == 1
+
+
+# ---------------------------------------------------------------- change feed
+
+# format (also its data source name) -> table handle
+_TABLES = {"snaplog": SnaplogTable, "deltalog": DeltaLogTable}
+
+
+def _feed_writer(fmt):
+    if fmt == "snaplog":
+        return lambda spark, path, df: SnaplogTable(spark, path).write(
+            df, mode="append", partition_by=["region"]
+        )
+    return lambda spark, path, df: delta_write(
+        spark, df, path, partition_by=["region"], checkpoint_interval=None
+    )
+
+
+@pytest.fixture()
+def sources(spark):
+    spark.dataSource.register(SnaplogDataSource)
+    spark.dataSource.register(DeltaLogDataSource)
+    return spark
+
+
+@pytest.mark.parametrize("region", ["EU", "a b", "a/b c"])
+@pytest.mark.parametrize("fmt", sorted(_TABLES))
+def test_change_feed_agrees_across_readers_on_escaped_partitions(
+    sources, tmp_path, fmt, region
+):
+    """``table_changes`` and the batch ``readChangeFeed`` source serve the
+    same rows over a multi-commit append range, also when the partition
+    dir is one Spark URI-escapes (the compiled scan keys its stamps on
+    ``_metadata.file_path``, a ``java.net.URI``)."""
+    spark = sources
+    path = str(tmp_path / "t")
+    for k in range(3):
+        _feed_writer(fmt)(spark, path, spark.createDataFrame(
+            [(k, region)], "k long, region string"
+        ))
+    want = {(k, region, "insert", k) for k in range(3)}
+
+    def rows(df):
+        return {(r.k, r.region, r._change_type, r._commit_version)
+                for r in df.collect()}
+
+    assert rows(_TABLES[fmt](spark, path).table_changes(0, 2)) == want
+    feed = (
+        spark.read.format(fmt).option("readChangeFeed", "true")
+        .option("startingVersion", 0).option("endingVersion", 2).load(path)
+    )
+    assert rows(feed) == want
+
+
+@pytest.mark.parametrize("fmt", sorted(_TABLES))
+def test_deep_append_range_plans_one_scan_per_change_type(
+    spark, tmp_path, fmt
+):
+    """Six appends past the literal-stamp ceiling compile to ONE parquet
+    scan with the stamps riding the identity join, not a union branch
+    per commit."""
+    path = str(tmp_path / "t")
+    for k in range(6):
+        _FORMATS[fmt][0](spark, path, _frame(spark, 10 * k, 1))
+    changes = _TABLES[fmt](spark, path).table_changes(0, 5)
+    got = {(r.k, r._change_type, r._commit_version) for r in changes.collect()}
+    assert got == {(k, "insert", k // 10) for k in range(60)}
+    # AQE's toString prints Final AND Initial plans — count one section
+    plan = (changes._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert plan.count("Scan parquet") == 1, plan[:2000]
