@@ -254,6 +254,125 @@ def main() -> int:
     # window; bench keeps timing them under their r1-comparable names
     queries = {**entrymod.extra_queries(), **entrymod.queries()}
 
+    warm_up(spark, sf_dir, cpus, queries)
+
+    # The shared host this runs on exhibits transient multi-second stalls
+    # (measured r5: the SAME query/plan at 0.7s and 21s across consecutive
+    # runs, 92% kernel time under a pure-userspace burn while they last).
+    # One retry for queries whose first run crosses RETRY_SEC filters those
+    # stalls out of the engine measurement: a genuinely slow query is slow
+    # twice and keeps its (min) time; a stalled one recovers. Retried names
+    # are listed in the JSON so the method is visible per run.
+    RETRY_SEC = 5.0
+    timings: dict[str, float] = {}
+    # retried: name -> [first_run_sec, second_run_sec]; both raw timings are
+    # kept so a reviewer can tell a host stall (t0 >> t1) from a genuinely
+    # slow query (t0 ~= t1) without re-running anything
+    retried: dict[str, list[float]] = {}
+
+    def _canary() -> float:
+        return round(min(canary_once(spark, sf_dir) for _ in range(3)), 4)
+
+    canary_first = _canary()
+    for name in HEADLINE:
+        fn = queries.get(name)
+        if fn is None:
+            continue
+        dt = run_once(spark, sf_dir, name, fn)
+        if dt > RETRY_SEC:
+            dt2 = run_once(spark, sf_dir, name, fn)
+            retried[name] = [round(dt, 3), round(dt2, 3)]
+            dt = min(dt, dt2)
+        timings[name] = round(dt, 3)
+
+    canary_last = _canary()
+    canary = round(min(canary_first, canary_last), 4)
+    total = round(sum(timings.values()), 3)
+    sf_num = float(sf) if sf.replace(".", "").isdigit() else sf
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total_sec",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "retried": retried,
+                "canary_sec": canary,
+                "canary_first_sec": canary_first,
+                "canary_last_sec": canary_last,
+                "sf": sf_num,
+            }
+        )
+    )
+    # The driver captures only the last ~2000 chars of output; the full line
+    # above exceeds that with ~79 per-query timings (the 79 names alone are
+    # 1562 bytes), so the totals were cut off in BENCH_r05 (parsed: null).
+    # Repeat a summary line LAST so the tail always contains a complete,
+    # parseable JSON object. r15 (VERDICT r14 #2a/#7): the summary line now
+    # carries per-query timings for PRIORITY_TIMINGS — a FIXED subset of the
+    # 38 most expensive queries (>=0.75 s at the r15 baseline, ~82% of total
+    # wall), all that fits in the capture window — so per-query
+    # round-over-round status and per-query core-count scaling are parseable
+    # from the final line. The set is fixed BY NAME (not re-picked per run)
+    # so consecutive rounds share keys; "total" stays for continuity.
+    summary_queries = {"total": total}
+    for name in PRIORITY_TIMINGS:
+        if name in timings:
+            summary_queries[name] = round(timings[name], 2)
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total_sec",
+                "value": total,
+                "unit": "sec",
+                "queries": summary_queries,
+                "n_queries": len(timings),
+                "retried": sorted(retried),
+                "canary_sec": canary,
+                "canary_first_sec": canary_first,
+                "canary_last_sec": canary_last,
+                "sf": sf_num,
+            },
+            separators=(",", ":"),
+        )
+    )
+    spark.stop()
+    return 0
+
+
+def run_once(spark, sf_dir: str, name: str, fn) -> float:
+    """Run one query the way the bench times it; returns its wall seconds."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    if name in COUNT_ONLY:
+        df.count()
+    else:
+        df.collect()
+    dt = time.perf_counter() - t0
+    # queries persist intermediates (LSH signatures, norms); drop them so
+    # successive timings are independent of cache/memory pressure
+    spark.catalog.clearCache()
+    return dt
+
+
+# Self-calibration canary (r9 judge ask #7): a FIXED tiny reference
+# query — filtered count over lineitem, the same plan every round —
+# timed first and last. Downstream comparisons divide by canary_sec to
+# normalize away window-to-window host drift (this machine's documented
+# kernel-time storms make raw totals move 1.3-2x between windows with
+# zero code change; see SCALE.md). Three reps each side, min taken, so
+# a single stall can't poison the calibration itself.
+def canary_once(spark, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .filter("l_quantity > 25").count()
+    )
+    return time.perf_counter() - t0
+
+
+def warm_up(spark, sf_dir: str, cpus: str, queries: dict) -> None:
+    """Everything the bench runs untimed before its first timed query."""
     # warm-up: JIT/codegen/file-index costs land here, not in query 1's time
     for t in ("orders", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
@@ -285,51 +404,6 @@ def main() -> int:
 
     _ivf8_index_dir(spark, sf_dir)
     spark.catalog.clearCache()
-
-    def run_once(name, fn) -> float:
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        if name in COUNT_ONLY:
-            df.count()
-        else:
-            df.collect()
-        dt = time.perf_counter() - t0
-        # queries persist intermediates (LSH signatures, norms); drop them so
-        # successive timings are independent of cache/memory pressure
-        spark.catalog.clearCache()
-        return dt
-
-    # The shared host this runs on exhibits transient multi-second stalls
-    # (measured r5: the SAME query/plan at 0.7s and 21s across consecutive
-    # runs, 92% kernel time under a pure-userspace burn while they last).
-    # One retry for queries whose first run crosses RETRY_SEC filters those
-    # stalls out of the engine measurement: a genuinely slow query is slow
-    # twice and keeps its (min) time; a stalled one recovers. Retried names
-    # are listed in the JSON so the method is visible per run.
-    RETRY_SEC = 5.0
-    timings: dict[str, float] = {}
-    # retried: name -> [first_run_sec, second_run_sec]; both raw timings are
-    # kept so a reviewer can tell a host stall (t0 >> t1) from a genuinely
-    # slow query (t0 ~= t1) without re-running anything
-    retried: dict[str, list[float]] = {}
-
-    # Self-calibration canary (r9 judge ask #7): a FIXED tiny reference
-    # query — filtered count over lineitem, the same plan every round —
-    # timed first and last. Downstream comparisons divide by canary_sec to
-    # normalize away window-to-window host drift (this machine's documented
-    # kernel-time storms make raw totals move 1.3-2x between windows with
-    # zero code change; see SCALE.md). Three reps each side, min taken, so
-    # a single stall can't poison the calibration itself.
-    def _canary_once() -> float:
-        t0 = time.perf_counter()
-        (
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-            .filter("l_quantity > 25").count()
-        )
-        return time.perf_counter() - t0
-
-    def _canary() -> float:
-        return round(min(_canary_once() for _ in range(3)), 4)
 
     # r13 (VERDICT r12 #6): stabilize to steady state BEFORE timing —
     # three consecutive rounds adjudicated the same early-window false
@@ -415,78 +489,12 @@ def main() -> int:
         _shutil.rmtree(_wu_root, ignore_errors=True)
     _first = next((n for n in HEADLINE if n in queries), None)
     if _first is not None:
-        run_once(_first, queries[_first])
+        run_once(spark, sf_dir, _first, queries[_first])
     _deadline = time.time() + 90
     for _ in range(80):
-        _canary_once()
+        canary_once(spark, sf_dir)
         if time.time() > _deadline:
             break
-
-    canary_first = _canary()
-    for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        dt = run_once(name, fn)
-        if dt > RETRY_SEC:
-            dt2 = run_once(name, fn)
-            retried[name] = [round(dt, 3), round(dt2, 3)]
-            dt = min(dt, dt2)
-        timings[name] = round(dt, 3)
-
-    canary_last = _canary()
-    canary = round(min(canary_first, canary_last), 4)
-    total = round(sum(timings.values()), 3)
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else sf
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "retried": retried,
-                "canary_sec": canary,
-                "canary_first_sec": canary_first,
-                "canary_last_sec": canary_last,
-                "sf": sf_num,
-            }
-        )
-    )
-    # The driver captures only the last ~2000 chars of output; the full line
-    # above exceeds that with ~79 per-query timings (the 79 names alone are
-    # 1562 bytes), so the totals were cut off in BENCH_r05 (parsed: null).
-    # Repeat a summary line LAST so the tail always contains a complete,
-    # parseable JSON object. r15 (VERDICT r14 #2a/#7): the summary line now
-    # carries per-query timings for PRIORITY_TIMINGS — a FIXED subset of the
-    # 38 most expensive queries (>=0.75 s at the r15 baseline, ~82% of total
-    # wall), all that fits in the capture window — so per-query
-    # round-over-round status and per-query core-count scaling are parseable
-    # from the final line. The set is fixed BY NAME (not re-picked per run)
-    # so consecutive rounds share keys; "total" stays for continuity.
-    summary_queries = {"total": total}
-    for name in PRIORITY_TIMINGS:
-        if name in timings:
-            summary_queries[name] = round(timings[name], 2)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": summary_queries,
-                "n_queries": len(timings),
-                "retried": sorted(retried),
-                "canary_sec": canary,
-                "canary_first_sec": canary_first,
-                "canary_last_sec": canary_last,
-                "sf": sf_num,
-            },
-            separators=(",", ":"),
-        )
-    )
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

@@ -4233,13 +4233,21 @@ class SnaplogTable:
         # An old tag makes the retained set non-contiguous; the CDC sweep
         # below keys off retained[0], which then conservatively KEEPS the
         # change data of the in-between versions too — never drops it.
-        tagged = set(self.snapshot(versions[-1]).refs.values()) & set(versions)
+        head = self.snapshot(versions[-1])
+        tagged = set(head.refs.values()) & set(versions)
         if tagged:
             retained = sorted(set(retained) | tagged)
-        removals: list[str] = []
+        # one replay per retained version serves the data, DV and bloom
+        # sweeps below (the head's is the one read for its tags)
         live: set[str] = set()
+        live_dvs: set[str] = set()
+        live_bloom: set[str] = set()
         for v in retained:
-            live.update(self.snapshot(v).file_paths())
+            snap = head if v == versions[-1] else self.snapshot(v)
+            live.update(snap.file_paths())
+            live_dvs.update(f.path for f in snap.dvs)
+            live_bloom.update(snap.bloom)
+        removals: list[str] = []
         deleted = 0
         age_cutoff = time.time() - min_file_age_hours * 3600.0
 
@@ -4265,9 +4273,6 @@ class SnaplogTable:
                     if name.endswith(".parquet") and rel not in live:
                         _rm(abs_p, rel)
         # deletion-vector files not referenced by any retained snapshot
-        live_dvs = set()
-        for v in retained:
-            live_dvs.update(f.path for f in self.snapshot(v).dvs)
         if os.path.isdir(self.dv_dir):
             for name in os.listdir(self.dv_dir):
                 rel = f"{DV_DIR}/{name}"
@@ -4298,9 +4303,6 @@ class SnaplogTable:
         # (checkpoint-consolidated + tail); sweep the rest — including
         # orphans staged by conflict-aborted commits
         if os.path.isdir(self.bloom_dir):
-            live_bloom: set = set()
-            for v in retained:
-                live_bloom.update(self.snapshot(v).bloom)
             for name in os.listdir(self.bloom_dir):
                 rel = f"{BLOOM_DIR}/{name}"
                 if name.endswith(".parquet") and rel not in live_bloom:

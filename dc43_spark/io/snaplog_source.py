@@ -300,6 +300,12 @@ class SnaplogCdcBatchReader(DataSourceReader):
         versions = self._table._versions()
         if not versions:
             raise FileNotFoundError(f"no snaplog table at {path}")
+        for opt in ("startingTimestamp", "endingTimestamp"):
+            if opt.lower() in options:
+                raise ValueError(
+                    f"snaplog batch readChangeFeed does not support {opt}; "
+                    "bound the range with startingVersion/endingVersion"
+                )
         sv = options.get("startingversion")
         ev = options.get("endingversion")
         self._start = int(sv) if sv is not None else versions[0]

@@ -49,6 +49,34 @@ def test_vacuum_retention_hours_keeps_young_versions(spark, tmp_path):
     assert t.read().count() == 3
 
 
+@pytest.mark.parametrize("keep", [1, 2])
+def test_vacuum_replays_each_retained_version_once(
+    spark, tmp_path, monkeypatch, keep
+):
+    """The data, deletion-vector and bloom sweeps share one
+    ``snapshot()`` replay per retained version, and the head's replay
+    also yields its tags: 4 replays for the default single version
+    before."""
+    t = SnaplogTable(spark, str(tmp_path / "t"), bloom_columns=["id"])
+    t.write(_df(spark, 0, 10))
+    t.write(_df(spark, 10, 20))
+    t.delete(where="id < 3", strategy="merge_on_read")
+    t.write(_df(spark, 0, 5), mode="overwrite")
+    calls = []
+    real = SnaplogTable.snapshot
+
+    def counted(self, *a, **kw):
+        calls.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(SnaplogTable, "snapshot", counted)
+    deleted = t.vacuum(keep_versions=keep)
+    assert len(calls) == keep
+    monkeypatch.setattr(SnaplogTable, "snapshot", real)
+    assert deleted == (3 if keep == 1 else 0)  # two data files and a DV
+    assert t.read().count() == 5
+
+
 def test_describe_detail(spark, tmp_path):
     t = SnaplogTable(spark, str(tmp_path / "t"), change_feed=True)
     df = spark.range(20).select(

@@ -3,6 +3,7 @@ with pushed-filter file pruning, time travel options, and the
 commit-offset streaming reader (plain + change feed)."""
 
 import os
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -319,6 +320,25 @@ def test_batch_cdc_validates_version_range(registered, tmp_path):
             reader = reader.option(k, v)
         with pytest.raises(Exception, match="change range"):
             reader.load(path).collect()
+
+
+@pytest.mark.parametrize("option", ["startingTimestamp", "endingTimestamp"])
+def test_batch_cdc_refuses_timestamp_bounds(registered, tmp_path, option):
+    """The batch change feed resolves only version bounds: a timestamp
+    bound is refused by name instead of silently reading every commit
+    (a start stamp at commit 2 of 3 used to return commits 0-2)."""
+    path = str(tmp_path / "t")
+    t = SnaplogTable(registered, path, change_feed=True)
+    for k in range(3):
+        t.write(registered.createDataFrame([(k, "a")], "k long, v string"))
+    stamp = datetime.fromtimestamp(t.history()[2].timestamp, timezone.utc)
+    reader = (
+        registered.read.format("snaplog")
+        .option("readChangeFeed", "true")
+        .option(option, stamp.isoformat())
+    )
+    with pytest.raises(Exception, match=f"{option}.*startingVersion"):
+        reader.load(path).collect()
 
 
 def test_batch_cdc_masks_dv_deleted_rows_on_overwrite(registered, tmp_path):

@@ -9,7 +9,9 @@ count). Since r13, no-DV adds/removes batch across the whole range into
 one plan per change type (Delta) / one scan per schema generation
 (snaplog), with commit stamps riding a broadcast identity/stamp join —
 so build time is flat-ish and the ladder should show near-constant
-build_df with count growing only with data volume.
+build_df with count growing only with data volume. Each rung also
+counts the ``Scan parquet`` nodes and broadcast joins of the frame's
+executed plan: an append-only range plans one of each at every depth.
 
 Usage: python tools/cdf_range_ladder.py [--commits 16,64,256,1024]
        [--rows-per-commit 1000] [--format delta|snaplog|both]
@@ -21,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -98,12 +101,18 @@ def main() -> int:
                     F.countDistinct("_commit_version")
                 ).collect()[0][0]
                 count_s = time.perf_counter() - t1
+                # AQE's toString prints Final AND Initial plans: count one
+                plan = (df._jdf.queryExecution().executedPlan().toString()
+                        .split("== Initial Plan ==")[0])
                 assert cnt == n * args.rows_per_commit and versions == n, (
                     fmt, n, cnt, versions)
                 rows_out.append({
                     "format": fmt, "commits": n,
                     "build_df_sec": round(build_s, 2),
                     "count_sec": round(count_s, 2),
+                    "parquet_scans": plan.count("Scan parquet"),
+                    "broadcast_joins": len(
+                        re.findall(r"Broadcast\w*Join", plan)),
                 })
             finally:
                 shutil.rmtree(root, ignore_errors=True)
@@ -130,11 +139,13 @@ def main() -> int:
 
         _measure("snaplog", make_snaplog)
 
-    print("| format | commits | build_df s | count s |")
-    print("|---|---|---|---|")
+    print("| format | commits | build_df s | count s | parquet scans "
+          "| broadcast joins |")
+    print("|---|---|---|---|---|---|")
     for r in rows_out:
         print(f"| {r['format']} | {r['commits']:,} | {r['build_df_sec']} "
-              f"| {r['count_sec']} |")
+              f"| {r['count_sec']} | {r['parquet_scans']} "
+              f"| {r['broadcast_joins']} |")
     print(json.dumps({"metric": "cdf_range_ladder", "rows": rows_out}))
     return 0
 

@@ -14,8 +14,8 @@ proportional file counts) in a temp dir and measures, per size:
    Expected: FLAT (cost follows the change window, not the table).
 
 Usage: python tools/snaplog_ladder.py [--scales 1,4,16] [--reps 2]
-Markdown table to stdout, one JSON line at the end (tools/microbench
-noise caveat applies: reps take the MIN; run on an idle host).
+Markdown table to stdout, one JSON line at the end (the host is noisy:
+reps take the MIN; run on an idle host).
 """
 
 from __future__ import annotations
