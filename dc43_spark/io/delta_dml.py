@@ -23,8 +23,9 @@ Two physical strategies, matching delta-spark's own split:
   Delta reader can keep reading them): touched files are rewritten
   without their deleted rows; untouched files carry over by reference.
 
-MERGE row semantics, the fate joins and the change rows come from
-io/mergecore.py (``outer_join_merge`` remains the oracle in tests); a
+MERGE is io/mergecore.py's ``tagged_join`` (delta-spark's shape: the
+join type follows the clauses): the deletion vectors, new rows and
+change rows are filters of that one persisted, fate-tagged frame. A
 by-source clause disables source-key file pruning (any file can hold
 such rows). The source must be key-unique (SQL MERGE refuses multiple
 matches).
@@ -76,14 +77,14 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from dc43_spark.localdf import local_df
 from dc43_spark.io.mergecore import (
-    FateFrames,
+    FATE,
     MergePlan,
     change_rows,
-    fate_frames,
-    fate_rows,
     materialized_source,
+    post_images,
     require_unique_merge_keys,
     source_key_stats,
+    tagged_join,
 )
 from dc43_spark.io.tablecore import (
     LinkCommitClaimer,
@@ -939,8 +940,8 @@ def delta_merge(
     # the duplicate-source-key check fuses into _merge_candidate_files'
     # single source pass (first attempt only; retries reuse the
     # verdict). A by-source clause skips file pruning, so there is no
-    # envelope probe — the check rides the fate-count action instead
-    # (one extra union leg over the materialized source, not a scan).
+    # envelope probe — the check rides the fate-count pass instead (one
+    # extra union leg over the materialized source, not a scan).
     check_dups_in_probe = check_source_keys and not plan.by_source
     check_dups_in_count = check_source_keys and bool(plan.by_source)
 
@@ -1134,15 +1135,15 @@ def delta_merge(
             raise DeltaWriteError(f"merge keys not in schema: {bad_keys}")
 
         with materialized_source(src) as src:
-            frames: list = []
+            fates = None
             try:
                 # merge file pruning (delta-spark's shape): only files whose
                 # stats envelope intersects the source's key ranges can
-                # match — pruned files carry over untouched, and the insert
-                # anti-join over the pruned lineage stays exact (see helper
-                # docstring). A by-source clause disables pruning: its rows
-                # are target rows WITHOUT a source match, which any file
-                # can hold.
+                # match — pruned files carry over untouched, and the join's
+                # unmatched source rows over the pruned lineage stay exact
+                # (see helper docstring). A by-source clause disables
+                # pruning: its rows are target rows WITHOUT a source match,
+                # which any file can hold.
                 if not plan.by_source:
                     candidates = _merge_candidate_files(
                         src, snap, keys, check_unique=check_dups_in_probe
@@ -1156,7 +1157,7 @@ def delta_merge(
                 )
                 lineage = _live_lineage(t, snap, files=candidates, row_ids=rt_mat)
                 cdf_on = _cdf_enabled(meta)
-                fates = fate_frames(
+                fates = tagged_join(
                     lineage, src, keys, plan,
                     cols=data_cols,
                     types=types,
@@ -1169,66 +1170,47 @@ def delta_merge(
                     keep_target_cols=missing if merge_schema else (),
                     target_cols=table_cols,
                 )
-                inserts = fates.inserts
-                for n, sp in sorted(ident_alloc.items()):
+                if ident_alloc:
                     # start + k*step strictly beyond the pinned high water
                     # mark (monotonically_increasing_id keeps allocation
                     # distributed; gaps are protocol-legal). A concurrent
                     # commit raises _DmlConflict at claim time and the
                     # retry reallocates under the new mark.
-                    base = (
-                        sp["hwm"] + sp["step"]
-                        if sp["hwm"] is not None
-                        else sp["start"]
-                    )
-                    inserts = inserts.withColumn(
-                        n,
-                        (
-                            F.lit(base)
+                    fresh = F.col(FATE) == "insert"
+                    fates = fates.withColumns({
+                        f"_n_{n}": F.when(fresh, (
+                            F.lit(sp["start"] if sp["hwm"] is None
+                                  else sp["hwm"] + sp["step"])
                             + F.lit(sp["step"]) * F.monotonically_increasing_id()
-                        ).cast(types[n]),
-                    )
+                        ).cast(types[n])).otherwise(F.col(f"_n_{n}"))
+                        for n, sp in sorted(ident_alloc.items())
+                    })
                 # persist, not localCheckpoint: spillable/evictable executor
                 # storage (MEMORY_AND_DISK) with lineage kept — blocks lost
                 # to executor churn recompute from the PINNED snapshot scan,
                 # and a full-table merge never hard-materializes 2x-width
                 # rows the way an eager localCheckpoint did (VERDICT r10 #4)
-                touch, bs, inserts = (
-                    f.persist(StorageLevel.MEMORY_AND_DISK) if f is not None
-                    else None
-                    for f in (fates.matched, fates.by_source, inserts)
-                )
-                frames = [f for f in (touch, bs, inserts) if f is not None]
-                if not frames:  # every clause kind is empty
-                    return None
+                fates = fates.persist(StorageLevel.MEMORY_AND_DISK)
 
-                # ONE counting job for all persisted frames (a tagged
-                # union-count): each leg's scan materializes its cache, so
-                # this replaces separate count() jobs — at local scale that
-                # is 3x job overhead, at cluster scale 3 job launches over
-                # the same cached bytes (guide §2.4: fewer actions)
-                legs = [
-                    f.select(F.lit(i).alias("_dc43_leg"))
-                    for i, f in enumerate((touch, bs, inserts))
-                    if f is not None
-                ]
+                # ONE counting pass grouped by fate materializes the cache
+                # every later stage reads. AQE makes each query stage a job:
+                # 8 in the sql_merge_orders gate, 5 in delta_merge_orders
+                # (sf0.01, local[4], tools/job_profile.py), where three
+                # separately persisted fate frames took 14 and 8.
+                fate_col = fates.select(FATE)
                 if check_dups_in_count:
                     # by-source merges have no pruning-envelope probe to
-                    # fuse the duplicate-source-key check into: ride this
-                    # same counting job as one extra leg over the
-                    # materialized source — one row per duplicated key group
-                    legs.append(
+                    # fuse the duplicate-source-key check into: it rides
+                    # this same pass over the materialized source — one
+                    # row per duplicated key group
+                    fate_col = fate_col.unionAll(
                         src.groupBy(*[F.col(k) for k in keys])
                         .count()
                         .filter(F.col("count") > 1)
-                        .select(F.lit(3).alias("_dc43_leg"))
+                        .select(F.lit("dup").alias(FATE))
                     )
-                leg_counts = {
-                    r["_dc43_leg"]: r["count"]
-                    for r in functools.reduce(DataFrame.unionAll, legs)
-                    .groupBy("_dc43_leg").count().collect()
-                }
-                if leg_counts.get(3, 0):
+                counts = dict(fate_col.groupBy(FATE).count().collect())
+                if counts.get("dup"):
                     # re-probe the (cached) source only on the failure
                     # path, to name an offending key in the error
                     require_unique_merge_keys(src, keys)
@@ -1237,64 +1219,45 @@ def delta_merge(
                         "ambiguous under multiple source matches"
                     )
                 check_dups_in_count = False  # retries reuse the verdict
-                n_touch, n_bs, n_ins = (leg_counts.get(i, 0) for i in range(3))
-                if n_touch == 0 and n_bs == 0 and n_ins == 0:
+                n_del, n_upd, n_ins = (
+                    counts.get(f, 0) for f in ("delete", "update", "insert")
+                )
+                if not (n_del or n_upd or n_ins):
                     return None
 
-                def _regen(frame: DataFrame) -> DataFrame:
+                def _regen(rows: DataFrame) -> DataFrame:
                     # map-form rows mix target/source values: recompute
                     # generated columns from the final row (delta-spark's
-                    # rule); *All forms already carry source-side computed
-                    # values. Extra (materialized row-id) columns ride
-                    # through untouched.
-                    extras = [
-                        c for c in frame.columns
-                        if c not in data_cols and c not in gen
-                    ]
-                    out, _ = _apply_generated_columns(frame.drop(*gen), gen)
-                    return out.select(*data_cols, *extras)
+                    # rule); insertAll rows keep their source-side values,
+                    # which the rules below check
+                    redo = F.lit(True) if plan.insert_maps else F.col(FATE) != "insert"
+                    return rows.withColumns({
+                        n: F.when(redo, F.expr(e)).otherwise(F.col(n))
+                        for n, e in gen.items()
+                    })
 
                 regen = _regen if gen and plan.dict_clauses else None
-                new_parts = []
-                for frame, updates in (
-                    (touch, plan.upd_form and n_touch),
-                    (bs, plan.bs_upd_form and n_bs),
-                ):
-                    if updates:
-                        post = fate_rows(
-                            frame, "update", "_n_", data_cols,
-                            *([f"`{_RTID}` AS `{mat_id}`"] if mat_id else []),
-                        )
-                        new_parts.append(regen(post) if regen else post)
-                if inserts is not None:
-                    new_parts.append(
-                        regen(inserts) if regen and plan.insert_maps else inserts
-                    )
                 new_rows = None
-                if new_parts:
+                if n_upd or n_ins:
                     # inserts carry no materialized row id (NULL -> the
                     # new file's fresh baseRowId + index)
-                    new_rows = functools.reduce(
-                        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                        new_parts,
+                    new_rows = post_images(
+                        fates, data_cols,
+                        *([f"`{_RTID}` AS `{mat_id}`"]
+                          if mat_id and plan.updates else []),
                     )
+                    if regen is not None:
+                        new_rows = regen(new_rows)
+                    new_rows = new_rows.drop(FATE)
                     _enforce_delta_rules(
                         new_rows, {**_delta_row_rules(meta, snap.schema), **gen_rules}
                     )
                 # every fired matched or by-source row removes its old
                 # version (update-fate rows re-land via new_rows)
-                del_parts = [
-                    f.select(_REL, _POS) for f, n in ((touch, n_touch), (bs, n_bs)) if n
-                ]
-                del_rows = (
-                    functools.reduce(DataFrame.unionByName, del_parts)
-                    if del_parts else None
-                )
-                cdf = None
-                if cdf_on:
-                    cdf = change_rows(
-                        FateFrames(touch, bs, inserts), plan, data_cols, regen
-                    )
+                del_rows = fates.filter(
+                    F.col(FATE).isin("delete", "update")
+                ).select(_REL, _POS) if n_del or n_upd else None
+                cdf = change_rows(fates, plan, data_cols, regen) if cdf_on else None
 
                 matched_params = []
                 for cl in plan.matched:
@@ -1322,11 +1285,11 @@ def delta_merge(
             finally:
                 # release on EVERY exit — success, conflict retry, or a
                 # non-conflict failure (constraint violation, protocol
-                # error): persisted fate frames must never outlive the op
-                # (or the retry iteration); the source's context manager
-                # releases it
-                for f in frames:
-                    f.unpersist()
+                # error): the persisted fate frame must never outlive the
+                # op (or the retry iteration); the source's context
+                # manager releases it
+                if fates is not None:
+                    fates.unpersist()
     raise DeltaProtocolError(
         f"MERGE on {path} kept conflicting after {max_retries} attempts"
     )

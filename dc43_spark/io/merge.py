@@ -18,16 +18,17 @@ Three physical strategies:
   only those are rewritten, everything else carries over by reference
   (io/snaplog.py). Used when the target format is ``snaplog`` or the
   target directory already is a snaplog table.
-- **parquet fallback** (plain directories): a full-outer join rewrite —
-  read target, join on the key columns, matched rows take the source
-  values, unmatched keep/insert — written atomically via a temp directory
-  swap. Cost shape: one shuffle join + full rewrite of the target;
-  correct, but at scale prefer a transactional format above.
+- **parquet fallback** (plain directories): a join rewrite — read
+  target, join on the key columns (target left outer source, full outer
+  under an insert clause), matched rows take the source values,
+  unmatched keep/insert — written atomically via a temp directory swap.
+  Cost shape: one shuffle join + full rewrite of the target; correct,
+  but at scale prefer a transactional format above.
 
-The clause vocabulary, the fate joins, the change rows, the outer-join
-rewrite and the missing-target initial write live in io/mergecore.py,
-shared by every engine but delta-spark's; its public names are
-re-exported here.
+The clause vocabulary, the tagged merge join and its projections (the
+merged rows, the change rows) and the missing-target initial write live
+in io/mergecore.py, shared by every engine but delta-spark's; its public
+names are re-exported here.
 """
 
 from __future__ import annotations
@@ -47,14 +48,12 @@ from dc43_spark.io.mergecore import (  # noqa: F401 (public names re-exported)
     MergePlan,
     any_clause_ok,
     clause_gate,
-    clause_value,
-    first_fate,
     initial_write,
-    insert_only_frame,
+    merged_rows,
     normalize_merge_clauses,
-    outer_join_merge,
     require_unique_merge_keys,
     source_key_stats,
+    tagged_join,
     validate_merge_clauses,
 )
 from dc43_spark.io.read import ValidationBlockedError
@@ -259,7 +258,10 @@ def merge_with_contract(
     target = (
         spark.read.table(table) if table else spark.read.format(fmt or "parquet").load(path)
     )
-    merged = outer_join_merge(target, aligned, keys, **plan.clauses)
+    merged = merged_rows(
+        tagged_join(target, aligned, keys, plan, keep_untouched=True),
+        target.columns,
+    )
     if table:
         # shuffle result to a temp view then overwrite (Spark can't overwrite
         # a table it is reading from without a barrier)

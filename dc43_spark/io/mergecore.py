@@ -5,19 +5,23 @@ fallback of ``merge_with_contract`` (io/merge.py).
 - **Clauses.** :func:`normalize_merge_clauses` turns the legacy kwargs
   or ordered clause lists into first-match-wins :class:`MergeClause`
   lists; :class:`MergePlan` holds them with the flags engines branch on.
-- **Frames.** :func:`fate_frames` builds the matched, by-source and
-  insert joins; :func:`change_rows` turns them into change-feed rows;
-  :func:`outer_join_merge` is MERGE as one full-outer join.
+- **The join.** :func:`tagged_join` is MERGE as ONE join whose type
+  follows the clause set, each row tagged with its fate (``keep`` |
+  ``delete`` | ``update`` | ``insert``); :func:`merged_rows`,
+  :func:`post_images` and :func:`change_rows` are projections of it.
 - **Glue.** :func:`source_key_stats`, :func:`materialized_source` and
   :func:`initial_write` (the missing-target path).
 
 A format keeps its own physical strategy: which target rows enter the
-joins, how deleted rows disappear and how the commit is written.
+join, how deleted rows disappear and how the commit is written.
+Copy-on-write formats (snaplog, the parquet fallback) keep the
+untouched target rows they pass in and write ``merged_rows``; the Delta
+engine keeps only the touched ones and writes deletion vectors (or
+rewrites) for them plus ``post_images``.
 """
 
 from __future__ import annotations
 
-import functools
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Optional
@@ -286,57 +290,15 @@ def any_clause_ok(clauses):
     return out
 
 
-def _gated(clauses, guard=None) -> list:
-    """``(clause, gate)`` pairs, each gate AND-ed with ``guard``. Every
-    Column a merge builds is a round trip to the JVM, so a gate is built
-    once per clause and shared by all the columns' expressions."""
-    return [
-        (cl, clause_gate(cl) if guard is None else guard & clause_gate(cl))
-        for cl in clauses
-    ]
-
-
-def first_fate(clauses, action: str):
-    """True iff the FIRST clause (user order) whose condition passes has
-    ``action`` — the row's fate under first-match-wins."""
-    return _first_fate(_gated(clauses), action)
-
-
-def _first_fate(gated, action: str):
-    chain = None
-    for cl, cond in gated:
-        hit = F.lit(cl.action == action)
-        chain = F.when(cond, hit) if chain is None else chain.when(cond, hit)
-    if chain is None:
-        return F.lit(False)
-    return F.coalesce(chain, F.lit(False))
-
-
-def _assigned(expr: str, tgt_type):
-    e = F.expr(expr)
-    return e.cast(tgt_type) if tgt_type is not None else e
-
-
-def clause_value(
-    clauses, kind: str, c: str, types: dict,
-    keep_t=(), guard=None, otherwise=None,
-):
+def _clause_value(gated, kind: str, c: str, types: dict, keep_t, otherwise):
     """Column ``c``'s output value under first-match-wins: the first
-    passing clause's value, else ``otherwise`` (default ``t.c``). A SET
-    map leaves unset columns at the target's value, a VALUES map leaves
-    unlisted ones NULL; updateAll takes the source side except for the
-    ``keep_t`` columns (schema evolution null-filled them in the
-    source); a delete branch is a NULL placeholder that only SHADOWS
-    later clauses (the caller drops its rows). Expressions build only
-    for clauses that exist — a dead branch's value would still need to
-    resolve. ``guard`` (optional Column) pre-conditions every branch."""
-    return _clause_value(
-        _gated(clauses, guard), kind, c, types, keep_t, otherwise
-    )
-
-
-def _clause_value(gated, kind: str, c: str, types: dict, keep_t=(), otherwise=None):
-    fallback = otherwise if otherwise is not None else F.col(f"t.`{c}`")
+    passing clause's value, else ``otherwise``. A SET map leaves unset
+    columns at the target's value, a VALUES map leaves unlisted ones
+    NULL; updateAll takes the source side except for the ``keep_t``
+    columns (schema evolution null-filled them in the source); a delete
+    branch is a NULL placeholder that only SHADOWS later clauses (its
+    row is dropped). Expressions build only for clauses that exist — a
+    dead branch's value would still need to resolve."""
     tgt_type = types.get(c)
     chain = None
     for cl, cond in gated:
@@ -344,7 +306,8 @@ def _clause_value(gated, kind: str, c: str, types: dict, keep_t=(), otherwise=No
         if cl.action == "delete":
             val = F.lit(None)
         elif amap is not None and c in amap:
-            val = _assigned(amap[c], tgt_type)
+            val = F.expr(amap[c])
+            val = val.cast(tgt_type) if tgt_type is not None else val
         elif amap is not None and kind == "not_matched":
             val = F.lit(None).cast(tgt_type) if tgt_type is not None else F.lit(None)
         elif amap is not None or (kind != "not_matched" and c in keep_t):
@@ -353,39 +316,8 @@ def _clause_value(gated, kind: str, c: str, types: dict, keep_t=(), otherwise=No
             val = F.col(f"s.`{c}`")
         chain = F.when(cond, val) if chain is None else chain.when(cond, val)
     if chain is None:
-        return fallback
-    return chain.otherwise(fallback)
-
-
-def _insert_values(s: DataFrame, not_matched, cols, types: dict) -> DataFrame:
-    """Table-shaped inserted rows from the source rows ``s`` (alias
-    ``s``, already filtered to rows some insert clause accepts)."""
-    gated = _gated(not_matched)
-    return s.select(*[
-        _clause_value(
-            gated, "not_matched", c, types,
-            otherwise=F.lit(None).cast(types[c]) if c in types else F.lit(None),
-        ).alias(c)
-        for c in cols
-    ])
-
-
-def insert_only_frame(source: DataFrame, not_matched, cols=None, types=None):
-    """The rows a MERGE inserts when NOTHING can match (absent/empty
-    target, or no candidate file held a key): first-match-wins across the
-    not-matched clauses. ``cols``/``types`` (the table shape) are
-    required when any clause carries a VALUES map — unlisted columns
-    insert NULL at the TABLE's types."""
-    s = source.alias("s").filter(any_clause_ok(not_matched))
-    if all(cl.assignments is None for cl in not_matched):
-        return s
-    if cols is None:
-        raise ValueError(
-            "column-level INSERT VALUES needs an existing table (its "
-            "schema defines the unlisted-NULL columns); create the table "
-            "first"
-        )
-    return _insert_values(s, not_matched, cols, types or {})
+        return otherwise
+    return chain.otherwise(otherwise)
 
 
 # ---------------------------------------------------------------- plan
@@ -429,24 +361,18 @@ class MergePlan:
         )
 
     @property
-    def all_insert(self) -> bool:  # some insert clause is insertAll
-        return any(cl.assignments is None for cl in self.not_matched)
-
-    @property
     def all_forms(self) -> bool:  # the source must carry the table's columns
-        return self.all_update or self.all_insert
+        return self.all_update or any(
+            cl.assignments is None for cl in self.not_matched  # insertAll
+        )
 
     @property
     def insert_maps(self) -> bool:  # some insert clause has a VALUES map
         return any(cl.assignments is not None for cl in self.not_matched)
 
     @property
-    def upd_form(self) -> bool:
-        return any(cl.action == "update" for cl in self.matched)
-
-    @property
-    def bs_upd_form(self) -> bool:
-        return any(cl.action == "update" for cl in self.by_source)
+    def updates(self) -> bool:  # some matched or by-source clause updates
+        return any(cl.action == "update" for cl in (*self.matched, *self.by_source))
 
     def refuse_generated(self, generated, error=ValueError) -> None:
         """A SET/VALUES map may not write a generated column: its value
@@ -466,213 +392,173 @@ class MergePlan:
                     )
 
 
-# ---------------------------------------------------------------- frames
+# ---------------------------------------------------------------- the join
+
+#: Each row's fate in a :func:`tagged_join` frame: ``keep`` | ``delete`` |
+#: ``update`` | ``insert``.
+FATE = "_dc43_fate"
+_TP, _SP = "_dc43_tp", "_dc43_sp"
 
 
-@dataclass(frozen=True)
-class FateFrames:
-    """The row-level inputs of one MERGE. ``matched`` and ``by_source``
-    hold the target rows some clause acts on, with the boolean fate
-    flags, the carried columns, pre-images ``_t_<c>`` (when asked for)
-    and post-images ``_n_<c>`` (when the kind updates); ``inserts`` is
-    table-shaped. A frame is None when its kind has no clause."""
-
-    matched: Optional[DataFrame]
-    by_source: Optional[DataFrame]
-    inserts: Optional[DataFrame]
-
-
-def fate_frames(
-    target: DataFrame,
+def tagged_join(
+    target: Optional[DataFrame],
     source: DataFrame,
     keys,
     plan: MergePlan,
     *,
-    cols,
-    types: dict,
+    cols=None,
+    types: Optional[dict] = None,
     carry=(),
     pre_images: bool = False,
     keep_target_cols=(),
     target_cols=None,
-) -> FateFrames:
-    """The three joins of a row-level MERGE, null-safe on ``keys``:
-    target rows matched by the source (inner), target rows no source row
-    matches (anti, by-source clauses only) and source rows no target row
-    matches (anti, insert clauses only). ``cols``/``types`` are the
-    output table shape; ``target_cols`` (default: all of the target's)
-    are the ones the target carries — the rest (evolved columns) read
-    as typed NULL. ``carry`` target columns ride along unchanged (e.g.
-    a row's file and position). Frames are lazy; the caller decides
-    what to persist."""
-    present = set(target.columns if target_cols is None else target_cols)
+    keep_untouched: bool = False,
+) -> DataFrame:
+    """MERGE as ONE join, null-safe on ``keys``, each row tagged in
+    :data:`FATE` by first-match-wins per clause kind: a key in both sides
+    takes its first passing matched clause, a key only in the target its
+    first by-source clause (none: ``keep``), a key only in the source is
+    an ``insert`` iff some insert clause passes. NULL conditions never
+    fire. Callers validate source-key uniqueness first.
+
+    The join type follows the plan: unmatched target rows enter for a
+    by-source clause or ``keep_untouched`` (copy-on-write formats
+    rewrite every target row they pass in), unmatched source rows for an
+    insert clause — full outer for both, left or right outer for one,
+    inner for neither. An insert-only plan that keeps no target row is a
+    source left-anti join; ``target=None`` reads the source alone.
+
+    Columns: ``carry`` target columns (none without a target side),
+    ``FATE``, pre-images ``_t_<c>`` when ``pre_images`` and post-images
+    ``_n_<c>`` when a clause writes or ``keep_untouched``.
+    ``cols``/``types`` are the output shape (default: the target's); the
+    target carries ``target_cols`` (default: all), the rest read as typed
+    NULL. ``keep_target_cols``: columns schema evolution null-filled in
+    the SOURCE — updates keep the target's value there (Delta's
+    updateAll-under-evolution rule). The frame is lazy."""
+    cols = target.columns if cols is None else cols
+    types = types or {f.name: f.dataType for f in target.schema.fields}
+    want_t = keep_untouched or bool(plan.by_source)
+    want_s = bool(plan.not_matched)
+    joined = target is not None and (want_t or bool(plan.matched))
+    yes, no = F.lit(True), F.lit(False)
+    has_t = has_s = yes
+    on = [F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`")) for k in keys]
+    s, present = source.alias("s"), ()
+    if not joined:  # insert-only: no target row survives the join
+        has_t, rows = no, s if target is None else s.join(
+            target.select(*keys).alias("t"), on, "left_anti"
+        )
+    else:
+        present = set(target.columns if target_cols is None else target_cols)
+        # explicit presence flags, NOT key-isNotNull probes: the join
+        # matches with eqNullSafe, so a NULL key is a legitimate value
+        t = target
+        if want_s:
+            t, has_t = t.withColumn(_TP, yes), F.coalesce(F.col(f"t.{_TP}"), no)
+        if want_t:
+            s, has_s = s.withColumn(_SP, yes), F.coalesce(F.col(f"s.{_SP}"), no)
+        how = ("full" if want_s else "left") if want_t else (
+            "right" if want_s else "inner"
+        )
+        rows = t.alias("t").join(s.alias("s"), on, how)
 
     def t_side(c):
         if c in present:
             return F.col(f"t.`{c}`")
         return F.lit(None).cast(types[c])
 
-    t, s = target.alias("t"), source.alias("s")
-    cond = [F.col(f"t.`{k}`").eqNullSafe(F.col(f"s.`{k}`")) for k in keys]
-
-    def fates(rows: DataFrame, clauses, kind: str, keep_t=()):
-        # a row's fate is its FIRST passing clause's action (user order);
-        # rows no clause fires on stay untouched and are dropped here
-        gated = _gated(clauses)
-        sel = [
-            *[F.col(f"t.`{c}`").alias(c) for c in carry],
-            _first_fate(gated, "delete").alias(_DEL),
-            _first_fate(gated, "update").alias(_UPD),
-        ]
-        if pre_images:
-            sel += [t_side(c).alias(f"_t_{c}") for c in cols]
-        if any(cl.action == "update" for cl in clauses):
-            sel += [
-                _clause_value(
-                    gated, kind, c, types, keep_t, otherwise=t_side(c)
-                ).alias(f"_n_{c}")
-                for c in cols
-            ]
-        return rows.select(*sel).filter(F.col(_DEL) | F.col(_UPD))
-
-    matched = by_source = inserts = None
-    if plan.matched:
-        matched = fates(
-            t.join(s, cond, "inner"), plan.matched, "matched",
-            keep_t=keep_target_cols,
+    # (clause, gate) pairs per kind, each gate built ONCE and shared by
+    # every column's expression (each Column is a round trip to the JVM).
+    # The kinds' guards are exclusive, so one chain over all of them keeps
+    # each kind's first-match-wins order; without a target side only the
+    # insert clauses can fire (the others' values would not resolve).
+    kinds = [
+        (kind, [
+            (cl, guard & clause_gate(cl))
+            for cl in (clauses if joined or kind == "not_matched" else ())
+        ])
+        for kind, clauses, guard in (
+            ("matched", plan.matched, has_t & has_s),
+            ("not_matched_by_source", plan.by_source, has_t & ~has_s),
+            ("not_matched", plan.not_matched, ~has_t & has_s),
         )
-    if plan.by_source:
-        unmatched = t.join(s.select(*keys), cond, "left_anti").alias("t")
-        by_source = fates(unmatched, plan.by_source, "not_matched_by_source")
-    if plan.not_matched:
-        anti = s.join(t.select(*keys).alias("t"), cond, "left_anti").alias("s")
-        inserts = _insert_values(
-            anti.filter(any_clause_ok(plan.not_matched)),
-            plan.not_matched, cols, types,
-        )
-    return FateFrames(matched, by_source, inserts)
+    ]
+    fate = None
+    for _, gated in kinds:
+        for cl, cond in gated:
+            act = F.lit(cl.action)
+            fate = F.when(cond, act) if fate is None else fate.when(cond, act)
+    keep = F.lit("keep")
+    fate = F.when(has_t, keep) if fate is None else fate.when(has_t, keep)
+
+    sel = [F.col(f"t.`{c}`").alias(c) for c in carry if joined]
+    sel.append(fate.alias(FATE))
+    if pre_images:
+        sel += [t_side(c).alias(f"_t_{c}") for c in cols]
+    if keep_untouched or plan.not_matched or plan.updates:
+
+        def post(c):
+            val = t_side(c)
+            for kind, gated in kinds:
+                val = _clause_value(gated, kind, c, types, keep_target_cols, val)
+            return val.alias(f"_n_{c}")
+
+        sel += [post(c) for c in cols]
+    out = rows.select(*sel)
+    if keep_untouched:
+        return out.filter(F.col(FATE).isNotNull())
+    return out.filter(F.col(FATE) != "keep")
 
 
-def fate_rows(
-    frame: DataFrame, fate: str, image: str, cols, *extra: str
-) -> DataFrame:
+def _image(frame: DataFrame, fates, image: str, cols, *extra: str) -> DataFrame:
     """The ``cols``-shaped ``image`` (``"_t_"`` pre or ``"_n_"`` post) of
-    the rows of a fate frame whose fate is ``fate`` (delete|update),
-    plus the ``extra`` SQL select expressions. One SQL projection, not a
-    Column per field: each Column is a round trip to the JVM."""
-    flag = _DEL if fate == "delete" else _UPD
-    return frame.filter(F.col(flag)).selectExpr(
+    the rows whose fate is in ``fates``, plus ``extra`` SQL expressions —
+    one SQL projection, not a Column (a JVM round trip) per field."""
+    return frame.filter(F.col(FATE).isin(*fates)).selectExpr(
         *[f"`{image}{c}` AS `{c}`" for c in cols], *extra
     )
 
 
+def merged_rows(frame: DataFrame, cols) -> DataFrame:
+    """The MERGE's resulting rows: the post-images of a
+    ``keep_untouched`` tagged frame's rows that are not deleted."""
+    return _image(frame, ("keep", "update", "insert"), "_n_", cols)
+
+
+def post_images(frame: DataFrame, cols, *extra: str) -> DataFrame:
+    """The rows a MERGE writes anew: update post-images and inserts,
+    ``cols`` plus ``FATE`` plus the ``extra`` SQL select expressions."""
+    return _image(frame, ("update", "insert"), "_n_", cols, FATE, *extra)
+
+
 def change_rows(
-    frames: FateFrames,
+    frame: DataFrame,
     plan: MergePlan,
     cols,
     regen: Optional[Callable[[DataFrame], DataFrame]] = None,
 ) -> DataFrame:
-    """The MERGE's row-level change rows in Delta CDF's vocabulary
-    (delete / update_preimage / update_postimage / insert), ``cols``
-    plus ``_change_type``. The fate frames must carry pre-images.
-    ``regen`` finalizes post-images, and inserts when an insert clause
-    carries a VALUES map (e.g. recomputing generated columns from the
-    final row). Only the actions the plan holds emit a union leg."""
-
-    def tag(change: str) -> str:
-        return f"'{change}' AS {CHANGE_TYPE}"
-
-    def tagged(df: DataFrame, change: str) -> DataFrame:
-        return df.selectExpr(*[f"`{c}`" for c in cols], tag(change))
-
-    parts = []
-    for frame, clauses in (
-        (frames.matched, plan.matched), (frames.by_source, plan.by_source)
-    ):
-        if frame is None:
-            continue
-        actions = {cl.action for cl in clauses}
-        if "delete" in actions:
-            parts.append(fate_rows(frame, "delete", "_t_", cols, tag("delete")))
-        if "update" in actions:
-            parts.append(
-                fate_rows(frame, "update", "_t_", cols, tag("update_preimage"))
-            )
-            if regen is None:
-                post = fate_rows(
-                    frame, "update", "_n_", cols, tag("update_postimage")
-                )
-            else:
-                post = tagged(
-                    regen(fate_rows(frame, "update", "_n_", cols)),
-                    "update_postimage",
-                )
-            parts.append(post)
-    if frames.inserts is not None:
-        inserts = frames.inserts
-        if regen is not None and plan.insert_maps:
-            inserts = regen(inserts)
-        parts.append(tagged(inserts, "insert"))
-    return functools.reduce(DataFrame.unionByName, parts)
-
-
-def outer_join_merge(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    *,
-    keep_target_cols: tuple = (),
-    **clauses,
-) -> DataFrame:
-    """MERGE semantics as one full-outer join (``clauses``: the
-    ``normalize_merge_clauses`` kwargs). Callers must validate
-    source-key uniqueness (``require_unique_merge_keys``) first.
-
-    First-match-wins per kind: a key in both sides takes its first
-    passing matched clause (delete drops it, update applies its value,
-    none leaves it unchanged); a key only in the target its first
-    by-source clause (none keeps it); a key only in the source is
-    inserted iff some insert clause passes. NULL conditions never fire.
-
-    ``keep_target_cols``: columns the SOURCE genuinely lacks (schema
-    evolution null-filled them) — updates retain the target's value
-    there, Delta's updateAll-under-evolution rule, while inserts still
-    take the source-side NULL.
-    """
-    plan = MergePlan.of(**clauses)
-    types = {f.name: f.dataType for f in target.schema.fields}
-    # Explicit presence flags, NOT key-isNotNull probes: the join matches
-    # with eqNullSafe, so a NULL key is a legitimate value — a target row
-    # with key NULL must read as "present" or merges silently drop it
-    # (caught by the IVM recompute oracle on a NULL group key).
-    t = target.withColumn("_t_present", F.lit(True)).alias("t")
-    s = source.withColumn("_s_present", F.lit(True)).alias("s")
-    joined = t.join(
-        s, on=[F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-        how="full_outer",
+    """The MERGE's row-level change rows in Delta CDF's vocabulary,
+    ``cols`` plus ``_change_type``, from a tagged frame with pre-images:
+    one leg of delete and update pre-images, one of update post-images
+    and inserts. ``regen`` finalizes the second leg (e.g. recomputing
+    generated columns from the final row); it sees ``FATE``. A leg the
+    plan's actions cannot fill is left out (a plan without clauses
+    keeps the empty first leg)."""
+    pre = _image(
+        frame, ("delete", "update"), "_t_", cols,
+        f"IF({FATE} = 'delete', 'delete', 'update_preimage') AS {CHANGE_TYPE}",
     )
-    has_t = F.coalesce(F.col("t._t_present"), F.lit(False))
-    has_s = F.coalesce(F.col("s._s_present"), F.lit(False))
-    m_guard, bs_guard, ins_guard = has_t & has_s, has_t & ~has_s, ~has_t & has_s
-    keep_row = (
-        (m_guard & ~first_fate(plan.matched, "delete"))
-        | (bs_guard & ~first_fate(plan.by_source, "delete"))
-        | (ins_guard & any_clause_ok(plan.not_matched))
+    if not (plan.updates or plan.not_matched):
+        return pre
+    post = post_images(frame, cols)
+    if regen is not None:
+        post = regen(post)
+    post = post.selectExpr(
+        *[f"`{c}`" for c in cols],
+        f"IF({FATE} = 'insert', 'insert', 'update_postimage') AS {CHANGE_TYPE}",
     )
-    kinds = (
-        ("not_matched", _gated(plan.not_matched, ins_guard)),
-        ("not_matched_by_source", _gated(plan.by_source, bs_guard)),
-        ("matched", _gated(plan.matched, m_guard)),
-    )
-
-    def _out(c):
-        # the join sides' guards are exclusive, so nesting the kinds'
-        # chains keeps each kind's first-match-wins order
-        val = F.col(f"t.`{c}`")
-        for kind, gated in kinds:
-            val = _clause_value(gated, kind, c, types, keep_target_cols, val)
-        return val.alias(c)
-
-    return joined.filter(keep_row).select(*[_out(c) for c in target.columns])
+    return pre.unionByName(post) if plan.matched or plan.by_source else post
 
 
 # ---------------------------------------------------------------- glue
@@ -713,5 +599,11 @@ def initial_write(
         require_unique_merge_keys(source, list(keys))
     if not plan.not_matched:
         return "no-op"
-    write(insert_only_frame(source, plan.not_matched))
+    if plan.insert_maps:
+        raise ValueError(
+            "column-level INSERT VALUES needs an existing table (its "
+            "schema defines the unlisted-NULL columns); create the table "
+            "first"
+        )
+    write(source.alias("s").filter(any_clause_ok(plan.not_matched)))
     return "initial-write"

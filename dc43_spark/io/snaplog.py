@@ -94,6 +94,7 @@ the table logic.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -112,16 +113,14 @@ from pyspark.storagelevel import StorageLevel
 
 from . import bloom as _bloom
 from dc43_spark.io.mergecore import (
-    FateFrames,
     MergePlan,
     any_clause_ok,
     change_rows,
-    fate_frames,
     initial_write,
-    insert_only_frame,
     materialized_source,
-    outer_join_merge,
+    merged_rows,
     source_key_stats,
+    tagged_join,
 )
 from dc43_spark.io.sourcecore import changes_frame
 from dc43_spark.io.tablecore import (  # noqa: F401 (HttpCommitClaimer: re-export)
@@ -361,7 +360,7 @@ class _FileBlock:
             return False  # signal: fall back to the scalar loop
 
     def range_match(self, i: int, keys: Sequence[str], key_ranges: dict) -> bool:
-        """Merge-key [lo, hi] intersection test (see _prune_by_stats)."""
+        """Merge-key [lo, hi] intersection test (_prune_entries_by_stats)."""
         for k in keys:
             rng = key_ranges.get(k)
             tri = self.stat(k)
@@ -2900,11 +2899,6 @@ class SnaplogTable:
 
     # ---------------- copy-on-write MERGE
 
-    def _prune_by_stats(
-        self, files: Sequence[FileEntry], keys: Sequence[str], key_ranges: dict
-    ) -> list[FileEntry]:
-        return _prune_entries_by_stats(files, keys, key_ranges)
-
     def merge(
         self,
         source: DataFrame,
@@ -2921,7 +2915,8 @@ class SnaplogTable:
         contain matched keys, rewrite only those merged with the source,
         carry every other file over by reference. ``clauses`` are the
         ``mergecore.normalize_merge_clauses`` kwargs (row fates: see
-        ``mergecore.outer_join_merge``); a by-source clause disables
+        ``mergecore.tagged_join``, whose one join yields both the
+        rewritten rows and the change rows); a by-source clause disables
         source-key file pruning (any file can hold such rows) and instead
         probes every file for rows the clause would touch. ``txn``
         ({'app_id', 'version'}) rides in the manifest so a consumer's
@@ -3055,7 +3050,7 @@ class SnaplogTable:
                     if etypes[n] != f.dataType
                 }
 
-        with materialized_source(source) as source:
+        with materialized_source(source) as source, contextlib.ExitStack() as scope:
             # level 1: driver-side min/max intersection (footer stats, no IO);
             # also probe whether the source carries a NULL key — those match
             # target NULLs outside any envelope. The duplicate-source-key
@@ -3143,7 +3138,6 @@ class SnaplogTable:
                     }
             touched = [f for f in candidates if os.path.basename(f.path) in touched_names]
 
-            tgt_rows = None
             if touched:
                 tgt_rows = self._scan(touched, snap)
                 for c, dtype in tgt_casts.items():
@@ -3158,21 +3152,32 @@ class SnaplogTable:
                         tgt_rows = tgt_rows.withColumn(
                             c, F.lit(None).cast(source.schema[c].dataType)
                         )
-                merged = outer_join_merge(
-                    tgt_rows, source, keys,
-                    keep_target_cols=keep_target_cols, **plan.clauses,
-                )
+                shape = tgt_rows.schema
             elif plan.not_matched:
                 # nothing matched anywhere: pure insert (first-match-wins
                 # across the insert clauses)
-                tbl_schema = T.StructType.fromJson(json.loads(snap.schema_json))
-                merged = insert_only_frame(
-                    source, plan.not_matched,
-                    cols=[f.name for f in tbl_schema.fields],
-                    types={f.name: f.dataType for f in tbl_schema.fields},
-                )
+                tgt_rows = None
+                shape = T.StructType.fromJson(json.loads(evolved_json))
             else:
                 return MergeStats(snap.num_files, len(candidates), 0, 0)
+            # ONE tagged join yields both the rewritten files' rows and,
+            # under the change feed, the change rows — bounded by the
+            # rewrite set, never the table
+            cols = shape.fieldNames()
+            fates = tagged_join(
+                tgt_rows, source, keys, plan,
+                cols=cols,
+                types={f.name: f.dataType for f in shape.fields},
+                pre_images=self.change_feed,
+                keep_target_cols=keep_target_cols,
+                keep_untouched=True,
+            )
+            if self.change_feed:
+                # the data and change files stage concurrently from this
+                # one join: materialize it once, not once per staging job
+                fates = fates.persist(StorageLevel.MEMORY_AND_DISK)
+                scope.callback(fates.unpersist)
+            merged = merged_rows(fates, cols)
             if regen is not None:
                 merged = regen(merged)
 
@@ -3182,21 +3187,7 @@ class SnaplogTable:
 
             cdc_job = None
             if self.change_feed:
-                # change rows join only the TOUCHED files' rows against
-                # the source — bounded by the rewrite set, never the table
-                if tgt_rows is not None:
-                    frames = fate_frames(
-                        tgt_rows, source, keys, plan,
-                        cols=tgt_rows.columns,
-                        types={f.name: f.dataType for f in tgt_rows.schema.fields},
-                        pre_images=True,
-                        keep_target_cols=keep_target_cols,
-                    )
-                    changes = change_rows(frames, plan, tgt_rows.columns, regen)
-                else:
-                    changes = change_rows(
-                        FateFrames(None, None, merged), plan, merged.columns
-                    )
+                changes = change_rows(fates, plan, cols, regen)
                 cdc_job = functools.partial(
                     self._stage_files,
                     self._to_physical_df(changes, snap),

@@ -761,9 +761,10 @@ class _stream_partitions:
     at its first checkpoint; the session default (32, sized for batch
     scans) means 32 state stores + 32 Arrow/Python workers + 32 commit
     files per micro-batch for a 100k-row sf0.1 replay — pure fixed
-    overhead (r6 verdict item 6 profiling, tools/stream_profile.py:
-    state update+commit CPU drops 5-10x at 8 partitions; walCommit/
-    planning were never the floor). These gates create a FRESH checkpoint
+    overhead (r6 verdict item 6 profiling: state update+commit CPU drops
+    5-10x at 8 partitions; walCommit/planning were never the floor —
+    ``tools/job_profile.py <gate>`` prints each streaming query's summed
+    progress phases to re-check it). These gates create a FRESH checkpoint
     per invocation, so scoping the conf around query start is safe and
     leaves batch queries untouched. At 100 TB you raise it per query —
     state partitioning is a per-workload knob, not a session constant.

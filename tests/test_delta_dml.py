@@ -1,8 +1,8 @@
 """Jar-less Delta MERGE / UPDATE / DELETE (io/delta_dml.py): deletion-
 vector and copy-on-write strategies, CDF emission, rule enforcement,
 and optimistic concurrency — every mutation read back through the
-independent protocol reader and (for merge) checked against the
-outer-join MERGE oracle."""
+independent protocol reader and (for merge) checked against literal
+expected rows."""
 
 import json
 import os
@@ -187,10 +187,10 @@ def test_update_enforces_constraints_on_new_rows(spark, tmp_path):
 
 
 def test_merge_update_insert_delete_matches_oracle(spark, tmp_path):
-    """The DV merge's row fates match the outer-join MERGE oracle
-    (io/mergecore.py outer_join_merge) on the same inputs."""
-    from dc43_spark.io.mergecore import outer_join_merge
-
+    """The DV merge's row fates match literal expected rows: matched
+    rows update unless the delete predicate fires, unmatched source rows
+    insert (the delete predicate never reaches them), untouched target
+    rows stay."""
     t = _mk(spark, str(tmp_path / "t"))
     target0 = t.read().select("k", "v", "amt")
     source = _df(spark, [
@@ -199,13 +199,10 @@ def test_merge_update_insert_delete_matches_oracle(spark, tmp_path):
         (100, "new", 1000),  # unmatched -> insert
         (101, "neg", -7),    # unmatched -> insert (delete pred ignores)
     ])
-    expected = {
-        tuple(r) for r in outer_join_merge(
-            target0, source, ["k"],
-            when_matched="update", when_not_matched="insert",
-            delete_predicate="s.amt < 0",
-        ).collect()
-    }
+    expected = (
+        {(i, f"s{i}", i * 10) for i in (0, 1, 2, 3, 4, 7)}
+        | {(5, "upd5", 500), (100, "new", 1000), (101, "neg", -7)}
+    )
     v = delta_merge(
         spark, source, t.path, ["k"],
         delete_predicate="s.amt < 0", use_dvs=True,
@@ -217,6 +214,49 @@ def test_merge_update_insert_delete_matches_oracle(spark, tmp_path):
     assert sum(1 for f in snap.files if f.dv) == 1
     # time travel to the pre-merge state
     assert _rows(t, version_as_of=0) == {tuple(r) for r in target0.collect()}
+
+
+def test_merge_job_count_all_clause_kinds(spark, tmp_path):
+    """The Spark jobs of ONE merge with matched-delete, matched-update,
+    insert and by-source clauses on a small DV table with CDF on. The
+    merge builds one tagged join, persists it once and counts its fates
+    in one pass. On local[4] with AQE this merge ran 17 jobs when it
+    built three fate joins, persisted them apart and counted their
+    union, and runs 11 now."""
+    import time
+    import uuid
+
+    t = _mk(spark, str(tmp_path / "t"), configuration={
+        "delta.enableChangeDataFeed": "true",
+        "delta.enableDeletionVectors": "true",
+    })
+    source = _df(spark, [(5, "upd5", 500), (6, "del6", -1), (100, "new", 1000)])
+    sc, group = spark.sparkContext, f"merge-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        delta_merge(
+            spark, source, t.path, ["k"],
+            delete_predicate="s.amt < 0",
+            when_not_matched_by_source={"v": "'gone'"},
+            not_matched_by_source_predicate="t.k < 2",
+            use_dvs=True,
+        )
+        fence = f"{group}-fence"
+        sc.setJobGroup(fence, fence)
+        spark.range(1).count()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30  # job starts reach the tracker async
+    while not tracker.getJobIdsForGroup(fence) and time.time() < deadline:
+        time.sleep(0.05)
+    assert _rows(t) == (
+        {(i, f"s{i}", i * 10) for i in (2, 3, 4, 7)}
+        | {(0, "gone", 0), (1, "gone", 10), (5, "upd5", 500), (100, "new", 1000)}
+    )
+    assert len(tracker.getJobIdsForGroup(group)) <= 12
 
 
 def test_merge_clause_variants(spark, tmp_path):
@@ -620,8 +660,16 @@ def test_dml_and_optimize_on_column_mapped_table(spark, tmp_path):
     got = {(r.k, r.label, r.amt) for r in t.read().collect()}
     assert (1, "ONE", 100) in got and (9, "nine", 90) in got
 
+    # a second small file without a deletion vector beside the merge's
+    # one (the merge writes its updated and inserted rows as one file)
+    assert delta_write(
+        spark, _df(spark, [(20, "t20", 200)], "k long, label string, amt long"),
+        path, checkpoint_interval=None,
+    ) == 5
+    got.add((20, "t20", 200))
+
     # OPTIMIZE packs the mapped files; rows and names unchanged
-    assert delta_optimize(spark, path, target_file_mb=64) == 5
+    assert delta_optimize(spark, path, target_file_mb=64) == 6
     t = DeltaLogTable(spark, path)
     assert {(r.k, r.label, r.amt) for r in t.read().collect()} == got
     # zorder on the LOGICAL name resolves to the physical column

@@ -3,8 +3,8 @@
 Every combination of {when_matched} x {matched_predicate} x
 {delete_predicate} x {when_not_matched} x {insert_predicate} x
 {when_not_matched_by_source} x {not_matched_by_source_predicate} runs
-through the shared outer-join kernel and is compared row-for-row with an
-independent Python implementation of the clause semantics (delete-first
+through the shared merge kernel (``mergecore.tagged_join``) and is
+compared row-for-row with an independent Python implementation of the clause semantics (delete-first
 fixed priority, NULL predicate = fail, SET/VALUES maps, by-source
 actions). A deterministic sample of the matrix additionally round-trips
 through the snaplog COW engine and the jar-less Delta DML engine (their
@@ -15,7 +15,16 @@ import itertools
 
 import pytest
 
-from dc43_spark.io.mergecore import outer_join_merge
+from pyspark.sql import functions as F
+
+from dc43_spark.io.mergecore import (
+    FATE,
+    MergePlan,
+    change_rows,
+    merged_rows,
+    post_images,
+    tagged_join,
+)
 
 TGT = [(k, k * 10) for k in range(10)]          # k 0..9
 SRC = [(k, k * 100) for k in range(5, 15)]      # k 5..14
@@ -138,36 +147,129 @@ def _frames(spark):
     )
 
 
-def test_kernel_matches_python_model_across_the_full_matrix(spark):
-    """All 432 combinations through the outer-join kernel — ONE Spark
-    job: the combos evaluate lazily and union into a single tagged frame
-    so the matrix costs one collect, not 432."""
-    from pyspark.sql import functions as F
+def _kernel(tgt, src, **kw):
+    """The copy-on-write projection of the tagged join: the merged
+    table's rows."""
+    frame = tagged_join(tgt, src, ["k"], MergePlan.of(**kw), keep_untouched=True)
+    return merged_rows(frame, tgt.columns)
 
-    tgt, src = _frames(spark)
-    tagged = []
-    expected = {}
-    for i, (wm, mp, dp, wn, ip, bs, bp) in enumerate(MATRIX):
-        out = outer_join_merge(
-            tgt, src, ["k"],
-            when_matched=WM_OPTS[wm],
-            matched_predicate=mp,
-            delete_predicate=dp,
-            when_not_matched=WN_OPTS[wn],
-            insert_predicate=ip,
-            when_not_matched_by_source=BS_OPTS[bs],
-            not_matched_by_source_predicate=bp,
+
+def _tables(tgt, src, combo: int, keep_untouched: bool, **kw):
+    """One merge through the tagged join as ``(combo, change, k, v)``
+    rows: the merged table (``change`` NULL) and the change rows. Without
+    ``keep_untouched`` (the Delta shape) the table is the untouched
+    target rows plus the post-images, as delta_merge writes it."""
+    plan = MergePlan.of(**kw)
+    frame = tagged_join(
+        tgt, src, ["k"], plan, carry=["k"] if not keep_untouched else (),
+        pre_images=True, keep_untouched=keep_untouched,
+    )
+    cols = ["k", "v"]
+    if keep_untouched:
+        table = merged_rows(frame, cols)
+    else:
+        table = tgt
+        if plan.matched or plan.by_source:  # else no carry: nothing touched
+            gone = frame.filter(F.col(FATE).isin("delete", "update"))
+            table = tgt.join(gone.select("k"), "k", "left_anti")
+        if plan.updates or plan.not_matched:  # else no post-images
+            table = table.unionByName(post_images(frame, cols).drop(FATE))
+    tag = F.lit(combo).alias("combo")
+    no_change = F.lit(None).cast("string").alias("change")
+    return table.select(tag, no_change, *cols).unionByName(
+        change_rows(frame, plan, cols).select(
+            tag, F.col("_change_type").alias("change"), *cols
         )
-        tagged.append(out.select(F.lit(i).alias("combo"), "k", "v"))
-        expected[i] = py_merge(wm, mp, dp, wn, ip, bs, bp)
-    union = tagged[0]
-    for t in tagged[1:]:
-        union = union.unionByName(t)
+    )
+
+
+def _collect_tables(parts):
+    """ONE collect over the tagged union: ``{combo: (rows, changes)}``."""
+    union = parts[0]
+    for p in parts[1:]:
+        union = union.unionByName(p)
     got: dict = {}
     for r in union.collect():
-        got.setdefault(r.combo, set()).add((r.k, r.v))
-    for i, (combo) in enumerate(MATRIX):
-        assert got.get(i, set()) == expected[i], (i, combo)
+        rows, changes = got.setdefault(r.combo, (set(), set()))
+        if r.change is None:
+            rows.add((r.k, r.v))
+        else:
+            changes.add((r.change, r.k, r.v))
+    return got
+
+
+def _matrix_kw(wm, mp, dp, wn, ip, bs, bp):
+    return dict(
+        when_matched=WM_OPTS[wm],
+        matched_predicate=mp,
+        delete_predicate=dp,
+        when_not_matched=WN_OPTS[wn],
+        insert_predicate=ip,
+        when_not_matched_by_source=BS_OPTS[bs],
+        not_matched_by_source_predicate=bp,
+    )
+
+
+# one matrix combo per join shape the plan can pick: (combo, keep_untouched,
+# the analyzed plan's join type)
+JOIN_SHAPES = [
+    (("set", None, "s.k % 3 = 0", "ignore", None, "ignore", None),
+     False, "Inner"),
+    (("update", "t.v % 30 = 0", None, "values", None, "ignore", None),
+     False, "RightOuter"),
+    (("set", None, "s.k % 3 = 0", "insert", "s.k % 2 = 0", "set", "t.k % 2 = 1"),
+     False, "FullOuter"),
+    (("ignore", None, None, "values", "s.k % 2 = 0", "ignore", None),
+     False, "LeftAnti"),
+    (("update", None, "s.k % 3 = 0", "ignore", None, "delete", "t.k % 2 = 1"),
+     True, "LeftOuter"),
+    (("set", "t.v % 30 = 0", None, "insert", None, "ignore", None),
+     True, "FullOuter"),
+]
+
+
+def test_tagged_join_shapes_match_python_model(spark):
+    """One matrix combo per join shape (inner, source left outer, full
+    outer, source left-anti, target left outer) through the tagged join:
+    the join type follows the plan, and the merged table and the change
+    rows match the python model — every shape in ONE collect."""
+    tgt, src = _frames(spark)
+    parts, expected = [], {}
+    for i, (combo, keep_untouched, join) in enumerate(JOIN_SHAPES):
+        kw = _matrix_kw(*combo)
+        frame = tagged_join(
+            tgt, src, ["k"], MergePlan.of(**kw), keep_untouched=keep_untouched
+        )
+        analyzed = frame._jdf.queryExecution().analyzed().toString()
+        assert f"Join {join}," in analyzed, (combo, analyzed)
+        parts.append(_tables(tgt, src, i, keep_untouched, **kw))
+        expected[i] = (py_merge(*combo), py_changes(*combo))
+    got = _collect_tables(parts)
+    for i, (combo, _, _) in enumerate(JOIN_SHAPES):
+        assert got.get(i, (set(), set())) == expected[i], combo
+
+
+def test_kernel_matches_python_model_across_the_full_matrix(spark):
+    """All 432 combinations through the tagged join, each in both
+    shapes: copy-on-write (tagged ``2 * combo``) and Delta (tagged
+    ``2 * combo + 1``). Each checks the merged table and the change
+    rows. The merges evaluate lazily and union into tagged frames of 48
+    merges, one collect each: a single union over all of them spends
+    most of its time in Catalyst analysis."""
+    tgt, src = _frames(spark)
+    parts, expected = [], {}
+    for i, combo in enumerate(MATRIX):
+        want = (py_merge(*combo), py_changes(*combo))
+        for tag, keep_untouched in ((2 * i, True), (2 * i + 1, False)):
+            kw = _matrix_kw(*combo)
+            parts.append(_tables(tgt, src, tag, keep_untouched, **kw))
+            expected[tag] = want
+    got: dict = {}
+    for lo in range(0, len(parts), 48):
+        got.update(_collect_tables(parts[lo:lo + 48]))
+    for tag, want in expected.items():
+        shape = "copy-on-write" if tag % 2 == 0 else "delta"
+        assert got.get(tag, (set(), set())) == want, (shape, MATRIX[tag // 2])
 
 
 @pytest.mark.parametrize("combo_idx", [7, 85, 160, 233, 311, 431])
@@ -183,15 +285,7 @@ def test_engines_match_python_model_on_sampled_combos(spark, tmp_path, combo_idx
     wm, mp, dp, wn, ip, bs, bp = MATRIX[combo_idx]
     expect = py_merge(wm, mp, dp, wn, ip, bs, bp)
     expect_changes = py_changes(wm, mp, dp, wn, ip, bs, bp)
-    kw = dict(
-        when_matched=WM_OPTS[wm],
-        matched_predicate=mp,
-        delete_predicate=dp,
-        when_not_matched=WN_OPTS[wn],
-        insert_predicate=ip,
-        when_not_matched_by_source=BS_OPTS[bs],
-        not_matched_by_source_predicate=bp,
-    )
+    kw = _matrix_kw(wm, mp, dp, wn, ip, bs, bp)
     tgt, src = _frames(spark)
 
     def changes(table):
@@ -345,12 +439,11 @@ def py_multi_merge(matched, not_matched, by_source):
 
 @pytest.mark.parametrize("name", sorted(MULTI_SCENARIOS))
 def test_multi_clause_orderings_match_python_model(spark, tmp_path, name):
-    """Each multi-clause ordering through ALL THREE engines (outer-join
-    kernel, snaplog COW, jar-less Delta DML with DVs) vs the python
-    model — first-match-wins in user order is the spec."""
+    """Each multi-clause ordering through ALL THREE engines (the tagged
+    join's merged rows, snaplog COW, jar-less Delta DML with DVs) vs the
+    python model — first-match-wins in user order is the spec."""
     from dc43_spark.io.delta_dml import delta_merge
     from dc43_spark.io.delta_log import DeltaLogTable, delta_write
-    from dc43_spark.io.mergecore import outer_join_merge
     from dc43_spark.io.snaplog import SnaplogTable
 
     m, nm, bs = MULTI_SCENARIOS[name]
@@ -364,7 +457,7 @@ def test_multi_clause_orderings_match_python_model(spark, tmp_path, name):
     )
     tgt, src = _frames(spark)
 
-    out = outer_join_merge(tgt, src, ["k"], **kw)
+    out = _kernel(tgt, src, **kw)
     assert {(r.k, r.v) for r in out.collect()} == expect, "kernel"
 
     t = SnaplogTable(spark, str(tmp_path / "s"))
@@ -488,8 +581,6 @@ def test_multi_clause_merge_keeps_file_pruning(spark, tmp_path):
     """Scale shape under multi-clause: matched/insert-only clause lists
     keep source-key-range FILE PRUNING; any by-source clause provably
     disables it (its rows are defined by having NO source match)."""
-    from pyspark.sql import functions as F
-
     from dc43_spark.io.snaplog import SnaplogTable
 
     t = SnaplogTable(spark, str(tmp_path / "t"))
@@ -591,15 +682,13 @@ def test_random_multi_clause_sweep_matches_python_model(spark):
     beyond the handcrafted scenarios."""
     import random
 
-    from pyspark.sql import functions as F
-
     rng = random.Random(1202)
     tgt, src = _frames(spark)
     tagged, expected = [], {}
     for i in range(30):
         m, nm, bs = _random_clause_lists(rng)
-        out = outer_join_merge(
-            tgt, src, ["k"],
+        out = _kernel(
+            tgt, src,
             matched_clauses=[d for d, _ in m],
             not_matched_clauses=[d for d, _ in nm],
             not_matched_by_source_clauses=[d for d, _ in bs],

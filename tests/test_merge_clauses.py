@@ -1,6 +1,6 @@
 """Conditional MERGE clauses (VERDICT r10 #2) across all three engines —
 the jar-less Delta DML (DV + copy-on-write), snaplog's COW merge, and the
-shared outer-join kernel: column-level ``UPDATE SET c = expr`` maps,
+shared merge kernel's merged rows: column-level ``UPDATE SET c = expr`` maps,
 per-clause predicates (``WHEN MATCHED AND pred``), column-level
 ``INSERT (cols) VALUES (exprs)``, and ``WHEN NOT MATCHED BY SOURCE
 DELETE / UPDATE SET`` (ref spark/io/merge.py:43-127 forwards an arbitrary
@@ -318,16 +318,18 @@ def test_by_source_scans_all_files_matched_only_prunes(spark, tmp_path):
 def test_map_form_source_missing_target_column_all_engines(spark, tmp_path):
     """Review r11 fix: inactive clauses must not BUILD value expressions —
     a map-form merge whose source lacks a target column crashed the
-    snaplog/outer-join engines on the dead insert branch's s.`col`."""
-    from dc43_spark.io.mergecore import outer_join_merge
+    snaplog/merge-kernel engines on the dead insert branch's s.`col`."""
+    from dc43_spark.io.mergecore import MergePlan, merged_rows, tagged_join
 
     tgt = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     src = spark.createDataFrame([(2, 7)], "k long, delta long")
-    out = outer_join_merge(
-        tgt, src, ["k"],
+    plan = MergePlan.of(
         when_matched={"v": "CAST(s.delta AS STRING)"},
         when_not_matched="ignore",
         delete_predicate=None,
+    )
+    out = merged_rows(
+        tagged_join(tgt, src, ["k"], plan, keep_untouched=True), tgt.columns
     )
     assert {(r.k, r.v) for r in out.collect()} == {(1, "a"), (2, "7")}
     # snaplog twin (catalog-SQL shaped)
