@@ -44,9 +44,10 @@ the new rows; generated columns are recomputed for updates (and refuse
 being SET directly, delta-spark's rule); ``delta.appendOnly=true``
 refuses all three operations.
 
-Concurrency: the whole operation is optimistic — compute against a
-pinned snapshot, claim ``head+1``; ANY head movement (or a lost claim
-race) recomputes from the new head, never re-using stale row positions.
+Concurrency: the whole operation is optimistic — each attempt of
+``tablecore.commit_loop`` computes against a pinned snapshot and claims
+``pin+1``; ANY head movement loses that claim and the next attempt
+recomputes from the new head, never re-using stale row positions.
 Orphaned staging output from lost races is swept by ``delta_vacuum``.
 
 Scale shape: one lineage scan (a single parquet read regardless of
@@ -67,7 +68,6 @@ import functools
 import json
 import os
 import time
-import urllib.parse
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,7 +87,7 @@ from dc43_spark.io.mergecore import (
     tagged_join,
 )
 from dc43_spark.io.tablecore import (
-    LinkCommitClaimer,
+    Done,
     dv_join_side,
     file_may_match,
     stage_concurrently,
@@ -95,26 +95,27 @@ from dc43_spark.io.tablecore import (
 from dc43_spark.io.delta_log import (
     _WRITER_VERSION_FEATURES,
     DeltaLogTable,
-    DeltaProtocolError,
     DeltaWriteError,
     _apply_generated_columns,
     _check_append_only,
     _check_writer_protocol,
+    _delta_commit,
     _delta_row_rules,
     _dv_total_cardinality,
     _enforce_delta_rules,
     _generated_columns,
     _identity_columns,
+    _identity_marks,
     _file_identity_df,
     _materialized_rt_cols,
+    _num_records,
+    _physical_names,
     _raw_protocol_meta,
-    _row_id_hwm,
-    _row_tracking_domain_action,
+    _remove,
     _row_tracking_enabled,
     _row_tracking_present,
-    _assign_fresh_row_ids,
     _stage_data_files,
-    write_delta_checkpoint,
+    _with_identity_marks,
 )
 
 _REL = "_dc43_rel"
@@ -125,11 +126,6 @@ _POS = "_dc43_pos"
 #: defaultRowCommitVersion
 _RTID = "_dc43_row_id"
 _RTVER = "_dc43_row_ver"
-
-
-class _DmlConflict(Exception):
-    """A concurrent commit moved the head (or won the claim) — the
-    caller recomputes against the new snapshot."""
 
 
 def _cdf_enabled(meta: dict) -> bool:
@@ -354,12 +350,7 @@ def _to_physical(df: DataFrame, snap) -> DataFrame:
     pass through unchanged."""
     if not snap.column_mapping:
         return df
-    phys = {
-        f.name: (f.metadata or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in snap.schema.fields
-    }
+    phys = _physical_names(snap.schema)
     fids = {
         f.name: (f.metadata or {}).get("delta.columnMapping.id")
         for f in snap.schema.fields
@@ -478,33 +469,30 @@ def _commit_dml(
     new_rows: Optional[DataFrame],
     cdf_rows: Optional[DataFrame],
     use_dvs: Optional[bool],
-    checkpoint_interval: Optional[int] = 10,
     new_meta: Optional[dict] = None,
     ident_alloc: Optional[dict] = None,
-) -> int:
-    """Stage + claim one DML commit against the pinned ``snap``. Raises
-    ``_DmlConflict`` if the head moved or the claim lost — the caller
-    recomputes; staged files orphan and are swept by delta_vacuum.
+) -> tuple:
+    """Stage one DML commit against the pinned ``snap`` and return it as
+    a ``delta_log._delta_commit`` attempt: ``(snap.version, actions,
+    protocol, meta)``. The claim lands at ``snap.version + 1`` only if
+    the head has not moved; a lost claim re-runs the whole op against
+    the new head. Staged files of a lost attempt orphan and are swept by
+    delta_vacuum.
 
     ``ident_alloc``: identity specs ({name: {"start","step","hwm"}}) the
     caller allocated values under (MERGE inserts) — the commit advances
     each ``delta.identity.highWaterMark`` from the STAGED FOOTER STATS
     of the new files, atomically with them (PROTOCOL.md Identity Columns
     writer requirement, same shape as delta_write). Race safety is
-    inherited from the pin: ANY head movement raises ``_DmlConflict``
-    and the caller reallocates under the new mark."""
+    inherited from the pin: ANY head movement loses the claim and the
+    retry reallocates under the new mark."""
     dest = t.path
     part_cols = list(snap.partition_columns)
     if snap.column_mapping and part_cols:
         # staged files partition by PHYSICAL names (the hive dirs become
         # the add's partitionValues keys — protocol-required physical);
         # _to_physical has already renamed the frames' columns
-        phys = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in snap.schema.fields
-        }
+        phys = _physical_names(snap.schema)
         part_cols = [phys[c] for c in part_cols]
     ts_ms = int(time.time() * 1000)
     if use_dvs is None:
@@ -520,10 +508,6 @@ def _commit_dml(
             }
         }
     ]
-    if new_meta is not None:
-        # schema evolution rides the DML commit (merge_schema): older
-        # files read the appended columns as NULL
-        actions.append({"metaData": new_meta})
 
     # the staged writes — deletion vectors OR rewritten survivors,
     # inserted rows, and CDF change files — are independent Spark jobs
@@ -598,24 +582,8 @@ def _commit_dml(
     dv_written = bool(descs)
     for rel in sorted(descs or ()):
         raw = raw_adds[rel]
-        actions.append(
-            {
-                "remove": {
-                    "path": raw["path"],
-                    "dataChange": True,
-                    "deletionTimestamp": ts_ms,
-                }
-            }
-        )
-        num = None
-        if raw.get("stats"):
-            try:
-                st = raw["stats"]
-                num = (json.loads(st) if isinstance(st, str) else st).get(
-                    "numRecords"
-                )
-            except ValueError:
-                num = None
+        actions.append(_remove(raw["path"], ts_ms))
+        num = _num_records(raw)
         if num is not None and descs[rel]["cardinality"] >= num:
             continue  # every physical row dead: plain remove
         new_add = dict(raw)
@@ -624,64 +592,22 @@ def _commit_dml(
         actions.append({"add": new_add})
     for e in kept_adds or ():
         actions.append({"add": e})
-    for rel in sorted(touched):
-        actions.append(
-            {
-                "remove": {
-                    "path": raw_adds[rel]["path"],
-                    "dataChange": True,
-                    "deletionTimestamp": ts_ms,
-                }
-            }
-        )
+    actions += [_remove(raw_adds[rel]["path"], ts_ms) for rel in sorted(touched)]
     for e in new_adds or ():
         actions.append({"add": e})
 
-    if ident_alloc and new_adds:
-        phys = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in snap.schema.fields
-        }
-        marks: dict = {}
-        for n, sp in ident_alloc.items():
-            side = "maxValues" if sp["step"] > 0 else "minValues"
-            vals = []
-            for a in new_adds:
-                try:
-                    v = json.loads(a["stats"])[side].get(phys.get(n, n))
-                except (KeyError, ValueError, TypeError):
-                    v = None
-                if v is not None:
-                    vals.append(int(v))
-            if vals:
-                new_mark = max(vals) if sp["step"] > 0 else min(vals)
-                if sp["hwm"] is not None:
-                    new_mark = (
-                        max(new_mark, sp["hwm"]) if sp["step"] > 0
-                        else min(new_mark, sp["hwm"])
-                    )
-                marks[n] = new_mark
-        if marks:
-            # patch the commit's metaData (the evolution one if present,
-            # else a fresh copy of the pinned meta) so the files and the
-            # advanced marks land atomically
-            target = new_meta if new_meta is not None else dict(meta)
-            doc = json.loads(target["schemaString"])
-            for f0 in doc["fields"]:
-                if f0["name"] in marks:
-                    md0 = dict(f0.get("metadata") or {})
-                    md0["delta.identity.highWaterMark"] = marks[f0["name"]]
-                    f0["metadata"] = md0
-            patched = dict(target)
-            patched["schemaString"] = json.dumps(doc)
-            for i, a in enumerate(actions):
-                if "metaData" in a:
-                    actions[i] = {"metaData": patched}
-                    break
-            else:
-                actions.insert(1, {"metaData": patched})
+    marks = _identity_marks(
+        ident_alloc or {}, new_adds or [], _physical_names(snap.schema)
+    )
+    if marks:
+        # the advanced marks land atomically with the files
+        new_meta = _with_identity_marks(
+            new_meta if new_meta is not None else meta, marks
+        )
+    if new_meta is not None:
+        # schema evolution (merge_schema: older files read the appended
+        # columns as NULL) and identity marks ride the DML commit
+        actions.insert(1, {"metaData": new_meta})
 
     for e in cdf_adds or ():
         actions.append(
@@ -700,56 +626,19 @@ def _commit_dml(
         if upgrade is not None:
             actions.insert(1, upgrade)
 
-    if _row_tracking_present(protocol):
-        # DV-superseded re-adds kept their original baseRowId (dict(raw)
-        # copies); only genuinely new files draw fresh id ranges
-        fresh = [
-            a["add"] for a in actions
-            if "add" in a and a["add"].get("baseRowId") is None
-        ]
-        if fresh:
-            new_hwm = _assign_fresh_row_ids(
-                fresh, _row_id_hwm(t, snap.version), snap.version + 1
-            )
-            actions.append(_row_tracking_domain_action(new_hwm))
-
-    head = t.version()
-    if head != snap.version:
-        raise _DmlConflict(f"head moved v{snap.version} -> v{head}")
-    next_version = snap.version + 1
-    from dc43_spark.io.delta_log import _stamp_ict
-
-    # ICT chains off the pinned head (== the real head, just checked; a
-    # lost race raises _DmlConflict and the caller recomputes + restamps)
-    _stamp_ict(
-        actions, t, head,
-        ((new_meta if new_meta is not None else meta) or {}).get(
-            "configuration"
-        ),
-        ts_ms,
-    )
-    payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-    log = os.path.join(dest, "_delta_log")
-    if not LinkCommitClaimer().claim(log, f"{next_version:020d}.json", payload):
-        raise _DmlConflict(f"lost the claim on v{next_version}")
-    if (
-        checkpoint_interval
-        and next_version
-        and next_version % checkpoint_interval == 0
-    ):
-        write_delta_checkpoint(t, next_version)
-    return next_version
+    # DV-superseded re-adds keep their original baseRowId (dict(raw)
+    # copies); the claim loop gives only genuinely new files fresh ids
+    return snap.version, actions, protocol, meta
 
 
-def _pin_snapshot(spark: SparkSession, path: str, op: str):
-    t = DeltaLogTable(spark, path)
+def _pin_snapshot(t: DeltaLogTable, op: str):
     snap = t.snapshot()
     protocol, meta = _raw_protocol_meta(t, snap.version)
     _check_writer_protocol(
         protocol, meta, snap.schema, allow_column_mapping=True
     )
     _check_append_only(meta, op)
-    return t, snap, protocol, meta
+    return snap, protocol, meta
 
 
 def delta_delete(
@@ -758,15 +647,16 @@ def delta_delete(
     predicate: Optional[str] = None,
     *,
     use_dvs: Optional[bool] = None,
-    max_retries: int = 20,
 ) -> Optional[int]:
     """DELETE FROM a real ``_delta_log`` table without the jar. Rows
     matching ``predicate`` (SQL over the table's columns; None = all
     rows) are removed via deletion vectors or copy-on-write (module
     docstring). Returns the committed version, or None when nothing
     matched."""
-    for _ in range(max_retries):
-        t, snap, protocol, meta = _pin_snapshot(spark, path, "delete")
+    t = DeltaLogTable(spark, path)
+
+    def attempt():
+        snap, protocol, meta = _pin_snapshot(t, "delete")
         rt_mat = _row_tracking_present(protocol) and _row_tracking_enabled(meta)
         lineage = _live_lineage(t, snap, row_ids=rt_mat)
         pred = F.expr(predicate) if predicate else F.lit(True)
@@ -782,7 +672,7 @@ def delta_delete(
         )
         try:
             if hit.isEmpty():
-                return None
+                return Done(None)
             cdf = None
             if _cdf_enabled(meta):
                 cdf = hit.select(
@@ -798,13 +688,10 @@ def delta_delete(
                 cdf_rows=cdf,
                 use_dvs=use_dvs,
             )
-        except _DmlConflict:
-            continue
         finally:
             hit.unpersist()
-    raise DeltaProtocolError(
-        f"DELETE on {path} kept conflicting after {max_retries} attempts"
-    )
+
+    return _delta_commit(t, attempt, checkpoint_interval=10)
 
 
 def delta_update(
@@ -814,7 +701,6 @@ def delta_update(
     predicate: Optional[str] = None,
     *,
     use_dvs: Optional[bool] = None,
-    max_retries: int = 20,
 ) -> Optional[int]:
     """UPDATE a real ``_delta_log`` table without the jar: rows matching
     ``predicate`` get ``set`` ({column: SQL expression over the OLD row})
@@ -823,31 +709,30 @@ def delta_update(
     columns are recomputed (and refuse being SET directly); constraints,
     invariants, and generated rules validate in one aggregate. Returns
     the committed version, or None when nothing matched."""
-    gen_probe = None
-    for _ in range(max_retries):
-        t, snap, protocol, meta = _pin_snapshot(spark, path, "update")
+    t = DeltaLogTable(spark, path)
+
+    def attempt():
+        snap, protocol, meta = _pin_snapshot(t, "update")
         data_cols = [f.name for f in snap.schema.fields]
         gen = _generated_columns(snap.schema)
-        if gen_probe is None:
-            bad_set = sorted(set.keys() & gen.keys())
-            if bad_set:
-                raise DeltaWriteError(
-                    f"column(s) {bad_set} are GENERATED ALWAYS AS; their "
-                    "values recompute from the expression — update the "
-                    "source columns instead"
-                )
-            bad_ident = sorted(
-                set.keys() & _identity_columns(snap.schema).keys()
+        bad_set = sorted(set.keys() & gen.keys())
+        if bad_set:
+            raise DeltaWriteError(
+                f"column(s) {bad_set} are GENERATED ALWAYS AS; their "
+                "values recompute from the expression — update the "
+                "source columns instead"
             )
-            if bad_ident:
-                raise DeltaWriteError(
-                    f"column(s) {bad_ident} are IDENTITY columns; their "
-                    "values are writer-allocated and cannot be SET"
-                )
-            missing = sorted(k for k in set if k not in data_cols)
-            if missing:
-                raise DeltaWriteError(f"SET columns not in schema: {missing}")
-            gen_probe = True
+        bad_ident = sorted(
+            set.keys() & _identity_columns(snap.schema).keys()
+        )
+        if bad_ident:
+            raise DeltaWriteError(
+                f"column(s) {bad_ident} are IDENTITY columns; their "
+                "values are writer-allocated and cannot be SET"
+            )
+        missing = sorted(k for k in set if k not in data_cols)
+        if missing:
+            raise DeltaWriteError(f"SET columns not in schema: {missing}")
         rt_mat = _row_tracking_present(protocol) and _row_tracking_enabled(meta)
         mat_id, _mat_ver = (
             _rt_mat_cols_checked(meta) if rt_mat else (None, None)
@@ -861,7 +746,7 @@ def delta_update(
         hit = lineage.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if hit.isEmpty():
-                return None
+                return Done(None)
             updated = hit.select(
                 *[
                     F.expr(set[c]).cast(snap.schema[c].dataType).alias(c)
@@ -899,13 +784,10 @@ def delta_update(
                 cdf_rows=cdf,
                 use_dvs=use_dvs,
             )
-        except _DmlConflict:
-            continue
         finally:
             hit.unpersist()
-    raise DeltaProtocolError(
-        f"UPDATE on {path} kept conflicting after {max_retries} attempts"
-    )
+
+    return _delta_commit(t, attempt, checkpoint_interval=10)
 
 
 def delta_merge(
@@ -917,7 +799,6 @@ def delta_merge(
     use_dvs: Optional[bool] = None,
     check_source_keys: bool = True,
     merge_schema: bool = False,
-    max_retries: int = 20,
     **clauses,
 ) -> Optional[int]:
     """MERGE INTO a real ``_delta_log`` table without the jar — the
@@ -945,8 +826,11 @@ def delta_merge(
     check_dups_in_probe = check_source_keys and not plan.by_source
     check_dups_in_count = check_source_keys and bool(plan.by_source)
 
-    for _ in range(max_retries):
-        t, snap, protocol, meta = _pin_snapshot(spark, path, "merge")
+    t = DeltaLogTable(spark, path)
+
+    def attempt():
+        nonlocal check_dups_in_probe, check_dups_in_count
+        snap, protocol, meta = _pin_snapshot(t, "merge")
         table_cols = {f.name for f in snap.schema.fields}
         data_cols = [f.name for f in snap.schema.fields]
         types = {f.name: f.dataType for f in snap.schema.fields}
@@ -1174,8 +1058,8 @@ def delta_merge(
                     # start + k*step strictly beyond the pinned high water
                     # mark (monotonically_increasing_id keeps allocation
                     # distributed; gaps are protocol-legal). A concurrent
-                    # commit raises _DmlConflict at claim time and the
-                    # retry reallocates under the new mark.
+                    # commit loses this attempt its claim and the retry
+                    # reallocates under the new mark.
                     fresh = F.col(FATE) == "insert"
                     fates = fates.withColumns({
                         f"_n_{n}": F.when(fresh, (
@@ -1223,7 +1107,7 @@ def delta_merge(
                     counts.get(f, 0) for f in ("delete", "update", "insert")
                 )
                 if not (n_del or n_upd or n_ins):
-                    return None
+                    return Done(None)
 
                 def _regen(rows: DataFrame) -> DataFrame:
                     # map-form rows mix target/source values: recompute
@@ -1280,16 +1164,12 @@ def delta_merge(
                     new_meta=new_meta,
                     ident_alloc=ident_alloc or None,
                 )
-            except _DmlConflict:
-                continue
             finally:
-                # release on EVERY exit — success, conflict retry, or a
-                # non-conflict failure (constraint violation, protocol
-                # error): the persisted fate frame must never outlive the
-                # op (or the retry iteration); the source's context
-                # manager releases it
+                # release on EVERY exit — success, a lost claim's retry,
+                # or a failure (constraint violation, protocol error):
+                # the persisted fate frame must never outlive the
+                # attempt; the source's context manager releases it
                 if fates is not None:
                     fates.unpersist()
-    raise DeltaProtocolError(
-        f"MERGE on {path} kept conflicting after {max_retries} attempts"
-    )
+
+    return _delta_commit(t, attempt, checkpoint_interval=10)

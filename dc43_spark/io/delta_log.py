@@ -79,7 +79,9 @@ from pyspark.sql.types import (
 )
 
 from dc43_spark.io.tablecore import (
+    Done,
     LinkCommitClaimer,
+    commit_loop,
     dv_join_side,
     file_may_match,
     filters_to_column,
@@ -641,12 +643,7 @@ class DeltaLogTable:
         # (scan grouping, data skipping, DML) sees one naming scheme
         p2l: dict = {}
         if mapping_mode in ("name", "id"):
-            p2l = {
-                (f.metadata or {}).get(
-                    "delta.columnMapping.physicalName", f.name
-                ): f.name
-                for f in schema.fields
-            }
+            p2l = {p: n for n, p in _physical_names(schema).items()}
         types = {f.name: f.dataType.typeName() for f in schema.fields}
         files = tuple(
             DeltaFile(
@@ -1523,10 +1520,7 @@ def sync_delta_export(table, dest_path: str) -> Optional[int]:
             }
         )
     for rel in removed + dv_changed:
-        actions.append(
-            {"remove": {"path": urllib.parse.quote(rel), "dataChange": True,
-                        "deletionTimestamp": ts_ms}}
-        )
+        actions.append(_remove(urllib.parse.quote(rel), ts_ms))
     for rel in added + dv_changed:
         f = new_files[rel]
         _link_or_copy(table.path, f.path, os.path.join(dest, rel))
@@ -1656,8 +1650,8 @@ def _stamp_ict(
     commit's FIRST action must be ``commitInfo`` with an
     ``inCommitTimestamp`` strictly greater than the previous commit's.
     Mutates ``actions`` in place; returns the stamp (ms) or None when the
-    table doesn't enable the feature. Must run inside the claim-retry
-    loop — a new head means a new predecessor timestamp."""
+    table doesn't enable the feature. ``_delta_commit`` runs it in every
+    claim attempt — a new head means a new predecessor timestamp."""
     if not _ict_enabled(conf):
         return None
     prev = _prev_ict(t, head)
@@ -1719,6 +1713,18 @@ def _row_id_hwm(t: "DeltaLogTable", version: Optional[int]) -> int:
         return -1
 
 
+def _num_records(add: dict) -> Optional[int]:
+    """An add's ``numRecords`` stat (None when its stats lack one)."""
+    st = add.get("stats")
+    try:
+        rows = (json.loads(st) if isinstance(st, str) else st or {}).get(
+            "numRecords"
+        )
+    except (ValueError, TypeError, AttributeError):
+        return None
+    return None if rows is None else int(rows)
+
+
 def _assign_fresh_row_ids(adds: list, hwm: int, commit_version: int) -> int:
     """Mutate the add dicts that carry no baseRowId yet: consecutive
     fresh id ranges above ``hwm`` (file's ids = base..base+numRecords-1)
@@ -1731,14 +1737,7 @@ def _assign_fresh_row_ids(adds: list, hwm: int, commit_version: int) -> int:
     for a in adds:
         if a.get("baseRowId") is not None:
             continue
-        rows = None
-        st = a.get("stats")
-        if st:
-            try:
-                rows = (json.loads(st) if isinstance(st, str) else st
-                        ).get("numRecords")
-            except (ValueError, TypeError):
-                rows = None
+        rows = _num_records(a)
         if rows is None:
             # every staging path in this module writes numRecords; an
             # add without it cannot receive a RANGE — a guessed width
@@ -1749,7 +1748,7 @@ def _assign_fresh_row_ids(adds: list, hwm: int, commit_version: int) -> int:
             )
         a["baseRowId"] = base
         a["defaultRowCommitVersion"] = commit_version
-        base += max(int(rows), 1)
+        base += max(rows, 1)
     return base - 1
 
 
@@ -1759,6 +1758,112 @@ def _row_tracking_domain_action(hwm: int) -> dict:
         "configuration": json.dumps({"rowIdHighWaterMark": int(hwm)}),
         "removed": False,
     }}
+
+
+def _remove(path: str, ts_ms: int, data_change: bool = True) -> dict:
+    """A ``remove`` action for an add's (URL-encoded) ``path``."""
+    return {"remove": {
+        "path": path, "dataChange": data_change, "deletionTimestamp": ts_ms,
+    }}
+
+
+def _physical_names(schema: StructType) -> dict:
+    """{logical name: physical name} of a column-mapped schema's fields
+    (a field without a mapping keeps its own name)."""
+    return {
+        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
+        for f in schema.fields
+    }
+
+
+def _identity_marks(specs: dict, adds: list, phys: dict) -> dict:
+    """The advanced ``delta.identity.highWaterMark`` of each identity
+    column a write allocated values under (``specs``: {name: {"step",
+    "hwm", ...}}): the staged adds' footer max (min for a negative
+    step), never behind the spec's mark. ``phys`` maps logical to
+    physical names on column-mapped tables (the stats key)."""
+    marks: dict = {}
+    for n, sp in specs.items():
+        side = "maxValues" if sp["step"] > 0 else "minValues"
+        vals = [] if sp["hwm"] is None else [sp["hwm"]]
+        for a in adds:
+            try:
+                v = json.loads(a["stats"])[side].get(phys.get(n, n))
+            except (KeyError, ValueError, TypeError):
+                v = None
+            if v is not None:
+                vals.append(int(v))
+        if len(vals) > (sp["hwm"] is not None):
+            marks[n] = max(vals) if sp["step"] > 0 else min(vals)
+    return marks
+
+
+def _with_identity_marks(meta_doc: dict, marks: dict) -> dict:
+    """A copy of the metaData dict whose identity fields carry
+    ``marks``."""
+    doc = json.loads(meta_doc["schemaString"])
+    for f0 in doc["fields"]:
+        if f0["name"] in marks:
+            f0["metadata"] = {
+                **(f0.get("metadata") or {}),
+                "delta.identity.highWaterMark": marks[f0["name"]],
+            }
+    return {**meta_doc, "schemaString": json.dumps(doc)}
+
+
+def _delta_commit(
+    t: "DeltaLogTable", attempt, *, checkpoint_interval: Optional[int] = None
+):
+    """Claim one Delta commit through ``tablecore.commit_loop``.
+    ``attempt()`` re-reads the head and runs the op's re-checks, then
+    returns ``(head, actions, protocol, meta)`` — ``head`` None creates
+    the table; ``protocol`` / ``meta`` are the head's (empty at create)
+    — or a ``Done``. Every attempt then finishes the commit against the
+    POST-commit state (this commit's protocol / metaData action if it
+    has one, else the head's): adds without a ``baseRowId`` draw fresh
+    id ranges plus the row-tracking domain action when the protocol has
+    row tracking, and the in-commit timestamp chains off the head. A
+    won claim checkpoints every ``checkpoint_interval``-th version."""
+    import time as _time
+
+    def finish():
+        got = attempt()
+        if isinstance(got, Done):
+            return got
+        head, actions, protocol, meta = got
+        version = 0 if head is None else head + 1
+        # copies: the caller may hand the same dicts to every attempt
+        actions = [
+            {k: dict(v) if k in ("add", "commitInfo") else v
+             for k, v in a.items()}
+            for a in actions
+        ]
+        for a in actions:
+            protocol = a.get("protocol", protocol)
+            meta = a.get("metaData", meta)
+        if _row_tracking_present(protocol):
+            fresh = [
+                a["add"] for a in actions
+                if "add" in a and a["add"].get("baseRowId") is None
+            ]
+            if fresh:
+                hwm = _assign_fresh_row_ids(fresh, _row_id_hwm(t, head), version)
+                actions.append(_row_tracking_domain_action(hwm))
+        ts_ms = next(
+            (a["commitInfo"]["timestamp"] for a in actions if "commitInfo" in a),
+            int(_time.time() * 1000),
+        )
+        _stamp_ict(actions, t, head, (meta or {}).get("configuration"), ts_ms)
+        return version, "\n".join(json.dumps(a) for a in actions) + "\n"
+
+    def checkpoint(version: int) -> None:
+        if checkpoint_interval and version and version % checkpoint_interval == 0:
+            write_delta_checkpoint(t, version)
+
+    return commit_loop(
+        finish, claimer=LinkCommitClaimer(), log_dir=t.log_dir, path=t.path,
+        error=DeltaProtocolError, after_claim=checkpoint,
+    )
 
 
 def _check_append_only(meta: dict, mode: str) -> None:
@@ -2154,12 +2259,7 @@ def delta_write(
     phys_by_logical: dict = {}
     new_phys: dict = {}
     if mapping_mode:
-        phys_by_logical = {
-            f.name: (f.metadata or {}).get(
-                "delta.columnMapping.physicalName", f.name
-            )
-            for f in snap.schema.fields
-        }
+        phys_by_logical = _physical_names(snap.schema)
         fid_by_logical = {
             f.name: (f.metadata or {}).get("delta.columnMapping.id")
             for f in snap.schema.fields
@@ -2206,52 +2306,18 @@ def delta_write(
     # identity high water marks advance from the STAGED FOOTER STATS —
     # no extra scan; the metaData action below commits them atomically
     # with the files (PROTOCOL.md Identity Columns writer requirement)
-    ident_hwm: dict = {}
-    for _iname, _ispec in ident_generated.items():
-        pcol = (
-            phys_by_logical.get(_iname, _iname) if mapping_mode else _iname
-        )
-        side = "maxValues" if _ispec["step"] > 0 else "minValues"
-        vals = []
-        for a in adds:
-            try:
-                v = json.loads(a["stats"])[side].get(pcol)
-            except (KeyError, ValueError):
-                v = None
-            if v is not None:
-                vals.append(int(v))
-        if vals:
-            new_mark = max(vals) if _ispec["step"] > 0 else min(vals)
-            old = _ispec["hwm"]
-            if old is not None:
-                new_mark = (
-                    max(new_mark, old) if _ispec["step"] > 0
-                    else min(new_mark, old)
-                )
-            ident_hwm[_iname] = new_mark
+    ident_hwm = _identity_marks(ident_generated, adds, phys_by_logical)
 
-    def _apply_ident_hwm(meta_doc: dict) -> dict:
-        """Return a metaData dict whose identity fields carry the
-        advanced high water marks."""
-        doc = json.loads(meta_doc["schemaString"])
-        for f0 in doc["fields"]:
-            if f0["name"] in ident_hwm:
-                md0 = dict(f0.get("metadata") or {})
-                md0["delta.identity.highWaterMark"] = ident_hwm[f0["name"]]
-                f0["metadata"] = md0
-        out = dict(meta_doc)
-        out["schemaString"] = json.dumps(doc)
-        return out
-
-    # ---- claim the commit (retry on version races)
-    claimer = LinkCommitClaimer()
+    # ---- claim the commit (each attempt re-reads the head)
     base_version = snap.version if snap is not None else None
-    for _ in range(20):
+
+    def attempt():
+        nonlocal snap, base_version
         head = t.version() if t.exists() else None
         if txn is not None and head is not None:
             last = t.last_txn_version(str(txn["appId"]))
             if last is not None and int(txn["version"]) <= last:
-                return None  # a racer committed it; staged files orphan
+                return Done(None)  # a racer committed it; staged files orphan
         actions: list = [{
             "commitInfo": {
                 "timestamp": ts_ms,
@@ -2281,26 +2347,16 @@ def delta_write(
             # features from birth — a legacy-protocol table with such a
             # schema would be silently unreadable to conforming clients
             type_feats = _schema_type_features(df.schema.json())
-            if type_feats:
-                upgraded = _protocol_with_features(
-                    create_protocol, type_feats, type_feats
-                )
-                if upgraded is not None:
-                    create_protocol = upgraded
+            writer_feats = set(type_feats)
             if str((configuration or {}).get(
                 "delta.enableRowTracking", ""
             )).lower() == "true":
-                upgraded = _protocol_with_features(
-                    create_protocol, set(), {"rowTracking", "domainMetadata"}
-                )
-                if upgraded is not None:
-                    create_protocol = upgraded
+                writer_feats |= {"rowTracking", "domainMetadata"}
             if cluster_by:
-                upgraded = _protocol_with_features(
-                    create_protocol, set(), {"clustering", "domainMetadata"}
-                )
-                if upgraded is not None:
-                    create_protocol = upgraded
+                writer_feats |= {"clustering", "domainMetadata"}
+            create_protocol = _protocol_with_features(
+                create_protocol, type_feats, writer_feats
+            ) or create_protocol
             actions.append({"protocol": create_protocol})
             actions.append({"metaData": {
                 "id": str(_uuid.uuid4()),
@@ -2320,30 +2376,26 @@ def delta_write(
                     ),
                     "removed": False,
                 }})
-            next_version = 0
+            protocol_now, meta_now = {}, {}
         else:
+            protocol_now, meta_now = _raw_protocol_meta(t, head)
             if head != base_version:
                 # the head moved since validation: re-read and re-check
                 # (schema/rules may have changed; staged files are
                 # schema-bound, rules must re-validate)
                 snap = t.snapshot(head)
-                protocol, meta = _raw_protocol_meta(t, head)
                 _check_writer_protocol(
-                    protocol, meta, snap.schema, allow_column_mapping=True
+                    protocol_now, meta_now, snap.schema,
+                    allow_column_mapping=True,
                 )
-                _check_append_only(meta, mode)
+                _check_append_only(meta_now, mode)
                 if mapping_mode != snap.column_mapping:
                     raise DeltaProtocolError(
                         "column mapping was toggled concurrently; the "
                         "staged files carry the wrong column names"
                     )
                 if mapping_mode:
-                    now_phys = {
-                        f.name: (f.metadata or {}).get(
-                            "delta.columnMapping.physicalName", f.name
-                        )
-                        for f in snap.schema.fields
-                    }
+                    now_phys = _physical_names(snap.schema)
                     stale = sorted(
                         c
                         for c, p in {**phys_by_logical, **new_phys}.items()
@@ -2377,16 +2429,14 @@ def delta_write(
                         "staged files were computed under the old rules"
                     )
                 _enforce_delta_rules(
-                    df, {**_delta_row_rules(meta, snap.schema), **gen_rules}
+                    df, {**_delta_row_rules(meta_now, snap.schema), **gen_rules}
                 )
                 base_version = head
             if mode == "overwrite":
-                for f in snap.files:
-                    actions.append({"remove": {
-                        "path": urllib.parse.quote(f.path),
-                        "dataChange": True,
-                        "deletionTimestamp": ts_ms,
-                    }})
+                actions += [
+                    _remove(urllib.parse.quote(f.path), ts_ms)
+                    for f in snap.files
+                ]
                 if {f.name: f.dataType.simpleString() for f in snap.schema.fields} != {
                     f.name: f.dataType.simpleString() for f in df.schema.fields
                 } or list(snap.partition_columns) != part_cols:
@@ -2409,14 +2459,12 @@ def delta_write(
                             "definition; change the schema with a metadata "
                             "commit first"
                         )
-                    _, meta = _raw_protocol_meta(t, head)
-                    new_meta = dict(meta)
+                    new_meta = dict(meta_now)
                     new_meta["schemaString"] = df.schema.json()
                     new_meta["partitionColumns"] = part_cols
                     actions.append({"metaData": new_meta})
                     ow_feats = _schema_type_features(df.schema.json())
                     if ow_feats:
-                        protocol_now = _raw_protocol_meta(t, head)[0]
                         up = _protocol_with_features(
                             protocol_now, ow_feats, ow_feats
                         )
@@ -2426,8 +2474,9 @@ def delta_write(
                     # same-schema overwrite on an identity table: advance
                     # the marks (overwrite pins its snapshot, so no
                     # concurrent-allocation race is possible here)
-                    _, meta_now = _raw_protocol_meta(t, head)
-                    actions.append({"metaData": _apply_ident_hwm(meta_now)})
+                    actions.append(
+                        {"metaData": _with_identity_marks(meta_now, ident_hwm)}
+                    )
             else:
                 new_cols = [f for f in df.schema.fields
                             if f.name not in {x.name for x in snap.schema.fields}]
@@ -2435,7 +2484,6 @@ def delta_write(
                     # additive evolution: the append commit carries the
                     # UNION schema (existing order + new columns at the
                     # end); older files read the new columns as NULL
-                    _, meta_now = _raw_protocol_meta(t, head)
                     new_meta = dict(meta_now)
                     if mapping_mode:
                         # mapped tables: new fields need fresh ids +
@@ -2476,7 +2524,7 @@ def delta_write(
                         )
                     new_meta["schemaString"] = evolved.json()
                     if ident_hwm:
-                        new_meta = _apply_ident_hwm(new_meta)
+                        new_meta = _with_identity_marks(new_meta, ident_hwm)
                     actions.append({"metaData": new_meta})
                     # a new TIMESTAMP_NTZ / VARIANT column rides its
                     # protocol features into the same commit
@@ -2484,7 +2532,6 @@ def delta_write(
                         StructType(new_cols).json()
                     )
                     if evo_feats:
-                        protocol_now = _raw_protocol_meta(t, head)[0]
                         up = _protocol_with_features(
                             protocol_now, evo_feats, evo_feats
                         )
@@ -2507,39 +2554,13 @@ def delta_write(
                                 "were allocated under the old mark — "
                                 "retry the write"
                             )
-                    _, meta_now = _raw_protocol_meta(t, head)
-                    actions.append({"metaData": _apply_ident_hwm(meta_now)})
-            next_version = head + 1
+                    actions.append(
+                        {"metaData": _with_identity_marks(meta_now, ident_hwm)}
+                    )
         actions += [{"add": a} for a in adds]
-        if head is None:
-            protocol_now = create_protocol
-            conf_now = dict(configuration or {})
-        else:
-            # ONE state reconstruction per attempt serves both the
-            # row-tracking and ICT stamps
-            protocol_now, meta_now = _raw_protocol_meta(t, head)
-            conf_now = (meta_now or {}).get("configuration")
-        if _row_tracking_present(protocol_now) and adds:
-            # fresh files get fresh id ranges; recompute per attempt —
-            # a moved head means a moved high water mark
-            for a in adds:
-                a.pop("baseRowId", None)
-                a.pop("defaultRowCommitVersion", None)
-            new_hwm = _assign_fresh_row_ids(
-                adds, _row_id_hwm(t, head), next_version
-            )
-            actions.append(_row_tracking_domain_action(new_hwm))
-        _stamp_ict(actions, t, head, conf_now, ts_ms)
-        payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-        if claimer.claim(log, f"{next_version:020d}.json", payload):
-            if (
-                checkpoint_interval
-                and next_version
-                and next_version % checkpoint_interval == 0
-            ):
-                write_delta_checkpoint(t, next_version)
-            return next_version
-    raise DeltaProtocolError(f"could not claim a commit on {dest} after 20 tries")
+        return head, actions, protocol_now, meta_now
+
+    return _delta_commit(t, attempt, checkpoint_interval=checkpoint_interval)
 
 
 def write_delta_checkpoint(
@@ -2822,12 +2843,7 @@ def delta_optimize(
         clustering = _clustering_columns(t, snap.version)
         if clustering:
             if snap.column_mapping:
-                p2l = {
-                    (f.metadata or {}).get(
-                        "delta.columnMapping.physicalName", f.name
-                    ): f.name
-                    for f in snap.schema.fields
-                }
+                p2l = {p: n for n, p in _physical_names(snap.schema).items()}
                 clustering = [p2l.get(c, c) for c in clustering]
             zorder_by = clustering
     target = int(target_file_mb * (1 << 20))
@@ -2843,11 +2859,9 @@ def delta_optimize(
     # reads AND rewrites physically (no renaming needed); logical names
     # only matter for zorder_by resolution below. id-mode read schemas
     # keep LOGICAL names (field-id resolution), so no mapping there.
-    phys_of = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName",
-                                       f.name)
-        for f in snap.schema.fields
-    } if snap.mapping_mode == "name" else {}
+    phys_of = (
+        _physical_names(snap.schema) if snap.mapping_mode == "name" else {}
+    )
     if zorder_by:
         bad = set(zorder_by) & set(snap.partition_columns)
         if bad:
@@ -2887,11 +2901,7 @@ def delta_optimize(
     data_schema = t._physical_schema(snap, data_fields)
     # re-emitted adds key partitionValues by PHYSICAL names (the snapshot
     # normalized its copy to logical)
-    l2p = {
-        f.name: (f.metadata or {}).get("delta.columnMapping.physicalName",
-                                       f.name)
-        for f in snap.schema.fields
-    } if snap.column_mapping else {}
+    l2p = _physical_names(snap.schema) if snap.column_mapping else {}
     ts_ms = int(_time.time() * 1000)
     adds, removes = [], []
     for key, members in bins:
@@ -2979,8 +2989,6 @@ def delta_optimize(
             adds.append(add)
         removes += [m.path for m in members]
 
-    claimer = LinkCommitClaimer()
-    log = os.path.join(dest, "_delta_log")
     actions = [
         {"commitInfo": {"timestamp": ts_ms, "operation": "OPTIMIZE",
                         "operationParameters": {
@@ -2988,14 +2996,14 @@ def delta_optimize(
                             **({"zOrderBy": json.dumps(list(zorder_by))}
                                if zorder_by else {})}}},
     ] + [
-        {"remove": {"path": urllib.parse.quote(p), "dataChange": False,
-                    "deletionTimestamp": ts_ms}}
+        _remove(urllib.parse.quote(p), ts_ms, data_change=False)
         for p in removes
     ] + [{"add": a} for a in adds]
     # the add state each input was read under (all inputs are DV-free by
     # selection above, so ANY descriptor appearing is a conflict)
     input_dv = {m.path: m.dv for _key, members in bins for m in members}
-    for _ in range(20):
+
+    def attempt():
         head = t.version()
         if head != snap.version:
             now = {f.path: f.dv for f in t.snapshot(head).files}
@@ -3006,34 +3014,11 @@ def delta_optimize(
                         f"rewrote or deletion-vectored input file {p!r}; "
                         "the compaction read stale rows — retry"
                     )
-            snap = t.snapshot(head)
-        # payload is rebuilt per attempt: the in-commit timestamp chains
-        # off whatever commit is the head NOW
-        attempt = [
-            {k: (dict(v) if isinstance(v, dict) else v) for k, v in a.items()}
-            for a in actions
-        ]
-        if _row_tracking_present(protocol):
-            # the compacted files are new: fresh id ranges (their rows'
-            # STABLE ids ride the materialized columns written above)
-            fresh_adds = [a["add"] for a in attempt if "add" in a]
-            for a in fresh_adds:
-                a.pop("baseRowId", None)
-                a.pop("defaultRowCommitVersion", None)
-            if fresh_adds:
-                new_hwm = _assign_fresh_row_ids(
-                    fresh_adds, _row_id_hwm(t, head), head + 1
-                )
-                attempt.append(_row_tracking_domain_action(new_hwm))
-        _stamp_ict(
-            attempt, t, head,
-            (_raw_protocol_meta(t, head)[1] or {}).get("configuration"),
-            ts_ms,
-        )
-        payload = "\n".join(json.dumps(a) for a in attempt) + "\n"
-        if claimer.claim(log, f"{head + 1:020d}.json", payload):
-            return head + 1
-    raise DeltaProtocolError(f"could not claim a commit on {dest} after 20 tries")
+        # the compacted files are new: fresh row id ranges (their rows'
+        # STABLE ids ride the materialized columns written above)
+        return (head, actions, *_raw_protocol_meta(t, head))
+
+    return _delta_commit(t, attempt)
 
 
 def delta_vacuum(
@@ -3144,8 +3129,26 @@ def delta_restore(
                     f"vector of {rel!r} was vacuumed"
                 )
 
-    claimer = LinkCommitClaimer()
-    for _ in range(20):
+    def _state_key(add: dict):
+        # semantic identity of a live file: its DV descriptor is the
+        # only mutable part (data files are immutable); stats strings
+        # may differ in key order across writers, so parse them
+        st = add.get("stats")
+        try:
+            st = json.loads(st) if isinstance(st, str) else st
+        except ValueError:
+            pass
+        return (add.get("deletionVector"), st, add.get("size"))
+
+    def _meta_key(m: Optional[dict]):
+        m = m or {}
+        return (
+            m.get("schemaString"),
+            list(m.get("partitionColumns") or ()),
+            dict(m.get("configuration") or {}),
+        )
+
+    def attempt():
         head = t.version()
         cur_adds, cur_meta, protocol, _txns = t._collect_state(head)
         _check_writer_protocol(
@@ -3155,34 +3158,15 @@ def delta_restore(
         _check_append_only(cur_meta or {}, "restore")
         removes = sorted(set(cur_adds) - set(target_adds))
 
-        def _state_key(add: dict):
-            # semantic identity of a live file: its DV descriptor is the
-            # only mutable part (data files are immutable); stats strings
-            # may differ in key order across writers, so parse them
-            st = add.get("stats")
-            try:
-                st = json.loads(st) if isinstance(st, str) else st
-            except ValueError:
-                pass
-            return (add.get("deletionVector"), st, add.get("size"))
-
         readds = sorted(
             rel for rel, add in target_adds.items()
             if rel not in cur_adds
             or _state_key(cur_adds[rel]) != _state_key(add)
         )
 
-        def _meta_key(m: Optional[dict]):
-            m = m or {}
-            return (
-                m.get("schemaString"),
-                list(m.get("partitionColumns") or ()),
-                dict(m.get("configuration") or {}),
-            )
-
         meta_changed = _meta_key(cur_meta) != _meta_key(target_meta)
         if not removes and not readds and not meta_changed:
-            return None  # head already equals the target
+            return Done(None)  # head already equals the target
         ts_ms = int(_time.time() * 1000)
         actions: list = [{
             "commitInfo": {
@@ -3193,33 +3177,19 @@ def delta_restore(
         }]
         if meta_changed and target_meta is not None:
             actions.append({"metaData": target_meta})
-        for rel in removes:
-            actions.append({"remove": {
-                "path": cur_adds[rel]["path"],
-                "dataChange": True,
-                "deletionTimestamp": ts_ms,
-            }})
+        actions += [_remove(cur_adds[rel]["path"], ts_ms) for rel in removes]
         for rel in readds:
             if rel in cur_adds:
                 # DV state differs: remove+add supersession, per spec
-                actions.append({"remove": {
-                    "path": cur_adds[rel]["path"],
-                    "dataChange": True,
-                    "deletionTimestamp": ts_ms,
-                }})
+                actions.append(_remove(cur_adds[rel]["path"], ts_ms))
             actions.append({"add": {**target_adds[rel], "dataChange": True}})
         # the POST-restore configuration governs: restoring to a pre-ICT
         # version (meta_changed drops the flag) legitimately ends the
-        # chain; restoring config that carries it keeps stamping
-        conf_after = (
-            (target_meta if meta_changed and target_meta is not None
-             else cur_meta) or {}
-        ).get("configuration")
-        _stamp_ict(actions, t, head, conf_after, ts_ms)
-        payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-        if claimer.claim(t.log_dir, f"{head + 1:020d}.json", payload):
-            return head + 1
-    raise DeltaProtocolError(f"could not claim a commit on {dest} after 20 tries")
+        # in-commit timestamp chain; restoring config that carries it
+        # keeps stamping
+        return head, actions, protocol, cur_meta or {}
+
+    return _delta_commit(t, attempt)
 
 
 def delta_clone(
@@ -3426,15 +3396,14 @@ def _metadata_commit(spark: SparkSession, path: str, op: str, params: dict,
     import time as _time
 
     t = DeltaLogTable(spark, path)
-    claimer = LinkCommitClaimer()
-    log = t.log_dir
-    for _ in range(20):
+
+    def attempt():
         head = t.version()
         if head is None:
-            raise FileNotFoundError(f"no Delta log at {log}")
+            raise FileNotFoundError(f"no Delta log at {t.log_dir}")
         _adds, meta, protocol, _txns = t._collect_state(head)
         if meta is None:
-            raise DeltaProtocolError(f"no metaData action in {log}")
+            raise DeltaProtocolError(f"no metaData action in {t.log_dir}")
         new_meta, new_protocol = mutate(dict(meta), dict(protocol))
         ts_ms = int(_time.time() * 1000)
         actions = [
@@ -3450,19 +3419,16 @@ def _metadata_commit(spark: SparkSession, path: str, op: str, params: dict,
             # the ENABLEMENT commit records where the monotonic chain
             # starts: earlier versions keep their file-time stamps
             # (PROTOCOL.md: enablementVersion / enablementTimestamp)
-            ict0 = _stamp_ict(actions, t, head, new_conf, ts_ms)
+            ict0 = _stamp_ict(list(actions), t, head, new_conf, ts_ms)
             conf2 = dict(new_conf)
             conf2["delta.inCommitTimestampEnablementVersion"] = str(head + 1)
             conf2["delta.inCommitTimestampEnablementTimestamp"] = str(ict0)
             new_meta = dict(new_meta)
             new_meta["configuration"] = conf2
-        else:
-            _stamp_ict(actions, t, head, new_conf, ts_ms)
         actions.append({"metaData": new_meta})
-        payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-        if claimer.claim(log, f"{head + 1:020d}.json", payload):
-            return head + 1
-    raise DeltaProtocolError(f"could not claim a commit on {path} after 20 tries")
+        return head, actions, protocol, meta
+
+    return _delta_commit(t, attempt)
 
 
 def delta_enable_column_mapping(spark: SparkSession, path: str) -> int:
@@ -3976,14 +3942,16 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
     column names in the configuration, (c) BACKFILLS every live file —
     re-added (dataChange=false) with a fresh baseRowId range and this
     commit as its defaultRowCommitVersion — and (d) plants the
-    rowIdHighWaterMark domain. After this commit every row has a stable
-    id: ``baseRowId + row_index`` until a rewrite materializes it."""
+    rowIdHighWaterMark domain past those ranges (``_delta_commit`` draws
+    both; a table with no live file gets its domain with its first add).
+    After this commit every row has a stable id: ``baseRowId +
+    row_index`` until a rewrite materializes it."""
     import time as _time
     import uuid as _uuid
 
     t = DeltaLogTable(spark, path)
-    claimer = LinkCommitClaimer()
-    for _ in range(20):
+
+    def attempt():
         head = t.version()
         if head is None:
             raise FileNotFoundError(f"no Delta log at {t.log_dir}")
@@ -3992,7 +3960,7 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
             raise DeltaProtocolError(f"no metaData action in {t.log_dir}")
         conf = dict(meta.get("configuration") or {})
         if str(conf.get("delta.enableRowTracking", "")).lower() == "true":
-            return head  # already enabled
+            return Done(head)  # already enabled
         # same gate as every other write path: enabling row tracking
         # re-adds files — obligations this writer can't honor must refuse
         _check_writer_protocol(
@@ -4001,7 +3969,6 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
             allow_column_mapping=True,
         )
         ts_ms = int(_time.time() * 1000)
-        next_version = head + 1
         conf["delta.enableRowTracking"] = "true"
         conf.setdefault(
             "delta.rowTracking.materializedRowIdColumnName",
@@ -4032,13 +3999,7 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
                 continue
             a = _canon_add(a)
             a["dataChange"] = False
-            st = a.get("stats")
-            try:
-                rows = (json.loads(st) if isinstance(st, str) else st or {}
-                        ).get("numRecords")
-            except (ValueError, TypeError):
-                rows = None
-            if rows is None:
+            if _num_records(a) is None:
                 # stats are OPTIONAL per add (foreign writers,
                 # dataSkippingNumIndexedCols=0): the id RANGE must still
                 # cover every physical row, so read the footer count —
@@ -4046,24 +4007,18 @@ def delta_enable_row_tracking(spark: SparkSession, path: str) -> int:
                 n_rows, _size, _stats = footer_stats_safe(
                     spark, os.path.join(t.path, rel)
                 )
+                st = a.get("stats")
                 a["stats"] = json.dumps({
                     **(json.loads(st) if isinstance(st, str) and st
                        else {}),
                     "numRecords": int(n_rows),
                 })
             backfill.append(a)
-        new_hwm = _assign_fresh_row_ids(
-            backfill, _row_id_hwm(t, head), next_version
-        )
+        # the finishing step gives every backfilled add its id range
         actions += [{"add": a} for a in backfill]
-        actions.append(_row_tracking_domain_action(max(new_hwm, -1)))
-        _stamp_ict(actions, t, head, conf, ts_ms)
-        payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-        if claimer.claim(t.log_dir, f"{next_version:020d}.json", payload):
-            return next_version
-    raise DeltaProtocolError(
-        f"could not claim a commit on {path} after 20 tries"
-    )
+        return head, actions, protocol, meta
+
+    return _delta_commit(t, attempt)
 
 
 # ---------------- batch change data feed (Delta's table_changes)

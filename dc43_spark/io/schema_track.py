@@ -23,9 +23,10 @@ documented evolution ladder (delta-spark
    exactly one schema generation and no commit is lost or duplicated.
 
 The log itself is write-once-per-entry JSON (``0.json``, ``1.json``,
-...), claimed atomically via temp-file + ``os.link`` (the snaplog
-commit claimer's primitive) so two racing drivers cannot both record
-entry N. Entries carry the owning table's path and (for Delta) its
+...), claimed through the commit loop both table formats use
+(``tablecore.commit_loop`` over ``LinkCommitClaimer``: temp file +
+atomic ``os.link``) so two racing drivers cannot both record entry N.
+Entries carry the owning table's path and (for Delta) its
 ``metaData.id`` — reusing one tracking directory for a different table
 refuses instead of serving the wrong schema.
 
@@ -39,8 +40,9 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Optional
+
+from dc43_spark.io.tablecore import Done, LinkCommitClaimer, commit_loop
 
 
 class SchemaTrackingError(ValueError):
@@ -77,11 +79,12 @@ class SchemaTrackingLog:
 
     def append(self, entry: dict) -> dict:
         """Claim the next sequence number for ``entry`` (atomic link —
-        a racing writer loses and re-reads). Returns the stored entry.
+        a racing writer loses and re-reads, up to
+        ``tablecore.CLAIM_TRIES`` times). Returns the stored entry.
         Appending a fingerprint the latest entry already carries is a
         no-op (idempotent under offset-walk replays)."""
-        os.makedirs(self.dir, exist_ok=True)
-        while True:
+
+        def attempt():
             latest = self.latest()
             if (
                 latest is not None
@@ -89,23 +92,19 @@ class SchemaTrackingLog:
                 and latest.get("partition_columns")
                 == entry.get("partition_columns")
             ):
-                return latest
+                return Done(latest)
             seq = 0 if latest is None else latest["seq"] + 1
-            payload = json.dumps(
+            return seq, json.dumps(
                 {k: v for k, v in entry.items() if k != "seq"},
                 sort_keys=True,
             )
-            fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".tmp")
-            try:
-                with os.fdopen(fd, "w") as fh:
-                    fh.write(payload)
-                try:
-                    os.link(tmp, os.path.join(self.dir, f"{seq}.json"))
-                    return {**entry, "seq": seq}
-                except FileExistsError:
-                    continue  # a rival claimed this seq — re-read, retry
-            finally:
-                os.unlink(tmp)
+
+        got = commit_loop(
+            attempt, claimer=LinkCommitClaimer(), log_dir=self.dir,
+            path=self.dir, error=SchemaTrackingError,
+            name=lambda seq: f"{seq}.json",
+        )
+        return got if isinstance(got, dict) else {**entry, "seq": got}
 
     def validate_owner(self, table_path: str, table_id: Optional[str]) -> None:
         """Refuse a tracking directory that belongs to a DIFFERENT

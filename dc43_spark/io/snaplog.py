@@ -125,9 +125,12 @@ from dc43_spark.io.mergecore import (
 from dc43_spark.io.sourcecore import changes_frame
 from dc43_spark.io.tablecore import (  # noqa: F401 (HttpCommitClaimer: re-export)
     CommitClaimer,
+    Done,
     FileEntry,
     HttpCommitClaimer,
     LinkCommitClaimer,
+    commit_loop,
+    commit_name,
     cond_may_match,
     file_may_match,
     filters_to_column,
@@ -150,15 +153,6 @@ _VERSION_WIDTH = 20
 
 class SnapshotConflictError(RuntimeError):
     """A concurrent commit invalidated this transaction's read snapshot."""
-
-
-class _TableRulesChangedError(SnapshotConflictError):
-    """The table's validation/layout rules (partition spec, CHECK
-    constraints, column mapping, generated columns) changed between an
-    operation's validation and its commit. Unlike a plain head-moved
-    conflict this is NOT retryable with the already-staged files — they
-    were computed under the old rules — so retry loops must re-raise it
-    instead of re-attempting the commit."""
 
 
 class ConstraintViolationError(ValueError):
@@ -834,10 +828,6 @@ def _widen_conflicts(old: dict, new: dict) -> tuple[dict, list]:
     return widen, hard
 
 
-def _commit_name(version: int) -> str:
-    return f"{version:0{_VERSION_WIDTH}d}.json"
-
-
 def _checkpoint_name(version: int, fmt: str = "json") -> str:
     return f"{version:0{_VERSION_WIDTH}d}.checkpoint.{fmt}"
 
@@ -1127,7 +1117,7 @@ class SnaplogTable:
         return vs[-1] if vs else None
 
     def _read_commit(self, version: int) -> dict:
-        with open(os.path.join(self.log_dir, _commit_name(version))) as fh:
+        with open(os.path.join(self.log_dir, commit_name(version))) as fh:
             return json.load(fh)
 
     # ---------------- snapshots
@@ -1950,12 +1940,6 @@ class SnaplogTable:
             entries.append(FileEntry(e.path, e.rows, e.bytes, stats, partition))
         return entries
 
-    def _try_commit(self, version: int, record: dict) -> bool:
-        """Atomically claim ``_snaplog/<version>.json``; False if taken."""
-        return self.claimer.claim(
-            self.log_dir, _commit_name(version), json.dumps(record)
-        )
-
     def _load_checkpoint(self, version: int):
         """-> (base _FileBlock, dvs, schema_json, partition_by, timestamp,
         bloom_files, constraints, column_mapping). Parquet preferred
@@ -2296,7 +2280,7 @@ class SnaplogTable:
         data_change: bool = True,
         dv_add: Sequence[FileEntry] = (),
         dv_clear: bool = False,
-        schema_fn=None,
+        recheck=None,
         partition_by: Optional[Sequence[str]] = None,
         read_info: Optional[ReadInfo] = None,
         constraints: Optional[dict] = None,
@@ -2305,15 +2289,16 @@ class SnaplogTable:
         retired: Optional[Sequence[str]] = None,
         refs: Optional[dict] = None,
         generated: Optional[dict] = None,
-    ) -> int:
-        """Write one commit. ``expected_version`` pins the read snapshot
-        (merge/overwrite/compact); ``retry_append`` lets blind appends chase
-        the head on conflict; ``txn`` ({'app_id', 'version'}) rides in the
-        manifest for idempotent-writer tracking (Delta's txnAppId shape);
-        ``cdc`` lists row-level change files under _change_data/ (read by
-        ``table_changes``); ``data_change=False`` marks layout-only commits
-        (compaction) that the change feed must skip — Delta's
-        dataChange=false action flag.
+    ) -> Optional[int]:
+        """Write one commit through ``tablecore.commit_loop``.
+        ``expected_version`` pins the read snapshot (merge/overwrite/
+        compact; None = the table must not exist yet); ``retry_append``
+        drops the pin so blind appends chase the head; ``txn`` ({'app_id',
+        'version'}) rides in the manifest for idempotent-writer tracking
+        (Delta's txnAppId shape); ``cdc`` lists row-level change files
+        under _change_data/ (read by ``table_changes``);
+        ``data_change=False`` marks layout-only commits (compaction) that
+        the change feed must skip — Delta's dataChange=false action flag.
 
         ``read_info`` upgrades the ``expected_version`` pin from physical
         to LOGICAL conflict detection (Delta's OptimisticTransaction
@@ -2326,13 +2311,14 @@ class SnaplogTable:
         concurrent merges, appends racing compactions, and partition-local
         writers all land without aborting each other.
 
-        ``schema_fn`` (appends only): a zero-arg callable re-deriving the
+        ``recheck`` (appends only): a zero-arg callable re-deriving the
         commit's schema_json against the CURRENT head, re-invoked on every
-        attempt. Without it, an append racing a concurrent schema
-        evolution would land at a later version still carrying the
-        pre-evolution schema — and since ``snapshot()`` takes the last
-        non-null schema_json, that stale record would roll the table
-        schema back and silently NULL the evolved column on reads."""
+        attempt (or returning a ``Done`` to commit nothing). Without it,
+        an append racing a concurrent schema evolution would land at a
+        later version still carrying the pre-evolution schema — and since
+        ``snapshot()`` takes the last non-null schema_json, that stale
+        record would roll the table schema back and silently NULL the
+        evolved column on reads."""
         record = {
             "operation": operation,
             "add": [self._entry_record(f) for f in add],
@@ -2380,22 +2366,32 @@ class SnaplogTable:
             record["dv_add"] = [{"path": f.path, "rows": f.rows} for f in dv_add]
         if dv_clear:
             record["dv_clear"] = True
-        attempts = 0
-        while True:
+        pin = expected_version
+        tried = None  # the version the previous attempt tried to claim
+
+        def attempt():
+            nonlocal pin, tried
+            if tried is not None and read_info is None and not retry_append:
+                # a pin without a logical check cannot rebase: the lost
+                # claim is the conflict
+                raise SnapshotConflictError(
+                    f"concurrent commit claimed v{tried} of {self.path} "
+                    f"during {operation}"
+                )
             current = self.version()
-            if expected_version is not None and current != expected_version:
-                if read_info is None:
+            if not retry_append and current != pin:
+                if read_info is None or pin is None:
                     raise SnapshotConflictError(
-                        f"{operation} read snapshot v{expected_version} of "
-                        f"{self.path} is stale: table is now at v{current}"
+                        f"{operation} read snapshot v{pin} of {self.path} "
+                        f"is stale: table is now at v{current}"
                     )
                 # logical check: disjoint intermediate commits -> rebase
-                self._check_rebase(
-                    expected_version, current, record, read_info, operation
-                )
-                expected_version = current
-            if schema_fn is not None:
-                fresh = schema_fn()
+                self._check_rebase(pin, current, record, read_info, operation)
+                pin = current
+            if recheck is not None:
+                fresh = recheck()
+                if isinstance(fresh, Done):
+                    return fresh
                 if fresh:
                     record["schema_json"] = fresh
                 else:
@@ -2416,23 +2412,18 @@ class SnaplogTable:
                 if now <= prev_ts:
                     now = prev_ts + 1e-3
             record["timestamp"] = now
-            if self._try_commit(version, record):
-                self._persist_properties()
-                self._maybe_checkpoint(version)
-                return version
-            if expected_version is not None:
-                if read_info is not None and attempts < 20:
-                    attempts += 1
-                    continue  # head moved again: re-run the logical check
-                raise SnapshotConflictError(
-                    f"concurrent commit claimed v{version} of {self.path} "
-                    f"during {operation}"
-                )
-            if not retry_append or attempts >= 20:
-                raise SnapshotConflictError(
-                    f"could not claim a commit version for {operation} on {self.path}"
-                )
-            attempts += 1
+            tried = version
+            return version, json.dumps(record)
+
+        def after_claim(version: int) -> None:
+            self._persist_properties()
+            self._maybe_checkpoint(version)
+
+        return commit_loop(
+            attempt, claimer=self.claimer, log_dir=self.log_dir,
+            path=self.path, error=SnapshotConflictError,
+            after_claim=after_claim,
+        )
 
     def _check_rebase(
         self,
@@ -2584,79 +2575,23 @@ class SnaplogTable:
         the txn marker commits atomically WITH the data files, so a replay
         of an already-committed version is skipped (returns None) and a
         crash before the commit leaves only invisible staged files (vacuum
-        sweeps them). The commit is version-pinned and the txn check
-        re-runs after every conflict, so even two RACING writers with the
-        same (app_id, version) — not just sequential replays — land
-        exactly one copy. This is the exactly-once primitive the streaming
-        sink builds on."""
+        sweeps them). The txn check re-runs in every claim attempt, so
+        even two RACING writers with the same (app_id, version) — not
+        just sequential replays — land exactly one copy. This is the
+        exactly-once primitive the streaming sink builds on."""
         last = self.last_txn_version(app_id)
         if last is not None and version <= last:
             return None
-        # ONE head snapshot load serves generated rules, constraints, the
-        # partition spec, and the physical mapping (write()'s discipline)
-        cur = self.version()
-        head = self.snapshot(cur) if cur is not None else None
-        gen0 = dict(head.generated) if head is not None else {}
-        if gen0:
-            df = self._apply_generated(df, gen0, "write_txn")
-        self._check_append_schema(df, merge_schema)  # fail fast, pre-staging
-        cons0 = head.constraints if head is not None else {}
-        self._enforce_constraints(df, cons0, "write_txn")
-        spec0 = head.partition_by if head is not None else ()
-        map0 = head.column_mapping if head is not None else {}
-        added = self._stage_files(
-            self._to_physical_df(df, head) if head is not None else df,
-            partition_by=spec0,
-            align_partitions=self.optimize_write,
-        )
-
-        def _txn_recheck():
-            # re-derived per attempt (see _commit): losing the race to a
-            # schema evolution must record the EVOLVED schema; losing to a
-            # re-partition, constraint change, rename/drop, or generated-
-            # column change means the staged files embody STALE rules —
-            # abort rather than land them (write()._recheck's contract)
-            hv = self.version()
-            hs = self.snapshot(hv) if hv is not None else None
-            if hs is not None:
-                if hs.partition_by != spec0:
-                    raise _TableRulesChangedError(
-                        f"table {self.path} was re-partitioned concurrently"
-                    )
-                if hs.constraints != cons0:
-                    raise _TableRulesChangedError(
-                        f"CHECK constraints on {self.path} changed concurrently"
-                    )
-                if hs.column_mapping != map0:
-                    raise _TableRulesChangedError(
-                        f"columns of {self.path} were renamed/dropped concurrently"
-                    )
-                if dict(hs.generated) != gen0:
-                    raise _TableRulesChangedError(
-                        f"generated columns of {self.path} changed concurrently"
-                    )
-            return self._check_append_schema(df, merge_schema)
-
-        for _ in range(20):
-            last = self.last_txn_version(app_id)
-            if last is not None and version <= last:
-                return None  # a racer committed it; staged files stay invisible
-            try:
-                return self._commit(
-                    "append",
-                    add=added,
-                    expected_version=self.version(),
-                    txn={"app_id": app_id, "version": int(version)},
-                    partition_by=spec0,
-                    schema_fn=_txn_recheck,
-                )
-            except _TableRulesChangedError:
-                raise  # staged files embody stale rules: never retryable
-            except SnapshotConflictError:
-                continue  # head moved: re-check the txn ledger, then retry
-        raise SnapshotConflictError(
-            f"write_txn({app_id}, {version}) could not claim a commit on {self.path}"
-        )
+        current = self.version()
+        return self._append(
+            df,
+            self.snapshot(current) if current is not None else None,
+            label="write_txn",
+            merge_schema=merge_schema,
+            txn={"app_id": app_id, "version": int(version)},
+            optimize_write=self.optimize_write,
+            skip_replayed=True,
+        )[0]
 
     # ---------------- writes
 
@@ -2795,107 +2730,129 @@ class SnaplogTable:
         # table, snapshot reconstruction is the driver cost of a write
         current = self.version()
         head = self.snapshot(current) if current is not None else None
-        gen = head.generated if head is not None else {}
-        if gen:
-            # compute absent generated columns / validate provided ones
-            # BEFORE the schema snapshot so evolution sees the real shape
-            df = self._apply_generated(df, gen, f"write({mode})")
-        schema_json = df.schema.json()
         ow = optimize_write if optimize_write is not None else self.optimize_write
-        if mode == "overwrite":
-            # constraints are a TABLE invariant: they survive overwrite
-            # (Delta's semantics) — drop them explicitly to relax
-            self._enforce_constraints(df, head.constraints if head else {}, "overwrite")
-            remove = head.file_paths() if head else []
-            spec = tuple(partition_by or ())
-            added = self._stage_files(df, partition_by=spec, align_partitions=ow)
-            version = self._commit(
-                "overwrite",
-                add=added,
-                remove=remove,
-                schema_json=schema_json,
-                expected_version=current,
-                txn=txn,
-                dv_clear=True,  # removed files take their vectors with them
-                partition_by=spec,
-                # every file is replaced: logical == physical again and
-                # no retired slot survives
-                column_mapping={} if head and head.column_mapping else None,
-                retired=[] if head and head.retired else None,
+        if mode == "append":
+            version, added = self._append(
+                df, head, label="append", merge_schema=merge_schema, txn=txn,
+                partition_by=partition_by, optimize_write=ow,
             )
             self._maybe_auto_compact(added)
             return version
+        gen = head.generated if head is not None else {}
+        if gen:
+            # compute absent generated columns / validate provided ones
+            df = self._apply_generated(df, gen, "write(overwrite)")
+        # constraints are a TABLE invariant: they survive overwrite
+        # (Delta's semantics) — drop them explicitly to relax
+        self._enforce_constraints(df, head.constraints if head else {}, "overwrite")
+        remove = head.file_paths() if head else []
+        spec = tuple(partition_by or ())
+        added = self._stage_files(df, partition_by=spec, align_partitions=ow)
+        version = self._commit(
+            "overwrite",
+            add=added,
+            remove=remove,
+            schema_json=df.schema.json(),
+            expected_version=current,
+            txn=txn,
+            dv_clear=True,  # removed files take their vectors with them
+            partition_by=spec,
+            # every file is replaced: logical == physical again and
+            # no retired slot survives
+            column_mapping={} if head and head.column_mapping else None,
+            retired=[] if head and head.retired else None,
+        )
+        self._maybe_auto_compact(added)
+        return version
+
+    def _append(
+        self,
+        df: DataFrame,
+        head: "Optional[Snapshot]",
+        *,
+        label: str,
+        merge_schema: bool = False,
+        txn: Optional[dict] = None,
+        partition_by: Optional[Sequence[str]] = None,
+        optimize_write: Optional[bool] = None,
+        skip_replayed: bool = False,
+    ) -> tuple:
+        """The append of ``write`` and ``write_txn``: validate against the
+        ``head`` snapshot (None = no table yet), stage, and commit at
+        whatever the head is by then. Every claim attempt re-checks the
+        head: an append that loses the race to a schema evolution records
+        the EVOLVED union schema; one that loses to a re-partition,
+        constraint change, rename/drop or generated-column change aborts
+        (its files were staged and validated under the old rules). With
+        ``skip_replayed`` an attempt that finds ``txn`` already in the
+        ledger commits nothing. Returns (version or None, staged files)."""
+        gen = head.generated if head is not None else {}
+        if gen:
+            # compute absent generated columns / validate provided ones
+            # BEFORE the schema check so evolution sees the real shape
+            df = self._apply_generated(df, gen, label)
         self._check_append_schema(df, merge_schema)  # fail before staging
-        head_snap = head
-        if current is None:
+        if head is None:
             spec = tuple(partition_by or ())
             cons: dict = {}
             mapping: dict = {}
         else:
-            spec = head_snap.partition_by
-            cons = head_snap.constraints
-            mapping = head_snap.column_mapping
+            spec = head.partition_by
+            cons = head.constraints
+            mapping = head.column_mapping
             if partition_by is not None and tuple(partition_by) != spec:
                 raise ValueError(
                     f"append partition_by {list(partition_by)} does not match "
                     f"the table's spec {list(spec)}; overwrite to re-partition"
                 )
-        self._enforce_constraints(df, cons, "append")
+        self._enforce_constraints(df, cons, label)
 
-        def _recheck():
-            # re-derived per attempt (see _commit): an append that loses
-            # the race to a schema-evolving commit must record the EVOLVED
-            # union schema; one that loses to a concurrent RE-PARTITION
-            # has its files staged in the wrong layout — and one that
-            # loses to a concurrent CONSTRAINT change (validated against
-            # the old rules) or RENAME/DROP (staged under the old
-            # physical names) must likewise abort
-            head = self.version()
-            if head is not None:
-                hs = self.snapshot(head)
-                head_spec, head_cons, head_map = (
-                    hs.partition_by, hs.constraints, hs.column_mapping,
-                )
-            else:
-                head_spec, head_cons, head_map = spec, cons, mapping
-            if head_spec != spec:
-                raise SnapshotConflictError(
-                    f"table {self.path} was re-partitioned concurrently "
-                    f"({list(spec)} -> {list(head_spec)}); retry the append"
-                )
-            if head_cons != cons:
-                raise SnapshotConflictError(
-                    f"CHECK constraints on {self.path} changed concurrently; "
-                    "retry the append (it was validated against the old set)"
-                )
-            if head_map != mapping:
-                raise SnapshotConflictError(
-                    f"columns of {self.path} were renamed/dropped "
-                    "concurrently; retry the append"
-                )
-            head_gen = hs.generated if head is not None else gen
-            if head_gen != gen:
-                raise SnapshotConflictError(
-                    f"generated columns of {self.path} changed concurrently; "
-                    "retry the append (it was computed under the old rules)"
-                )
+        def recheck():
+            if skip_replayed:
+                last = self.last_txn_version(txn["app_id"])
+                if last is not None and txn["version"] <= last:
+                    return Done(None)  # a racer committed it; files orphan
+            hv = self.version()
+            hs = self.snapshot(hv) if hv is not None else head
+            if hs is not None:
+                if hs.partition_by != spec:
+                    raise SnapshotConflictError(
+                        f"table {self.path} was re-partitioned concurrently "
+                        f"({list(spec)} -> {list(hs.partition_by)}); retry "
+                        "the append"
+                    )
+                if hs.constraints != cons:
+                    raise SnapshotConflictError(
+                        f"CHECK constraints on {self.path} changed "
+                        "concurrently; retry the append (it was validated "
+                        "against the old set)"
+                    )
+                if hs.column_mapping != mapping:
+                    raise SnapshotConflictError(
+                        f"columns of {self.path} were renamed/dropped "
+                        "concurrently; retry the append"
+                    )
+                if dict(hs.generated) != dict(gen):
+                    raise SnapshotConflictError(
+                        f"generated columns of {self.path} changed "
+                        "concurrently; retry the append (it was computed "
+                        "under the old rules)"
+                    )
             return self._check_append_schema(df, merge_schema)
 
         added = self._stage_files(
-            self._to_physical_df(df, head_snap) if head_snap is not None else df,
+            self._to_physical_df(df, head) if head is not None else df,
             partition_by=spec,
-            align_partitions=ow,
+            align_partitions=optimize_write,
         )
-        version = self._commit(
+        return self._commit(
             "append",
             add=added,
             retry_append=True,
             txn=txn,
             partition_by=spec,
-            schema_fn=_recheck,
-        )
-        self._maybe_auto_compact(added)
-        return version
+            recheck=recheck,
+        ), added
 
     # ---------------- copy-on-write MERGE
 

@@ -6,7 +6,9 @@ entry (a typed snaplog ``FileEntry`` vs a Delta ``add`` action) and how
 its commits are laid out. The mechanisms below are decided once:
 
 - **Claiming** a commit: ``CommitClaimer`` (atomic put-if-absent) with
-  the POSIX-link and HTTP conditional-put implementations.
+  the POSIX-link and HTTP conditional-put implementations, and
+  ``commit_loop``, the one bounded claim-retry loop every commit of
+  either format runs through.
 - **Footer stats**: per-column min/max/null counts read from a staged
   parquet footer, with a Spark fallback for footers pyarrow can't parse.
 - **Staging**: ``stage_parquet`` writes a frame through an invisible
@@ -149,6 +151,52 @@ class HttpCommitClaimer:
             return
         with urllib.request.urlopen(self._url(dest_name), timeout=self.timeout) as r:
             self._publish(log_dir, dest_name, r.read().decode())
+
+
+#: Claims one commit may lose to rivals before it gives up.
+CLAIM_TRIES = 20
+
+
+def commit_name(version: int) -> str:
+    """``<version>.json``, zero-padded to 20 digits (both formats)."""
+    return f"{version:020d}.json"
+
+
+@dataclass(frozen=True)
+class Done:
+    """An attempt's answer that needs no commit (a replayed txn, a no-op
+    restore): ``commit_loop`` returns ``value`` without claiming."""
+
+    value: object = None
+
+
+def commit_loop(
+    attempt: Callable[[], "tuple[int, str] | Done"],
+    *,
+    claimer: CommitClaimer,
+    log_dir: str,
+    path: str,
+    error: type,
+    after_claim: Optional[Callable[[int], None]] = None,
+    name: Callable[[int], str] = commit_name,
+):
+    """Claim one commit, retrying on a lost claim. Each pass calls
+    ``attempt()``, which re-reads the head, runs the op's own re-checks
+    (raising on a real conflict) and returns ``(version, payload)`` to
+    claim, or a ``Done`` to return early. A won claim runs
+    ``after_claim(version)`` (checkpoint, table properties) and returns
+    the version; a lost one re-runs the attempt against the new head.
+    After ``CLAIM_TRIES`` lost claims it raises ``error``."""
+    for _ in range(CLAIM_TRIES):
+        got = attempt()
+        if isinstance(got, Done):
+            return got.value
+        version, payload = got
+        if claimer.claim(log_dir, name(version), payload):
+            if after_claim is not None:
+                after_claim(version)
+            return version
+    raise error(f"could not claim a commit on {path} after {CLAIM_TRIES} tries")
 
 
 # ---------------- file entries and footer stats
@@ -370,10 +418,18 @@ def stage_concurrently(jobs: Sequence[Optional[Callable[[], object]]]) -> list:
         if not callable(inherit):  # no active session / pinned threads off
             inherit = inheritable_thread_target
         with ThreadPoolExecutor(max_workers=len(live)) as pool:
-            futures = {i: pool.submit(inherit(jobs[i])) for i in live}
+            futures = {i: pool.submit(_run, inherit(jobs[i])) for i in live}
         for i, fut in futures.items():
             out[i] = fut.result()
     return out
+
+
+def _run(target: Callable[[], object]) -> object:
+    """A pool thread's entry: PySpark names a job's call site after the
+    frame that calls its first PySpark frame (the inheriting wrapper),
+    so calling the wrapper from here names ``io/tablecore.py`` instead
+    of the stdlib executor."""
+    return target()
 
 
 # ---------------- scan keying

@@ -5,6 +5,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
@@ -170,6 +171,30 @@ def _delta_protocol_conformance(request, tmp_path_factory):
     from dc43_spark.io.delta_conformance import validate_tree
 
     validate_tree(root)
+
+
+@pytest.fixture
+def fail_first_staging_job(monkeypatch, spark):
+    """``arm(module)`` makes the first of a DML's concurrent staging jobs
+    (``module.stage_concurrently``) a failing Spark job; the others
+    still stage their files, since ``stage_concurrently`` drains every
+    job before it raises."""
+
+    def arm(module):
+        real = module.stage_concurrently
+
+        def staged(jobs):
+            live = [i for i, j in enumerate(jobs) if j is not None]
+            assert len(live) >= 2, "the DML staged fewer than two jobs"
+            jobs = list(jobs)
+            jobs[live[0]] = lambda: spark.range(1).select(
+                F.raise_error(F.lit("boom"))
+            ).collect()
+            return real(jobs)
+
+        monkeypatch.setattr(module, "stage_concurrently", staged)
+
+    return arm
 
 
 @pytest.fixture(scope="session")

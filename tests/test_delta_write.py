@@ -1130,3 +1130,49 @@ def test_staging_kernel_partitioned_cases(spark, tmp_path, case):
         assert not [n for n in os.listdir(t) if n.startswith("_staging_")]
         assert d.version() == v
         assert _data_files(t) == on_disk
+
+
+def _staged_files(root):
+    """Every parquet file under ``root`` outside ``_delta_log`` (data AND
+    change-feed files, committed or orphaned)."""
+    out = set()
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if n != "_delta_log"]
+        out |= {os.path.relpath(os.path.join(d, n), root)
+                for n in names if n.endswith(".parquet")}
+    return out
+
+
+def test_staging_kernel_failing_merge_job(
+    spark, tmp_path, fail_first_staging_job
+):
+    """The ``failing_job`` case under a change-feed MERGE, whose rewrite,
+    insert and change files stage as concurrent jobs: one job fails,
+    nothing commits, and delta_vacuum reclaims the other jobs' files;
+    test_snaplog_partitions.py runs the same case under snaplog."""
+    from dc43_spark.io import delta_dml
+    from dc43_spark.io.delta_dml import delta_merge
+    from dc43_spark.io.delta_log import delta_vacuum
+
+    t = str(tmp_path / "t")
+    schema = "k long, region string, v string"
+    delta_write(
+        spark,
+        spark.createDataFrame([(i, "us", f"v{i}") for i in range(6)], schema)
+        .coalesce(1),
+        t, configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    d = DeltaLogTable(spark, t)
+    v, committed = d.version(), _staged_files(t)
+    fail_first_staging_job(delta_dml)
+    with pytest.raises(Exception, match="boom"):
+        delta_merge(
+            spark,
+            spark.createDataFrame([(1, "us", "m"), (9, "us", "n")], schema),
+            t, ["k"],
+        )
+    reader = DeltaLogTable(spark, t)
+    assert reader.version() == v and reader.read().count() == 6
+    assert _staged_files(t) > committed
+    delta_vacuum(spark, t, retain_hours=0)
+    assert _staged_files(t) == committed

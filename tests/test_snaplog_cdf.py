@@ -355,3 +355,19 @@ def test_concurrent_staging_jobs_keep_the_callers_job_group(spark, tmp_path):
     assert os.listdir(t.cdc_dir)
     assert os.listdir(os.path.join(delta_path, "_change_data"))
     assert not any(f.dv for f in DeltaLogTable(spark, delta_path).snapshot().files)
+
+
+def test_concurrent_staging_jobs_name_a_library_call_site(spark):
+    """PySpark names a job's call site after the frame that calls its
+    first PySpark frame; in a pool thread (with a live session, so the
+    jobs run through PySpark's inheriting wrapper) that frame is the
+    wrapper's caller, which ``stage_concurrently`` keeps in
+    ``io/tablecore.py`` rather than the stdlib executor."""
+    import os
+
+    from pyspark.traceback_utils import first_spark_call
+
+    from dc43_spark.io.tablecore import stage_concurrently
+
+    sites = stage_concurrently([first_spark_call, first_spark_call])
+    assert [os.path.basename(s.file) for s in sites] == ["tablecore.py"] * 2

@@ -329,3 +329,37 @@ def test_staging_kernel_partitioned_cases(spark, tmp_path, case):
         assert not [n for n in os.listdir(t.path) if n.startswith("_staging_")]
         assert t.version() == v
         assert _data_files(t.path) == on_disk
+
+
+def _staged_files(root):
+    """Every parquet file under ``root`` outside ``_snaplog`` (data AND
+    change-feed files, committed or orphaned)."""
+    out = set()
+    for d, dirs, names in os.walk(root):
+        dirs[:] = [n for n in dirs if n != "_snaplog"]
+        out |= {os.path.relpath(os.path.join(d, n), root)
+                for n in names if n.endswith(".parquet")}
+    return out
+
+
+def test_staging_kernel_failing_merge_job(
+    spark, tmp_path, fail_first_staging_job
+):
+    """The ``failing_job`` case under a change-feed MERGE, whose change
+    files and data files stage as two concurrent jobs: one job fails,
+    nothing commits, and vacuum reclaims the other job's files;
+    test_delta_write.py runs the same case under the Delta merge."""
+    from dc43_spark.io import snaplog
+
+    t = SnaplogTable(spark, str(tmp_path / "t"), change_feed=True)
+    t.write(_df(spark, [(i, "us", f"v{i}") for i in range(6)]).coalesce(1),
+            mode="overwrite")
+    v, committed = t.version(), _staged_files(t.path)
+    fail_first_staging_job(snaplog)
+    with pytest.raises(Exception, match="boom"):
+        t.merge(_df(spark, [(1, "us", "m"), (9, "us", "n")]), ["k"])
+    reader = SnaplogTable(spark, t.path)
+    assert reader.version() == v and reader.read().count() == 6
+    assert _staged_files(t.path) > committed  # the surviving job's files
+    t.vacuum()
+    assert _staged_files(t.path) == committed
