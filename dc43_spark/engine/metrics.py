@@ -4,12 +4,23 @@ The reference computes one Spark job per expectation — ``df.count()`` plus
 ``filter(NOT p).count()`` per rule plus ``select(c).distinct().count()`` per
 unique column (ref: dc43-integrations spark/data_quality.py:98-196). That is
 N+1 full scans per validation. Here ALL row-level metrics collapse into ONE
-aggregate pass:
+aggregate pass, compiled to SQL strings (:func:`metric_sql`) and submitted
+in one ``selectExpr`` call:
 
-    df.agg(count(*), sum(CASE WHEN NOT p THEN 1 END)..., count(DISTINCT c)...)
+    count(1) AS `row_count`,
+    CAST(sum(CASE WHEN NOT (p) THEN 1 ELSE 0 END) AS BIGINT) AS `v_<key>`, ...
+    CAST(count(1) - (count(DISTINCT c) + max(CASE WHEN c IS NULL ...)) ...
 
 which Catalyst executes as a single scan with map-side partial aggregation —
-at 100 TB that's the difference between one pass over the table and N.
+at 100 TB that's the difference between one pass over the table and N. One
+string per rule also keeps the driver cheap: a ``Column`` tree costs about
+ten py4j calls per rule, a string none until Spark parses the projection.
+
+A governed merge does not even run this pass on its own: the strings ride
+in the merge engine's source aggregate next to the key envelope and the
+duplicate-key probe (``io/mergecore.py::source_key_stats``), so the source
+is aggregated once for both, and :func:`metrics_from_row` reads the
+metrics back out of that row.
 
 Semantics parity notes (the metric VALUES must match the reference exactly):
 
@@ -38,7 +49,11 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dc43_spark.contracts.model import Contract
-from dc43_spark.expectations.compiler import ExpectationSpec, expectation_specs
+from dc43_spark.expectations.compiler import (
+    ExpectationSpec,
+    expectation_specs,
+    quote_identifier,
+)
 
 QUERY_VIEW_NAME = "_dc43_dq_tmp"  # fixed, matches ref data_quality.py:180-191
 
@@ -51,18 +66,42 @@ def _as_specs(source: SpecsOrContract) -> list[ExpectationSpec]:
     return list(source)
 
 
-def violation_expr(predicate: str) -> Column:
-    """``sum(CASE WHEN NOT (p) THEN 1 ELSE 0 END)`` — NULL-safe violation count."""
-    return F.sum(F.when(~F.expr(predicate), F.lit(1)).otherwise(F.lit(0)))
+def metric_sql(
+    source: SpecsOrContract,
+    *,
+    unique_strategy: str = "exact",
+    include_unique: bool = True,
+    available_columns: Optional[Sequence[str]] = None,
+) -> list[str]:
+    """The one-pass metric aggregates as aliased SQL strings.
 
-
-def unique_violations_expr(column: str, *, approx: bool = False) -> Column:
-    """total - distinct(col)-including-NULL, as a single-pass expression."""
-    col = F.col(column)
-    distinct = (
-        F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    ) + F.max(F.when(col.isNull(), F.lit(1)).otherwise(F.lit(0)))
-    return F.count(F.lit(1)) - distinct
+    Aliases are ``row_count`` and ``v_<key>`` (``compute_metrics`` maps
+    them back to ``violations.<key>``). Specs on columns absent from
+    ``available_columns`` are skipped — the schema check reports those as
+    missing-column errors instead.
+    """
+    specs = _as_specs(source)
+    if available_columns is not None:
+        present = set(available_columns)
+        specs = [s for s in specs if s.column is None or s.column in present]
+    out = ["count(1) AS `row_count`"]
+    for s in specs:
+        if s.rule == "unique":
+            if not include_unique:
+                continue
+            c = quote_identifier(s.column)
+            distinct = (
+                f"approx_count_distinct({c})"
+                if unique_strategy == "approx"
+                else f"count(DISTINCT {c})"
+            )
+            agg = f"count(1) - ({distinct} + max(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END))"
+        elif s.predicate is not None:
+            agg = f"sum(CASE WHEN NOT ({s.predicate}) THEN 1 ELSE 0 END)"
+        else:
+            continue
+        out.append(f"CAST({agg} AS BIGINT) AS {quote_identifier('v_' + s.key)}")
+    return out
 
 
 def metric_expressions(
@@ -72,29 +111,46 @@ def metric_expressions(
     include_unique: bool = True,
     available_columns: Optional[Sequence[str]] = None,
 ) -> list[Column]:
-    """Aliased aggregate columns for one-pass metric computation.
+    """:func:`metric_sql` as aggregate ``Column`` objects."""
+    return [
+        F.expr(e)
+        for e in metric_sql(
+            source,
+            unique_strategy=unique_strategy,
+            include_unique=include_unique,
+            available_columns=available_columns,
+        )
+    ]
 
-    Aliases are ``row_count`` and ``v_<key>`` (dots are illegal in column
-    names; ``compute_metrics`` maps them back to ``violations.<key>``).
-    Specs on columns absent from ``available_columns`` are skipped — the
-    schema check reports those as missing-column errors instead.
-    """
-    specs = _as_specs(source)
-    if available_columns is not None:
-        present = set(available_columns)
-        specs = [s for s in specs if s.column is None or s.column in present]
-    exprs: list[Column] = [F.count(F.lit(1)).cast("long").alias("row_count")]
-    for s in specs:
-        if s.rule == "unique":
-            if include_unique:
-                exprs.append(
-                    unique_violations_expr(
-                        s.column, approx=unique_strategy == "approx"
-                    ).cast("long").alias(f"v_{s.key}")
-                )
-        elif s.predicate is not None:
-            exprs.append(violation_expr(s.predicate).cast("long").alias(f"v_{s.key}"))
-    return exprs
+
+def metrics_from_row(row: dict[str, Any]) -> dict[str, Any]:
+    """Canonical metric keys from an aggregate row (or an
+    ``Observation.get`` dict) carrying the :func:`metric_sql` aliases;
+    other fields are ignored."""
+    metrics: dict[str, Any] = {}
+    for k, v in row.items():
+        if k == "row_count":
+            metrics["row_count"] = int(v or 0)
+        elif k.startswith("v_"):
+            metrics[f"violations.{k[2:]}"] = int(v or 0)
+    return metrics
+
+
+def query_metrics(df: DataFrame, source: SpecsOrContract) -> dict[str, Any]:
+    """The raw ``query`` rules, one job each (irreducible), run against
+    ``df`` registered as ``_dc43_dq_tmp``."""
+    query_specs = [s for s in _as_specs(source) if s.rule == "query" and s.query]
+    metrics: dict[str, Any] = {}
+    if query_specs:
+        spark = df.sparkSession
+        df.createOrReplaceTempView(QUERY_VIEW_NAME)
+        try:
+            for s in query_specs:
+                rows = spark.sql(s.query).collect()
+                metrics[s.key] = rows[0][0] if rows and len(rows[0]) else None
+        finally:
+            spark.catalog.dropTempView(QUERY_VIEW_NAME)
+    return metrics
 
 
 def compute_metrics(
@@ -110,24 +166,11 @@ def compute_metrics(
     — same keys as the reference (data_quality.py:116-193).
     """
     specs = _as_specs(source)
-    exprs = metric_expressions(
+    exprs = metric_sql(
         specs, unique_strategy=unique_strategy, available_columns=df.columns
     )
-    row = df.agg(*exprs).collect()[0].asDict()
-    metrics: dict[str, Any] = {"row_count": row["row_count"] or 0}
-    for k, v in row.items():
-        if k.startswith("v_"):
-            metrics[f"violations.{k[2:]}"] = int(v or 0)
-    query_specs = [s for s in specs if s.rule == "query" and s.query]
-    if query_specs:
-        spark = df.sparkSession
-        df.createOrReplaceTempView(QUERY_VIEW_NAME)
-        try:
-            for s in query_specs:
-                rows = spark.sql(s.query).collect()
-                metrics[s.key] = rows[0][0] if rows and len(rows[0]) else None
-        finally:
-            spark.catalog.dropTempView(QUERY_VIEW_NAME)
+    metrics = metrics_from_row(df.selectExpr(*exprs).collect()[0].asDict())
+    metrics.update(query_metrics(df, specs))
     return metrics
 
 
@@ -138,7 +181,7 @@ def metrics_dataframe(
     unique_strategy: str = "exact",
 ) -> DataFrame:
     """The one-pass metric aggregation as a 1-row DataFrame (lazy)."""
-    return df.agg(*metric_expressions(source, unique_strategy=unique_strategy))
+    return df.selectExpr(*metric_sql(source, unique_strategy=unique_strategy))
 
 
 def observe_metrics(
@@ -158,12 +201,5 @@ def observe_metrics(
     return df.observe(obs, *exprs), obs
 
 
-def observation_to_metrics(observed: dict[str, Any]) -> dict[str, Any]:
-    """Map an Observation.get dict back to canonical metric keys."""
-    out: dict[str, Any] = {}
-    for k, v in observed.items():
-        if k == "row_count":
-            out["row_count"] = int(v or 0)
-        elif k.startswith("v_"):
-            out[f"violations.{k[2:]}"] = int(v or 0)
-    return out
+#: an ``Observation.get`` dict carries the same aliases
+observation_to_metrics = metrics_from_row

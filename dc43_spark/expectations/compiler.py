@@ -58,9 +58,16 @@ def _sql_literal(value: Any) -> str:
     return "'" + str(value).replace("'", "''") + "'"
 
 
+def quote_identifier(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted with inner
+    backticks doubled, so dots, spaces and backticks stay part of the
+    name (``a.b`` is one column, not field ``b`` of struct ``a``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sql_predicate(rule: str, column: str, value: Any = None) -> Optional[str]:
     """Emit the Spark SQL predicate for one rule (ref predicates.py:21-50)."""
-    col = f"`{column}`"
+    col = quote_identifier(column)
     if rule in ("not_null", "required"):
         return f"{col} IS NOT NULL"
     if rule in _BOUND_RULES:

@@ -72,12 +72,19 @@ class GovernanceService:
         pipeline: str = "pipeline",
         unique_strategy: str = "exact",
         track_drift: bool = False,
+        validation: Optional[ValidationResult] = None,
     ) -> EvaluationOutcome:
-        snapshot = schema_snapshot(df)
-        metrics = compute_metrics(df, contract, unique_strategy=unique_strategy)
-        validation = evaluate_contract(
-            contract, schema=snapshot, metrics=metrics, operation=operation
-        )
+        """Judge ``df`` against ``contract`` and record the verdict.
+        ``validation`` is a verdict already computed for these rows (e.g.
+        ``MergeResult.validation``): it is recorded as is, and no metrics
+        pass runs."""
+        if validation is None:
+            validation = evaluate_contract(
+                contract,
+                schema=schema_snapshot(df),
+                metrics=compute_metrics(df, contract, unique_strategy=unique_strategy),
+                operation=operation,
+            )
         profile_doc = None
         if track_drift:
             # profile THIS version (one extra aggregate pass) and diff

@@ -79,6 +79,7 @@ from dc43_spark.localdf import local_df
 from dc43_spark.io.mergecore import (
     FATE,
     MergePlan,
+    SourceCheck,
     change_rows,
     materialized_source,
     post_images,
@@ -141,7 +142,13 @@ def _dvs_enabled(protocol: dict, meta: dict) -> bool:
 
 
 def _merge_candidate_files(
-    src: DataFrame, snap, keys: Sequence[str], *, check_unique: bool = False
+    src: DataFrame,
+    snap,
+    keys: Sequence[str],
+    *,
+    check_unique: bool = False,
+    key_types: Optional[dict] = None,
+    check: Optional[SourceCheck] = None,
 ) -> list:
     """Delta-spark's merge file pruning: ONE aggregate over the source
     computes each key's min/max (+ null presence), and only target files
@@ -151,9 +158,13 @@ def _merge_candidate_files(
     source row can match there. A key with source NULLs skips its
     conditions (NULL joins NULL under eqNullSafe and stats can't bound
     it) — conservative, never wrong. ``check_unique`` fuses the
-    duplicate-source-key probe into this same pass (one source scan
-    instead of two — mergecore.source_key_stats)."""
-    row = source_key_stats(src, list(keys), check_unique=check_unique)
+    duplicate-source-key probe into this same pass, and ``check`` a
+    governed merge's contract metrics and verdict (one source scan
+    instead of three — mergecore.source_key_stats)."""
+    row = source_key_stats(
+        src, list(keys), check_unique=check_unique, key_types=key_types,
+        check=check,
+    )
     conds = []
     for i, k in enumerate(keys):
         if row[f"_null_{i}"] or row[f"_lo_{i}"] is None:
@@ -799,6 +810,7 @@ def delta_merge(
     use_dvs: Optional[bool] = None,
     check_source_keys: bool = True,
     merge_schema: bool = False,
+    source_check: Optional[SourceCheck] = None,
     **clauses,
 ) -> Optional[int]:
     """MERGE INTO a real ``_delta_log`` table without the jar — the
@@ -814,22 +826,28 @@ def delta_merge(
     require the source to carry the table's columns (generated columns
     may be omitted — they recompute); the map forms only need the key
     columns plus whatever their expressions reference, and never evolve
-    the schema. Returns the committed version, or None when the merge
-    changed nothing."""
+    the schema. ``source_check`` (a governed merge's contract metrics
+    and verdict) rides in the first attempt's source aggregate, before
+    anything is pruned or staged. Returns the committed version, or None
+    when the merge changed nothing."""
     plan = MergePlan.of(**clauses)
     keys = list(keys)
-    # the duplicate-source-key check fuses into _merge_candidate_files'
-    # single source pass (first attempt only; retries reuse the
-    # verdict). A by-source clause skips file pruning, so there is no
-    # envelope probe — the check rides the fate-count pass instead (one
-    # extra union leg over the materialized source, not a scan).
-    check_dups_in_probe = check_source_keys and not plan.by_source
-    check_dups_in_count = check_source_keys and bool(plan.by_source)
+    # the duplicate-source-key check and source_check fuse into
+    # _merge_candidate_files' single source pass (first attempt only;
+    # retries reuse the verdicts). A by-source clause skips file
+    # pruning, so there is no envelope probe: a source_check still runs
+    # that one aggregate and the key check rides it; without one the key
+    # check rides the fate-count pass instead (one extra union leg over
+    # the materialized source, not a scan).
+    check_dups_in_probe = check_source_keys and (
+        not plan.by_source or source_check is not None
+    )
+    check_dups_in_count = check_source_keys and not check_dups_in_probe
 
     t = DeltaLogTable(spark, path)
 
     def attempt():
-        nonlocal check_dups_in_probe, check_dups_in_count
+        nonlocal check_dups_in_probe, check_dups_in_count, source_check
         snap, protocol, meta = _pin_snapshot(t, "merge")
         table_cols = {f.name for f in snap.schema.fields}
         data_cols = [f.name for f in snap.schema.fields]
@@ -981,42 +999,45 @@ def delta_merge(
                 new_meta["schemaString"] = evolved.json()
             data_cols = data_cols + extra
             types = {f.name: f.dataType for f in evolved.fields}
+        # the projection aligning the source to the table, applied over
+        # the materialized source AFTER the one source aggregate, which
+        # must see the columns as the caller passed them (the contract
+        # metrics) and the keys cast as the join sees them (key_types)
         if plan.all_forms:
             # align source types to the table's (delta-spark's implicit
             # up-casts on updateAll/insertAll); evolved/missing columns
             # take the source's type / NULL
-            src = src.select(
-                *[
-                    (
-                        F.col(c).cast(snap.schema[c].dataType)
-                        if c in table_cols and c in src.columns
-                        else (
-                            F.col(c)
-                            if c in src.columns
-                            else F.lit(None).cast(types[c])
-                        )
-                    ).alias(c)
-                    for c in data_cols
-                ]
-            )
+            align = [
+                (
+                    F.col(c).cast(snap.schema[c].dataType)
+                    if c in table_cols and c in src.columns
+                    else (
+                        F.col(c)
+                        if c in src.columns
+                        else F.lit(None).cast(types[c])
+                    )
+                ).alias(c)
+                for c in data_cols
+            ]
+            aligned_cols = data_cols
         else:
             # map forms keep the source's own columns (expressions may
             # reference any of them); only the join keys cast to the
             # table's types
-            src = src.select(
-                *[
-                    F.col(c).cast(snap.schema[c].dataType).alias(c)
-                    if c in keys and c in table_cols
-                    else F.col(c)
-                    for c in src.columns
-                ]
-            )
-        bad_keys = sorted(k for k in keys if k not in src.columns)
+            align = [
+                F.col(c).cast(snap.schema[c].dataType).alias(c)
+                if c in keys and c in table_cols
+                else F.col(c)
+                for c in src.columns
+            ]
+            aligned_cols = src.columns
+        bad_keys = sorted(k for k in keys if k not in aligned_cols)
         if bad_keys:
             raise DeltaWriteError(f"merge keys not in source: {bad_keys}")
         bad_keys = sorted(k for k in keys if k not in data_cols)
         if bad_keys:
             raise DeltaWriteError(f"merge keys not in schema: {bad_keys}")
+        key_types = {k: types[k] for k in keys}
 
         with materialized_source(src) as src:
             fates = None
@@ -1030,11 +1051,18 @@ def delta_merge(
                 # which any file can hold.
                 if not plan.by_source:
                     candidates = _merge_candidate_files(
-                        src, snap, keys, check_unique=check_dups_in_probe
+                        src, snap, keys, check_unique=check_dups_in_probe,
+                        key_types=key_types, check=source_check,
                     )
-                    check_dups_in_probe = False
                 else:
+                    if source_check is not None:
+                        source_key_stats(
+                            src, keys, check_unique=check_dups_in_probe,
+                            key_types=key_types, check=source_check,
+                        )
                     candidates = list(snap.files)
+                check_dups_in_probe, source_check = False, None
+                src = src.select(*align)
                 rt_mat = _row_tracking_present(protocol) and _row_tracking_enabled(meta)
                 mat_id, _mat_ver = (
                     _rt_mat_cols_checked(meta) if rt_mat else (None, None)

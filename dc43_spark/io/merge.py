@@ -3,6 +3,11 @@
 Rebuilds the reference's Delta-merge sink (dc43-integrations
 spark/io/merge.py:43-127 — ``merge_with_governance``): validate the source
 frame against the contract first, then upsert into the target by key.
+Under the snaplog and jar-less Delta engines the validation rides in the
+engine's own source aggregate (``mergecore.SourceCheck``), so the source
+is aggregated once for the verdict, the key envelope and the
+duplicate-key probe, and a block verdict raises before anything is
+staged.
 
 Three physical strategies:
 
@@ -46,6 +51,7 @@ from dc43_spark.engine.results import ValidationResult
 from dc43_spark.io.mergecore import (  # noqa: F401 (public names re-exported)
     MergeClause,
     MergePlan,
+    SourceCheck,
     any_clause_ok,
     clause_gate,
     initial_write,
@@ -133,23 +139,67 @@ def merge_with_contract(
         raise ValueError("merge target missing: need path or table")
     fmt = format or ("parquet" if path else None)
 
-    # Pre-merge validation: same single-pass gate as write_with_contract,
-    # but without executing any write yet — run it on a dry plan.
-    from dc43_spark.contracts.schema import schema_snapshot
-    from dc43_spark.engine.metrics import compute_metrics
-    from dc43_spark.engine.validation import apply_contract, evaluate_contract
-
-    validation = evaluate_contract(
-        contract,
-        schema=schema_snapshot(source_df),
-        metrics=compute_metrics(source_df, contract),
-        operation="write",
+    # Validation: the same single-pass gate as write_with_contract, judged
+    # before anything is staged. The snaplog and jar-less Delta engines
+    # aggregate the source anyway (key envelope, duplicate-key probe), so
+    # the contract metrics ride in that one aggregate as a SourceCheck and
+    # the verdict runs on its row. The other paths, and a contract whose
+    # rules read a column apply_contract would cast, aggregate the raw
+    # frame up front instead.
+    from dc43_spark.contracts.schema import property_to_spark_type, schema_snapshot
+    from dc43_spark.engine.metrics import (
+        compute_metrics,
+        metric_sql,
+        metrics_from_row,
+        query_metrics,
     )
-    if enforce and validation.status == "block":
-        raise ValidationBlockedError(
-            f"merge blocked for {contract.id}:{contract.version}: {validation.errors}",
-            validation,
+    from dc43_spark.engine.validation import apply_contract, evaluate_contract
+    from dc43_spark.expectations.compiler import expectation_specs
+    from dc43_spark.io.delta_log import DeltaLogTable
+    from dc43_spark.io.snaplog import SnaplogTable
+
+    snapshot = schema_snapshot(source_df)
+    validation: Optional[ValidationResult] = None
+
+    def judge(metrics: dict) -> None:
+        nonlocal validation
+        validation = evaluate_contract(
+            contract, schema=snapshot, metrics=metrics, operation="write"
         )
+        if enforce and validation.status == "block":
+            raise ValidationBlockedError(
+                f"merge blocked for {contract.id}:{contract.version}: {validation.errors}",
+                validation,
+            )
+
+    if fmt == "snaplog" or (path and SnaplogTable.is_snaplog(path)):
+        engine = "snaplog"
+    elif fmt == "delta" and delta_available():  # pragma: no cover - env-gated
+        engine = "delta"
+    elif fmt == "delta" and path:
+        engine = "delta-log" if DeltaLogTable(spark, path).exists() else "delta-initial"
+    else:
+        engine = "parquet"
+    specs = expectation_specs(contract)
+    raw_types = {f.name: f.dataType for f in source_df.schema.fields}
+    contract_types = {
+        p.name: property_to_spark_type(p) for p in contract.schema_object.properties
+    }
+    recast = auto_cast and any(
+        s.column in raw_types and raw_types[s.column] != contract_types.get(s.column)
+        for s in specs
+        if s.rule != "query" and s.column is not None
+    )
+    source_check = None
+    if engine in ("snaplog", "delta-log") and not recast:
+        source_check = SourceCheck(
+            metric_sql(specs, available_columns=source_df.columns),
+            lambda row: judge(
+                {**metrics_from_row(row.asDict()), **query_metrics(source_df, specs)}
+            ),
+        )
+    else:
+        judge(compute_metrics(source_df, specs))
     aligned = apply_contract(source_df, contract, auto_cast=auto_cast)
     # NO standalone duplicate-source-key probe here: the snaplog and
     # delta-log engines fuse the check into a source pass they already
@@ -158,6 +208,7 @@ def merge_with_contract(
     # merge. Backends without a fused check probe explicitly below.
 
     def _done(strategy: str) -> MergeResult:
+        assert validation is not None, "the merge engine skipped its source check"
         result = MergeResult(validation, strategy, path, table)
         if interceptors:
             for hook in interceptors:
@@ -173,21 +224,22 @@ def merge_with_contract(
             ),
         ))
 
-    from dc43_spark.io.snaplog import SnaplogTable
-
-    if fmt == "snaplog" or (path and SnaplogTable.is_snaplog(path)):
+    if engine == "snaplog":
         # file-granular copy-on-write through the snapshot log — the
         # in-container realization of the Delta strategy (snaplog.py)
         if path is None:
             raise ValueError(
                 "snaplog targets are path-based: merge needs path=, not table="
             )
-        # check_source_keys stays True: the engine fuses the probe into
-        # its envelope pass (source_key_stats) — zero extra scans
-        stats = SnaplogTable(spark, path).merge(aligned, keys, **plan.clauses)
+        # check_source_keys stays True: the engine fuses the probe and the
+        # source check into its envelope pass (source_key_stats) — one
+        # source aggregate for all three
+        stats = SnaplogTable(spark, path).merge(
+            aligned, keys, source_check=source_check, **plan.clauses
+        )
         return _done(f"snaplog-{stats.strategy}")
 
-    if fmt == "delta" and delta_available():  # pragma: no cover - env-gated
+    if engine == "delta":  # pragma: no cover - env-gated
         from delta.tables import DeltaTable
 
         # delta-spark only raises MULTIPLE_SOURCE_ROWS_MATCHED when a
@@ -232,18 +284,19 @@ def merge_with_contract(
         builder.execute()
         return _done("delta")
 
-    if fmt == "delta" and path:
+    if engine == "delta-initial":
+        return _initial("delta", None)
+    if engine == "delta-log":
         # jar-less protocol MERGE (r10): deletion-vector or copy-on-write
         # row mutation on a real _delta_log (io/delta_dml.py) — the
         # reference's DeltaTable.merge surface without delta-spark
-        from dc43_spark.io.delta_log import DeltaLogTable
         from dc43_spark.io.delta_dml import delta_merge
 
-        if not DeltaLogTable(spark, path).exists():
-            return _initial("delta", None)
-        # check_source_keys stays True: the engine fuses the probe into
-        # the envelope pass (or the fate-count for by-source)
-        delta_merge(spark, aligned, path, keys, **plan.clauses)
+        # check_source_keys stays True: the engine fuses the probe and the
+        # source check into the envelope pass
+        delta_merge(
+            spark, aligned, path, keys, source_check=source_check, **plan.clauses
+        )
         return _done("delta-log-dml")
 
     # -------- parquet fallback: outer-join rewrite + atomic dir swap

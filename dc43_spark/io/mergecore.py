@@ -9,8 +9,10 @@ fallback of ``merge_with_contract`` (io/merge.py).
   follows the clause set, each row tagged with its fate (``keep`` |
   ``delete`` | ``update`` | ``insert``); :func:`merged_rows`,
   :func:`post_images` and :func:`change_rows` are projections of it.
-- **Glue.** :func:`source_key_stats`, :func:`materialized_source` and
-  :func:`initial_write` (the missing-target path).
+- **Glue.** :func:`source_key_stats` (the one source aggregate, which
+  carries a governed merge's :class:`SourceCheck`),
+  :func:`materialized_source` and :func:`initial_write` (the
+  missing-target path).
 
 A format keeps its own physical strategy: which target rows enter the
 join, how deleted rows disappear and how the commit is written.
@@ -24,11 +26,13 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from dc43_spark.expectations.compiler import quote_identifier
 
 #: ``none`` skips the source materialization (delta-spark's
 #: ``merge.materializeSource`` escape hatch) for deterministic
@@ -38,32 +42,74 @@ CHANGE_TYPE = "_change_type"
 _DEL, _UPD = "_dc43_del", "_dc43_upd"
 
 
-def source_key_stats(source: DataFrame, keys: list[str], *, check_unique: bool = True):
-    """ONE pass over the merge source computing the per-key pruning
-    envelope (fields ``_lo_{i}`` / ``_hi_{i}`` / ``_null_{i}`` by key
-    position) and, when ``check_unique``, the duplicate-key probe fused
-    into the same job — the source scan is the cost at scale. min/max
-    are duplicate-insensitive and a NULL key survives as a NULL group,
-    so aggregating over the grouped keys is exact. On a duplicate hit
-    the standalone probe re-runs only to name an example key."""
-    aggs = (
-        [F.min(F.col(k)).alias(f"_lo_{i}") for i, k in enumerate(keys)]
-        + [F.max(F.col(k)).alias(f"_hi_{i}") for i, k in enumerate(keys)]
-        + [
-            F.max(F.col(k).isNull()).alias(f"_null_{i}")
-            for i, k in enumerate(keys)
-        ]
-    )
-    if not check_unique:
-        return source.select(*aggs).first()
-    grouped = source.groupBy(*[F.col(k) for k in keys]).agg(
-        F.count(F.lit(1)).alias("_dc43_cnt")
-    )
-    row = grouped.select(
-        F.max("_dc43_cnt").alias("_dc43_maxcnt"), *aggs
-    ).first()
-    if row["_dc43_maxcnt"] is not None and row["_dc43_maxcnt"] > 1:
-        require_unique_merge_keys(source, keys)
+@dataclass(frozen=True)
+class SourceCheck:
+    """A contract check riding in the merge's one source aggregate
+    (:func:`source_key_stats`). ``aggregates`` are aliased SQL aggregates
+    over the source as the engine received it, before its own key casts;
+    ``verdict`` judges the aggregate row, raising to block the merge,
+    before the engine prunes, probes or stages anything."""
+
+    aggregates: Sequence[str]
+    verdict: Callable[[Row], None]
+
+
+def source_key_stats(
+    source: DataFrame,
+    keys: list[str],
+    *,
+    check_unique: bool = True,
+    key_types: Optional[dict] = None,
+    check: Optional[SourceCheck] = None,
+):
+    """ONE flat aggregate over the merge source — the source scan is the
+    cost at scale — carrying:
+
+    - ``check``'s aggregates (the contract metrics of a governed merge),
+      whose ``verdict`` then runs on the row;
+    - the per-key pruning envelope, fields ``_lo_{i}`` / ``_hi_{i}`` /
+      ``_null_{i}`` by key position, over each key cast to
+      ``key_types[k]`` (the table's type, as the join sees it; a key the
+      source lacks is a typed NULL);
+    - when ``check_unique``, the duplicate-key probe: ``count(1) -
+      count(DISTINCT k) - max(k IS NULL)`` for one key, which is the
+      ``groupBy(k)`` test (a NULL key is one group) and shares Spark's
+      distinct group with a contract ``unique_k`` metric; ``count(1) -
+      count(DISTINCT struct(k1, k2, ...))`` for a composite key (a
+      struct is never NULL, so NULL parts group as ``groupBy`` does).
+
+    On a duplicate hit the standalone probe re-runs only to name an
+    example key."""
+    types = {f.name: f.dataType for f in source.schema.fields}
+    cast_to = key_types or {}
+    key_sql = []
+    for k in keys:
+        t, c = cast_to.get(k), quote_identifier(k)
+        if t is not None and k not in types:
+            c = f"CAST(NULL AS {t.simpleString()})"
+        elif t is not None and types[k] != t:
+            c = f"CAST({c} AS {t.simpleString()})"
+        key_sql.append(c)
+    aggs = list(check.aggregates) if check is not None else []
+    for i, c in enumerate(key_sql):
+        aggs += [f"min({c}) AS _lo_{i}", f"max({c}) AS _hi_{i}", f"max({c} IS NULL) AS _null_{i}"]
+    if check_unique:
+        if len(keys) == 1:
+            c = key_sql[0]
+            dups = f"count(1) - count(DISTINCT {c}) - max(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END)"
+        else:
+            dups = f"count(1) - count(DISTINCT struct({', '.join(key_sql)}))"
+        aggs.append(f"{dups} AS _dc43_dups")
+    row = source.selectExpr(*aggs).first()
+    if check is not None:
+        check.verdict(row)
+    if check_unique and row["_dc43_dups"]:
+        require_unique_merge_keys(
+            source.selectExpr(*[
+                f"{c} AS {quote_identifier(k)}" for k, c in zip(keys, key_sql)
+            ]),
+            keys,
+        )
     return row
 
 

@@ -114,6 +114,7 @@ from pyspark.storagelevel import StorageLevel
 from . import bloom as _bloom
 from dc43_spark.io.mergecore import (
     MergePlan,
+    SourceCheck,
     any_clause_ok,
     change_rows,
     initial_write,
@@ -2865,6 +2866,7 @@ class SnaplogTable:
         check_source_keys: bool = True,
         merge_schema: bool = False,
         isolation: str = "write_serializable",
+        source_check: Optional[SourceCheck] = None,
         **clauses,
     ) -> MergeStats:
         """File-granular copy-on-write MERGE (ref spark/io/merge.py:43-127
@@ -2881,7 +2883,10 @@ class SnaplogTable:
         refresh loop in io/ivm.py leans on this). ``check_source_keys=
         False`` skips the duplicate-source-key probe for callers that
         already ran it; by default the probe FUSES into the
-        pruning-envelope source pass (``mergecore.source_key_stats``).
+        pruning-envelope source pass (``mergecore.source_key_stats``),
+        and so does ``source_check``, a governed merge's contract metrics
+        and verdict: the source is aggregated once for all three, before
+        anything is pruned, probed or staged.
         ``merge_schema=True`` is Delta's automatic evolution: source-only
         columns join the table schema (existing rows read them as NULL)
         and source rows missing table columns insert NULLs; without the
@@ -2902,10 +2907,14 @@ class SnaplogTable:
         keys = list(keys)
         current = self.version()
         if current is None:
+            if check_source_keys or source_check is not None:
+                source_key_stats(
+                    source, keys, check_unique=check_source_keys, check=source_check
+                )
             strategy = initial_write(
                 source, keys, plan,
                 lambda df: self.write(df, mode="overwrite"),
-                check_source_keys=check_source_keys,
+                check_source_keys=False,
             )
             return MergeStats(0, 0, 0, 0, strategy=strategy)
         snap = self.snapshot(current)
@@ -2927,20 +2936,25 @@ class SnaplogTable:
         evolved_json = snap.schema_json
         keep_target_cols: tuple = ()
         tgt_casts: dict = {}
+        # the projection aligning the source to the table, applied over
+        # the materialized source AFTER the one source aggregate, which
+        # must see the columns as the caller passed them (the contract
+        # metrics) and the keys cast as the join sees them (key_types)
+        align = None
+        key_types: dict = {}
         if snap.schema_json and not plan.all_forms:
             # map forms keep the source's own columns (their expressions
             # may reference any of them) and never evolve the schema;
             # only the join keys align to the table's types
             table_schema = T.StructType.fromJson(json.loads(snap.schema_json))
             ttypes = {f.name: f.dataType for f in table_schema.fields}
-            source = source.select(
-                *[
-                    F.col(c).cast(ttypes[c]).alias(c)
-                    if c in keys and c in ttypes
-                    else F.col(c)
-                    for c in source.columns
-                ]
-            )
+            key_types = {k: ttypes[k] for k in keys if k in ttypes}
+            align = [
+                F.col(c).cast(ttypes[c]).alias(c)
+                if c in keys and c in ttypes
+                else F.col(c)
+                for c in source.columns
+            ]
         elif snap.schema_json:
             table_schema = T.StructType.fromJson(json.loads(snap.schema_json))
             old = {f.name: f for f in table_schema.fields}
@@ -2987,18 +3001,17 @@ class SnaplogTable:
                 )
                 evolved_json = evolved.json()
                 etypes = {f.name: f.dataType for f in evolved.fields}
-                source = source.select(
-                    *[
-                        (
-                            F.col(f.name).cast(f.dataType)
-                            if new[f.name].dataType != f.dataType
-                            else F.col(f.name)
-                        )
-                        if f.name in new
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                        for f in evolved.fields
-                    ]
-                )
+                key_types = {k: etypes[k] for k in keys if k in etypes}
+                align = [
+                    (
+                        F.col(f.name).cast(f.dataType)
+                        if new[f.name].dataType != f.dataType
+                        else F.col(f.name)
+                    )
+                    if f.name in new
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in evolved.fields
+                ]
                 # target rows scanned under the OLD snapshot schema must
                 # join/union at the evolved types
                 tgt_casts = {
@@ -3011,12 +3024,17 @@ class SnaplogTable:
             # level 1: driver-side min/max intersection (footer stats, no IO);
             # also probe whether the source carries a NULL key — those match
             # target NULLs outside any envelope. The duplicate-source-key
-            # probe (check_source_keys) fuses into this same source pass —
-            # one scan, not two (source_key_stats docstring; the check runs
-            # on the key-CAST source, which is the join's actual key domain)
+            # probe (check_source_keys) and a governed merge's contract
+            # metrics and verdict (source_check) fuse into this same source
+            # pass — one scan, not three (source_key_stats docstring; the
+            # envelope and the probe read the keys CAST to the join's key
+            # domain)
             ranges_row = source_key_stats(
-                source, keys, check_unique=check_source_keys
+                source, keys, check_unique=check_source_keys,
+                key_types=key_types, check=source_check,
             )
+            if align is not None:
+                source = source.select(*align)
             # stats envelopes are keyed by PHYSICAL names (identity unless a
             # column was renamed)
             key_ranges = {

@@ -88,3 +88,40 @@ def test_approx_unique_strategy(mini_orders):
     m = compute_metrics(mini_orders, mini_contract(), unique_strategy="approx")
     # HLL on 4 distinct values is exact in practice
     assert m["violations.unique_order_id"] == 1
+
+
+@pytest.mark.parametrize("name", ["a.b", "a`b", "a b"])
+def test_metrics_quote_odd_column_names(spark, name):
+    """A dot is part of the name, not a struct field, and a backtick is
+    doubled inside the quotes: every metric equals the reference's
+    per-rule ``filter(NOT p).count()`` / distinct count."""
+    from dc43_spark.expectations.compiler import expectation_specs
+
+    quoted = "`" + name.replace("`", "``") + "`"
+    df = spark.createDataFrame(
+        [(1, 5), (2, -1), (3, None), (4, 5), (5, 12)], f"id long, {quoted} long"
+    )
+    c = Contract(
+        id="t.odd", version="0.1.0",
+        schema_objects=[SchemaObject(name="o", properties=[
+            SchemaProperty(name, "bigint", required=True, unique=True, quality=[
+                QualityRule("ge", 0), QualityRule("enum", [5, 12]),
+            ]),
+        ])],
+    )
+    m = compute_metrics(df, c)
+    want = {"row_count": 5}
+    for s in expectation_specs(c):
+        if s.rule == "unique":
+            distinct = df.selectExpr(quoted).distinct().count()
+            want[f"violations.{s.key}"] = 5 - distinct
+        else:
+            want[f"violations.{s.key}"] = df.filter(f"NOT ({s.predicate})").count()
+    assert m == want
+    assert want == {
+        "row_count": 5,
+        f"violations.not_null_{name}": 1,
+        f"violations.unique_{name}": 1,
+        f"violations.ge_{name}": 1,
+        f"violations.enum_{name}": 1,
+    }
