@@ -115,7 +115,7 @@ def profile_columns(
     answer for a contract bootstrap but quadratic-feeling on a wide
     100 TB table. ``'approx'`` swaps in HLL ``approx_count_distinct``
     (relative error ~5%): no Expand, one stream regardless of width
-    (tools/profile_width_ladder.py measures the gap). Degradations
+    (tools/ladder.py profile_width measures the gap). Degradations
     under ``'approx'``, both documented on the result: ``is_unique`` is
     always False (uniqueness cannot be PROVEN from an estimate), and
     enum candidacy uses a 2x slack on the estimate with the exact

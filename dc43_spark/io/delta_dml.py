@@ -58,7 +58,7 @@ against the source, DV serialization distributed per file, new rows
 staged through the same footer-stats path as delta_write. Touch sets
 persist to spillable MEMORY_AND_DISK storage (recomputable from the
 pinned snapshot; pre-image columns ride only when CDF needs them —
-tools/dml_touch_ladder.py measures the envelope). Nothing is O(table)
+tools/ladder.py dml_touch measures the envelope). Nothing is O(table)
 on the driver.
 """
 
@@ -206,7 +206,7 @@ def _live_lineage(
     partition values on the broadcast side, so partitioned tables pay a
     single broadcast join instead of a one-branch-per-partition-tuple
     union whose Catalyst analysis cost grows superlinearly past ~1k
-    partitions (VERDICT r10 #7; tools/lineage_plan_ladder.py measures
+    partitions (VERDICT r10 #7; tools/ladder.py lineage_plan measures
     the ladder)."""
     spark = t.spark
     rt_cols = [StructField(_RTID, LongType()),

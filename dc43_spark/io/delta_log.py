@@ -1291,7 +1291,7 @@ def _snaplog_dv_positions(table, snap, *, only_files=None) -> dict:
     assembly), but VECTORIZED: arrow column reads, dictionary-encoded
     file names packed with the position into one uint64 key, a single
     ``np.unique`` (sort + dedup + group in one pass) — no per-row
-    Python, no lexsort. Ladder-measured (tools/dv_ladder.py, SCALE.md
+    Python, no lexsort. Ladder-measured (tools/ladder.py dv, SCALE.md
     "DV export driver envelope")."""
     import numpy as np
     import pyarrow as pa

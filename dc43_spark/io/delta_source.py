@@ -21,7 +21,7 @@ all on this path): only the O(1) DV *descriptor* rides each pickled
 partition and positions decode on the executor — the driver never
 materializes a position list, so a MOR-heavy foreign table with 100M+
 deleted positions plans in O(files) driver memory
-(tools/dv_read_ladder.py --source measures this). Partition values
+(tools/ladder.py dv_read_source measures this). Partition values
 attach as constant Arrow columns.
 
 Streaming semantics mirror delta-spark's source contract:

@@ -44,8 +44,8 @@ Checkpoints are COLUMNAR parquet (Delta's move, for Delta's reason) and
 snapshots are LAZY: stats pruning runs vectorized over the arrow
 columns and per-file Python objects are built only for files that
 survive — a selective read on a 100k-file table plans in ~44 ms where
-the eager JSON form took ~1.4 s (measured: tools/snaplog_ladder.py
---metadata, SCALE.md).
+the eager JSON form took ~1.4 s (measured: tools/ladder.py
+metadata, SCALE.md).
 
 **Copy-on-write MERGE.** Two-level file pruning picks the rewrite set:
 (1) driver-side min/max stats intersection against the source key range

@@ -510,7 +510,7 @@ def q_ann_ivfpq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals brute-force KNN and the exact oracle hash-checks
     the whole encode/probe/ADC/rescore machinery (same pattern as the
     ivf/int8 gates). Partial-probe recall is measured in
-    tests/test_similarity_ivfpq.py and tools/ann_recall.py."""
+    tests/test_similarity_ivfpq.py and tools/ladder.py ann_recall."""
     emb = load_spread(spark, sf_dir, "embeddings")
     queries = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
     return sim.ivfpq_topk(

@@ -58,11 +58,17 @@ _SLOW_TESTS = frozenset({
     "test_ivf_index.py::test_ivf_index_append_extends_index",
     "test_ivm.py::test_min_max_avg_track_source",
     "test_ivm.py::test_randomized_ops_full_aggregates_vs_recompute",
+    # ~9 s in a full run on a 4-core VM: 64 snaplog commits (16 stay default)
+    "test_ladders.py::test_cdf_range_plans_one_scan_and_one_broadcast_join[64]",
+    # ~35 s on a 4-core VM: the scale ladder's rung at 1 and 2 replicas
+    "test_ladders.py::test_scale_replicas_flow_through_the_capstone",
     "test_maintenance.py::test_index_compaction_preserves_probe_results",
     "test_merge_clause_matrix.py::test_kernel_matches_python_model_across_the_full_matrix",
     "test_merge_clause_matrix.py::test_random_multi_clause_sweep_matches_python_model",
     # ~50 s on a 4-core VM: a second Spark process running bench.py's warm-up
     "test_profile_tool.py::test_profile_prints_counts_and_library_call_sites",
+    # ~21 s on a 4-core VM: two tools/ladder.py processes, one with Spark
+    "test_profile_tool.py::test_ladder_prints_counts_per_rung",
     "test_properties.py::test_encode_tokens_strategies_agree_property",
     "test_schema_tracking.py::test_delta_cdf_stream_continues_across_schema_change",
     "test_schema_tracking.py::test_delta_stream_continues_across_schema_change",

@@ -21,6 +21,8 @@ adds per-job lines and per-stage lines sorted by executor run time.
 
 Like bench.py it reads the data directory from $SPARK_GRAFT_SF_DIR (here
 required) and the core count from $SPARK_GRAFT_CPUS (default 32).
+``session`` is the one builder of bench.py's session for the tools
+(tools/ladder.py and tools/capture_plans.py build theirs with it).
 """
 
 from __future__ import annotations
@@ -40,6 +42,12 @@ from perfbench.layers import _api, _epoch, spark_op_metrics  # noqa: E402
 
 COUNTS = ("spark.jobs", "spark.tasks", "spark.shuffle_bytes",
           "spark.executor_cpu_s", "driver_s")
+
+
+def count_line(op: str, wall: float, counts: dict) -> str:
+    return f"{op}: wall={wall:.3f}s " + " ".join(
+        f"{k}={counts[k]:.3f}" if isinstance(counts[k], float)
+        else f"{k}={counts[k]}" for k in COUNTS)
 
 
 def _site(item: dict) -> str:
@@ -125,32 +133,17 @@ def _print_streams(progress: dict) -> None:
             print(f"  {k:>20} {v:>8} ms")
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("queries", nargs="+")
-    ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--detail", action="store_true")
-    args = ap.parse_args()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir:
-        ap.error("set SPARK_GRAFT_SF_DIR to a scale-factor data directory")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    import __spark_entry__ as entrymod
-
-    queries = {**entrymod.extra_queries(), **entrymod.queries()}
-    unknown = [q for q in args.queries if q not in queries]
-    if unknown:
-        ap.error(f"unknown queries: {', '.join(unknown)}")
-
+def session(app_name: str = "dc43-profile"):
+    """bench.py's session (tests/test_profile_tool.py keeps the two equal)
+    on $SPARK_GRAFT_CPUS cores (default 32), plus the UI server: its REST
+    API, on any free port, serves the counts and retains every job and
+    stage a rep may count."""
     from pyspark.sql import SparkSession
 
-    # bench.py's session (tests/test_profile_tool.py keeps the two equal);
-    # the UI server carries the REST API, on any free port, and retains
-    # every job and stage a rep may count
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dc43-profile")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -167,11 +160,32 @@ def main() -> int:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--detail", action="store_true")
+    args = ap.parse_args()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        ap.error("set SPARK_GRAFT_SF_DIR to a scale-factor data directory")
+
+    import __spark_entry__ as entrymod
+
+    queries = {**entrymod.extra_queries(), **entrymod.queries()}
+    unknown = [q for q in args.queries if q not in queries]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+
+    spark = session()
     sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
     base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
 
-    bench.warm_up(spark, sf_dir, cpus, queries)
+    bench.warm_up(spark, sf_dir, str(sc.defaultParallelism), queries)
     progress: dict[str, list] = defaultdict(list)
     live: set = set()
     spark.streams.addListener(_progress_listener(progress, live))
@@ -185,9 +199,7 @@ def main() -> int:
             wall = bench.run_once(spark, sf_dir, name, queries[name])
             end = time.time()
             counts = spark_op_metrics(spark, {op: (start, end)})[op]
-            print(f"{op}: wall={wall:.3f}s " + " ".join(
-                f"{k}={counts[k]:.3f}" if isinstance(counts[k], float)
-                else f"{k}={counts[k]}" for k in COUNTS), flush=True)
+            print(count_line(op, wall, counts), flush=True)
             jobs = _rep_jobs(base, op, start, end)
             rollups[name].extend(jobs)
             if args.detail:
