@@ -12,11 +12,13 @@ Semantics parity:
 - Flag appends an array column (default ``_corrupted_data``) holding the
   violated rule keys per row, empty -> NULL (:499-522).
 
-Scale notes (100 TB): the strategy receives an already-persisted aligned
-DataFrame (the writer persists before planning — the reference instead
-recomputes per subset, violation_strategy.py:297-343); filters are plain
-Catalyst predicates so both subsets pushdown/prune; the flag column is a
-single projection, no shuffle.
+Scale notes (100 TB): the strategy receives the aligned DataFrame
+uncached, and each subset's write re-reads the source as the reference
+does (violation_strategy.py:297-343): a scan-backed frame is cheaper to
+re-read than to cache, and the writer overlaps the subsets' saves
+(``io/write.py::execute_write_plan``). Filters are plain Catalyst
+predicates so both subsets pushdown/prune; the flag column is a single
+projection, no shuffle.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ class WriteRequest:
 @dataclass
 class WriteStrategyContext:
     df: DataFrame  # raw incoming frame
-    aligned_df: DataFrame  # after apply_contract (persisted by the writer)
+    aligned_df: DataFrame  # after apply_contract (not cached)
     validation: ValidationResult
     predicates: dict[str, str]  # key -> row-level SQL predicate
     path: Optional[str] = None

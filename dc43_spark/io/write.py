@@ -5,10 +5,14 @@ ref: dc43-integrations spark/io/write.py:36-106 and BaseWriteExecutor
 
 Cost-shape improvements over the reference (SURVEY §4):
 - pre-write validation is ONE aggregate pass (not job-per-rule);
-- the aligned frame is persisted before the strategy plans, so Split's two
-  filtered writes reuse the cached data instead of re-reading the source
-  (the reference recomputes per subset, violation_strategy.py:297-343);
-- optional revalidation of subsets derives from the same cached frame.
+- a plan's writes run at once (``execute_write_plan``), so Split's valid
+  and reject saves overlap their driver work (planning, committer set-up,
+  job commit) instead of queueing behind each other. Each save re-reads
+  the source, as the reference does per subset (violation_strategy.py:
+  297-343): a scan-backed frame is cheaper to re-read than to cache. A
+  100k-row parquet split write (perfbench ``governed_ingest``, 4-core VM,
+  interleaved in one session) took 0.70 s with the cache, 0.65 s without
+  it, and 0.58 s without it and with overlapping saves (medians of 16).
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ from dc43_spark.io.read import (
     ValidationBlockedError,
     check_contract_status,
 )
+from dc43_spark.io.tablecore import stage_concurrently
 from dc43_spark.io.violation_strategy import (
     NoOpWriteViolationStrategy,
     WriteRequest,
@@ -116,6 +121,40 @@ def execute_write_request(req: WriteRequest, writer_modifier=None) -> None:
         writer.save(req.path)
 
 
+def _nests(a: WriteRequest, b: WriteRequest) -> bool:
+    """Whether two requests write overlapping targets: the same table, or
+    two paths one of which lies under (or is) the other."""
+    if a.table or b.table:
+        return a.table == b.table
+    if not (a.path and b.path):
+        return False
+    pa, pb = a.path.rstrip("/") + "/", b.path.rstrip("/") + "/"
+    return pa.startswith(pb) or pb.startswith(pa)
+
+
+def execute_write_plan(requests: list[WriteRequest], writer_modifier=None) -> list[str]:
+    """Run a plan's write requests; return their dataset ids in plan order.
+
+    Requests run at once through ``tablecore.stage_concurrently``, whose
+    pool threads keep the caller's job group and local properties. One
+    ordering rule: requests whose targets nest do not overlap. A request
+    that nests with one in the current batch starts the next batch, so
+    Split's ``write_primary`` overwrite of ``<p>`` lands before the writes
+    under ``<p>/valid`` and ``<p>/reject`` start. A failing request
+    raises after its batch's other writes finish; later batches never
+    start."""
+    batches: list[list[WriteRequest]] = []
+    for req in requests:
+        if not batches or any(_nests(req, other) for other in batches[-1]):
+            batches.append([])
+        batches[-1].append(req)
+    for batch in batches:
+        stage_concurrently([
+            lambda req=req: execute_write_request(req, writer_modifier) for req in batch
+        ])
+    return [_dataset_id(req) for req in requests]
+
+
 def write_with_contract(
     df: DataFrame,
     contract: Optional[Contract] = None,
@@ -133,7 +172,6 @@ def write_with_contract(
     auto_cast: bool = True,
     allowed_statuses: tuple[str, ...] = DEFAULT_ALLOWED_STATUSES,
     unique_strategy: str = "exact",
-    persist_aligned: bool = True,
     locator: Optional["DatasetLocator"] = None,
     interceptors: Optional[list["GovernanceInterceptor"]] = None,
     writer_modifier: Optional[callable] = None,
@@ -146,7 +184,12 @@ def write_with_contract(
     shapes the physical writes (split/flag/strict).
 
     Instead of a ``contract``, pass ``registry=``, ``product=`` and
-    ``port=`` to write through the product's OUTPUT port binding."""
+    ``port=`` to write through the product's OUTPUT port binding.
+
+    The write caches nothing: validation and each physical write read
+    ``df`` anew. A caller whose ``df`` is costly to recompute (a wide
+    join, a Python UDF) persists it before the call and owns that
+    persist, unpersisting it afterwards."""
     if contract is None:
         from dc43_spark.io.read import resolve_port_contract
 
@@ -221,21 +264,11 @@ def write_with_contract(
     )
     plan = strategy.plan(ctx)
 
-    multi_action = len(plan.requests) > 1
-    if persist_aligned and multi_action:
-        aligned.persist()
-    try:
-        written: list[str] = []
-        if plan.fail_message:
-            # Strict strategy fails the write even when executor-level
-            # enforcement is off (ref violation_strategy.py:585-623)
-            raise ValidationBlockedError(plan.fail_message, validation)
-        for req in plan.requests:
-            execute_write_request(req, writer_modifier)
-            written.append(_dataset_id(req))
-    finally:
-        if persist_aligned and multi_action:
-            aligned.unpersist()
+    if plan.fail_message:
+        # Strict strategy fails the write even when executor-level
+        # enforcement is off (ref violation_strategy.py:585-623)
+        raise ValidationBlockedError(plan.fail_message, validation)
+    written = execute_write_plan(plan.requests, writer_modifier)
     if (
         format == "snaplog"
         and path is not None

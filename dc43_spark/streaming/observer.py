@@ -44,7 +44,7 @@ from dc43_spark.io.violation_strategy import (
     WriteStrategyContext,
     WriteViolationStrategy,
 )
-from dc43_spark.io.write import execute_write_request
+from dc43_spark.io.write import execute_write_plan
 
 
 def format_dataset_version(
@@ -204,8 +204,7 @@ class StreamingGovernedWriter:
         plan = self.strategy.plan(ctx)
         if plan.fail_message:
             raise StreamingEnforcementError(plan.fail_message, record)
-        for req in plan.requests:
-            execute_write_request(req)
+        execute_write_plan(plan.requests)
 
     def _versioned(self, path: Optional[str], batch_id: int) -> Optional[str]:
         if path is None or not self.version_template:

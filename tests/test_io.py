@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from dc43_spark.contracts import Contract, QualityRule, SchemaObject, SchemaProperty
@@ -11,7 +13,9 @@ from dc43_spark.io import (
     read_with_contract,
     write_with_contract,
 )
+from dc43_spark.io import write as write_mod
 from dc43_spark.io.read import ContractStatusError, ValidationBlockedError
+from dc43_spark.io.status import GovernanceInterceptor
 
 
 def orders_contract(**kw) -> Contract:
@@ -135,6 +139,103 @@ def test_split_strategy_clean_data_single_write(spark, good_df, tmp_path):
         strategy=SplitWriteViolationStrategy(), enforce=False,
     )
     assert res.written == [f"path:{target}"]
+
+
+def test_split_writes_overlap(spark, mixed_df, tmp_path, monkeypatch):
+    """Split's valid and reject saves run at once: each waits at a
+    two-party barrier before it writes, which only opens while both are
+    in flight."""
+    real = write_mod.execute_write_request
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet_then_write(req, writer_modifier=None):
+        barrier.wait()
+        real(req, writer_modifier)
+
+    monkeypatch.setattr(write_mod, "execute_write_request", meet_then_write)
+    target = str(tmp_path / "orders")
+    res = write_with_contract(
+        mixed_df, orders_contract(), path=target, mode="overwrite",
+        strategy=SplitWriteViolationStrategy(), enforce=False,
+    )
+    assert res.written == [f"path:{target}/valid::valid", f"path:{target}/reject::reject"]
+    assert spark.read.parquet(f"{target}/valid").count() == 2
+    assert spark.read.parquet(f"{target}/reject").count() == 1
+
+
+def test_split_write_primary_lands_before_nested_sides(
+    spark, mixed_df, tmp_path, monkeypatch
+):
+    """``write_primary`` overwrites ``<p>`` while the sides land under
+    it, so the primary write finishes before either side starts, and a
+    second overwrite leaves each target holding its own rows."""
+    real = write_mod.execute_write_request
+    events: list[tuple[str, str]] = []
+    lock = threading.Lock()
+
+    def recorded(req, writer_modifier=None):
+        with lock:
+            events.append(("start", req.path))
+        real(req, writer_modifier)
+        with lock:
+            events.append(("end", req.path))
+
+    monkeypatch.setattr(write_mod, "execute_write_request", recorded)
+    target = str(tmp_path / "orders")
+    for _ in range(2):
+        events.clear()
+        res = write_with_contract(
+            mixed_df, orders_contract(), path=target, mode="overwrite",
+            strategy=SplitWriteViolationStrategy(write_primary=True), enforce=False,
+        )
+        assert res.written == [
+            f"path:{target}", f"path:{target}/valid::valid", f"path:{target}/reject::reject",
+        ]
+        assert events[:2] == [("start", target), ("end", target)]
+        assert len(events) == 6
+        assert spark.read.parquet(f"{target}/*.parquet").count() == 3
+        assert spark.read.parquet(f"{target}/valid").count() == 2
+        assert spark.read.parquet(f"{target}/reject").count() == 1
+
+
+def test_split_write_failing_side_drains_then_raises(
+    spark, mixed_df, tmp_path, monkeypatch
+):
+    """A failing reject save re-raises only after the valid save it
+    overlaps has finished; no ``post_write`` hook runs and no cached
+    relation is left behind."""
+    real = write_mod.execute_write_request
+    barrier = threading.Barrier(2, timeout=30)
+    finished: list[str] = []
+
+    def reject_fails(req, writer_modifier=None):
+        barrier.wait()
+        if req.dataset_suffix == "::reject":
+            raise RuntimeError("reject side down")
+        real(req, writer_modifier)
+        finished.append(req.dataset_suffix)
+
+    class PostWriteRecorder(GovernanceInterceptor):
+        def __init__(self):
+            self.post_writes = []
+
+        def post_write(self, ctx, result):
+            self.post_writes.append(result)
+
+    monkeypatch.setattr(write_mod, "execute_write_request", reject_fails)
+    hook = PostWriteRecorder()
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    target = str(tmp_path / "orders")
+    with pytest.raises(RuntimeError, match="reject side down"):
+        write_with_contract(
+            mixed_df, orders_contract(), path=target, mode="overwrite",
+            strategy=SplitWriteViolationStrategy(), enforce=False,
+            interceptors=[hook],
+        )
+    assert finished == ["::valid"]
+    assert spark.read.parquet(f"{target}/valid").count() == 2
+    assert hook.post_writes == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
 
 
 def test_flag_strategy_appends_corrupted_data(spark, mixed_df, tmp_path):
